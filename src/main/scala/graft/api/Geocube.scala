@@ -1,7 +1,7 @@
 package graft.api
 
 import graft.catalog._
-import graft.consolidation.{ConsolidationJob, ConsolidationParams, DeletionJob}
+import graft.consolidation.{ConsolidationJob, ConsolidationParams, DeletionJob, JournaledJob}
 import graft.cube.{CubeRequest, GetCube, Palette, Slice, XYZTile}
 import graft.geo.GeomOps
 import graft.core.DataFormat
@@ -437,25 +437,20 @@ final case class Geocube(spark: SparkSession, cat: TableStore) {
     * stage re-processes NEW/PENDING/FAILED tasks). NOTFOUND for unknown
     * ids or pre-spec-journal jobs. */
   def retryJob(jobId: String, force: Boolean = false): String =
-    routeByType(jobId)(
-      onDeletion = s => DeletionJob.retry(spark, cat, s),
-      onConsolidation = s => ConsolidationJob.retry(spark, cat, s, force))
+    byId(jobId)(
+      onDeletion = DeletionJob.retry(spark, cat, _, _),
+      onConsolidation = ConsolidationJob.retry(spark, cat, _, _, force))
 
-  /** Shared by-id routing for retry/continue: FSM type from the NEW
-    * journal row (the jobs table also holds TASKEVENT counter rows under
-    * the same id — an unordered limit(1) could misroute), then the spec
-    * rehydrated from that row's payload. */
-  private def routeByType(jobId: String)(
-      onDeletion: DeletionJob.Spec => String,
-      onConsolidation: ConsolidationJob.Spec => String): String =
-    ConsolidationJob.jobTypeAndName(spark, cat, jobId) match {
-      case Some(("DELETION", _)) =>
-        DeletionJob.specFromJournal(spark, cat, jobId)
-          .map(onDeletion).getOrElse("NOTFOUND")
-      case Some(_) =>
-        ConsolidationJob.specFromJournal(spark, cat, jobId)
-          .map(onConsolidation).getOrElse("NOTFOUND")
-      case None => "NOTFOUND"
+  /** Shared by-id routing for retry/continue: the kernel reads the journal
+    * once and routes on the NEW row's type, then the spec rehydrates from
+    * that row's payload (NOTFOUND for a pre-spec-journal job). */
+  private def byId(jobId: String)(
+      onDeletion: (JournaledJob, DeletionJob.Spec) => String,
+      onConsolidation: (JournaledJob, ConsolidationJob.Spec) => String): String =
+    JournaledJob.byId(spark, cat, jobId) { job =>
+      if (job.jobType == DeletionJob.JobType)
+        DeletionJob.specOf(spark, job).fold("NOTFOUND")(onDeletion(job, _))
+      else ConsolidationJob.specOf(spark, job).fold("NOTFOUND")(onConsolidation(job, _))
     }
 
   /** CancelJob (service.go:74): cancel by id, routed on the journaled job
@@ -500,9 +495,10 @@ final case class Geocube(spark: SparkSession, cat: TableStore) {
     * journal stopped. `pauseAfter` keeps the step-by-step execution
     * level. NOTFOUND for unknown ids or pre-spec-journal jobs. */
   def continueJob(jobId: String, pauseAfter: Option[String] = None): String =
-    routeByType(jobId)(
-      onDeletion = s => DeletionJob.run(spark, cat, s, pauseAfter),
-      onConsolidation = s => ConsolidationJob.run(spark, cat, s, pauseAfter))
+    byId(jobId)(
+      onDeletion = DeletionJob.run(spark, cat, _, _, pauseAfter),
+      onConsolidation = ConsolidationJob.run(spark, cat, _, _, pauseAfter,
+        unparked = false))
 
   def cleanJobs(nameLike: String = "", state: Option[String] = None): Long = {
     val jobs = cat.read(spark, "jobs")

@@ -1085,18 +1085,4 @@ object Catalog {
     import org.apache.spark.sql.functions._
     pmod(crc32(encode(uri, "UTF-8")), lit(TilesBuckets.toLong)).cast("int")
   }
-
-  /** Strictly-increasing microsecond wall clock for journal rows: two
-    * FSM transitions in the same millisecond still get distinct,
-    * correctly-ordered `created_at` stamps, so `ORDER BY created_at`
-    * reconstructs one driver's journal deterministically (across driver
-    * restarts the ≥1 s gap dwarfs the microsecond tie window). */
-  private val lastMicros = new java.util.concurrent.atomic.AtomicLong(0L)
-  def journalNow(): java.sql.Timestamp = {
-    val micros = lastMicros.updateAndGet(prev =>
-      math.max(prev + 1, System.currentTimeMillis() * 1000L))
-    val ts = new java.sql.Timestamp((micros / 1000000L) * 1000L)
-    ts.setNanos(((micros % 1000000L) * 1000L).toInt)
-    ts
-  }
 }

@@ -1,7 +1,7 @@
 package graft.consolidation
 
-import graft.catalog.{Catalog, TableStore, CatalogQueries, DatasetFilters, Schemas}
-import org.apache.spark.sql.{Row, SparkSession}
+import graft.catalog.{TableStore, CatalogQueries, DatasetFilters}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The standalone deletion job (reference internal/svc/operations.go:
@@ -32,15 +32,10 @@ object DeletionJob {
   val states: Seq[String] = Seq(
     "NEW", "CREATED", "DELETIONINPROGRESS", "DELETIONEFFECTIVE", "DONE")
 
-  private def logState(spark: SparkSession, cat: TableStore, spec: Spec,
-      state: String, payload: String = ""): Unit = {
-    // monotonic stamp: same-millisecond transitions stay totally ordered
-    val now = graft.catalog.Catalog.journalNow()
-    cat.append(spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(
-        Row(spec.jobId, spec.name, "DELETION", state, 0, 0, payload, now, now))),
-      Schemas.jobs), "jobs")
-  }
+  val JobType = "DELETION"
+
+  private def journal(spark: SparkSession, cat: TableStore, jobId: String,
+      name: String) = JournaledJob(spark, cat, JobType, jobId, name)
 
   /** The job spec serialized into the NEW journal row's payload — makes
     * the job resumable BY ID alone (ContinueJob; same convention as
@@ -55,25 +50,25 @@ object DeletionJob {
 
   /** Rehydrate the Spec from the NEW journal row. */
   def specFromJournal(spark: SparkSession, cat: TableStore,
-      jobId: String): Option[Spec] = {
+      jobId: String): Option[Spec] =
+    specOf(spark, JournaledJob(spark, cat, JobType, jobId, name = ""))
+
+  private[graft] def specOf(spark: SparkSession, job: JournaledJob): Option[Spec] =
+    job.spec.map(parseSpec(spark, job.jobId, _))
+
+  private def parseSpec(spark: SparkSession, jobId: String, js: String): Spec = {
     import org.apache.spark.sql.types._
-    val payload = cat.read(spark, "jobs")
-      .filter(col("id") === jobId && col("state") === "NEW")
-      .select("payload").collect().headOption.map(_.getString(0))
-      .filter(_.nonEmpty)
-    payload.map { js =>
-      val schema = StructType(Seq(
-        StructField("name", StringType),
-        StructField("instance_ids", ArrayType(StringType)),
-        StructField("record_ids", ArrayType(StringType)),
-        StructField("patterns", ArrayType(StringType))))
-      import spark.implicits._
-      val r = spark.read.schema(schema).json(Seq(js).toDS()).collect().head
-      def seq(c: String): Seq[String] =
-        Option(r.getAs[scala.collection.Seq[String]](c)).map(_.toSeq).getOrElse(Nil)
-      Spec(jobId, r.getAs[String]("name"), seq("instance_ids"),
-        seq("record_ids"), seq("patterns"))
-    }
+    val schema = StructType(Seq(
+      StructField("name", StringType),
+      StructField("instance_ids", ArrayType(StringType)),
+      StructField("record_ids", ArrayType(StringType)),
+      StructField("patterns", ArrayType(StringType))))
+    import spark.implicits._
+    val r = spark.read.schema(schema).json(Seq(js).toDS()).collect().head
+    def seq(c: String): Seq[String] =
+      Option(r.getAs[scala.collection.Seq[String]](c)).map(_.toSeq).getOrElse(Nil)
+    Spec(jobId, r.getAs[String]("name"), seq("instance_ids"),
+      seq("record_ids"), seq("patterns"))
   }
 
   /** Physical removal of one container object — the opSubFncDeleteContainer
@@ -98,15 +93,6 @@ object DeletionJob {
     }
   }
 
-  /** The job's durable lock rows — the reference's locked_datasets flags
-    * (job.LockDatasets): one `tasks` row per locked dataset id, state
-    * "LOCK". Written at CREATED, so every later step (flip, removal,
-    * rollback) operates on the EXACT snapshot, never on a re-evaluated
-    * filter that might now match other jobs' rows or nothing at all. */
-  private def readLocksDf(spark: SparkSession, cat: TableStore,
-      jobId: String): org.apache.spark.sql.DataFrame =
-    Consolidation.readLockIds(spark, cat, jobId)
-
   /** CancelledByUser for a deletion job: allowed while the flip is still
     * reversible — once rows have actually been REMOVED (detected from the
     * data: any locked id missing from the datasets table, covering the
@@ -119,26 +105,14 @@ object DeletionJob {
     * surviving LOCK rows as the not-yet-complete witness. Terminal for
     * [[run]]. */
   def cancel(spark: SparkSession, cat: TableStore, jobId: String,
-      name: String): String = {
-    val done: Set[String] = cat.read(spark, "jobs")
-      .filter(col("id") === jobId).select("state")
-      .collect().map(_.getString(0)).toSet
-    if (done.isEmpty) return "NOTFOUND"
-    // terminal FAILED refuses: its rollback already ran and a second
-    // terminal ABORTED row would contradict it (reference: no cancel
-    // event out of FAILED, job.go:526)
-    if (done.contains("FAILED")) return "UNHANDLED"
-    // ROLLBACKFAILED + cancel abandons the rollback-retry loop: accept
-    // terminal FAILED (CancelledByUserForced, job.go:612-617)
-    if (done.contains("ROLLBACKFAILED")) {
-      ConsolidationJob.logStateRaw(spark, cat, jobId, name, "FAILED",
-        """{"error":"rollback abandoned by user"}""", jobType = "DELETION")
-      return "FAILED"
-    }
+      name: String): String = cancel(spark, cat, journal(spark, cat, jobId, name))
+
+  private[consolidation] def cancel(spark: SparkSession, cat: TableStore,
+      job: JournaledJob): String = job.cancelPrelude.getOrElse {
     // the lock snapshot rides as a RELATION over the durable LOCK rows —
     // membership via joins, never a multi-literal isin (a deletion job
     // over a whole instance can lock 10⁶ datasets)
-    val lockedDf = readLocksDf(spark, cat, jobId)
+    val lockedDf = Consolidation.readLockIds(spark, cat, job.jobId)
     val nLocked = lockedDf.count()
     // the un-flip + lock release below span two tables: ABORTED is
     // journaled FIRST (the reference's ordering — CancelledByUser changes
@@ -147,232 +121,194 @@ object DeletionJob {
     // ABORTED row and this branch finishes the work on the next touch.
     // Surviving LOCK rows are the completion witness: the release is the
     // rollback's last write, so locks-gone ⇒ rollback done.
-    def rollbackWork(): Unit = if (nLocked > 0) {
-      // instance scope rehydrated from the journaled spec when present
-      // (a legacy job un-flips unscoped — all partitions, per-dir swaps)
-      val instScope = specFromJournal(spark, cat, jobId)
-        .map(_.instanceIds).getOrElse(Nil)
-      cat.updatePartitions(spark, "datasets", instScope, df =>
-        Consolidation.withMembership(df, "id", lockedDf, "id", "__lk")
-          .withColumn("status",
-            when(col("__lk") && col("status") === "TODELETE",
-              "ACTIVE").otherwise(col("status")))
-          .drop("__lk"))
-      cat.updatePartitions(spark, "tasks", Seq(jobId),
-        _.filter(col("state") =!= "LOCK"))
+    if (!job.has("ABORTED") && (job.has("DELETIONEFFECTIVE") ||
+        job.has("DONE") || job.has("DONEBUTUNTIDY") || nLocked > 0 &&
+        cat.read(spark, "datasets").join(lockedDf, Seq("id"), "left_semi")
+          .count() < nLocked)) {
+      job.log("CANCELLATIONFAILED", """{"error":"datasets already removed"}""")
+      "CANCELLATIONFAILED"
+    } else {
+      if (!job.has("ABORTED")) job.log("ABORTED")
+      if (nLocked > 0) {
+        // instance scope rehydrated from the journaled spec when present
+        // (a legacy job un-flips unscoped — all partitions, per-dir swaps)
+        val instScope = specOf(spark, job).map(_.instanceIds).getOrElse(Nil)
+        cat.updatePartitions(spark, "datasets", instScope, df =>
+          Consolidation.withMembership(df, "id", lockedDf, "id", "__lk")
+            .withColumn("status",
+              when(col("__lk") && col("status") === "TODELETE",
+                "ACTIVE").otherwise(col("status")))
+            .drop("__lk"))
+        cat.updatePartitions(spark, "tasks", Seq(job.jobId),
+          _.filter(col("state") =!= "LOCK"))
+      }
+      "ABORTED"
     }
-    if (done.contains("ABORTED")) { rollbackWork(); return "ABORTED" }
-    val present =
-      if (nLocked == 0) 0L
-      else cat.read(spark, "datasets")
-        .join(lockedDf, Seq("id"), "left_semi").count()
-    if (done.contains("DELETIONEFFECTIVE") || done.contains("DONE") ||
-        done.contains("DONEBUTUNTIDY") || present < nLocked) {
-      ConsolidationJob.logStateRaw(spark, cat, jobId, name,
-        "CANCELLATIONFAILED", """{"error":"datasets already removed"}""",
-        jobType = "DELETION")
-      return "CANCELLATIONFAILED"
-    }
-    ConsolidationJob.logStateRaw(spark, cat, jobId, name, "ABORTED",
-      jobType = "DELETION")
-    rollbackWork()
-    "ABORTED"
   }
 
   /** Drive the FSM; journals to `jobs`, resumes from the journal, stops
     * after `pauseAfter` if given. Returns the final state. */
   def run(spark: SparkSession, cat: TableStore, spec: Spec,
-      pauseAfter: Option[String] = None): String = {
+      pauseAfter: Option[String] = None): String =
+    run(spark, cat, journal(spark, cat, spec.jobId, spec.name), spec, pauseAfter)
+
+  // Cancelled is terminal — but the cancel's rollback may have been cut
+  // short by a crash after its ABORTED journal append; cancel()'s ABORTED
+  // branch finishes it (idempotent, witnessed by LOCK rows). FAILED is
+  // terminal too: the rollback already un-flipped this job's TODELETE
+  // rows back to ACTIVE — a forward re-drive would skip the flip (its
+  // state is journaled), remove nothing, and journal DONE while every
+  // targeted dataset still exists. ROLLBACKFAILED leaves the catalog
+  // half-rolled-back; only an explicit retry may re-attempt the rollback.
+  private[graft] def run(spark: SparkSession, cat: TableStore,
+      job: JournaledJob, spec: Spec, pauseAfter: Option[String]): String =
+    job.drive(specJson(spec), pauseAfter, Seq("ABORTED"), cancel(spark, cat, job))(
+      forward(spark, cat, job, spec)) { e =>
+      // delRollback (operations.go:156-160): un-flip THIS job's locked
+      // TODELETE rows if the removal never became effective — other
+      // jobs' TODELETE markers (e.g. a consolidation swap) stay put.
+      // Guards: the journal as this run left it, not the pre-run one (a
+      // run that journaled DELETIONEFFECTIVE ITSELF must not un-flip);
+      // and the locks are RE-READ fresh — the entry-time lockedDf plan
+      // pins a tasks-dir file listing that later task rewrites swapped
+      // away, so re-evaluating it here would throw FileNotFoundException
+      // and mask the real error as a spurious ROLLBACKFAILED. A job
+      // whose locks were already released reads an empty relation →
+      // no-op.
+      rollbackToFailed(spark, cat, job, e)
+    }
+
+  private def forward(spark: SparkSession, cat: TableStore, job: JournaledJob,
+      spec: Spec): String = {
     import spark.implicits._
-    val done: Set[String] = cat.read(spark, "jobs")
-      .filter(col("id") === spec.jobId).select("state")
-      .collect().map(_.getString(0)).toSet
-    val reached = scala.collection.mutable.Set.empty[String] ++ done
-    def step(state: String)(body: => String): Boolean = {
-      if (!done.contains(state)) {
-        val payload = body
-        logState(spark, cat, spec, state, payload)
-      }
-      reached += state
-      pauseAfter.contains(state)
+    // delInit: lock = snapshot the ids selected by the filters — ACTIVE
+    // rows only, so another job's TODELETE markers (a consolidation past
+    // its swap) can never enter this job's scope. The snapshot persists
+    // as LOCK rows in the tasks table, written DISTRIBUTED (an
+    // instance-wide deletion locks catalog-scale id sets — no driver
+    // arrays, no isin literal lists anywhere downstream); every later
+    // step reads the durable rows back as a relation.
+    if (!job.has("CREATED")) {
+      val sel = CatalogQueries.findDatasets(spark, cat, DatasetFilters(
+        status = Seq("ACTIVE"),
+        instanceIds = spec.instanceIds, recordIds = spec.recordIds,
+        containerUriPatterns = spec.containerUriPatterns, order = false))
+        .select("id")
+      require(sel.limit(1).count() > 0,
+        s"deletion job ${spec.jobId}: no dataset found for these records, " +
+          "instances and/or pattern")
+      Consolidation.writeLockSnapshot(spark, cat, spec.jobId, sel)
     }
-    // cancelled: terminal — but the cancel's rollback may have been cut
-    // short by a crash after its ABORTED journal append; cancel()'s
-    // ABORTED branch finishes it (idempotent, witnessed by LOCK rows)
-    if (done.contains("ABORTED")) return cancel(spark, cat, spec.jobId, spec.name)
-    // FAILED: the rollback already un-flipped this job's TODELETE rows
-    // back to ACTIVE — a forward re-drive would skip the flip (its state
-    // is journaled), remove nothing, and journal DONE while every
-    // targeted dataset still exists. Terminal, like ConsolidationJob.
-    if (done.contains("FAILED")) return "FAILED"
-    // ROLLBACKFAILED: the catalog is half-rolled-back; only an explicit
-    // retry may re-attempt the rollback — never the forward path
-    if (done.contains("ROLLBACKFAILED")) return "ROLLBACKFAILED"
-    if (!done.contains("NEW")) logState(spark, cat, spec, "NEW", specJson(spec))
-    var lockedDf: org.apache.spark.sql.DataFrame = null
-    var nLocked = 0L
-    var orphanCkpt: org.apache.spark.sql.DataFrame = null
-    try {
-      // delInit: lock = snapshot the ids selected by the filters — ACTIVE
-      // rows only, so another job's TODELETE markers (a consolidation past
-      // its swap) can never enter this job's scope. The snapshot persists
-      // as LOCK rows in the tasks table, written DISTRIBUTED (an
-      // instance-wide deletion locks catalog-scale id sets — no driver
-      // arrays, no isin literal lists anywhere downstream); every later
-      // step reads the durable rows back as a relation.
-      if (!done.contains("CREATED")) {
-        val sel = CatalogQueries.findDatasets(spark, cat, DatasetFilters(
-          status = Seq("ACTIVE"),
-          instanceIds = spec.instanceIds, recordIds = spec.recordIds,
-          containerUriPatterns = spec.containerUriPatterns, order = false))
-          .select("id")
-        require(sel.limit(1).count() > 0,
-          s"deletion job ${spec.jobId}: no dataset found for these records, " +
-            "instances and/or pattern")
-        Consolidation.writeLockSnapshot(spark, cat, spec.jobId, sel)
-      }
-      lockedDf = readLocksDf(spark, cat, spec.jobId)
-      nLocked = lockedDf.count()
-      if (step("CREATED") { s"""{"locked":$nLocked}""" }) return "CREATED"
-      def withLock(df: org.apache.spark.sql.DataFrame) =
-        Consolidation.withMembership(df, "id", lockedDf, "id", "__lk")
+    val lockedDf = Consolidation.readLockIds(spark, cat, spec.jobId)
+    val nLocked = lockedDf.count()
+    job.step("CREATED") { s"""{"locked":$nLocked}""" }
+    def withLock(df: org.apache.spark.sql.DataFrame) =
+      Consolidation.withMembership(df, "id", lockedDf, "id", "__lk")
 
-      // delSetToDelete: locked ACTIVE → TODELETE. Instance-partition-
-      // scoped when the job names instances; a pattern-only job flips
-      // across all partitions (still per-partition swaps).
-      if (!done.contains("DELETIONINPROGRESS")) {
-        cat.updatePartitions(spark, "datasets", spec.instanceIds, df =>
-          withLock(df)
-            .withColumn("status",
-              when(col("__lk") && col("status") === "ACTIVE",
-                "TODELETE").otherwise(col("status")))
-            .drop("__lk"))
-      }
-      if (step("DELETIONINPROGRESS") { "" }) return "DELETIONINPROGRESS"
-
-      // delRemoveDatasets: drop the locked TODELETE rows; GC containers
-      // and tiles no surviving dataset references; every GC'd MANAGED
-      // container becomes a deletion task (unmanaged objects are the
-      // user's — the reference only deletes managed ones).
-      if (!done.contains("DELETIONEFFECTIVE")) {
-        cat.updatePartitions(spark, "datasets", spec.instanceIds, df =>
-          withLock(df)
-            .filter(!(col("__lk") && col("status") === "TODELETE"))
-            .drop("__lk"))
-        val live = cat.read(spark, "datasets")
-          .select(col("container_uri")).distinct()
-        val containers = cat.read(spark, "containers")
-        // the orphan list must be MATERIALIZED before the containers GC
-        // below removes its rows (a lazy plan re-evaluated afterwards
-        // would see nothing); checkpoint, never a driver array — an
-        // instance-wide deletion orphans catalog-scale container sets
-        val orphanManaged = containers
-          .join(live, containers("uri") === live("container_uri"), "left_anti")
-          .filter(col("managed"))
-          .select("uri").localCheckpoint(true)
-        orphanCkpt = orphanManaged
-        cat.rewrite(containers.join(live,
-          containers("uri") === live("container_uri"), "left_semi"), "containers")
-        // bucket-scoped tiles GC: the doomed uri set (tiles no surviving
-        // dataset references) is a metadata-only anti-join; deleteWhere
-        // rewrites just its hash buckets, never the whole pixel store
-        val tiles = cat.read(spark, "tiles")
-        cat.deleteWhere(spark, "tiles", tiles.select("container_uri").distinct()
-          .join(live.withColumnRenamed("container_uri", "__live"),
-            col("container_uri") === col("__live"), "left_anti"))
-        Consolidation.gcContainerLayouts(spark, cat)
-        // idempotent append: a crash after a previous attempt's append
-        // re-enters this block — URIs that already have a task keep it
-        // (task id = md5 of the uri: deterministic, so retries can never
-        // mint a second id for the same object)
-        val alreadyDf = cat.read(spark, "tasks")
-          .filter(col("job_id") === spec.jobId && col("state") =!= "LOCK")
-          .select(col("payload").as("uri"))
-        cat.append(orphanManaged.join(alreadyDf, Seq("uri"), "left_anti")
-          .select(
-            concat(lit(s"${spec.jobId}-t-"),
-              md5(col("uri").cast("binary"))).as("id"),
-            lit(spec.jobId).as("job_id"),
-            lit("NEW").as("state"),
-            col("uri").as("payload")), "tasks")
-      }
-      if (step("DELETIONEFFECTIVE") { "" }) return "DELETIONEFFECTIVE"
-
-      // delDeleteContainers: one distributed pass over the pending tasks
-      // (the reference's 20-worker pool as 20 partitions); per-task
-      // failure is a VALUE (task → FAILED), never a job abort, and the
-      // task outcomes flow back into the journal through a join — the
-      // driver only ever sees the two counts.
-      val resDf = cat.read(spark, "tasks")
-        .filter(col("job_id") === spec.jobId &&
-          col("state").isin("NEW", "PENDING", "FAILED"))
-        .select("id", "payload").as[(String, String)]
-        .repartition(20)
-        .map { case (taskId, uri) =>
-          (taskId, if (deleteContainerObject(uri).isRight) "SUCCESSFUL" else "FAILED")
-        }
-        .toDF("__tid", "__new_state")
-      resDf.cache()
-      val nTasks = resDf.count()
-      val nFailed = resDf.filter(col("__new_state") === "FAILED").count()
-      if (nTasks > 0) {
-        cat.updatePartitions(spark, "tasks", Seq(spec.jobId), tasksDf =>
-          tasksDf
-            .join(resDf, tasksDf("id") === col("__tid"), "left")
-            .withColumn("state", coalesce(col("__new_state"), col("state")))
-            .drop("__tid", "__new_state"))
-      }
-      resDf.unpersist()
-      val terminal = if (nFailed == 0) "DONE" else "DONEBUTUNTIDY"
-      // ReleaseDatasets: drop the LOCK rows once fully done (a
-      // DONEBUTUNTIDY job keeps them — its retry resumes on the snapshot)
-      if (terminal == "DONE")
-        cat.updatePartitions(spark, "tasks", Seq(spec.jobId),
-          _.filter(col("state") =!= "LOCK"))
-      if (!done.contains(terminal))
-        logState(spark, cat, spec, terminal,
-          s"""{"tasks":$nTasks,"failed":$nFailed}""")
-      terminal
-    } catch {
-      case e: Exception =>
-        def errJson(ex: Exception): String = ConsolidationJob.errJson(ex)
-        if (!reached.contains("CREATED")) {
-          // delInit never completed (DeletionNotReady, job.go:556-558):
-          // nothing flipped, nothing locked — retryable by re-running
-          // the job id once the cause (filters, catalog) is fixed
-          logState(spark, cat, spec, "INITIALISATIONFAILED", errJson(e))
-          return "INITIALISATIONFAILED"
-        }
-        // delRollback (operations.go:156-160): un-flip THIS job's locked
-        // TODELETE rows if the removal never became effective — other
-        // jobs' TODELETE markers (e.g. a consolidation swap) stay put.
-        // Guards: `reached`, not the stale pre-run `done` (a run that
-        // journaled DELETIONEFFECTIVE ITSELF must not un-flip); and the
-        // locks are RE-READ fresh — the entry-time lockedDf plan pins a
-        // tasks-dir file listing that later task rewrites swapped away,
-        // so re-evaluating it here would throw FileNotFoundException and
-        // mask the real error as a spurious ROLLBACKFAILED. A job whose
-        // locks were already released reads an empty relation → no-op.
-        rollbackToFailed(spark, cat, spec,
-          effective = reached.contains("DELETIONEFFECTIVE"), e)
-    } finally {
-      // executor blocks released on every exit, including exceptions
-      // (the inline release after the task append misses failure paths)
-      if (orphanCkpt != null)
-        graft.operators.OperatorCaches.releaseLocalCheckpoint(orphanCkpt)
+    // delSetToDelete: locked ACTIVE → TODELETE. Instance-partition-
+    // scoped when the job names instances; a pattern-only job flips
+    // across all partitions (still per-partition swaps).
+    job.step("DELETIONINPROGRESS") {
+      cat.updatePartitions(spark, "datasets", spec.instanceIds, df =>
+        withLock(df)
+          .withColumn("status",
+            when(col("__lk") && col("status") === "ACTIVE",
+              "TODELETE").otherwise(col("status")))
+          .drop("__lk"))
+      ""
     }
+
+    // delRemoveDatasets: drop the locked TODELETE rows; GC containers
+    // and tiles no surviving dataset references; every GC'd MANAGED
+    // container becomes a deletion task (unmanaged objects are the
+    // user's — the reference only deletes managed ones).
+    job.step("DELETIONEFFECTIVE") {
+      cat.updatePartitions(spark, "datasets", spec.instanceIds, df =>
+        withLock(df)
+          .filter(!(col("__lk") && col("status") === "TODELETE"))
+          .drop("__lk"))
+      val live = cat.read(spark, "datasets")
+        .select(col("container_uri")).distinct()
+      val containers = cat.read(spark, "containers")
+      // the deletion tasks are minted BEFORE the containers GC below
+      // removes the rows the orphan list derives from: in the other order
+      // a crash between the GC and the task append left the resume with
+      // no orphans, so the objects were never deleted. Idempotent append:
+      // a crash after a previous attempt's append re-enters this block —
+      // URIs that already have a task keep it (task id = md5 of the uri:
+      // deterministic, so retries can never mint a second id for the
+      // same object)
+      val alreadyDf = cat.read(spark, "tasks")
+        .filter(col("job_id") === spec.jobId && col("state") =!= "LOCK")
+        .select(col("payload").as("uri"))
+      cat.append(containers
+        .join(live, containers("uri") === live("container_uri"), "left_anti")
+        .filter(col("managed"))
+        .select("uri").join(alreadyDf, Seq("uri"), "left_anti")
+        .select(
+          concat(lit(s"${spec.jobId}-t-"),
+            md5(col("uri").cast("binary"))).as("id"),
+          lit(spec.jobId).as("job_id"),
+          lit("NEW").as("state"),
+          col("uri").as("payload")), "tasks")
+      cat.rewrite(containers.join(live,
+        containers("uri") === live("container_uri"), "left_semi"), "containers")
+      // bucket-scoped tiles GC: the doomed uri set (tiles no surviving
+      // dataset references) is a metadata-only anti-join; deleteWhere
+      // rewrites just its hash buckets, never the whole pixel store
+      val tiles = cat.read(spark, "tiles")
+      cat.deleteWhere(spark, "tiles", tiles.select("container_uri").distinct()
+        .join(live.withColumnRenamed("container_uri", "__live"),
+          col("container_uri") === col("__live"), "left_anti"))
+      Consolidation.gcContainerLayouts(spark, cat)
+      ""
+    }
+
+    // delDeleteContainers: one distributed pass over the pending tasks
+    // (the reference's 20-worker pool as 20 partitions); per-task
+    // failure is a VALUE (task → FAILED), never a job abort, and the
+    // task outcomes flow back into the journal through a join — the
+    // driver only ever sees the two counts.
+    val resDf = cat.read(spark, "tasks")
+      .filter(col("job_id") === spec.jobId &&
+        col("state").isin("NEW", "PENDING", "FAILED"))
+      .select("id", "payload").as[(String, String)]
+      .repartition(20)
+      .map { case (taskId, uri) =>
+        (taskId, if (deleteContainerObject(uri).isRight) "SUCCESSFUL" else "FAILED")
+      }
+      .toDF("__tid", "__new_state")
+    resDf.cache()
+    job.onExit(resDf.unpersist())
+    val nTasks = resDf.count()
+    val nFailed = resDf.filter(col("__new_state") === "FAILED").count()
+    if (nTasks > 0) {
+      cat.updatePartitions(spark, "tasks", Seq(spec.jobId), tasksDf =>
+        tasksDf
+          .join(resDf, tasksDf("id") === col("__tid"), "left")
+          .withColumn("state", coalesce(col("__new_state"), col("state")))
+          .drop("__tid", "__new_state"))
+    }
+    val terminal = if (nFailed == 0) "DONE" else "DONEBUTUNTIDY"
+    // ReleaseDatasets: drop the LOCK rows once fully done (a
+    // DONEBUTUNTIDY job keeps them — its retry resumes on the snapshot)
+    if (terminal == "DONE")
+      cat.updatePartitions(spark, "tasks", Seq(spec.jobId),
+        _.filter(col("state") =!= "LOCK"))
+    job.step(terminal) { s"""{"tasks":$nTasks,"failed":$nFailed}""" }
+    terminal
   }
 
-  /** delRollback + terminal FAILED: un-flip THIS job's locked TODELETE
-    * rows (unless the removal became effective), release the job's task
-    * rows, journal FAILED. A rollback that itself throws journals
-    * ROLLBACKFAILED — [[retry]] re-attempts only the rollback from there
-    * (job.go:505-510); run() refuses both terminal states. */
-  private def rollbackToFailed(spark: SparkSession, cat: TableStore, spec: Spec,
-      effective: Boolean, cause: Exception): String =
-    try {
-      val rbLocks = readLocksDf(spark, cat, spec.jobId)
-      if (!effective && rbLocks.limit(1).count() > 0) {
+  /** delRollback + terminal FAILED through the kernel's rollback wrapper:
+    * un-flip THIS job's locked TODELETE rows unless the removal became
+    * effective. [[retry]] re-attempts only the rollback out of
+    * ROLLBACKFAILED (job.go:505-510); run() refuses both terminal
+    * states. */
+  private def rollbackToFailed(spark: SparkSession, cat: TableStore,
+      job: JournaledJob, cause: Exception): String =
+    job.rollback(cause) {
+      val rbLocks = Consolidation.readLockIds(spark, cat, job.jobId)
+      if (!job.has("DELETIONEFFECTIVE") && rbLocks.limit(1).count() > 0) {
         cat.rewrite(Consolidation.withMembership(
             cat.read(spark, "datasets"), "id", rbLocks, "id", "__lk")
           .withColumn("status",
@@ -380,37 +316,19 @@ object DeletionJob {
               "ACTIVE").otherwise(col("status")))
           .drop("__lk"), "datasets")
       }
-      // FAILED (with the real cause) journals BEFORE the lock/task drop:
-      // a crash between the old order's two writes left the resume's
-      // empty-catalog error as the journaled cause. FAILED is terminal
-      // (run() refuses it; retry returns UNHANDLED); a crash after it
-      // merely leaves dead task rows for cleanJobs.
-      logState(spark, cat, spec, "FAILED", ConsolidationJob.errJson(cause))
-      Consolidation.dropJobTasks(spark, cat, spec.jobId)
-      "FAILED"
-    } catch {
-      case e2: Exception =>
-        try logState(spark, cat, spec, "ROLLBACKFAILED",
-          ConsolidationJob.errJson(e2))
-        catch { case _: Exception => () }
-        "ROLLBACKFAILED"
     }
 
   /** Retried for a deletion job (job.go:419-421): a parked DONEBUTUNTIDY
     * or interrupted job resumes through [[run]] (the worker stage
     * re-processes NEW/PENDING/FAILED tasks — the resume IS the retry);
-    * ROLLBACKFAILED re-attempts ONLY the rollback; terminal FAILED /
-    * ABORTED refuse with UNHANDLED; unknown ids with NOTFOUND. */
-  def retry(spark: SparkSession, cat: TableStore, spec: Spec): String = {
-    val done: Set[String] = cat.read(spark, "jobs")
-      .filter(col("id") === spec.jobId).select("state")
-      .collect().map(_.getString(0)).toSet
-    if (done.isEmpty) return "NOTFOUND"
-    if (done.contains("FAILED") || done.contains("ABORTED")) return "UNHANDLED"
-    if (done.contains("ROLLBACKFAILED"))
-      return rollbackToFailed(spark, cat, spec,
-        effective = done.contains("DELETIONEFFECTIVE"),
-        new IllegalStateException("rollback retried by user"))
-    run(spark, cat, spec)
-  }
+    * ROLLBACKFAILED re-attempts ONLY the rollback; terminal DONE, FAILED
+    * and ABORTED refuse with UNHANDLED; unknown ids with NOTFOUND. */
+  def retry(spark: SparkSession, cat: TableStore, spec: Spec): String =
+    retry(spark, cat, journal(spark, cat, spec.jobId, spec.name), spec)
+
+  private[graft] def retry(spark: SparkSession, cat: TableStore,
+      job: JournaledJob, spec: Spec): String =
+    job.retryPrelude(rollbackToFailed(spark, cat, job,
+      new IllegalStateException("rollback retried by user")))
+      .getOrElse(run(spark, cat, job, spec, None))
 }

@@ -102,10 +102,11 @@ object Dedup {
       .foldLeft(col("a.__bi") === col("b.__bi") &&
         col("a.__bv") === col("b.__bv") && col("a.__id") < col("b.__id"))(_ && _)
     // token fetch: both pair sides probe the IDENTICAL (__id, __toks)
-    // projection so the second broadcast build plans as a ReusedExchange
-    // of the first (per-side aliases used to make the canonical plans
-    // differ and each join shipped its own hashed relation — guide §3
-    // build-side reuse, same change as TextQueries.lshPairs).
+    // projection, one canonical form for both builds. Spark does NOT
+    // reuse the second broadcast build even so: the executed plan keeps
+    // two BroadcastQueryStages over the same cached relation
+    // (plans/r16/dedup_lsh_pairs_exec.txt, OPTIMIZATION_r16.md) — a
+    // recorded negative result; same shape as TextQueries.lshPairs.
     val tok = base.select(col("__id"), col("__toks"))
     exploded.as("a").join(exploded.as("b"), cond)
       .select(col("a.__id").as("id_a"), col("b.__id").as("id_b"))
@@ -132,7 +133,12 @@ object Dedup {
     * and ships (id, start, hash) only — text never shuffles; duplicate
     * detection is one keyed count per hash; the interval union is a
     * per-doc window over dup spans only. At 100 TB the hash relation is
-    * the only wide shuffle, ~24 bytes per window. */
+    * the only wide shuffle, ~24 bytes per window.
+    *
+    * Precondition: `df` must be deterministic. The window explode is
+    * recomputed for the dup count and for the join (not cached, see
+    * below), so a `sample`, `rand` or shuffle-order-dependent id column
+    * could give the two passes different rows. */
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
       k: Int): DataFrame = {
     require(k >= 1, s"window of $k tokens")

@@ -180,11 +180,11 @@ object SimilarityQueries {
         posexplode(array(col("b0"), col("b1"))))
       .withColumnRenamed("pos", "bi").withColumnRenamed("col", "bv")
     // vector fetch: both pair sides probe the IDENTICAL (vec_id, v, nrm)
-    // projection — per-side aliases used to give the two broadcast builds
-    // different canonical plans, so each join built its own hashed
-    // relation over the same cache scan; one shared projection lets the
-    // second build plan as a ReusedExchange (guide §3, build-side reuse —
-    // r15 verdict #4; same change as TextQueries.lshPairs).
+    // projection, one canonical form for both broadcast builds. Spark
+    // still builds the second one itself — no exchange reuse in the
+    // executed plan (plans/r16/dedup_embed_exec.txt,
+    // OPTIMIZATION_r16.md), a recorded negative result; same shape as
+    // TextQueries.lshPairs.
     val vec = sig.select(col("vec_id"), col("v"), col("nrm"))
     exploded.as("a").join(exploded.as("b"),
         col("a.bi") === col("b.bi") && col("a.bv") === col("b.bv") &&

@@ -177,11 +177,12 @@ object TextQueries {
         posexplode(array(col("band0"), col("band1"))))
       .withColumnRenamed("pos", "bi").withColumnRenamed("col", "bv")
     // token fetch: BOTH pair sides probe the IDENTICAL (doc_id, toks)
-    // projection — aliasing the columns per side (doc_a/ta vs doc_b/tb)
-    // used to give the two broadcast builds different canonical plans, so
-    // each join built (and shipped) its own hashed relation over the same
-    // cache scan; with one shared projection the second build plans as a
-    // ReusedExchange (guide §3, build-side reuse — r15 verdict #4).
+    // projection, one canonical form for both broadcast builds. It does
+    // NOT make Spark reuse the second build: the executed plan still
+    // shows two BroadcastQueryStages over two cache-scan stages of the
+    // same relation (plans/r16/dedup_lsh_pairs_exec.txt,
+    // OPTIMIZATION_r16.md) — a recorded negative result; at sf0.1 the
+    // second build is a ~500-row hashed relation.
     val tok = base.select(col("doc_id"), col("toks"))
     exploded.as("a").join(exploded.as("b"),
         col("a.source") === col("b.source") &&

@@ -641,7 +641,11 @@ object GeoTiff {
         if (big) bb.getLong(base + n * entrySize)
         else bb.getInt(base + n * entrySize).toLong & 0xffffffffL
     }
-    out.result()
+    val ifds = out.result()
+    // a first-IFD offset of 0 is a header with no image: refuse it here,
+    // never as a NoSuchElementException from a caller's ifds.head
+    require(ifds.nonEmpty, "TIFF has no IFDs (first IFD offset is 0)")
+    ifds
   }
 
   private def tagVal(tags: Map[Int, TagEntry], tag: Int, default: Int = -1): Int =

@@ -75,14 +75,6 @@ class CatalogMigrationSpec extends AnyFunSuite with BeforeAndAfterAll {
     rm(new java.io.File(local))
   }
 
-  test("journalNow: strictly increasing even within one millisecond") {
-    val stamps = (1 to 2000).map(_ => Catalog.journalNow())
-    assert(stamps.sliding(2).forall {
-      case Seq(a, b) => b.after(a)
-      case _ => true
-    })
-  }
-
   test("swap heal: a crash between the two renames never reads as an empty table") {
     val root2 = java.nio.file.Files.createTempDirectory("graft-heal").toString
     val cat2 = Catalog(root2)

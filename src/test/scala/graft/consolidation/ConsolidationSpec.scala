@@ -1042,6 +1042,20 @@ class ConsolidationSpec extends AnyFunSuite with BeforeAndAfterAll {
       .count() == 0)
   }
 
+  test("cancel of an id with only counter rows is NOTFOUND and journals nothing") {
+    // streaming TASKEVENT counters are progress, not job state: an id
+    // that has only them never ran, so there is nothing to cancel
+    val t0 = ts("2024-01-01 00:00:00")
+    cat.append(spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row("jcounters", "run-batch-0", "TASKEVENT", "COUNTERS", 1, 0, "", t0, t0))),
+      Schemas.all("jobs")), "jobs")
+    val spec = ConsolidationJob.Spec("jcounters", "counters", "i1", Seq("r1"),
+      layout, ConsolidationParams(uint8Map, Resampling.Near))
+    assert(ConsolidationJob.cancel(spark, cat, spec) == "NOTFOUND")
+    assert(cat.read(spark, "jobs").filter(col("id") === "jcounters")
+      .select("state").collect().map(_.getString(0)).toSeq == Seq("COUNTERS"))
+  }
+
   test("torn cancel: CANCELLING journaled, crash mid-purge — resume completes the cancel") {
     val cat2 = twoCellCatalog("torncancel", poisonR2 = false)
     val spec = ConsolidationJob.Spec("jtc", "torncancel", "i1", Seq("r1", "r2"),
@@ -1053,8 +1067,8 @@ class ConsolidationSpec extends AnyFunSuite with BeforeAndAfterAll {
     // CANCELLING journal row landed and the INACTIVE outputs are purged,
     // but tiles/containers/tasks were never touched and ABORTED was
     // never journaled
-    ConsolidationJob.logStateRaw(spark, cat2, "jtc", "torncancel",
-      "CONSOLIDATIONCANCELLING")
+    JournaledJob(spark, cat2, ConsolidationJob.JobType, "jtc", "torncancel")
+      .log("CONSOLIDATIONCANCELLING")
     cat2.rewrite(cat2.read(spark, "datasets")
       .filter(!(col("status") === "INACTIVE" &&
         col("container_uri").startsWith(prefix))), "datasets")
@@ -1211,8 +1225,8 @@ class ConsolidationSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().head.getString(0) == "TODELETE")
     // simulate cancel() crashing right after its ABORTED journal append:
     // the flip is still in place and the LOCK rows survive
-    ConsolidationJob.logStateRaw(spark, cat2, "jdc", "deltorn", "ABORTED",
-      jobType = "DELETION")
+    JournaledJob(spark, cat2, DeletionJob.JobType, "jdc", "deltorn")
+      .log("ABORTED")
     // any later touch finishes the rollback instead of journaling a
     // bogus DONE over a skipped removal
     assert(DeletionJob.run(spark, cat2, spec) == "ABORTED")

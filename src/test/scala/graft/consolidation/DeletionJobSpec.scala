@@ -215,6 +215,23 @@ class DeletionJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ConsolidationJob.cancelById(spark, cat, "no-such-job") == "NOTFOUND")
   }
 
+  test("DONE is terminal: retry is UNHANDLED and a re-run writes nothing") {
+    val box = BBox(0, 0, 1, 1)
+    val wkb = GeomOps.writeWkb(GeomOps.polygonFromBBox(box))
+    val bbox = Row(box.xmin, box.ymin, box.xmax, box.ymax)
+    write("datasets", Seq(Row("dd1", "r-dd1", "iD", "mem://dd1", "", Seq(1),
+      "ACTIVE", null, "uint8", 255.0, 0.0, 254.0, 0.0, 254.0, 1.0, false,
+      wkb, wkb, 4326, bbox)))
+    write("containers", Seq(Row("mem://dd1", true, "STANDARD")))
+    val spec = DeletionJob.Spec("del8", "del8", instanceIds = Seq("iD"))
+    assert(DeletionJob.run(spark, cat, spec) == "DONE")
+    val files = graft.catalog.CatalogTestIO.fileState(new java.io.File(root))
+    // job.go has no Retried event out of DONE
+    assert(DeletionJob.retry(spark, cat, spec) == "UNHANDLED")
+    assert(DeletionJob.run(spark, cat, spec) == "DONE")
+    assert(graft.catalog.CatalogTestIO.fileState(new java.io.File(root)) == files)
+  }
+
   test("deletion job with no match journals INITIALISATIONFAILED, touches nothing") {
     // nothing was locked or flipped — the retryable init-failure state
     // (job.go DeletionNotReady), not the post-rollback terminal FAILED

@@ -137,6 +137,18 @@ class GeoTiffSpec extends AnyFunSuite {
     assert(bytesRead < bytes.length, s"read $bytesRead of ${bytes.length}")
   }
 
+  test("a TIFF whose first IFD offset is 0 fails with an explicit no-IFDs error") {
+    // "II", version 42, first-IFD offset 0, padded past the 16-byte floor
+    val bytes = Array[Byte]('I', 'I', 42, 0, 0, 0, 0, 0) ++ new Array[Byte](8)
+    def readAt(pos: Long, buf: Array[Byte], off: Int, len: Int): Unit =
+      System.arraycopy(bytes, pos.toInt, buf, off, len)
+    val e = intercept[IllegalArgumentException] {
+      GeoTiff.readForResolutionRangedMeters(readAt, bytes.length.toLong,
+        "GTIFF_DIR:1", metersPerPx = 10.0)
+    }
+    assert(e.getMessage.contains("no IFDs"))
+  }
+
   test("readRanged: whole-container read parity over positioned reads") {
     // the >2 GiB-capable twin of read(data): every directory, overviews
     // included, decoded through ranged fetches — container size bounded
