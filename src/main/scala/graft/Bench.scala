@@ -99,9 +99,9 @@ object Bench {
         System.err.println(s"BENCH FAILURE getcube_100x256: ${e.getMessage}")
         failed += "getcube_100x256"; -1.0
       })) :+ ("getcube_commitlog" -> (
-      // the SAME 100×256 cube through a CommitLogTableStore root whose
-      // tiles arrived in four separate appends (four live op dirs) —
-      // tracks the commit-log serving overhead vs the swap store as a
+      // the SAME 100×256 cube whose tiles arrived in four separate
+      // appends (four live op dirs) instead of one — tracks what a
+      // multi-append tiles table costs the serving read as a
       // driver-recorded number (r12 verdict #4); done-bar ≤2× getcube
       try getCubeCommitLogBench(spark)
       catch { case e: Throwable =>
@@ -167,8 +167,11 @@ object Bench {
     import graft.catalog.{Catalog, CatalogQueries, DatasetFilters}
     import graft.geo.{BBox, GeomOps}
     import spark.implicits._
+    // the seed's version names its on-disk layout: v1 seeds were written
+    // by the retired rename-swap store, which the commit-log catalog
+    // reads as an empty table
     val root = new java.io.File(
-      System.getProperty("java.io.tmpdir"), "graft-cat1m-v1")
+      System.getProperty("java.io.tmpdir"), "graft-cat1m-v2")
     val marker = new java.io.File(root, "_SEEDED")
     if (!marker.exists) {
       def rm(f: java.io.File): Unit = {
@@ -233,20 +236,18 @@ object Bench {
   private def getCubeBench(spark: SparkSession): Double =
     getCubeBenchOn(spark, root => graft.catalog.Catalog(root), tileAppends = 1)
 
-  /** [[getCubeBench]] on a [[graft.catalog.CommitLogTableStore]] root —
-    * the object-store deployment's serving path — with the tiles written
-    * in FOUR separate appends so the read spans several live op dirs
-    * (the shape the one-relation-per-table read must keep cheap). */
+  /** [[getCubeBench]] with the tiles written in FOUR separate appends so
+    * the read spans several live op dirs (the shape the
+    * one-relation-per-table read must keep cheap). */
   private def getCubeCommitLogBench(spark: SparkSession): Double =
-    getCubeBenchOn(spark,
-      root => graft.catalog.CommitLogTableStore(root), tileAppends = 4)
+    getCubeBenchOn(spark, root => graft.catalog.Catalog(root), tileAppends = 4)
 
   /** [[getCubeCommitLogBench]]'s cube fetched THROUGH the HTTP edge on a
     * loopback ephemeral port — raw passthrough compression so the number
     * is framing + transfer, not deflate CPU. */
   private def getCubeHttpBench(spark: SparkSession): Double =
     getCubeBenchOn(spark,
-      root => graft.catalog.CommitLogTableStore(root), tileAppends = 4,
+      root => graft.catalog.Catalog(root), tileAppends = 4,
       viaHttp = true)
 
   private def getCubeBenchOn(spark: SparkSession,

@@ -773,12 +773,10 @@ object Geocube {
     * GeocubeServerVersion the same way, service.go:34). */
   val EngineVersion = "1.0.0"
 
-  /** The facade on the right [[TableStore]] for `root`'s scheme
-    * ([[TableStore.at]]): atomic-rename stores get the swap catalog,
-    * object stores the commit log — one call for a deployment that
-    * doesn't want to choose. */
+  /** The facade over the [[Catalog]] at `root` (any Hadoop scheme with a
+    * registered connector). */
   def at(spark: SparkSession, root: String): Geocube =
-    Geocube(spark, TableStore.at(spark, root))
+    Geocube(spark, Catalog(root))
 }
 
 /** `runMain graft.api.ServeMain <catalogRoot> [port] [bindAddress]` —
@@ -814,7 +812,7 @@ object ServeMain {
         s"WARNING: binding 127.0.0.1 (the default) under non-local master " +
           s"'$master' — external clients/balancers cannot reach this edge; " +
           "pass an explicit bindAddress argument to expose it")
-    val edge = new graft.serving.HttpEdge(spark, TableStore.at(spark, args(0)),
+    val edge = new graft.serving.HttpEdge(spark, Catalog(args(0)),
       args.lift(1).map(_.toInt).getOrElse(8080), bind)
     val port = edge.start()
     // the bound ADDRESS is in the startup line deliberately: the default

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * `UpdateDatasets` data-format rewrite (pg_containers.go:433-473,
   * grpc/admin.go) and `TidyDB` garbage collection of unreferenced catalog
   * rows (api/v1/pb/admin.proto:58-62). Both are whole-table Catalyst plans
-  * ending in the catalog's atomic rewrite-swap — the parquet stand-in for
+  * ending in the catalog's atomic rewrite — the parquet stand-in for
   * the reference's single SQL transaction.
   */
 object Admin {
@@ -42,7 +42,7 @@ object Admin {
 
   /** Bulk data-format rewrite (pg_containers.go:460-473): every dataset of
     * the given instances gets the new dformat values, atomically. Returns
-    * the number of rows touched. One scan + one swap — no per-row round
+    * the number of rows touched. One scan + one rewrite — no per-row round
     * trips, so a 10⁹-row datasets table updates in one distributed pass. */
   def updateDatasets(spark: SparkSession, cat: TableStore,
       instanceIds: Seq[String], up: DFormatUpdate,
@@ -70,7 +70,7 @@ object Admin {
       "min_value" -> up.minValue, "max_value" -> up.maxValue,
       "real_min_value" -> up.realMinValue, "real_max_value" -> up.realMaxValue,
       "exponent" -> up.exponent)
-    // an all-None update changes nothing — skip the full-table scan+swap
+    // an all-None update changes nothing — skip the full-table scan+rewrite
     // (the datasets table is the catalog's big relation)
     if (n > 0 && !simulate && updates.exists(_._2.isDefined)) {
       // instance-partition-scoped: the dformat rewrite touches only the
@@ -89,7 +89,7 @@ object Admin {
   /** TidyDB (admin.proto:58-62): drop catalog rows nothing references —
     * records without datasets, AOIs without records, instances without
     * datasets, variables without instances, containers without datasets —
-    * each one left_anti plan + atomic swap, in dependency order (J6 shape:
+    * each one left_anti plan + atomic rewrite, in dependency order (J6 shape:
     * the NOT EXISTS GC of pg_records.go:176-191 / pg_containers.go:100-109).
     * Returns per-table deleted counts. */
   def tidy(spark: SparkSession, cat: TableStore,

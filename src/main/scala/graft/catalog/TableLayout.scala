@@ -5,21 +5,22 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
-/** Physical-layout knowledge shared by every [[TableStore]] implementation
-  * that stores tables as partitioned parquet files — which catalog tables
-  * are partitioned and by what, which carry a DERIVED bucket column, and
-  * how a batch is repartitioned before a bucketed write. Extracted from
-  * [[Catalog]] so the commit-log store ([[CommitLogTableStore]]) lays its
-  * data files out identically: the two implementations differ only in how
-  * they make a batch VISIBLE (directory renames vs log commits), never in
-  * what the bytes look like — so migrating a table between them is a file
-  * copy plus one log commit, not a rewrite. */
+/** Physical-layout knowledge for tables stored as partitioned parquet
+  * files — which catalog tables are partitioned and by what, which carry
+  * a DERIVED bucket column, and how a batch is repartitioned before a
+  * bucketed write. The rename-swap layout [[Catalog.importTable]] reads
+  * has the same shape under each table directory, so importing a table
+  * from it is a file copy plus one log commit, not a rewrite. */
 private[catalog] object TableLayout {
 
   /** Tables written with a STATIC partition column (the value is a data
-    * column): `datasets` by instance, `jobs` by type, `tasks` by job —
-    * see the scale rationale on [[Catalog]]. `tiles` is listed here too
-    * because its derived bucket is its physical partition key. */
+    * column): `datasets` by instance (instance filters prune), `jobs` by
+    * type (the streaming journal probes `type = TASKEVENT` once per
+    * micro-batch), `tasks` by job (every FSM read/rewrite is job-scoped —
+    * a big consolidation holds 10⁵ task rows per job and must not pay,
+    * or race, other jobs' I/O). `tiles` is listed here too because its
+    * derived bucket is its physical partition key (serving-path joins
+    * become dynamic partition pruning instead of a full payload scan). */
   def partitionColumn(table: String): Option[String] = table match {
     case "datasets" => Some("instance_id")
     case "jobs" => Some("type")
@@ -70,9 +71,17 @@ private[catalog] object TableLayout {
       StructType(base.fields :+ StructField(d.name, IntegerType)))
   }
 
-  /** Stamp any derived partition column and repartition bucketed batches
-    * on (bucket, salt) — the small-file/write-parallelism balance
-    * documented at [[Catalog]] `withDerived`. */
+  /** Stamp any derived partition column — authoritative at every write,
+    * so callers never supply (or can never corrupt) the bucket — and
+    * repartition bucketed batches before the partitioned write. An
+    * unrepartitioned partitionBy append from a 1000-task consolidation
+    * batch would spray up to 64k tiny files into the 100-TB store per
+    * batch; keying on the bucket ALONE caps write parallelism at ≤64
+    * tasks. So the shuffle key is (bucket, salt) with
+    * [[Catalog.filesPerBucket]] salts sized from the batch's estimated
+    * bytes: a small append keeps ≤1 file per bucket, a huge one fans out
+    * to up to 64×64 writers while the per-append file count stays
+    * bounded at buckets × salts. */
   def withDerived(df: DataFrame, table: String): DataFrame =
     derivedPartition(table).fold(df) { d =>
       val stamped = df.withColumn(d.name, d.derive(col(d.srcCol)))

@@ -5,32 +5,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** The five catalog mutation/read primitives, extracted behind a trait —
   * the transaction-boundary seam of the engine.
   *
-  * The parquet implementation ([[Catalog]]) gives these operations their
-  * semantics with directory renames plus a commit-marker roll-forward
-  * protocol, which is correct on stores with atomic rename (local FS,
-  * HDFS). On object stores whose rename is a copy (S3A), the SAME five
-  * primitives are exactly a lakehouse table format's native surface —
-  * `read` / `append` / `overwrite` / `DELETE WHERE` / `replaceWhere` —
-  * so a Delta or Iceberg implementation of this trait is a drop-in that
-  * inherits every caller (FSMs, GC, serving) unchanged. The reference
-  * draws this boundary at the PostGIS transaction
-  * (interface/database/pg/pg.go unitOfWork) over object payloads
-  * (interface/storage/gcs/strategy.go); we draw it at the table store.
+  * The production implementation ([[Catalog]]) gives these operations
+  * their semantics with immutable op directories published through an
+  * ordered commit log, which asks the filesystem for one atomic
+  * exclusive-create primitive and no rename on the publish path. The
+  * SAME five primitives are exactly a lakehouse table format's native
+  * surface — `read` / `append` / `overwrite` / `DELETE WHERE` /
+  * `replaceWhere` — so a Delta or Iceberg implementation of this trait
+  * is a drop-in that inherits every caller (FSMs, GC, serving)
+  * unchanged; tests substitute through it too (an in-memory store, and
+  * decorators that inject crashes). The reference draws this boundary at
+  * the PostGIS transaction (interface/database/pg/pg.go unitOfWork) over
+  * object payloads (interface/storage/gcs/strategy.go); we draw it at
+  * the table store.
   *
-  * Contract (pinned by TableStoreContractSpec, which any new impl must
-  * pass):
+  * Contract (pinned by the TableStoreContract suites, which any new impl
+  * must pass):
   *  - `read` returns the logical schema in declared column order (plus
   *    any derived partition column), and an EMPTY frame — not an error —
   *    for a table that has never been written;
-  *  - `append` is atomic per batch (a crashed append heals to all-or-
-  *    nothing, never a silently torn batch) and safe to run concurrently
-  *    with appends and with mutations of other partitions. Healing
-  *    latency is impl-specific: the commit-log store has no torn window
-  *    at all (a batch is invisible until its one commit lands), while
-  *    the swap store's crashed mid-move append stays partially visible
-  *    until the dead writer's heartbeat-backed leases go stale
-  *    (`graft.catalog.leaseStaleMs`, default 5 min) and the next
-  *    read/write rolls it forward to the whole batch;
+  *  - `append` is atomic per batch (a crashed append leaves nothing
+  *    visible, never a partial batch) and safe to run concurrently with
+  *    appends and with mutations of other partitions;
   *  - `rewrite` atomically replaces the whole table;
   *  - `deleteWhere` removes exactly the rows whose key column matches
   *    the delete set, touching only the storage the set maps to
@@ -45,15 +41,14 @@ trait TableStore {
   /** The storage root the store serves — payload containers
     * (`<root>/containers/<jobId>/…`), consolidation scratch
     * (`<root>/.c4scratch`), and the serving path's change stamp
-    * ([[graft.cube.GetCube]] `dirStamp`) all hang off it. The stamp is
-    * layout-aware: it hashes `<root>/<table>/_log` when that exists (the
-    * commit-log layout — every mutation creates a VERSIONED file there,
-    * so the child names alone carry the change even on flat object
-    * stores whose directory mtimes are synthetic) and the
-    * `<root>/<table>` listing otherwise (the swap layout, where child
-    * dirs/files change on every mutation). A non-filesystem store
-    * returns an unresolvable string: stamps come back unobservable and
-    * callers bypass their caches rather than serve stale data. */
+    * ([[graft.cube.GetCube]] `dirStamp`) all hang off it. The stamp
+    * hashes the `<root>/<table>/_log` listing: every mutation creates a
+    * VERSIONED file there, so the child names alone carry the change
+    * even on flat object stores whose directory mtimes are synthetic. A
+    * table with no `_log` — never written, or a store that does not keep
+    * one (a non-filesystem store returns an unresolvable root) — stamps
+    * as unobservable, and callers bypass their caches rather than serve
+    * stale data. */
   def root: String
   def read(spark: SparkSession, table: String): DataFrame
   def append(df: DataFrame, table: String): Unit
@@ -62,38 +57,4 @@ trait TableStore {
       uriCol: String = "container_uri"): Unit
   def updatePartitions(spark: SparkSession, table: String,
       partValues: Seq[String], transform: DataFrame => DataFrame): Unit
-}
-
-object TableStore {
-  /** Conf key forcing the implementation choice: `auto` (default) picks
-    * by the root's scheme, `swap` forces the rename-swap [[Catalog]],
-    * `commitlog` forces [[CommitLogTableStore]]. */
-  val StoreConf = "graft.catalog.store"
-
-  /** The production [[TableStore]] for `root`, picked by its scheme:
-    * stores with verifiably atomic rename (local, `file:`, `hdfs:`,
-    * `viewfs:`) get the rename-swap [[Catalog]]; EVERYTHING ELSE —
-    * the S3 family, GCS, Azure (abfs included: rename is only atomic on
-    * hierarchical-namespace accounts, and the scheme alone cannot tell
-    * HNS from flat), and unknown schemes — gets the commit-log store,
-    * which asks the least of the filesystem (one exclusive-create
-    * primitive, no rename on the publish path). Either store still
-    * fails loudly on a scheme with no registered connector at first
-    * touch. Overridable via [[StoreConf]] (e.g. `swap` for an abfs root
-    * the deployment KNOWS is HNS-backed). */
-  def at(spark: SparkSession, root: String): TableStore = {
-    val choice = spark.conf.getOption(StoreConf).getOrElse("auto")
-    val scheme = Option(new org.apache.hadoop.fs.Path(root).toUri.getScheme)
-      .map(_.toLowerCase(java.util.Locale.ROOT))
-    choice match {
-      case "swap" => Catalog(root)
-      case "commitlog" => CommitLogTableStore(root)
-      case "auto" => scheme match {
-        case None | Some("file" | "hdfs" | "viewfs" | "local") => Catalog(root)
-        case Some(_) => CommitLogTableStore(root)
-      }
-      case other => throw new IllegalArgumentException(
-        s"$StoreConf must be auto|swap|commitlog, got '$other'")
-    }
-  }
 }

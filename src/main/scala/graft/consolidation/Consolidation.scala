@@ -351,7 +351,8 @@ object Consolidation {
       prefix: String, instanceIds: Seq[String] = Nil): Unit =
     // instance-partition-scoped: a job rollback touches only its
     // instance's datasets partition (empty ids — a pre-spec-journal
-    // legacy job — falls back to all partitions, still per-dir swaps)
+    // legacy job — falls back to all partitions, still one partition-scoped
+    // commit)
     cat.updatePartitions(spark, "datasets", instanceIds,
       _.filter(!(col("status") === "INACTIVE" &&
         col("container_uri").startsWith(prefix))))

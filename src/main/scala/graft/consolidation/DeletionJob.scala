@@ -131,7 +131,7 @@ object DeletionJob {
       if (!job.has("ABORTED")) job.log("ABORTED")
       if (nLocked > 0) {
         // instance scope rehydrated from the journaled spec when present
-        // (a legacy job un-flips unscoped — all partitions, per-dir swaps)
+        // (a legacy job un-flips unscoped — all partitions)
         val instScope = specOf(spark, job).map(_.instanceIds).getOrElse(Nil)
         cat.updatePartitions(spark, "datasets", instScope, df =>
           Consolidation.withMembership(df, "id", lockedDf, "id", "__lk")
@@ -170,9 +170,10 @@ object DeletionJob {
       // Guards: the journal as this run left it, not the pre-run one (a
       // run that journaled DELETIONEFFECTIVE ITSELF must not un-flip);
       // and the locks are RE-READ fresh — the entry-time lockedDf plan
-      // pins a tasks-dir file listing that later task rewrites swapped
-      // away, so re-evaluating it here would throw FileNotFoundException
-      // and mask the real error as a spurious ROLLBACKFAILED. A job
+      // pins a file listing that later task rewrites replaced (a store
+      // without snapshot reads, or one past its vacuum horizon, throws
+      // FileNotFoundException re-evaluating it), which would mask the
+      // real error as a spurious ROLLBACKFAILED. A job
       // whose locks were already released reads an empty relation →
       // no-op.
       rollbackToFailed(spark, cat, job, e)
@@ -207,7 +208,7 @@ object DeletionJob {
 
     // delSetToDelete: locked ACTIVE → TODELETE. Instance-partition-
     // scoped when the job names instances; a pattern-only job flips
-    // across all partitions (still per-partition swaps).
+    // across all partitions (still one partition-scoped update).
     job.step("DELETIONINPROGRESS") {
       cat.updatePartitions(spark, "datasets", spec.instanceIds, df =>
         withLock(df)

@@ -120,37 +120,25 @@ object GetCube {
   private val varCache =
     new java.util.concurrent.ConcurrentHashMap[(String, Seq[String], Long, Long, Long, Long), VariableInfo]()
 
-  /** Directory stamp: (mtime, hash of child names+sizes+mtimes). The
-    * listing hash matters — mtime alone is millisecond-truncated (and
-    * seconds-coarse on some filesystems), so a rewrite landing in the
-    * same tick with an unchanged file count would serve stale variables
-    * forever. Resolved through the Hadoop [[FileSystem]] of the root's
-    * scheme (r11 verdict #3: the `java.io.File` stamp bypassed the cache
-    * on every non-local root, charging HDFS-class deployments a full
-    * variable-lookup Spark action per request). (-1, -1) = unobservable
-    * (missing dir, or a listing cut mid-swap) → callers bypass the cache
-    * rather than risk staleness. */
+  /** Table change stamp: (newest child mtime, hash of child
+    * names+sizes+mtimes) of the table's commit-log `_log` directory —
+    * every mutation creates a new VERSIONED file there, so the child
+    * NAMES alone carry the change, even on flat object stores whose
+    * directory mtimes are synthetic. The hash matters: mtime alone is
+    * millisecond-truncated (seconds-coarse on some filesystems).
+    * Resolved through the Hadoop [[FileSystem]] of the root's scheme
+    * (r11 verdict #3: a `java.io.File` stamp bypassed the cache on every
+    * non-local root). (-1, -1) = unobservable (no `_log`: the table was
+    * never written, or the root is not a filesystem) → callers bypass
+    * the cache rather than risk staleness. */
   private[cube] def dirStamp(spark: SparkSession, root: String,
       table: String): (Long, Long) =
     try {
-      val base = new org.apache.hadoop.fs.Path(s"$root/$table")
-      val f = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // commit-log layout: stamp the `_log` listing instead of the table
-      // dir — every mutation creates a new VERSIONED commit file there,
-      // so the child NAMES alone carry the change. The table dir itself
-      // is blind on exactly the stores CommitLogTableStore targets: its
-      // children are the constant `_log`/`data` entries, and flat object
-      // stores report synthetic directory mtimes that never propagate a
-      // grandchild write.
-      val log = new org.apache.hadoop.fs.Path(base, "_log")
-      val listing =
-        try f.listStatus(log)
-        catch { case _: java.io.FileNotFoundException =>
-          f.listStatus(base) // throws FileNotFound when absent
-        }
+      val log = new org.apache.hadoop.fs.Path(s"$root/$table/_log")
+      val f = log.getFileSystem(spark.sparkContext.hadoopConfiguration)
       var h = 1L
       var maxM = 0L
-      listing.foreach { s =>
+      f.listStatus(log).foreach { s => // FileNotFound when absent
         h = h * 1000003L + s.getPath.getName.hashCode
         h = h * 1000003L + s.getLen
         h = h * 1000003L + s.getModificationTime

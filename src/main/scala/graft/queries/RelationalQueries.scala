@@ -1997,7 +1997,7 @@ object RelationalQueries {
     * hash mismatch. Reference analog: the PostGIS transaction surface
     * (pg.go unitOfWork) this store re-expresses for object storage. */
   def clStoreOps(s: SparkSession, dir: String): DataFrame = {
-    import graft.catalog.{CommitLogTableStore, Schemas}
+    import graft.catalog.{Catalog, Schemas}
     import org.apache.spark.sql.Row
     val root = new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft-clops-" + dirKey(dir))
@@ -2005,7 +2005,7 @@ object RelationalQueries {
       if (f.isDirectory) f.listFiles.foreach(rm); f.delete(): Unit
     }
     if (root.exists) rm(root)
-    val st = CommitLogTableStore(root.toString)
+    val st = Catalog(root.toString)
     def tasksDf(rows: Seq[(Int, String)]): DataFrame =
       s.createDataFrame(s.sparkContext.parallelize(rows.map { case (i, state) =>
         Row(f"t$i%03d", s"j${i % 4}", state, s"p$i")

@@ -7,27 +7,24 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Multi-writer catalog contract (r12): the reference's deployment shape
   * is N apiservers and autoscaled job workers mutating ONE transactional
-  * store, so the parquet catalog must survive CONCURRENT writers — not
-  * just the reader-vs-writer races r11 pinned. Per-operation staging
-  * roots (`<table>.bswap.<opId>` / `.bappend.<opId>`) make that hold:
+  * store, so the catalog must survive CONCURRENT writers — not just the
+  * reader-vs-writer races r11 pinned. Per-operation op directories plus
+  * optimistic commits make that hold:
   *
   *  - writers mutating DISJOINT partitions of one table compose exactly
-  *    (no writer can delete another's in-flight staging, the r11 shared-
-  *    root failure mode);
+  *    (no writer can delete another's in-flight staging);
   *  - concurrent APPENDS to one table compose (a direct SaveMode.Append
   *    would share Spark's `<dest>/_temporary/0` commit scratch and
   *    destroy each other's task output);
-  *  - an appender racing a partition swap of the SAME table (different
-  *    partitions) loses nothing on either side;
-  *  - a healer that stalls past an op's completion abandons its replay
-  *    instead of double-parking live content under a stale pre-image or
-  *    resurrecting deleted partitions (the r11 'S'-race advice).
+  *  - an appender racing a partition update of the SAME table (same or
+  *    different partitions) loses nothing on either side;
+  *  - overlapping bucket deletes yield the serial set difference;
+  *  - no op leaves staging residue behind.
   */
 class CatalogConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  // PRIVATE session: the lease-break test shortens the lease TTL, and a
-  // shared-conf mutation would break other suites' live writers' leases
-  // mid-flight (suites run in parallel on one shared SparkSession)
+  // PRIVATE session: its conf (shuffle partitions) stays out of the
+  // suites that run in parallel on the shared SparkSession
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[8]")
@@ -114,7 +111,7 @@ class CatalogConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
       models(w) = model
     })
     assert(readTasks(cat) == models.toSeq.reduce(_ ++ _))
-    assert(CatalogTestIO.swapResidue(s"$root/disjoint", "tasks").isEmpty)
+    assert(CatalogTestIO.stagingResidue(s"$root/disjoint", "tasks").isEmpty)
   }
 
   test("concurrent appends to one table lose nothing") {
@@ -129,7 +126,7 @@ class CatalogConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
     val all = readTasks(cat)
     assert(all.size == writers * perWriter * 20,
       s"lost ${writers * perWriter * 20 - all.size} appended rows")
-    assert(CatalogTestIO.swapResidue(s"$root/appends", "tasks").isEmpty)
+    assert(CatalogTestIO.stagingResidue(s"$root/appends", "tasks").isEmpty)
   }
 
   test("an appender races partition swaps of the same table: both sides land") {
@@ -151,16 +148,16 @@ class CatalogConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
     // partitions (they're disjoint from the appender's), so its flip is
     // fully applied
     assert(all.filter(_._2.startsWith("swap-job")).forall(_._3 == "DONE"))
-    assert(CatalogTestIO.swapResidue(s"$root/appendswap", "tasks").isEmpty)
+    assert(CatalogTestIO.stagingResidue(s"$root/appendswap", "tasks").isEmpty)
   }
 
-  test("SAME-partition appender vs swapper: leases prevent the lost update") {
-    // The Postgres-row-lock substitute: without the per-partition write
-    // leases, an append whose files land between a swap's staging read
-    // and its promotion is parked into pre-image debris and silently
-    // deleted — the classic lost update. With leases the batch lands
-    // wholly before or wholly after the swap, so every appended row
-    // survives (possibly state-flipped, which is the serial semantics).
+  test("SAME-partition appender vs updater: no lost update") {
+    // The classic lost update: an append landing between an update's
+    // staging read and its commit would be dropped by a blind replace.
+    // The updater's commit sees the append's ADD in its target partition
+    // as a conflict and restages, so the batch lands wholly before or
+    // wholly after the update and every appended row survives (possibly
+    // state-flipped, which is the serial semantics).
     val cat = Catalog(s"$root/samepart")
     cat.append(tasksDf(Seq(("seed", "hot", "NEW", ""))), "tasks")
     val rounds = 8
@@ -173,110 +170,13 @@ class CatalogConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
           _.withColumn("state", lit("DONE")))))
     val all = readTasks(cat)
     assert(all.size == 1 + rounds * 5,
-      s"lost ${1 + rounds * 5 - all.size} rows to the append/swap race")
+      s"lost ${1 + rounds * 5 - all.size} rows to the append/update race")
     assert(all.map(_._1) ==
       (Set("seed") ++ (for (b <- 0 until rounds; i <- 0 until 5) yield s"a$b-$i")))
-    assert(CatalogTestIO.swapResidue(s"$root/samepart", "tasks").isEmpty)
-    // leases are released: a follow-up writer acquires immediately
+    assert(CatalogTestIO.stagingResidue(s"$root/samepart", "tasks").isEmpty)
+    // a follow-up writer of the same partition proceeds immediately
     cat.updatePartitions(spark, "tasks", Seq("hot"), _.filter(lit(false)))
     assert(readTasks(cat).isEmpty)
-  }
-
-  test("a dead writer's expired lease is broken; a live one blocks then times out") {
-    val r = s"$root/leases"
-    val cat = Catalog(r)
-    cat.append(tasksDf(Seq(("t1", "j1", "NEW", ""))), "tasks")
-    // a crashed writer's leftover lease, older than the stale TTL
-    val lease = new java.io.File(s"$r/${"_leases"}/tasks/job_id=j1.lease")
-    lease.getParentFile.mkdirs()
-    java.nio.file.Files.write(lease.toPath, "deadop".getBytes("UTF-8"))
-    lease.setLastModified(1000L)
-    // broken transparently: the update acquires and completes
-    cat.updatePartitions(spark, "tasks", Seq("j1"),
-      _.withColumn("state", lit("DONE")))
-    assert(readTasks(cat) == Set(("t1", "j1", "DONE", "")))
-    assert(!lease.exists || {
-      // if re-created it must be someone's fresh lease, not the dead one
-      new String(java.nio.file.Files.readAllBytes(lease.toPath), "UTF-8") != "deadop"
-    })
-    // a FRESH foreign lease blocks the writer until the acquire timeout
-    java.nio.file.Files.write(lease.toPath, "liveop".getBytes("UTF-8"))
-    spark.conf.set(Catalog.LeaseTimeoutMsConf, "300")
-    try {
-      val e = intercept[java.io.IOException] {
-        cat.updatePartitions(spark, "tasks", Seq("j1"),
-          _.withColumn("state", lit("NEW")))
-      }
-      assert(e.getMessage.contains("lease"))
-    } finally {
-      spark.conf.unset(Catalog.LeaseTimeoutMsConf)
-      lease.delete()
-    }
-    // state unchanged by the refused op
-    assert(readTasks(cat) == Set(("t1", "j1", "DONE", "")))
-  }
-
-  test("lease-stale bound floors above the heartbeat period, whatever the TTL knobs say") {
-    // r14 advice (medium): leaseStaleMs defaults to min(5 min,
-    // staleSwapReclaimMs), so a deployment shortening the debris TTL to
-    // seconds would silently drop the break bound below the heartbeat
-    // floor (period = max(1 s, ttl/5)) — a contender could then break a
-    // LIVE holder's lease between beats and two writers mutate the same
-    // partition. The effective value floors at 3 s ≥ 3 heartbeat periods.
-    spark.conf.set(Catalog.StaleSwapReclaimMsConf, "0")
-    try assert(Catalog.leaseStaleMs(spark) == Catalog.LeaseStaleFloorMs)
-    finally spark.conf.unset(Catalog.StaleSwapReclaimMsConf)
-    spark.conf.set(Catalog.LeaseStaleMsConf, "500") // explicit but unsafe
-    try assert(Catalog.leaseStaleMs(spark) == Catalog.LeaseStaleFloorMs)
-    finally spark.conf.unset(Catalog.LeaseStaleMsConf)
-    spark.conf.set(Catalog.LeaseStaleMsConf, "5000") // explicit and safe
-    try assert(Catalog.leaseStaleMs(spark) == 5000L)
-    finally spark.conf.unset(Catalog.LeaseStaleMsConf)
-  }
-
-  test("live holders heartbeat their leases; a dead holder's committed op heals at the lease-stale bound") {
-    val r = s"$root/heartbeat"
-    val cat = Catalog(r)
-    cat.append(tasksDf(Seq(("t1", "hb", "NEW", ""))), "tasks")
-    // (1) HEARTBEAT: while an op holds its lease, the lease file's mtime
-    // must keep moving — that is what makes a minutes-scale break bound
-    // safe for writers whose staging pass runs long. Lease-stale set to
-    // 5 s → heartbeat period 1 s; a transform that dwells 2.6 s under the
-    // lease must observe at least one touch.
-    spark.conf.set(Catalog.LeaseStaleMsConf, "5000")
-    try {
-      val lease = new java.io.File(s"$r/_leases/tasks/job_id=hb.lease")
-      var m1 = 0L
-      var m2 = 0L
-      cat.updatePartitions(spark, "tasks", Seq("hb"), df => {
-        m1 = lease.lastModified
-        Thread.sleep(2600)
-        m2 = lease.lastModified
-        df.withColumn("state", lit("DONE"))
-      })
-      assert(m1 > 0L, "lease file absent while its op ran")
-      assert(m2 > m1, "no heartbeat touched the lease during the op")
-      assert(readTasks(cat) == Set(("t1", "hb", "DONE", "")))
-    } finally spark.conf.unset(Catalog.LeaseStaleMsConf)
-
-    // (2) DEAD HOLDER: a crashed writer's committed root (marker present)
-    // whose lease mtime is older than the lease-stale bound must heal on
-    // the next read — bounded by minutes (the heartbeat-backed lease
-    // knob), NOT by the 6 h staging TTL the r12 protocol waited for.
-    // Default knobs: lease-stale 5 min, staging TTL 6 h; a 10-min-old
-    // lease is past the former and far inside the latter.
-    val swapRoot = s"$r/tasks.bswap.deadhb00001"
-    tasksDf(Seq(("t1", "hb", "HEALED", "")))
-      .write.partitionBy("job_id").parquet(swapRoot)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(swapRoot, "_COMMIT"),
-      "ID tasks.bswap.deadhb00001\nS job_id=hb\n".getBytes("UTF-8"))
-    val lease = new java.io.File(s"$r/_leases/tasks/job_id=hb.lease")
-    java.nio.file.Files.write(lease.toPath, "deadhb00001".getBytes("UTF-8"))
-    assert(lease.setLastModified(System.currentTimeMillis() - 10 * 60 * 1000))
-    assert(readTasks(cat) == Set(("t1", "hb", "HEALED", "")),
-      "committed op of a dead holder not healed past the lease-stale bound")
-    assert(!new java.io.File(swapRoot).exists)
   }
 
   private def tileRow(uri: String): Row =
@@ -293,9 +193,9 @@ class CatalogConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("concurrent deleteWhere with OVERLAPPING bucket sets: exact set difference") {
     // two GC passes whose uri sets hash into overlapping CRC-32 buckets:
-    // without the per-bucket leases both stage the shared bucket from
-    // the same snapshot and the loser's deletions resurrect; with them
-    // the bucket swaps serialize and the result is the serial set
+    // both stage the shared bucket from the same snapshot, so a blind
+    // commit would resurrect the loser's deletions; the conflict check
+    // makes the loser restage, and the result is the serial set
     // difference, every time
     val cat = Catalog(s"$root/gcrace")
     val uris = (0 until 300).map(i => s"mem://gc$i")
@@ -307,7 +207,7 @@ class CatalogConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
       () => for (batch <- uris.slice(100, 200).grouped(25))
         cat.deleteWhere(spark, "tiles", batch.toDF("container_uri"))))
     assert(readUris(cat) == uris.drop(200).toSet)
-    assert(CatalogTestIO.swapResidue(s"$root/gcrace", "tiles").isEmpty)
+    assert(CatalogTestIO.stagingResidue(s"$root/gcrace", "tiles").isEmpty)
   }
 
   test("concurrent salted tile appends land every row") {
@@ -317,163 +217,6 @@ class CatalogConcurrencySpec extends AnyFunSuite with BeforeAndAfterAll {
         cat.append(tilesDf((0 until 40).map(i => s"mem://w$w-b$b-$i")), "tiles")
     })
     assert(readUris(cat).size == 3 * 2 * 40)
-    assert(CatalogTestIO.swapResidue(s"$root/tileapp", "tiles").isEmpty)
-  }
-
-  test("a torn COMMITTED append rolls forward on read; an unmarked one is invisible") {
-    // the staged-append sibling of CatalogDeleteSpec's torn-swap test: a
-    // writer that crashed after committing its file manifest but before
-    // finishing the moves must heal to the WHOLE batch on the next read
-    // — never a silently partial append
-    val r = s"$root/tornappend"
-    val cat = Catalog(r)
-    cat.append(tasksDf(Seq(("t0", "jx", "NEW", ""))), "tasks")
-    // build a committed append staging root by hand: two files, one
-    // already moved (gone from staging), one still staged
-    val stage = new java.io.File(s"$r/tasks.bappend.deadapp1/job_id=jy")
-    stage.mkdirs()
-    // a real parquet file for the staged row (written elsewhere, moved in)
-    val tmp = new java.io.File(s"$r/.mk")
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row("t1", "jy", "NEW", "late")), 1),
-      Schemas.all("tasks")).drop("job_id").write.parquet(tmp.toString)
-    val part = tmp.listFiles.filter(_.getName.endsWith(".parquet")).head
-    val staged = new java.io.File(stage, "part-torn.parquet")
-    assert(part.renameTo(staged))
-    CatalogTestIO.rm(tmp)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$r/tasks.bappend.deadapp1/_COMMIT"),
-      ("ID tasks.bappend.deadapp1\n" +
-        "A job_id=jy/part-torn.parquet\n" +
-        "A job_id=jy/part-already-moved.parquet\n").getBytes("UTF-8"))
-    // heal on read: the staged file moves into the live partition, the
-    // already-moved one is a no-op, the root is cleaned up
-    assert(readTasks(cat) ==
-      Set(("t0", "jx", "NEW", ""), ("t1", "jy", "NEW", "late")))
-    assert(CatalogTestIO.swapResidue(r, "tasks").isEmpty)
-    // an UNMARKED append root (writer mid-staging or dead pre-commit) is
-    // invisible to reads and survives them
-    val inflight = new java.io.File(s"$r/tasks.bappend.live2/job_id=jz")
-    inflight.mkdirs()
-    assert(readTasks(cat).size == 2)
-    assert(inflight.exists)
-    CatalogTestIO.rm(new java.io.File(s"$r/tasks.bappend.live2"))
-  }
-
-  test("rewrite promote: an interloper dest re-created mid-swap loses cleanly") {
-    val r = s"$root/promote"
-    val f = new org.apache.hadoop.fs.Path(r)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val cat = Catalog(r)
-    def mkFile(p: String, content: String): Unit = {
-      val file = new java.io.File(p); file.getParentFile.mkdirs()
-      java.nio.file.Files.write(file.toPath, content.getBytes("UTF-8")): Unit
-    }
-    def names(p: String): Set[String] =
-      Option(new java.io.File(p).listFiles).getOrElse(Array.empty)
-        .map(_.getName).toSet
-    import org.apache.hadoop.fs.Path
-    // interloper case: an appender re-creates dest between the two
-    // renames — the promoted table must contain EXACTLY the staged
-    // content, with the interloper neither kept nor nested under
-    mkFile(s"$r/t/pre.parquet", "pre")
-    mkFile(s"$r/t.swap.op1/new.parquet", "new")
-    cat.promoteTable(f, new Path(s"$r/t.swap.op1"), new Path(s"$r/t"),
-      new Path(s"$r/t.old"),
-      beforePromote = () => mkFile(s"$r/t/interloper.parquet", "late"))
-    assert(names(s"$r/t") == Set("new.parquet"), "interloper kept or nested")
-    assert(!new java.io.File(s"$r/t.old").exists)
-    // genuine promote failure (tmp vanished): pre-image restored whole,
-    // never nested into a partial dest
-    mkFile(s"$r/u/pre.parquet", "pre")
-    intercept[java.io.IOException] {
-      cat.promoteTable(f, new Path(s"$r/u.swap.op2"), new Path(s"$r/u"),
-        new Path(s"$r/u.old"))
-    }
-    assert(names(s"$r/u") == Set("pre.parquet"), "pre-image not restored")
-  }
-
-  test("heal is lease-gated: a live owner's committed root is skipped, then healed once free") {
-    // the closed race: a lagging healer whose staged-exists probe
-    // predated the writer's promotion could park the NEWLY PROMOTED live
-    // dir into the op's pre-image root, which the writer's cleanup then
-    // deletes — rows silently lost. The fix is ONE APPLIER PER OP: heal
-    // takes the op's partition leases and skips while a live owner holds
-    // them. Pinned here through the lease-file seam: a fresh lease on the
-    // targeted partition = live owner.
-    val r = s"$root/healgate"
-    val cat = Catalog(r)
-    cat.append(tasksDf(Seq(("t1", "j1", "NEW", ""), ("t2", "j2", "NEW", ""))), "tasks")
-    // a committed swap root replacing j1's rows, as a crashed writer
-    // would leave it: staged partition dir + _COMMIT marker
-    val swapRoot = s"$r/tasks.bswap.fakeop000001"
-    tasksDf(Seq(("t1", "j1", "DONE", "healed")))
-      .write.partitionBy("job_id").parquet(swapRoot)
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(swapRoot, "_COMMIT"),
-      "ID tasks.bswap.fakeop000001\nS job_id=j1\n".getBytes("UTF-8"))
-    // its owner is ALIVE: a fresh lease on job_id=j1
-    val leaseDir = new java.io.File(s"$r/_leases/tasks")
-    leaseDir.mkdirs()
-    val lease = new java.io.File(leaseDir, "job_id=j1.lease")
-    java.nio.file.Files.write(lease.toPath, "fakeop000001".getBytes("UTF-8"))
-    // reads skip the heal (old state served, root untouched) and do not
-    // block beyond the short acquisition bound
-    val t0 = System.currentTimeMillis()
-    assert(readTasks(cat) ==
-      Set(("t1", "j1", "NEW", ""), ("t2", "j2", "NEW", "")))
-    assert(System.currentTimeMillis() - t0 < 10000)
-    assert(new java.io.File(swapRoot).exists, "heal raced a live owner's op")
-    // owner gone (lease released): the next read rolls the op forward
-    assert(lease.delete())
-    assert(readTasks(cat) ==
-      Set(("t1", "j1", "DONE", "healed"), ("t2", "j2", "NEW", "")))
-    assert(!new java.io.File(swapRoot).exists, "committed swap did not complete")
-  }
-
-  test("a stale healer abandons its replay instead of corrupting later state") {
-    // White-box reconstruction of the r11 advice race, post-completion:
-    // op1 committed "S <dir>", promoted, and its cleanup was cut short —
-    // live holds the NEW content, the stale pre-image is still parked,
-    // and the staged dir is GONE. The old protocol's unconditional park
-    // (rename live → occupied pre slot) would nest the new live under
-    // the stale pre-image and leave the table dir missing; the r12 heal
-    // must keep live byte-identical and just clear the debris.
-    val r = s"$root/stale"
-    val cat = Catalog(r)
-    cat.append(tasksDf(Seq(("t1", "job0", "NEW", "old"))), "tasks")
-    cat.updatePartitions(spark, "tasks", Seq("job0"),
-      _.withColumn("payload", lit("new")))
-    val live = new java.io.File(s"$r/tasks/job_id=job0")
-    val liveBefore = CatalogTestIO.fileState(live)
-    assert(liveBefore.nonEmpty)
-    // reconstruct op1's torn-cleanup debris: a marker-bearing swap root
-    // whose staged dir is gone, plus a parked stale pre-image
-    new java.io.File(s"$r/tasks.bold.deadop1/job_id=job0/part-stale.parquet")
-      .getParentFile.mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$r/tasks.bold.deadop1/job_id=job0/part-stale.parquet"),
-      "stale".getBytes("UTF-8"))
-    new java.io.File(s"$r/tasks.bswap.deadop1").mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$r/tasks.bswap.deadop1/_COMMIT"),
-      "ID tasks.bswap.deadop1\nS job_id=job0\n".getBytes("UTF-8"))
-    // the heal (any read) replays op1's marker against the current world
-    assert(readTasks(cat) == Set(("t1", "job0", "NEW", "new")))
-    assert(CatalogTestIO.fileState(live) == liveBefore, "live dir was disturbed")
-    assert(CatalogTestIO.swapResidue(r, "tasks").isEmpty)
-
-    // and a stale "D" replay must not delete a RE-created partition when
-    // its marker is already gone (delete is marker-verified): a marker-
-    // less root is left alone entirely, so reconstruct a committed D
-    // whose live dir was since re-created, then vaporize the marker
-    // between the heal's read and its delete — approximated here by the
-    // strongest observable contract: a D op with its marker present
-    // deletes, and the SAME root once marker-less never deletes.
-    new java.io.File(s"$r/tasks.bswap.deadop2").mkdirs()
-    assert(readTasks(cat) == Set(("t1", "job0", "NEW", "new")))
-    assert(new java.io.File(s"$r/tasks.bswap.deadop2").exists,
-      "reader reclaimed an unmarked staging root")
-    CatalogTestIO.rm(new java.io.File(s"$r/tasks.bswap.deadop2"))
+    assert(CatalogTestIO.stagingResidue(s"$root/tileapp", "tiles").isEmpty)
   }
 }

@@ -11,19 +11,15 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - a delete rewrites ONLY the buckets its uri set hashes to; every
   *    other bucket's files are byte-identical afterwards (not rewritten,
   *    not even re-listed into new file names);
-  *  - a bucket whose rows are all deleted disappears;
-  *  - a torn COMMITTED swap rolls forward on the next read, while an
-  *    uncommitted staging root is never touched by readers;
+  *  - a bucket whose rows are all deleted keeps no live file;
   *  - an append salted to k files/bucket keeps the bounded-file-count
   *    property (≤ k per bucket per batch) while writing each bucket from
   *    MORE than one task.
   */
 class CatalogDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  // PRIVATE session: this suite tunes engine confs (reclaim TTL, write
-  // salts) and sbt runs suites in PARALLEL on one shared SparkSession —
-  // a shared TTL=0 would let concurrent hammers in other suites reclaim
-  // each other's in-flight staging
+  // PRIVATE session: this suite tunes the write-salt conf, and sbt runs
+  // suites in PARALLEL on one shared SparkSession
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
@@ -62,28 +58,27 @@ class CatalogDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     val doomed = uris.take(5)
     val doomedBuckets = doomed.map(bucketOf).toSet
     val untouched = (0 until Catalog.TilesBuckets).filterNot(doomedBuckets)
-    // snapshot every untouched bucket dir before the delete
-    val before = untouched.map { b =>
-      b -> CatalogTestIO.fileState(new java.io.File(s"$r/tiles/${Catalog.TilesBucketCol}=$b"))
-    }.toMap
+    // snapshot every untouched bucket's files before the delete
+    def bucketState(b: Int) =
+      CatalogTestIO.partitionState(r, "tiles", s"${Catalog.TilesBucketCol}=$b")
+    val before = untouched.map(b => b -> bucketState(b)).toMap
     assert(before.values.exists(_.nonEmpty), "test needs populated untouched buckets")
     import spark.implicits._
     cat.deleteWhere(spark, "tiles", doomed.toDF("container_uri"))
     untouched.foreach { b =>
-      val after = CatalogTestIO.fileState(new java.io.File(s"$r/tiles/${Catalog.TilesBucketCol}=$b"))
-      assert(after == before(b), s"bucket $b was touched by an unrelated delete")
+      assert(bucketState(b) == before(b), s"bucket $b was touched by an unrelated delete")
     }
     val left = cat.read(spark, "tiles").select("container_uri")
       .collect().map(_.getString(0)).toSet
     assert(left == uris.drop(5).toSet)
-    // no staging residue (per-op roots included)
-    assert(CatalogTestIO.swapResidue(r, "tiles").isEmpty)
+    // no staging residue
+    assert(CatalogTestIO.stagingResidue(r, "tiles").isEmpty)
     // idempotent: re-deleting the same set is a no-op
     cat.deleteWhere(spark, "tiles", doomed.toDF("container_uri"))
     assert(cat.read(spark, "tiles").count() == 195)
   }
 
-  test("a fully-deleted bucket's directory is removed") {
+  test("a fully-deleted bucket keeps no live file") {
     val r = s"$root/allgone"
     val cat = Catalog(r)
     // find a uri set that all lands in one bucket
@@ -92,64 +87,12 @@ class CatalogDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sameBucket = uris.filter(bucketOf(_) == target).take(3)
     val others = uris.filterNot(bucketOf(_) == target).take(10)
     cat.append(tilesDf(sameBucket ++ others), "tiles")
-    assert(new java.io.File(s"$r/tiles/${Catalog.TilesBucketCol}=$target").exists)
+    val targetDir = s"${Catalog.TilesBucketCol}=$target"
+    assert(CatalogTestIO.livePartitions(spark, cat, "tiles").contains(targetDir))
     import spark.implicits._
     cat.deleteWhere(spark, "tiles", sameBucket.toDF("container_uri"))
-    assert(!new java.io.File(s"$r/tiles/${Catalog.TilesBucketCol}=$target").exists)
+    assert(!CatalogTestIO.livePartitions(spark, cat, "tiles").contains(targetDir))
     assert(cat.read(spark, "tiles").count() == others.size)
-  }
-
-  test("torn COMMITTED swap rolls forward on read; uncommitted staging is untouched") {
-    val r = s"$root/torn"
-    val cat = Catalog(r)
-    val uris = (0 until 50).map(i => s"file:///t/$i")
-    cat.append(tilesDf(uris), "tiles")
-    // simulate a deleteWhere crash mid-swap AFTER the commit point for
-    // uris.head's bucket: the live dir is parked under .bold, the staged
-    // post-delete replacement sits in .bswap beside the _COMMIT marker
-    val b = bucketOf(uris.head)
-    val bucketDir = s"${Catalog.TilesBucketCol}=$b"
-    val live = new java.io.File(s"$r/tiles/$bucketDir")
-    assert(live.exists)
-    val bold = new java.io.File(s"$r/tiles.bold/$bucketDir")
-    bold.getParentFile.mkdirs()
-    val survivors = uris.filter(u => bucketOf(u) == b && u != uris.head)
-    // staged content = the bucket minus the deleted uri (logical columns
-    // only, like the real staging write under partitionBy)
-    tilesDf(survivors)
-      .write.parquet(s"$r/tiles.bswap/$bucketDir")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$r/tiles.bswap/_COMMIT"),
-      s"S $bucketDir\n".getBytes("UTF-8"))
-    assert(live.renameTo(bold))
-    // any read heals by COMPLETING the committed delete — never by
-    // restoring the pre-image
-    val seen = cat.read(spark, "tiles").select("container_uri")
-      .collect().map(_.getString(0)).toSet
-    assert(seen == uris.toSet - uris.head)
-    assert(!new java.io.File(s"$r/tiles.bold").exists)
-    assert(!new java.io.File(s"$r/tiles.bswap").exists)
-    // an UNCOMMITTED staging root (no marker — an in-flight or crashed
-    // staging job) is left strictly alone by reads: a reader must never
-    // destroy a live writer's staging pass
-    val inflight = new java.io.File(s"$r/tiles.bswap/$bucketDir")
-    inflight.mkdirs()
-    assert(cat.read(spark, "tiles").count() == 49)
-    assert(inflight.exists)
-    // a WRITE leaves it alone too while fresh — it may be another live
-    // writer's minutes-long staging pass (r12 multi-writer contract)…
-    import spark.implicits._
-    cat.deleteWhere(spark, "tiles", Seq(uris(1)).toDF("container_uri"))
-    assert(inflight.exists)
-    // …and reclaims it only once it has been quiet past the stale TTL
-    spark.conf.set(Catalog.StaleSwapReclaimMsConf, "0")
-    try cat.deleteWhere(spark, "tiles", Seq(uris(2)).toDF("container_uri"))
-    finally spark.conf.unset(Catalog.StaleSwapReclaimMsConf)
-    assert(!new java.io.File(s"$r/tiles.bswap").exists)
-    // orphan .bold with no staging left: debris of a completed cleanup
-    new java.io.File(s"$r/tiles.bold/$bucketDir").mkdirs()
-    cat.read(spark, "tiles").count()
-    assert(!new java.io.File(s"$r/tiles.bold").exists)
   }
 
   test("salted append: bounded files per bucket, written by >1 task per bucket") {
@@ -160,7 +103,7 @@ class CatalogDeleteSpec extends AnyFunSuite with BeforeAndAfterAll {
     try {
       val uris = (0 until 2000).map(i => s"file:///s/$i")
       cat.append(tilesDf(uris), "tiles")
-      val dirs = new java.io.File(s"$r/tiles").listFiles
+      val dirs = new java.io.File(s"$r/tiles/data").listFiles.flatMap(_.listFiles)
         .filter(f => f.isDirectory && f.getName.startsWith(Catalog.TilesBucketCol))
       val counts = dirs.map(_.listFiles.count(_.getName.endsWith(".parquet")))
       // file-count bound holds per bucket per append

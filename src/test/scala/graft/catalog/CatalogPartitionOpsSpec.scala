@@ -95,15 +95,14 @@ class CatalogPartitionOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("concurrent readers during deletes: transient-retry contract, exact final state") {
     import spark.implicits._
-    // the r11 review's race: a reader's heal running DURING a writer's
-    // staging/swap pass. Hammer reads from another thread across a
-    // series of deleteWhere calls. The catalog's contract is NOT
-    // snapshot isolation (that is Delta's job on a real lake): a reader
-    // whose file listing predates a swap may fail TRANSIENTLY with
-    // Spark's stale-file error and must simply retry. What the commit-
-    // marker protocol guarantees — and this test pins — is that such a
-    // reader can never corrupt the store, destroy in-flight staging, or
-    // hit any NON-transient error, and that the final state is exact.
+    // the r11 review's race: reads running DURING a writer's staging
+    // and commit. Hammer reads from another thread across a series of
+    // deleteWhere calls. The store-independent floor pinned here: a
+    // reader may at worst fail TRANSIENTLY with Spark's stale-file error
+    // (and retry), can never corrupt the store or destroy in-flight
+    // staging, never hits a NON-transient error, and the final state is
+    // exact. The catalog's snapshot reads are stronger still — zero
+    // failures, pinned in CommitLogProtocolSpec.
     val cat = Catalog(s"$root/concurrent")
     val uris = (0 until 300).map(i => s"mem://cc$i")
     cat.append(tilesDf(uris), "tiles")
@@ -113,15 +112,15 @@ class CatalogPartitionOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(8)
         .exists(c => String.valueOf(c.getMessage).contains("FAILED_READ_FILE") ||
           // the listing-time shape of the same stale-snapshot window: the
-          // reader's partition discovery saw a bucket dir that a swap
-          // removed before the leaf listing reached it
+          // reader's partition discovery saw a bucket dir that a
+          // concurrent rewrite removed before the leaf listing reached it
           (String.valueOf(c.getMessage).contains("does not exist") &&
             String.valueOf(c.getMessage).contains("__bucket=")))
     val reader = new Thread(() => {
       while (!stop && readerFailure.isEmpty)
         try { cat.read(spark, "tiles").count(): Unit }
         catch {
-          // transient stale listing mid-swap — the documented retry case
+          // transient stale listing mid-rewrite — the retry case
           case t: Throwable if isTransient(t) =>
           case t: Throwable => readerFailure = Some(t)
         }

@@ -38,20 +38,20 @@ class CatalogUpdateSpec extends AnyFunSuite with BeforeAndAfterAll {
       jrow("c1", "c", "TASKEVENT", "COUNTERS"))),
       Schemas.all("jobs")), "jobs")
     val untouched = Seq("type=DELETION", "type=TASKEVENT")
-      .map(d => d -> CatalogTestIO.fileState(new java.io.File(s"$r/jobs/$d"))).toMap
+      .map(d => d -> CatalogTestIO.partitionState(r, "jobs", d)).toMap
     assert(untouched.values.forall(_.nonEmpty))
     cat.updatePartitions(spark, "jobs", Seq("CONSOLIDATION"),
       _.withColumn("state",
         when(col("state") === "FAILED", "RETRIED").otherwise(col("state"))))
     untouched.foreach { case (d, before) =>
-      assert(CatalogTestIO.fileState(new java.io.File(s"$r/jobs/$d")) == before,
+      assert(CatalogTestIO.partitionState(r, "jobs", d) == before,
         s"partition $d was touched by an unrelated update")
     }
     val states = cat.read(spark, "jobs").select("id", "state").collect()
       .map(row => (row.getString(0), row.getString(1))).toSet
     assert(states == Set(("a1", "NEW"), ("a2", "RETRIED"),
       ("b1", "NEW"), ("c1", "COUNTERS")))
-    assert(CatalogTestIO.swapResidue(r, "jobs").isEmpty)
+    assert(CatalogTestIO.stagingResidue(r, "jobs").isEmpty)
   }
 
   test("a partition whose rows are all dropped disappears; empty values = all partitions") {
@@ -65,7 +65,8 @@ class CatalogUpdateSpec extends AnyFunSuite with BeforeAndAfterAll {
     // unscoped (empty values): the filter applies to every partition,
     // and the CONSOLIDATION partition — all DONE — is removed outright
     cat.updatePartitions(spark, "jobs", Nil, _.filter(col("state") =!= "DONE"))
-    assert(!new java.io.File(s"$r/jobs/type=CONSOLIDATION").exists)
+    assert(!CatalogTestIO.livePartitions(spark, cat, "jobs")
+      .contains("type=CONSOLIDATION"))
     assert(cat.read(spark, "jobs").select("id").collect()
       .map(_.getString(0)).toSet == Set("b2"))
   }
@@ -84,7 +85,7 @@ class CatalogUpdateSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // nothing swapped, nothing staged left behind
     assert(CatalogTestIO.fileState(new java.io.File(s"$r/jobs")) == before)
-    assert(CatalogTestIO.swapResidue(r, "jobs").isEmpty)
+    assert(CatalogTestIO.stagingResidue(r, "jobs").isEmpty)
   }
 
   test("partition values with special characters match their escaped directories") {
@@ -116,8 +117,8 @@ class CatalogUpdateSpec extends AnyFunSuite with BeforeAndAfterAll {
       Schemas.all("jobs")), "jobs")
     val before = CatalogTestIO.fileState(new java.io.File(s"$r/jobs"))
     // fails when the staging WRITE executes (runtime, not analysis): the
-    // op never reaches its commit point, so the pre-commit cleanup must
-    // clear this op's own staging root AND release its leases
+    // op never reaches its commit point, so the failed write must clear
+    // its own op directory
     intercept[Exception] {
       cat.updatePartitions(spark, "jobs", Seq("CONSOLIDATION"),
         _.withColumn("payload",
@@ -125,9 +126,9 @@ class CatalogUpdateSpec extends AnyFunSuite with BeforeAndAfterAll {
             "assert_true(state != 'NEW', 'induced staging failure')").cast("string")))
     }
     assert(CatalogTestIO.fileState(new java.io.File(s"$r/jobs")) == before)
-    assert(CatalogTestIO.swapResidue(r, "jobs").isEmpty,
+    assert(CatalogTestIO.stagingResidue(r, "jobs").isEmpty,
       "failed staging left debris")
-    // leases released: the next writer proceeds immediately
+    // the next writer proceeds immediately
     cat.updatePartitions(spark, "jobs", Seq("CONSOLIDATION"),
       _.withColumn("state", lit("DONE")))
     assert(cat.read(spark, "jobs").select("state").collect()

@@ -39,8 +39,8 @@ class CommitLogEndToEndSpec extends AnyFunSuite with BeforeAndAfterAll {
     // SCHEME-SCOPED so parallel suites' guard tests are untouched (its
     // exclusive create is genuinely atomic: the hard-link emulation)
     hc.setBoolean(
-      s"${CommitLogTableStore.AssumeAtomicCreateConf}.norename", true)
-    CommitLogTableStore(s"norename://$local")
+      s"${Catalog.AssumeAtomicCreateConf}.norename", true)
+    Catalog(s"norename://$local")
   }
 
   override def afterAll(): Unit = CatalogTestIO.rm(new java.io.File(local))

@@ -1,6 +1,6 @@
 package graft.catalog
 
-import graft.catalog.CommitLogTableStore.FileMeta
+import graft.catalog.Catalog.FileMeta
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAll
 
@@ -12,10 +12,16 @@ import org.scalacheck.Prop.forAll
   * bare legacy operand must parse to (rel, no meta) unchanged. The one
   * structural invariant the right-to-left parse leans on is that a rel
   * path always ENDS in a Spark-generated data-file name, which is never
-  * an all-digit or `s<digits>:<digits>` token. */
+  * an all-digit or `s<digits>:<digits>` token.
+  *
+  * Malformed-log coverage: the commit log is the only catalog format, so
+  * its replay decoder ([[Catalog.terminatedContent]] → `foldCommit` /
+  * `foldCheckpoint`, the exact path a snapshot replay takes) sees every
+  * byte a store holds. Truncations and byte flips of generated commit
+  * files and v1/v2 checkpoints must each either replay or fail with a
+  * typed [[java.io.IOException]] — never an escaping
+  * NoSuchElementException/NumberFormatException, never a hang. */
 object CommitLogLineProps extends Properties("commitlog-lines") {
-
-  private val store = CommitLogTableStore("/tmp/clprops-unused")
 
   /** op dirs are 12 lowercase-hex chars — including the all-digit corner. */
   private val genOpId: Gen[String] =
@@ -65,13 +71,13 @@ object CommitLogLineProps extends Properties("commitlog-lines") {
   } yield FileMeta(size, stats, bbox)
 
   property("sized lines round-trip") = forAll(genRel, genMeta) { (rel, m) =>
-    val line = store.entryLine("ADD", rel, m)
+    val line = Catalog.entryLine("ADD", rel, m)
     Prop(line.startsWith("ADD ") &&
-      store.parseEntry(line.drop(4)) == ((rel, Some(m))))
+      Catalog.parseEntry(line.drop(4)) == ((rel, Some(m))))
   }
 
   property("legacy bare operands parse unchanged") = forAll(genRel) { rel =>
-    Prop(store.parseEntry(rel) == ((rel, None)))
+    Prop(Catalog.parseEntry(rel) == ((rel, None)))
   }
 
   property("a REMOVE built by echoing a sized ADD operand still matches") =
@@ -79,7 +85,98 @@ object CommitLogLineProps extends Properties("commitlog-lines") {
       // the in-doubt spec (and any external tooling) constructs REMOVEs
       // by copying ADD operands verbatim — the parse must strip the
       // metadata tokens so the rel matches its live entry
-      val echoed = store.entryLine("ADD", rel, m).drop(4)
-      Prop(store.parseEntry(echoed)._1 == rel)
+      val echoed = Catalog.entryLine("ADD", rel, m).drop(4)
+      Prop(Catalog.parseEntry(echoed)._1 == rel)
+    }
+
+  // ---- malformed log files ------------------------------------------
+
+  private val genEntry: Gen[String] = for {
+    rel <- genRel
+    sized <- Gen.oneOf(true, false)
+    m <- genMeta
+  } yield if (sized) Catalog.entryLine("ADD", rel, m).drop(4) else rel
+
+  /** A commit file as `tryCommit` writes it: header, PART targets, ordered
+    * ADD/REMOVE operands, terminator. */
+  private val genCommitBytes: Gen[Array[Byte]] = for {
+    op <- genOpId
+    kind <- Gen.oneOf("append", "update", "rewrite", "import")
+    parts <- Gen.listOfN(2, genPartDir)
+    adds <- Gen.choose(1, 6).flatMap(Gen.listOfN(_, genEntry))
+    removes <- Gen.choose(0, 4).flatMap(Gen.listOfN(_, genRel))
+  } yield Catalog.checkpointBytes(Seq(s"OP $op", s"KIND $kind") ++
+    parts.map("PART " + _) ++ removes.map("REMOVE " + _) ++
+    adds.map("ADD " + _), v2 = false)
+
+  /** A checkpoint as maintenance writes it: FILE and TOMB lines, v1 text
+    * or v2 deflate. */
+  private val genCheckpoint: Gen[Array[Byte]] = for {
+    files <- Gen.choose(1, 8).flatMap(Gen.listOfN(_, for {
+      rel <- genRel; m <- genMeta
+    } yield Catalog.entryLine("FILE", rel, m)))
+    tombs <- Gen.choose(0, 4).flatMap(Gen.listOfN(_, for {
+      rel <- genRel; t <- Gen.choose(0L, Long.MaxValue)
+    } yield s"TOMB $t $rel"))
+    v2 <- Gen.oneOf(true, false)
+  } yield Catalog.checkpointBytes(files ++ tombs, v2)
+
+  /** Truncate at a random length, or flip 1–3 random bytes. */
+  private def genDamaged(bytes: Array[Byte]): Gen[Array[Byte]] =
+    Gen.oneOf(
+      Gen.choose(0, bytes.length - 1).map(n => bytes.take(n)),
+      Gen.choose(1, 3).flatMap(k => Gen.listOfN(k, for {
+        i <- Gen.choose(0, bytes.length - 1); mask <- Gen.choose(1, 255)
+      } yield (i, mask))).map { flips =>
+        val out = bytes.clone()
+        flips.foreach { case (i, mask) => out(i) = (out(i) ^ mask).toByte }
+        out
+      })
+
+  private val decodePool = java.util.concurrent.Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "clprops-decode"); t.setDaemon(true); t
+  }
+
+  /** Feed one file through the replay decoder (10 s bound): None when
+    * it replays (or is judged unterminated), else what it threw. */
+  private def replayOutcome(bytes: Array[Byte], checkpoint: Boolean): Option[Throwable] = {
+    val run = decodePool.submit(new java.util.concurrent.Callable[Unit] {
+      def call(): Unit = Catalog.terminatedContent(bytes).foreach { lines =>
+        val live = new scala.collection.mutable.HashSet[String]
+        val tombs = new scala.collection.mutable.HashMap[String, Long]
+        val meta = new scala.collection.mutable.HashMap[String, FileMeta]
+        if (checkpoint) Catalog.foldCheckpoint("cp", lines, live, tombs, meta)
+        else Catalog.foldCommit("c", lines, 0L, live, tombs, meta)
+      }
+    })
+    try { run.get(10, java.util.concurrent.TimeUnit.SECONDS); None }
+    catch {
+      case e: java.util.concurrent.ExecutionException => Some(e.getCause)
+      case e: java.util.concurrent.TimeoutException => run.cancel(true); Some(e)
+    }
+  }
+
+  private def replaysOrFailsTyped(bytes: Array[Byte], checkpoint: Boolean): Prop =
+    replayOutcome(bytes, checkpoint) match {
+      case None | Some(_: java.io.IOException) => Prop.passed
+      case Some(e) => Prop.falsified :| s"escaped ${e.getClass.getName}: ${e.getMessage}"
+    }
+
+  property("a truncated or byte-flipped commit replays or fails typed") =
+    forAll(genCommitBytes.flatMap(genDamaged)) { damaged =>
+      replaysOrFailsTyped(damaged, checkpoint = false)
+    }
+
+  property("a truncated or byte-flipped checkpoint replays or fails typed") =
+    forAll(genCheckpoint.flatMap(genDamaged)) { damaged =>
+      replaysOrFailsTyped(damaged, checkpoint = true)
+    }
+
+  property("an undamaged commit or checkpoint replays") =
+    forAll(genCommitBytes, genCheckpoint) { (c, cp) =>
+      Prop(Catalog.terminatedContent(c).isDefined &&
+        Catalog.terminatedContent(cp).isDefined &&
+        replayOutcome(c, checkpoint = false).isEmpty &&
+        replayOutcome(cp, checkpoint = true).isEmpty)
     }
 }

@@ -5,14 +5,14 @@ import org.apache.spark.sql.functions.{col, concat, lit}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The commit-log store against the impl-agnostic [[TableStoreContract]]
-  * — the same contract the parquet [[Catalog]] and the naive in-memory
-  * store pass. */
+/** The commit-log [[Catalog]] against the impl-agnostic
+  * [[TableStoreContract]] — the same contract the naive in-memory store
+  * passes. */
 class CommitLogTableStoreContractSpec extends TableStoreContract {
   private lazy val root =
     java.nio.file.Files.createTempDirectory("graft-clc").toString
   override def newStore(tag: String): TableStore =
-    CommitLogTableStore(s"$root/$tag")
+    Catalog(s"$root/$tag")
   override def afterAll(): Unit = CatalogTestIO.rm(new java.io.File(root))
 }
 
@@ -37,8 +37,8 @@ class NoRenameFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
 /** The FULL contract again, on a root whose filesystem forbids every
   * rename outside Spark's job-commit scratch — the proof that the
   * commit-log protocol's atomicity never leans on rename (VERDICT r11
-  * "What's missing" #1: the parquet Catalog's swap protocol assumes
-  * atomic rename; this store is the documented drop-in that doesn't). */
+  * "What's missing" #1), so the catalog runs on rename-is-copy object
+  * stores. */
 class NoRenameCommitLogContractSpec extends TableStoreContract {
   private lazy val root =
     java.nio.file.Files.createTempDirectory("graft-clnr").toString
@@ -50,52 +50,10 @@ class NoRenameCommitLogContractSpec extends TableStoreContract {
     // atomic: the hard-link emulation) without touching the global key
     // the guard spec's s3x refusal test relies on
     hc.setBoolean(
-      s"${CommitLogTableStore.AssumeAtomicCreateConf}.norename", true)
-    CommitLogTableStore(s"norename://$root/$tag")
+      s"${Catalog.AssumeAtomicCreateConf}.norename", true)
+    Catalog(s"norename://$root/$tag")
   }
   override def afterAll(): Unit = CatalogTestIO.rm(new java.io.File(root))
-}
-
-/** [[TableStore.at]] picks the implementation the root's semantics
-  * require. */
-class TableStoreFactorySpec extends AnyFunSuite {
-  // private session: StoreConf mutations must not leak to parallel suites
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[2]").config("spark.ui.enabled", "false")
-    .getOrCreate().newSession()
-
-  test("scheme routing: atomic-rename roots swap, object stores commit-log") {
-    assert(TableStore.at(spark, "/data/cat").isInstanceOf[Catalog])
-    assert(TableStore.at(spark, "file:///data/cat").isInstanceOf[Catalog])
-    assert(TableStore.at(spark, "hdfs://nn/cat").isInstanceOf[Catalog])
-    assert(TableStore.at(spark, "s3a://bucket/cat").isInstanceOf[CommitLogTableStore])
-    assert(TableStore.at(spark, "gs://bucket/cat").isInstanceOf[CommitLogTableStore])
-    // abfs: rename is atomic ONLY on hierarchical-namespace accounts and
-    // the scheme can't tell — safe default is the commit log (a
-    // known-HNS deployment forces `swap` via the conf)
-    assert(TableStore.at(spark, "abfss://c@a.dfs.core.windows.net/cat")
-      .isInstanceOf[CommitLogTableStore])
-    // unknown scheme → the store that asks least of the filesystem
-    assert(TableStore.at(spark, "weird://x/cat").isInstanceOf[CommitLogTableStore])
-  }
-
-  test("the facade wires through the factory: Geocube.at picks by scheme") {
-    assert(graft.api.Geocube.at(spark, "/data/cat").cat.isInstanceOf[Catalog])
-    assert(graft.api.Geocube.at(spark, "s3a://b/cat").cat
-      .isInstanceOf[CommitLogTableStore])
-  }
-
-  test("conf override forces the choice; junk value rejected") {
-    spark.conf.set(TableStore.StoreConf, "commitlog")
-    try assert(TableStore.at(spark, "/data/cat").isInstanceOf[CommitLogTableStore])
-    finally spark.conf.unset(TableStore.StoreConf)
-    spark.conf.set(TableStore.StoreConf, "swap")
-    try assert(TableStore.at(spark, "s3a://b/cat").isInstanceOf[Catalog])
-    finally spark.conf.unset(TableStore.StoreConf)
-    spark.conf.set(TableStore.StoreConf, "delta")
-    try intercept[IllegalArgumentException](TableStore.at(spark, "/data/cat"))
-    finally spark.conf.unset(TableStore.StoreConf)
-  }
 }
 
 /** An "S3-family" filesystem for the guard test: the scheme says s3*,
@@ -126,7 +84,7 @@ class AtomicCreateGuardSpec extends AnyFunSuite {
     try {
       spark.sparkContext.hadoopConfiguration
         .set("fs.s3x.impl", classOf[FakeS3FileSystem].getName)
-      val s = CommitLogTableStore(s"s3x://$root")
+      val s = Catalog(s"s3x://$root")
       val df = spark.createDataFrame(
         spark.sparkContext.parallelize(
           Seq(org.apache.spark.sql.Row("t1", "j1", "NEW", "")), 1),
@@ -143,7 +101,7 @@ class AtomicCreateGuardSpec extends AnyFunSuite {
       // visible without clearing the FS cache — closeAll() would tear
       // handles out from under concurrently-running suites)
       spark.sparkContext.hadoopConfiguration
-        .setBoolean(CommitLogTableStore.AssumeAtomicCreateConf, true)
+        .setBoolean(Catalog.AssumeAtomicCreateConf, true)
       try {
         val df2 = spark.createDataFrame(
           spark.sparkContext.parallelize(
@@ -155,21 +113,21 @@ class AtomicCreateGuardSpec extends AnyFunSuite {
         val rows = s.read(spark, "tasks").collect()
         assert(rows.length == 1 && rows.head.getString(0) == "t2")
       } finally spark.sparkContext.hadoopConfiguration
-        .unset(CommitLogTableStore.AssumeAtomicCreateConf)
+        .unset(Catalog.AssumeAtomicCreateConf)
     } finally CatalogTestIO.rm(new java.io.File(root))
   }
 
   test("allowlist guard: an UNLISTED scheme refuses too; scheme-scoped attestation unblocks") {
     // r12 advice (the one `medium`): the old guard excluded only s3* —
-    // every other rename-is-copy connector TableStore.at routes here
-    // (oss, swift, cosn, wasb, unlisted) sailed through unattested even
+    // every other rename-is-copy connector (oss, swift, cosn, wasb,
+    // unlisted) sailed through unattested even
     // though its create(overwrite=false) may be HEAD-then-PUT. The guard
     // is now an ALLOWLIST: anything unverified must attest.
     val root = java.nio.file.Files.createTempDirectory("graft-ossguard").toString
     try {
       val hc = spark.sparkContext.hadoopConfiguration
       hc.set("fs.ossx.impl", classOf[FakeOssFileSystem].getName)
-      val s = CommitLogTableStore(s"ossx://$root")
+      val s = Catalog(s"ossx://$root")
       val df = spark.createDataFrame(
         spark.sparkContext.parallelize(
           Seq(org.apache.spark.sql.Row("t1", "j1", "NEW", "")), 1),
@@ -181,13 +139,13 @@ class AtomicCreateGuardSpec extends AnyFunSuite {
       // scheme-scoped attestation (the preferred form: it cannot leak a
       // blanket exemption to other roots' schemes) unblocks the protocol
       hc.setBoolean(
-        s"${CommitLogTableStore.AssumeAtomicCreateConf}.ossx", true)
+        s"${Catalog.AssumeAtomicCreateConf}.ossx", true)
       try {
         s.append(df, "tasks")
         val rows = s.read(spark, "tasks").collect()
         assert(rows.length == 1 && rows.head.getString(0) == "t1")
       } finally hc.unset(
-        s"${CommitLogTableStore.AssumeAtomicCreateConf}.ossx")
+        s"${Catalog.AssumeAtomicCreateConf}.ossx")
     } finally CatalogTestIO.rm(new java.io.File(root))
   }
 
@@ -203,7 +161,7 @@ class AtomicCreateGuardSpec extends AnyFunSuite {
       raw.initialize(java.net.URI.create("file:///"),
         spark.sparkContext.hadoopConfiguration)
       val f = new org.apache.hadoop.fs.FilterFileSystem(raw)
-      val store = CommitLogTableStore(dir.toString)
+      val store = Catalog(dir.toString)
       val p = new org.apache.hadoop.fs.Path(
         dir.toString, "00000000000000000001.commit")
       assert(store.createExclusive(f, p, "OP x\nEND".getBytes("UTF-8")))
@@ -254,7 +212,7 @@ class CommitLogProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
       .getOrElse(Array.empty).map(_.getName).toSeq.sorted
 
   test("snapshot isolation: a pre-mutation plan collects exactly its version") {
-    val s = CommitLogTableStore(s"$root/snapiso")
+    val s = Catalog(s"$root/snapiso")
     s.append(tasksDf(Seq(("t1", "j1", "NEW", ""))), "tasks")
     val before = s.read(spark, "tasks") // planned against version 1's files
     s.updatePartitions(spark, "tasks", Seq("j1"),
@@ -274,7 +232,7 @@ class CommitLogProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
     // ~1 s via the unstable-bypass (never cached), so when the terminator
     // does land, the very next read includes it.
     val dir = s"$root/indoubt"
-    val s = CommitLogTableStore(dir)
+    val s = Catalog(dir)
     s.append(tasksDf(Seq(("t1", "j1", "NEW", ""))), "tasks")
     val rel = scala.io.Source
       .fromFile(s"$dir/tasks/_log/${"0" * 18}01.commit").getLines()
@@ -302,9 +260,9 @@ class CommitLogProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
     // cleanup). A deployment that shortens reclamation to zero must NOT
     // lose a long query's snapshot window when the retention stays long.
     val dir = s"$root/retention"
-    val s = CommitLogTableStore(dir)
+    val s = Catalog(dir)
     spark.conf.set(Catalog.StaleSwapReclaimMsConf, "0") // debris: instant
-    spark.conf.set(CommitLogTableStore.VacuumRetentionMsConf, "3600000") // horizon: 1 h
+    spark.conf.set(Catalog.VacuumRetentionMsConf, "3600000") // horizon: 1 h
     try {
       s.append(tasksDf(Seq(("t1", "j1", "NEW", ""))), "tasks")
       val preMutation = s.read(spark, "tasks") // planned against v1's files
@@ -325,16 +283,16 @@ class CommitLogProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
         "reader snapshot window silently shortened by the reclamation knob")
     } finally {
       spark.conf.unset(Catalog.StaleSwapReclaimMsConf)
-      spark.conf.unset(CommitLogTableStore.VacuumRetentionMsConf)
+      spark.conf.unset(Catalog.VacuumRetentionMsConf)
     }
   }
 
   test("readers during concurrent deletes: ZERO failures, not even transient ones") {
-    // the swap store's documented reader contract is retry-on-transient;
-    // the commit log's is STRICTLY stronger — a reader plans against one
-    // version's immutable files, so a concurrent delete hammer must
-    // produce no error of any kind and the final state stays exact
-    val s = CommitLogTableStore(s"$root/readdel")
+    // stronger than the store-independent retry-on-transient floor
+    // (CatalogPartitionOpsSpec): a reader plans against one version's
+    // immutable files, so a concurrent delete hammer must produce no
+    // error of any kind and the final state stays exact
+    val s = Catalog(s"$root/readdel")
     val mk: Int => String = i => f"mem://rd$i%03d"
     def tiles(uris: Seq[String]): DataFrame =
       spark.createDataFrame(
@@ -365,7 +323,7 @@ class CommitLogProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("N disjoint-partition writers compose exactly (optimistic, no leases)") {
-    val s = CommitLogTableStore(s"$root/disjoint")
+    val s = Catalog(s"$root/disjoint")
     val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     // four writers, each owning its own job partition: appends + state
     // flips + a drop, interleaved — disjoint ops must compose with at
@@ -393,7 +351,7 @@ class CommitLogProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("same-partition concurrent updates serialize to the serial outcome") {
-    val s = CommitLogTableStore(s"$root/samepart")
+    val s = Catalog(s"$root/samepart")
     s.append(tasksDf(Seq(("t1", "j1", "NEW", ""))), "tasks")
     val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     // two writers each append one marker char to t1's payload 4 times —
@@ -415,7 +373,7 @@ class CommitLogProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a torn commit is void: its version is consumed, its rows never appear") {
     val dir = s"$root/torn"
-    val s = CommitLogTableStore(dir)
+    val s = Catalog(dir)
     s.append(tasksDf(Seq(("t1", "j1", "NEW", ""))), "tasks")
     // hand-write an unterminated commit at the next version, backdated
     // past the torn grace — a writer that died mid-flush
@@ -432,8 +390,8 @@ class CommitLogProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("snapshot cache: fingerprint-validated, never stale across writers or stores") {
     val dir = s"$root/snapcache"
-    val s1 = CommitLogTableStore(dir)
-    val s2 = CommitLogTableStore(dir) // a second handle on the same root
+    val s1 = Catalog(dir)
+    val s2 = Catalog(dir) // a second handle on the same root
     s1.append(tasksDf(Seq(("t1", "j1", "NEW", ""))), "tasks")
     assert(readTasks(s1).map(_._1) == Set("t1"))
     // repeated reads ride the memoized replay (same listing fingerprint)
@@ -459,7 +417,7 @@ class CommitLogProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
     // torn-without-marker must NOT be memoized — the next read has to
     // re-read the content, not serve the cached exclusion
     val dir = s"$root/hflush"
-    val s = CommitLogTableStore(dir)
+    val s = Catalog(dir)
     s.append(tasksDf(Seq(("t1", "j1", "NEW", ""), ("t2", "j1", "NEW", ""))), "tasks")
     val rel = scala.io.Source
       .fromFile(s"$dir/tasks/_log/${"0" * 18}01.commit").getLines()
@@ -483,7 +441,7 @@ class CommitLogProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a void marker outranks a terminator: the marked version is inert forever") {
     val dir = s"$root/voidwins"
-    val s = CommitLogTableStore(dir)
+    val s = Catalog(dir)
     s.append(tasksDf(Seq(("t1", "j1", "NEW", ""))), "tasks")
     // a fully TERMINATED commit at version 2 referencing real staged
     // files — but a concurrent party voided it (the slow-publisher
@@ -507,7 +465,7 @@ class CommitLogProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("checkpointing durably voids a dead writer's torn commit first") {
     val dir = s"$root/cpvoid"
-    val s = CommitLogTableStore(dir)
+    val s = Catalog(dir)
     // 30 s: below the memoization floor (maintenance runs every append)
     // but above the test's runtime (truncation must not eat the .void
     // marker before the assertion reads it)
@@ -535,9 +493,9 @@ class CommitLogProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("commitLanded verdicts: ours / lost / undecidable / voided") {
     val dir = s"$root/landed"
-    val s = CommitLogTableStore(dir)
+    val s = Catalog(dir)
     s.append(tasksDf(Seq(("t1", "j1", "NEW", ""))), "tasks")
-    val m = classOf[CommitLogTableStore].getDeclaredMethod("commitLanded",
+    val m = classOf[Catalog].getDeclaredMethod("commitLanded",
       classOf[org.apache.hadoop.fs.FileSystem], classOf[String],
       java.lang.Long.TYPE, classOf[String])
     m.setAccessible(true)
@@ -566,7 +524,7 @@ class CommitLogProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("checkpoint bounds replay; truncation keeps reads exact") {
     val dir = s"$root/ckpt"
-    val s = CommitLogTableStore(dir)
+    val s = Catalog(dir)
     spark.conf.set(Catalog.StaleSwapReclaimMsConf, "0")
     try {
       for (i <- 0 until 23)
@@ -587,7 +545,7 @@ class CommitLogProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("vacuum removes replaced files after the TTL; staging of a dead writer is reclaimed") {
     val dir = s"$root/vac"
-    val s = CommitLogTableStore(dir)
+    val s = Catalog(dir)
     spark.conf.set(Catalog.StaleSwapReclaimMsConf, "0")
     try {
       s.append(tasksDf(Seq(("t1", "j1", "NEW", ""))), "tasks")
@@ -613,7 +571,7 @@ class CommitLogProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("compact is a logical no-op that never folds away a concurrent append") {
     val dir = s"$root/cmpct"
-    val s = CommitLogTableStore(dir)
+    val s = Catalog(dir)
     s.append(tasksDf(Seq(("seed", "j0", "NEW", ""))), "tasks")
     val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     // two appenders race a compactor; compact publishes at exactly the
@@ -648,9 +606,9 @@ class CommitLogProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("maintenance auto-compacts past the op-dir threshold") {
     val dir = s"$root/autocmp"
-    val s = CommitLogTableStore(dir)
+    val s = Catalog(dir)
     spark.conf.set(Catalog.StaleSwapReclaimMsConf, "0") // disable memoization
-    spark.conf.set(CommitLogTableStore.CompactAtConf, "4")
+    spark.conf.set(Catalog.CompactAtConf, "4")
     try {
       for (i <- 0 until 8)
         s.append(tasksDf(Seq((s"t$i", s"j${i % 2}", "NEW", ""))), "tasks")
@@ -660,7 +618,7 @@ class CommitLogProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(readTasks(s).size == 8)
     } finally {
       spark.conf.unset(Catalog.StaleSwapReclaimMsConf)
-      spark.conf.unset(CommitLogTableStore.CompactAtConf)
+      spark.conf.unset(Catalog.CompactAtConf)
     }
   }
 
@@ -675,8 +633,8 @@ class CommitLogProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
     // reach that single scan (only the filtered partition's files may
     // even be enumerated).
     val dir = s"$root/fanout"
-    val s = CommitLogTableStore(dir)
-    spark.conf.set(CommitLogTableStore.CompactAtConf, "0")
+    val s = Catalog(dir)
+    spark.conf.set(Catalog.CompactAtConf, "0")
     try {
       val ops = 205
       for (i <- 0 until ops)
@@ -708,7 +666,7 @@ class CommitLogProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
           "other partitions' files leaked into the listing")
       assert(probe.count() == (0 until ops).count(_ % 8 == 3))
       assert(s.read(spark, "tasks").count() == ops)
-    } finally spark.conf.unset(CommitLogTableStore.CompactAtConf)
+    } finally spark.conf.unset(Catalog.CompactAtConf)
   }
 
   test("file-level datetime skipping: a time-windowed read enumerates only files that can match") {
@@ -717,7 +675,7 @@ class CommitLogProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
     // min/max, and the FileIndex evaluates pushed data filters against
     // them — a time-windowed read of a 100-TB records table opens only
     // the files inside the window instead of every live file's footer.
-    val s = CommitLogTableStore(s"$root/skip")
+    val s = Catalog(s"$root/skip")
     val t0 = 1704067200000L // 2024-01-01T00:00Z
     val day = 86400000L
     def recs(d: Int): DataFrame = spark.createDataFrame(
@@ -756,7 +714,7 @@ class CommitLogProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
     // carry the file's bbox ENVELOPE and the FileIndex judges the
     // coarse-intersects half-planes against it — a bbox browse over a
     // 100-TB catalog opens only the files whose extent can intersect.
-    val s = CommitLogTableStore(s"$root/bskip")
+    val s = Catalog(s"$root/bskip")
     val wkb = graft.geo.GeomOps.writeWkb(
       graft.geo.GeomOps.polygonFromBBox(graft.geo.BBox(0, 0, 1, 1)))
     def dsets(tag: String, x0: Double): DataFrame = spark.createDataFrame(
@@ -802,7 +760,7 @@ class CommitLogProtocolSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("rewrite compacts: N appended op dirs fold into one") {
     val dir = s"$root/compact"
-    val s = CommitLogTableStore(dir)
+    val s = Catalog(dir)
     for (i <- 0 until 5)
       s.append(tasksDf(Seq((s"t$i", "j1", "NEW", ""))), "tasks")
     s.rewrite(s.read(spark, "tasks"), "tasks")
@@ -853,7 +811,7 @@ class CommitLogColdReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     // create is the hard-link emulation (RawLocal subclass) — attest
     // scheme-scoped, as the norename contract suite does
     hc.setBoolean(
-      s"${CommitLogTableStore.AssumeAtomicCreateConf}.countls", true)
+      s"${Catalog.AssumeAtomicCreateConf}.countls", true)
     s
   }
 
@@ -863,7 +821,7 @@ class CommitLogColdReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     // suite in the JVM can observe the test scheme (r14 advice #5)
     val hc = spark.sparkContext.hadoopConfiguration
     hc.unset("fs.countls.impl")
-    hc.unset(s"${CommitLogTableStore.AssumeAtomicCreateConf}.countls")
+    hc.unset(s"${Catalog.AssumeAtomicCreateConf}.countls")
     CatalogTestIO.rm(new java.io.File(root))
   }
 
@@ -874,12 +832,12 @@ class CommitLogColdReadSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("cold read of a sized log costs ZERO data-dir LISTs; legacy bare lines fall back to listing") {
     val dir = s"countls://$root/cold"
-    val s = CommitLogTableStore(dir)
+    val s = Catalog(dir)
     for (i <- 0 until 6)
       s.append(tasksDf(Seq((s"t$i", s"j${i % 3}", "NEW", ""))), "tasks")
     // cold: a FRESH handle reading after the write-side listings settle
     CountingListFileSystem.dataLists.set(0L)
-    val rows = CommitLogTableStore(dir).read(spark, "tasks").collect()
+    val rows = Catalog(dir).read(spark, "tasks").collect()
     assert(rows.length == 6)
     assert(CountingListFileSystem.dataLists.get() == 0L,
       s"sized cold read still paid ${CountingListFileSystem.dataLists.get()} " +
@@ -897,7 +855,7 @@ class CommitLogColdReadSpec extends AnyFunSuite with BeforeAndAfterAll {
       java.nio.file.Files.write(c.toPath, stripped.getBytes("UTF-8"))
     }
     CountingListFileSystem.dataLists.set(0L)
-    val legacy = CommitLogTableStore(dir).read(spark, "tasks").collect()
+    val legacy = Catalog(dir).read(spark, "tasks").collect()
     assert(legacy.length == 6, "legacy bare ADD lines no longer replay")
     assert(CountingListFileSystem.dataLists.get() > 0L,
       "legacy log read listed nothing — the fallback path is dead code")
@@ -913,7 +871,7 @@ class CommitLogColdReadSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(new java.io.File(s"$root/cold/tasks/_log").listFiles
       .exists(_.getName.endsWith(".checkpoint")), "no checkpoint built")
     CountingListFileSystem.dataLists.set(0L)
-    val upgraded = CommitLogTableStore(dir).read(spark, "tasks").collect()
+    val upgraded = Catalog(dir).read(spark, "tasks").collect()
     assert(upgraded.length == 22)
     assert(CountingListFileSystem.dataLists.get() == 0L,
       s"post-checkpoint cold read of a legacy log still paid " +
@@ -927,7 +885,7 @@ class CommitLogColdReadSpec extends AnyFunSuite with BeforeAndAfterAll {
   * magic + zlib body of the v1 text). A million-live-file tiles table
   * checkpoints in ~12 MB instead of ~120 MB and the S3 single-PUT bound
   * moves out ~10×. Version-gated: v1 plain-text checkpoints replay
-  * forever, and [[CommitLogTableStore.CheckpointV2Conf]]=false holds
+  * forever, and [[Catalog.CheckpointV2Conf]]=false holds
   * writers on v1 for rolling upgrades. */
 class CommitLogCheckpointV2Spec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -959,7 +917,7 @@ class CommitLogCheckpointV2Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("v2 checkpoint: ≤1/5 the v1 bytes, identical replay after truncation, v1 still replays") {
     val dir = s"$root/v2"
-    val s = CommitLogTableStore(dir)
+    val s = Catalog(dir)
     // one 400-file append (400 input partitions → 400 part files in one
     // op dir) so the checkpoint has a realistic FILE-line population...
     val big = (0 until 400).map(i => Row(s"big$i", "j1", "NEW", ""))
@@ -1002,7 +960,7 @@ class CommitLogCheckpointV2Spec extends AnyFunSuite with BeforeAndAfterAll {
         f"ratio ${v1Size.toDouble / cpBytes.length}%.1f× is under the 5× bar")
     // identical replay from the compressed checkpoint: fresh handle, and
     // the pre-checkpoint commits are already truncated (asserted above)
-    val replayed = CommitLogTableStore(dir).read(spark, "tasks")
+    val replayed = Catalog(dir).read(spark, "tasks")
       .collect().map(_.getString(0)).toSet
     assert(replayed == expected, "v2 checkpoint replay diverged")
     // A V1 CHECKPOINT STILL REPLAYS: rewrite the same checkpoint as plain
@@ -1011,19 +969,19 @@ class CommitLogCheckpointV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$dir/tasks/_log/$cpName"),
       v1Text.getBytes("UTF-8"))
-    val v1Replayed = CommitLogTableStore(dir).read(spark, "tasks")
+    val v1Replayed = Catalog(dir).read(spark, "tasks")
       .collect().map(_.getString(0)).toSet
     assert(v1Replayed == expected, "v1 plain-text checkpoint no longer replays")
   }
 
   test("CheckpointV2Conf=false holds writers on v1 for rolling upgrades") {
     val dir = s"$root/v1gate"
-    val s = CommitLogTableStore(dir)
-    spark.conf.set(CommitLogTableStore.CheckpointV2Conf, "false")
+    val s = Catalog(dir)
+    spark.conf.set(Catalog.CheckpointV2Conf, "false")
     spark.conf.set(Catalog.StaleSwapReclaimMsConf, "0")
     try for (i <- 0 until 22) s.append(oneRow(s"g$i"), "tasks")
     finally {
-      spark.conf.unset(CommitLogTableStore.CheckpointV2Conf)
+      spark.conf.unset(Catalog.CheckpointV2Conf)
       spark.conf.unset(Catalog.StaleSwapReclaimMsConf)
     }
     val cpName = logFiles(dir).filter(_.endsWith(".checkpoint")).maxOption
@@ -1033,7 +991,7 @@ class CommitLogCheckpointV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!head.sameElements(V2Magic), "conf gate ignored: checkpoint is v2")
     assert(new String(head, "UTF-8").startsWith("FILE "),
       "v1 checkpoint does not start with a FILE line")
-    assert(CommitLogTableStore(dir).read(spark, "tasks").count() == 22)
+    assert(Catalog(dir).read(spark, "tasks").count() == 22)
   }
 
   test("cold replay of a 100k-entry v2 checkpoint plans in seconds (the 100-TB cold-driver number)") {
@@ -1055,9 +1013,9 @@ class CommitLogCheckpointV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     ld.mkdirs()
     java.nio.file.Files.write(
       new java.io.File(ld, "0" * 19 + "1.checkpoint").toPath,
-      CommitLogTableStore.checkpointBytes(lines, v2 = true))
+      Catalog.checkpointBytes(lines, v2 = true))
     val t0 = System.nanoTime()
-    val df = CommitLogTableStore(dir).read(spark, "tiles")
+    val df = Catalog(dir).read(spark, "tiles")
     val files = df.inputFiles.length
     val elapsed = (System.nanoTime() - t0) / 1e9
     assert(files == 100000, s"replayed $files of 100000 files")
@@ -1069,7 +1027,7 @@ class CommitLogCheckpointV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     var warm = 0.0
     for (i <- 1 to 4) {
       val t1 = System.nanoTime()
-      val df = CommitLogTableStore(dir).read(spark, "tiles")
+      val df = Catalog(dir).read(spark, "tiles")
       warm = (System.nanoTime() - t1) / 1e9
       if (i == 1) assert(df.inputFiles.length == 100000)
       info(f"warm (memoized) read #$i: $warm%.3f s")
@@ -1084,7 +1042,7 @@ class CommitLogCheckpointV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     // request); the first read after a commit builds a fresh one and
     // sees the new rows — never a stale listing
     val dir = s"$root/relcache"
-    val s = CommitLogTableStore(dir)
+    val s = Catalog(dir)
     s.append(oneRow("r1"), "tasks")
     def indexOf(df: DataFrame): AnyRef =
       df.queryExecution.logical.collectFirst {
@@ -1107,13 +1065,13 @@ class CommitLogCheckpointV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     // replay must skip to the commits (all still present here), not crash
     // or silently drop state
     val dir = s"$root/torn"
-    val s = CommitLogTableStore(dir)
+    val s = Catalog(dir)
     spark.conf.set(Catalog.StaleSwapReclaimMsConf, "0")
-    spark.conf.set(CommitLogTableStore.VacuumRetentionMsConf, "3600000")
+    spark.conf.set(Catalog.VacuumRetentionMsConf, "3600000")
     try for (i <- 0 until 21) s.append(oneRow(s"c$i"), "tasks")
     finally {
       spark.conf.unset(Catalog.StaleSwapReclaimMsConf)
-      spark.conf.unset(CommitLogTableStore.VacuumRetentionMsConf)
+      spark.conf.unset(Catalog.VacuumRetentionMsConf)
     }
     val cpName = logFiles(dir).filter(_.endsWith(".checkpoint")).maxOption
       .getOrElse(fail("no checkpoint built"))
@@ -1122,7 +1080,7 @@ class CommitLogCheckpointV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.write(p, whole.take(whole.length - 7))
     // age it past the torn grace so the judgment is immediate
     assert(p.toFile.setLastModified(System.currentTimeMillis() - 60000))
-    assert(CommitLogTableStore(dir).read(spark, "tasks").count() == 21,
+    assert(Catalog(dir).read(spark, "tasks").count() == 21,
       "truncated v2 checkpoint corrupted the replay")
   }
 }

@@ -25,12 +25,12 @@ object ReplayScaleMain {
     val ld = new java.io.File(s"$dir/tiles/_log")
     ld.mkdirs()
     val cp = new java.io.File(ld, "0" * 19 + "1.checkpoint")
-    val bytes = CommitLogTableStore.checkpointBytes(lines, v2 = true)
+    val bytes = Catalog.checkpointBytes(lines, v2 = true)
     java.nio.file.Files.write(cp.toPath, bytes)
     val v1Bytes = (lines :+ "END").mkString("\n").getBytes("UTF-8").length
     println(f"entries=$n v2_bytes=${bytes.length}%,d v1_bytes=$v1Bytes%,d " +
       f"ratio=${v1Bytes.toDouble / bytes.length}%.1f")
-    val store = CommitLogTableStore(dir)
+    val store = Catalog(dir)
     // JIT warmup on the same code paths at a smaller fingerprint
     for (i <- 1 to 3) {
       cp.setLastModified(System.currentTimeMillis() - i * 3600000L): Unit
@@ -54,11 +54,10 @@ object ReplayScaleMain {
       val ls = inflated.linesIterator.toVector
       val t2 = System.nanoTime()
       var live = Set.empty[String]
-      var meta = Map.empty[String, CommitLogTableStore.FileMeta]
-      val st = CommitLogTableStore(dir)
+      var meta = Map.empty[String, Catalog.FileMeta]
       ls.foreach { l =>
         if (l.startsWith("FILE ")) {
-          val (r, fm) = st.parseEntry(l.drop(5))
+          val (r, fm) = Catalog.parseEntry(l.drop(5))
           live += r
           fm.foreach(m => meta += r -> m)
         }

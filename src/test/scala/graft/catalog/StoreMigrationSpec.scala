@@ -1,16 +1,17 @@
 package graft.catalog
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Swap-store → commit-log-store migration is a FILE COPY plus one log
-  * commit — the [[TableLayout]] promise that the two stores differ only
-  * in visibility mechanism, never in what the bytes look like. Proven
-  * by byte-identity: the parquet files the commit-log store serves after
-  * [[CommitLogTableStore.importTable]] are bit-for-bit the source's,
-  * across an unpartitioned table, a statically-partitioned one, and the
-  * derived-bucket tiles layout. */
+/** Rename-swap catalog → commit-log catalog migration is a FILE COPY plus
+  * one log commit, READ-ONLY on the source: the swap layout keeps the
+  * same [[TableLayout]] shape under each table directory, so the parquet
+  * files the catalog serves after [[Catalog.importTable]] are bit-for-bit
+  * the source's, across an unpartitioned table, a statically-partitioned
+  * one, and the derived-bucket tiles layout. Sources are built in code in
+  * the swap layout (`<root>/<table>/[col=value/]part-*.parquet`). */
 class StoreMigrationSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark = org.apache.spark.sql.SparkSession.builder()
@@ -21,17 +22,33 @@ class StoreMigrationSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val base =
     java.nio.file.Files.createTempDirectory("graft-migrate").toString
-  private lazy val from = Catalog(s"$base/swap")
-  private lazy val to = CommitLogTableStore(s"$base/log")
+  private lazy val from = s"$base/swap"
+  private lazy val to = Catalog(s"$base/log")
 
   override def afterAll(): Unit = CatalogTestIO.rm(new java.io.File(base))
 
-  private def seed(table: String, rows: Seq[Row]): Unit =
-    from.append(spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 2), Schemas.all(table)), table)
+  private def df(table: String, rows: Seq[Row], parts: Int = 2): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, parts),
+      Schemas.all(table))
 
-  private def collectSet(s: TableStore, table: String): Set[String] =
-    s.read(spark, table).collect().map(_.toSeq.map {
+  /** Append `rows` to `table` in the swap layout under `root`: the
+    * partitioned parquet write that store published by renames. */
+  private def seedSwap(root: String, table: String, rows: Seq[Row],
+      parts: Int = 2): Unit = {
+    val w = TableLayout.withDerived(df(table, rows, parts), table).write.mode("append")
+    TableLayout.partitionColumn(table).fold(w)(w.partitionBy(_))
+      .parquet(s"$root/$table")
+  }
+
+  /** A swap-layout table's rows in logical column order. */
+  private def readSwap(root: String, table: String): DataFrame = {
+    val schema = TableLayout.readSchema(table)
+    spark.read.schema(schema).parquet(s"$root/$table")
+      .select(schema.fieldNames.toIndexedSeq.map(col): _*)
+  }
+
+  private def rowSet(d: DataFrame): Set[String] =
+    d.collect().map(_.toSeq.map {
       case b: Array[Byte] => b.mkString(",")
       case x => String.valueOf(x)
     }.mkString("|")).toSet
@@ -49,58 +66,93 @@ class StoreMigrationSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("importTable: rows survive, files are byte-identical copies") {
-    seed("records", Seq(
+    seedSwap(from, "records", Seq(
       Row("r1", "s1", java.sql.Timestamp.valueOf("2024-01-01 00:00:00"),
         Map.empty[String, String], "a1"),
       Row("r2", "s2", java.sql.Timestamp.valueOf("2024-01-02 00:00:00"),
         Map.empty[String, String], "a1")))
-    seed("tasks", Seq(
+    seedSwap(from, "tasks", Seq(
       Row("t1", "j1", "NEW", ""), Row("t2", "j2", "DONE", "x")))
-    seed("tiles", Seq(
+    seedSwap(from, "tiles", Seq(
       Row("mem://c1", "", 2, 2, 1, "uint8", "EPSG:4326",
         Seq(0.0, 1.0, 0.0, 2.0, 0.0, -1.0), Array[Byte](1, 2, 3, 4)),
       Row("mem://c2", "", 2, 2, 1, "uint8", "EPSG:4326",
         Seq(0.0, 1.0, 0.0, 2.0, 0.0, -1.0), Array[Byte](5, 6, 7, 8))))
+    val source = CatalogTestIO.fileState(new java.io.File(from))
 
     for (t <- Seq("records", "tasks", "tiles"))
       to.importTable(spark, t, from)
 
     for (t <- Seq("records", "tasks", "tiles"))
-      assert(collectSet(to, t) == collectSet(from, t), s"table $t diverged")
+      assert(rowSet(to.read(spark, t)) == rowSet(readSwap(from, t)),
+        s"table $t diverged")
 
     // the tiles bucket layout carried over: reads still partition-prune
     assert(to.read(spark, "tiles").columns.contains(Catalog.TilesBucketCol))
 
     // bit-for-bit: every imported parquet file matches its source CRC
     for (t <- Seq("records", "tasks", "tiles")) {
-      val src = parquetBytes(new java.io.File(s"$base/swap/$t"))
+      val src = parquetBytes(new java.io.File(s"$from/$t"))
       val dst = parquetBytes(new java.io.File(s"$base/log/$t/data"))
       assert(src.nonEmpty && dst == src, s"table $t files rewritten")
     }
+    // read-only on the source
+    assert(CatalogTestIO.fileState(new java.io.File(from)) == source)
   }
 
   test("a legacy flat source is healed into partition dirs before import") {
     // a swap catalog written by the pre-partitioning build: flat part
     // files with job_id still a data column — imported raw, these files
     // would carry an EMPTY partition dir and silently dodge every later
-    // partition-scoped rewrite. importTable reads through the source
-    // Catalog first, which runs its legacy-layout migration.
+    // partition-scoped rewrite. importTable reads them and stages the
+    // rows into partition dirs; the source files are never rewritten.
     val legacyRoot = s"$base/legacy"
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        Seq(Row("t1", "j1", "NEW", ""), Row("t2", "j2", "NEW", "")), 1),
-      Schemas.all("tasks"))
+    df("tasks", Seq(Row("t1", "j1", "NEW", ""), Row("t2", "j2", "NEW", "")), 1)
       .write.mode("overwrite").parquet(s"$legacyRoot/tasks")
     assert(new java.io.File(s"$legacyRoot/tasks").listFiles
       .exists(f => f.isFile && f.getName.endsWith(".parquet")))
-    val t3 = CommitLogTableStore(s"$base/log3")
-    t3.importTable(spark, "tasks", Catalog(legacyRoot))
-    assert(collectSet(t3, "tasks") == Set("t1|j1|NEW|", "t2|j2|NEW|"))
+    val source = CatalogTestIO.fileState(new java.io.File(legacyRoot))
+    val t3 = Catalog(s"$base/log3")
+    t3.importTable(spark, "tasks", legacyRoot)
+    assert(rowSet(t3.read(spark, "tasks")) == Set("t1|j1|NEW|", "t2|j2|NEW|"))
+    assert(CatalogTestIO.fileState(new java.io.File(legacyRoot)) == source,
+      "import wrote into its source")
     // every imported file sits in a job_id= partition dir, so the
     // partition-scoped ops actually target it
+    assert(CatalogTestIO.livePartitions(spark, t3, "tasks") ==
+      Set("job_id=j1", "job_id=j2"))
     t3.updatePartitions(spark, "tasks", Seq("j1"),
       _.withColumn("state", org.apache.spark.sql.functions.lit("DONE")))
-    assert(collectSet(t3, "tasks") == Set("t1|j1|DONE|", "t2|j2|NEW|"))
+    assert(rowSet(t3.read(spark, "tasks")) == Set("t1|j1|DONE|", "t2|j2|NEW|"))
+  }
+
+  test("importTable refuses pending swap staging beside the source; nothing is committed") {
+    // a swap writer that crashed mid-operation leaves staging siblings
+    // beside the table dir — here a committed partition-swap root with
+    // its marker. Healing it would WRITE into the source; judging it
+    // from a listing would guess. The import must refuse, name the
+    // pending root, and leave both sides untouched.
+    val src = s"$base/pending"
+    seedSwap(src, "tasks", Seq(Row("t1", "j1", "NEW", "")))
+    val staging = new java.io.File(s"$src/tasks.bswap.deadop000001")
+    df("tasks", Seq(Row("t1", "j1", "DONE", "healed")))
+      .write.partitionBy("job_id").parquet(staging.toString)
+    java.nio.file.Files.write(new java.io.File(staging, "_COMMIT").toPath,
+      "ID tasks.bswap.deadop000001\nS job_id=j1\n".getBytes("UTF-8"))
+    val source = CatalogTestIO.fileState(new java.io.File(src))
+    val dst = Catalog(s"$base/logpending")
+    val e = intercept[java.io.IOException](dst.importTable(spark, "tasks", src))
+    assert(e.getMessage.contains("tasks.bswap.deadop000001"), e.getMessage)
+    assert(CatalogTestIO.fileState(new java.io.File(src)) == source,
+      "import touched its source")
+    assert(!new java.io.File(s"$base/logpending/tasks/_log").exists,
+      "a refused import committed on the destination")
+    assert(dst.read(spark, "tasks").count() == 0)
+    // a crashed full-table rewrite's parked pre-image is refused the same way
+    CatalogTestIO.rm(staging)
+    assert(new java.io.File(s"$src/tasks").renameTo(new java.io.File(s"$src/tasks.old")))
+    intercept[java.io.IOException](dst.importTable(spark, "tasks", src))
+    assert(!new java.io.File(s"$base/logpending/tasks/_log").exists)
   }
 
   test("a large import distributes its copies as a Spark job, byte-identically") {
@@ -109,11 +161,8 @@ class StoreMigrationSpec extends AnyFunSuite with BeforeAndAfterAll {
     // bounded by the driver's NIC), staged invisible until the one
     // commit. 300 single-row job partitions → 300 source parquet files.
     val bigRoot = s"$base/big"
-    val bigFrom = Catalog(bigRoot)
-    bigFrom.append(spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        (1 to 300).map(i => Row(f"t$i%03d", f"j$i%03d", "NEW", "")), 4),
-      Schemas.all("tasks")), "tasks")
+    seedSwap(bigRoot, "tasks",
+      (1 to 300).map(i => Row(f"t$i%03d", f"j$i%03d", "NEW", "")), parts = 4)
     // keyed by partition dir + name: Spark part-file names repeat across
     // partition dirs, so the name-only helper above would collapse them
     def files(dir: java.io.File): Map[String, Long] = {
@@ -128,8 +177,8 @@ class StoreMigrationSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val srcFiles = files(new java.io.File(s"$bigRoot/tasks"))
     assert(srcFiles.size > 256, s"setup: only ${srcFiles.size} source files")
-    val big = CommitLogTableStore(s"$base/logbig")
-    big.importTable(spark, "tasks", bigFrom)
+    val big = Catalog(s"$base/logbig")
+    big.importTable(spark, "tasks", bigRoot)
     assert(big.read(spark, "tasks").count() == 300)
     val dst = files(new java.io.File(s"$base/logbig/tasks/data"))
     assert(dst == srcFiles, "distributed import rewrote or lost files")
@@ -142,13 +191,11 @@ class StoreMigrationSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("import composes with existing commit-log rows; empty source is a no-op") {
-    val t2 = CommitLogTableStore(s"$base/log2")
-    t2.append(spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(Row("t0", "j0", "NEW", "")), 1),
-      Schemas.all("tasks")), "tasks")
+    val t2 = Catalog(s"$base/log2")
+    t2.append(df("tasks", Seq(Row("t0", "j0", "NEW", "")), 1), "tasks")
     t2.importTable(spark, "tasks", from)
-    assert(collectSet(t2, "tasks") ==
-      collectSet(from, "tasks") + "t0|j0|NEW|")
+    assert(rowSet(t2.read(spark, "tasks")) ==
+      rowSet(readSwap(from, "tasks")) + "t0|j0|NEW|")
     t2.importTable(spark, "aoi", from) // never written over there
     assert(t2.read(spark, "aoi").count() == 0)
   }

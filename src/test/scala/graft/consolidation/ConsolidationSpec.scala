@@ -313,17 +313,16 @@ class ConsolidationSpec extends AnyFunSuite with BeforeAndAfterAll {
       layout, ConsolidationParams(uint8Map, Resampling.Near))
     assert(ConsolidationJob.run(spark, cat2, spec,
       pauseAfter = Some("CONSOLIDATIONDONE")) == "CONSOLIDATIONDONE")
-    // poison the datasets table: the resume's lock read fails mid-flight
-    // AND the rollback's own rewrite fails — the reference's
-    // ROLLBACKFAILED, never a clean-looking FAILED
-    val garbage = new java.io.File(
-      s"${cat2.root}/datasets/instance_id=i1/part-garbage.parquet")
-    java.nio.file.Files.write(garbage.toPath, "not parquet".getBytes("UTF-8"))
+    // poison the datasets table (the i1 partition's live files turned
+    // to garbage): the resume's lock read fails mid-flight AND the
+    // rollback's own rewrite fails — the reference's ROLLBACKFAILED,
+    // never a clean-looking FAILED
+    val repair = poisonLive(cat2, "datasets", _.contains("/instance_id=i1/"))
     assert(ConsolidationJob.run(spark, cat2, spec) == "ROLLBACKFAILED")
     assert(cat2.read(spark, "jobs").filter(col("id") === "jb1" &&
       col("state") === "ROLLBACKFAILED").count() == 1)
     // repair the table; retry re-attempts ONLY the rollback → FAILED
-    garbage.delete()
+    repair()
     assert(ConsolidationJob.retry(spark, cat2, spec) == "FAILED")
     val ds = cat2.read(spark, "datasets").collect()
     assert(ds.length == 2 && ds.forall(_.getAs[String]("status") == "ACTIVE"))
@@ -456,6 +455,21 @@ class ConsolidationSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Fresh two-cell catalog: r1's tile sits in cell [0,4]², r2's in
     * [8,12]², so the job packs TWO containers (= two task rows) and one
     * can fail while the other completes. */
+  /** Turn the live files of `table` whose path matches `inPath` into
+    * garbage (every read of them fails); returns the repair. */
+  private def poisonLive(cat: TableStore, table: String,
+      inPath: String => Boolean): () => Unit = {
+    val good = cat.read(spark, table).inputFiles.filter(inPath).toSeq.map { u =>
+      val f = new java.io.File(new java.net.URI(u))
+      f -> java.nio.file.Files.readAllBytes(f.toPath)
+    }
+    assert(good.nonEmpty, s"no live $table file to poison")
+    good.foreach { case (f, _) =>
+      java.nio.file.Files.write(f.toPath, "not parquet".getBytes("UTF-8"))
+    }
+    () => good.foreach { case (f, b) => java.nio.file.Files.write(f.toPath, b): Unit }
+  }
+
   def twoCellCatalog(tag: String, poisonR2: Boolean): Catalog = {
     val root2 = java.nio.file.Files.createTempDirectory(s"graft-csld-$tag").toString
     val cat2 = Catalog(root2)
@@ -1002,8 +1016,7 @@ class ConsolidationSpec extends AnyFunSuite with BeforeAndAfterAll {
       "container_layouts")
     // poison the records table: the resume's C3 re-derivation throws
     // after CREATED → rollbackToFailed
-    val garbage = new java.io.File(s"${cat2.root}/records/part-garbage.parquet")
-    java.nio.file.Files.write(garbage.toPath, "not parquet".getBytes("UTF-8"))
+    poisonLive(cat2, "records", _ => true)
     assert(ConsolidationJob.run(spark, cat2, spec) == "FAILED")
     // the never-authoritative outputs go with the rollback — nothing
     // dangles to block deleteLayout or confuse FindContainerLayouts
@@ -1189,15 +1202,13 @@ class ConsolidationSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(ConsolidationJob.run(spark, cat2, spec,
       pauseAfter = Some("CONSOLIDATIONEFFECTIVE")) == "CONSOLIDATIONEFFECTIVE")
     val prefix = s"${cat2.root}/containers/jbu/"
-    // make the C7 old-dataset cleanup throw: a garbage parquet file in
-    // the datasets partition dir fails the scan
-    val garbage = new java.io.File(
-      s"${cat2.root}/datasets/instance_id=i1/zzz-garbage.parquet")
-    java.nio.file.Files.write(garbage.toPath, "not parquet".getBytes("UTF-8"))
+    // make the C7 old-dataset cleanup throw: garbage in the datasets
+    // partition's live files fails the scan
+    val repair = poisonLive(cat2, "datasets", _.contains("/instance_id=i1/"))
     // the swap is EFFECTIVE: the outputs serve reads — the failure must
     // park as DONEBUTUNTIDY, never roll back or journal a fake FAILED
     assert(ConsolidationJob.run(spark, cat2, spec) == "DONEBUTUNTIDY")
-    assert(garbage.delete())
+    repair()
     assert(cat2.read(spark, "datasets")
       .filter(col("container_uri").startsWith(prefix) &&
         col("status") === "ACTIVE").count() == 2)

@@ -59,15 +59,17 @@ class VarCacheStampSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("commit-log root: stamp reads the _log listing (object-store honest)") {
-    // on the commit-log layout the table dir's direct children are the
-    // CONSTANT `_log`/`data` entries — a stamp of that listing would be
-    // blind on flat object stores (synthetic directory mtimes); the
-    // stamp must instead track the versioned commit files, whose NAMES
-    // change on every mutation
+    // the table dir's direct children are the CONSTANT `_log`/`data`
+    // entries — a stamp of that listing would be blind on flat object
+    // stores (synthetic directory mtimes); the stamp must instead track
+    // the versioned commit files, whose NAMES change on every mutation.
+    // A table dir WITHOUT `_log` has nothing to stamp: unobservable, so
+    // the cache is bypassed rather than keyed on a listing no mutation
+    // of this store moves
     val clDir = java.nio.file.Files.createTempDirectory("graft-stamp-cl")
     val clRoot = "file://" + clDir.toString
     try {
-      val cat = graft.catalog.CommitLogTableStore(clRoot)
+      val cat = graft.catalog.Catalog(clRoot)
       cat.append(spark.createDataFrame(
         spark.sparkContext.parallelize(Seq(vrow("v1")), 1),
         Schemas.all("variable_definitions")), "variable_definitions")
@@ -79,6 +81,12 @@ class VarCacheStampSpec extends AnyFunSuite with BeforeAndAfterAll {
         Schemas.all("variable_definitions")), "variable_definitions")
       assert(GetCube.dirStamp(spark, clRoot, "variable_definitions") != s1,
         "commit-log append did not move the serving cache stamp")
+      val bare = new java.io.File(clDir.toFile, "variable_instances")
+      assert(bare.mkdirs())
+      java.nio.file.Files.write(new java.io.File(bare, "part-0.parquet").toPath,
+        Array[Byte](1, 2, 3))
+      assert(GetCube.dirStamp(spark, clRoot, "variable_instances") == ((-1L, -1L)),
+        "a table dir without _log must stamp unobservable")
     } finally {
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) f.listFiles.foreach(rm); f.delete(): Unit

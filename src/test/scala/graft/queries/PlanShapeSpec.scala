@@ -159,8 +159,9 @@ class PlanShapeSpec extends AnyFunSuite {
     })
     // the store must be laid out in bucket directories (the 100-TB table's
     // partition scheme) …
-    val dirs = new java.io.File(s"$root/tiles").listFiles
-      .filter(_.isDirectory).map(_.getName)
+    val dirs = new java.io.File(s"$root/tiles/data").listFiles
+      .filter(_.isDirectory).flatMap(_.listFiles).filter(_.isDirectory)
+      .map(_.getName)
     assert(dirs.nonEmpty && dirs.forall(_.startsWith(s"${Catalog.TilesBucketCol}=")),
       s"tiles not bucket-partitioned: ${dirs.mkString(",")}")
     // … and a record-scoped cube request must reach the payload scan with
@@ -200,13 +201,13 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("commit-log tiles read: ONE scan across op dirs, bucket DPP intact") {
-    import graft.catalog.{Catalog, CommitLogTableStore, Schemas}
+    import graft.catalog.{Catalog, Schemas}
     import graft.core.DType
     import graft.geo.{Affine, BBox, GeomOps}
     import graft.raster.Bitmap
     import org.apache.spark.sql.Row
     val root = java.nio.file.Files.createTempDirectory("graft-planshape-cl").toString
-    val cat = CommitLogTableStore(root)
+    val cat = Catalog(root)
     def write(table: String, rows: Seq[Row]): Unit =
       cat.append(spark.createDataFrame(
         spark.sparkContext.parallelize(rows), Schemas.all(table)), table)

@@ -51,10 +51,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val clRoot = java.nio.file.Files.createTempDirectory("graft-stream-cl").toString
-    // same streaming code, different TableStore constructor: every
-    // micro-batch's journal append + dedup probe rides the optimistic
-    // commit log instead of directory renames
-    val cl = graft.catalog.CommitLogTableStore(clRoot)
+    // same streaming code on a fresh root: every micro-batch's journal
+    // append + dedup probe rides the optimistic commit log
+    val cl = graft.catalog.Catalog(clRoot)
     val stream = MemoryStream[TaskEvent]
     val q = EventStream.driveJobCounters(spark, cl, stream.toDS(), "cl-counters")
     try {
