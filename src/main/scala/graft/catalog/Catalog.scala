@@ -117,16 +117,13 @@ import org.apache.spark.sql.types.StructType
   * whole line as a path), never silently: in a rolling upgrade, update
   * readers before writers. Since r15, CHECKPOINTS are written deflated
   * (format v2, magic-sniffed — v1 plain-text checkpoints replay
-  * unchanged forever). A pre-r15 reader judges a v2 checkpoint
-  * unreadable and replays from the previous one plus the commit tail —
-  * CORRECT until maintenance truncates that tail (one retention later),
-  * so a rolling upgrade updates readers before writers here too; a
-  * deployment that can't order the rollout holds writers on v1 with
-  * [[Catalog.CheckpointV2Conf]]=false until readers are
-  * current. A Delta-style minReaderVersion gate is deliberately not
-  * added — the log has exactly two historical format changes and no
-  * cross-vendor readers; this note plus the conf gate is the
-  * proportionate contract. A log file that decodes but carries a
+  * unchanged forever); writers always write v2. A pre-r15 reader judges
+  * a v2 checkpoint unreadable and replays from the previous one plus the
+  * commit tail — CORRECT until maintenance truncates that tail (one
+  * retention later), so a rolling upgrade updates readers before
+  * writers here too. A Delta-style minReaderVersion gate is deliberately
+  * not added — the log has exactly two historical format changes and no
+  * cross-vendor readers; this note is the proportionate contract. A log file that decodes but carries a
   * malformed line fails the replay with [[Catalog.MalformedLogFile]]. */
 final case class Catalog(root: String) extends TableStore {
   import Catalog._
@@ -1103,7 +1100,7 @@ final case class Catalog(root: String) extends TableStore {
     f.mkdirs(logDir(table))
     val t0 = System.currentTimeMillis()
     val won = createExclusive(f, new Path(logDir(table), f"$v%020d$CommitSuffix"),
-      (lines :+ Terminator).mkString("\n").getBytes("UTF-8"))
+      logText(lines))
     if (!won) false
     else if (!contentVisibleBeforeClose(f) ||
         System.currentTimeMillis() - t0 < TornGraceMs / 2) true
@@ -1368,7 +1365,7 @@ final case class Catalog(root: String) extends TableStore {
           }
         createExclusive(f,
           new Path(ld, f"${resolvedSnap.version}%020d$CheckpointSuffix"),
-          checkpointBytes(lines, v2 = checkpointV2(spark))): Unit
+          checkpointBytes(lines)): Unit
       }
     }
     // vacuum tombstones past the READER-HORIZON retention — on the
@@ -1706,17 +1703,20 @@ object Catalog {
   private val CheckpointV2Magic: Array[Byte] =
     "GCL2".getBytes("UTF-8") :+ 0.toByte
 
-  /** Serialize checkpoint `lines` (terminator appended) — v2 deflates the
-    * v1 text behind [[CheckpointV2Magic]] at zlib level 6: checkpoint
+  /** Plain-text log file: `lines` plus the terminator — every commit,
+    * and the body of a checkpoint (which replays as-is: the v1 form). */
+  private[graft] def logText(lines: Seq[String]): Array[Byte] =
+    (lines :+ Terminator).mkString("\n").getBytes("UTF-8")
+
+  /** Serialize checkpoint `lines` in the v2 format: the [[logText]]
+    * deflated behind [[CheckpointV2Magic]] at zlib level 6. Checkpoint
     * writes are once per [[CheckpointEvery]] commits and the body is
     * highly repetitive (shared op ids, partition prefixes, Spark's
     * per-job part UUIDs), so ~10× smaller for one-digit milliseconds of
     * CPU per MB. private[graft] so the bench can synthesize a 100k-entry
     * checkpoint without going through 100k commits. */
-  private[graft] def checkpointBytes(lines: Seq[String], v2: Boolean): Array[Byte] = {
-    val text = (lines :+ Terminator).mkString("\n").getBytes("UTF-8")
-    if (v2) CheckpointV2Magic ++ graft.cube.Compress.deflate(text, 6) else text
-  }
+  private[graft] def checkpointBytes(lines: Seq[String]): Array[Byte] =
+    CheckpointV2Magic ++ graft.cube.Compress.deflate(logText(lines), 6)
 
   /** A log file that decodes and carries its terminator but holds a
     * line the replay cannot interpret — corruption the exclusive-create
@@ -1897,14 +1897,6 @@ object Catalog {
     }
     (rest, None)
   }
-
-  /** Conf key: write checkpoints in the v2 (deflate-compressed) format —
-    * default TRUE. v1 checkpoints replay forever regardless; set false
-    * only to hold writers on v1 during a rolling upgrade whose readers
-    * predate v2 (see the FORMAT COMPATIBILITY note on the class). */
-  val CheckpointV2Conf = "graft.catalog.checkpointFormatV2"
-  private[catalog] def checkpointV2(spark: SparkSession): Boolean =
-    spark.conf.getOption(CheckpointV2Conf).forall(_.toBoolean)
 
   /** One commit/checkpoint file's read-time verdict — see `readCommit`. */
   private sealed trait CommitJudgment

@@ -84,24 +84,15 @@ object XYZTile {
     import graft.geo.CRS
     import graft.raster.{OutDescriptor, Resampling, SourceRaster, Warp}
     val tf = Grid.xyzTransform(x, y, z)
-    // overview selection keys on SOURCE-CRS units: probe the CRS from the
-    // head, convert the tile's meters/px (equatorial factor for degrees —
-    // errs toward a finer level, like GetCube.selectTileLevel)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val len = fs.getFileStatus(p).getLen
-    val in = fs.open(p)
-    val img =
-      try {
-        def readAt(pos: Long, buf: Array[Byte], off: Int, n: Int): Unit =
-          in.readFully(pos, buf, off, n)
-        // ONE head parse per request: the CRS probe and the overview
-        // choice share the same IFD walk — the old readHeadersRanged +
-        // readForResolutionRanged pair parsed the head twice per tile
-        // (guide §6; r15 candidate #7)
-        graft.raster.GeoTiff.readForResolutionRangedMeters(
-          readAt, len, subdir, tf.rx)
-      } finally in.close()
+    // ONE head parse per request. Overview selection keys on SOURCE-CRS
+    // units: the tile's meters/px converts to degrees for a geographic
+    // source (equatorial factor — errs toward a finer level, like
+    // GetCube.selectTileLevel)
+    val img = graft.ingest.GeoTiffIO.withTiff(conf, path) { tiff =>
+      val geo = tiff.headers.head.crs.isGeographic
+      tiff.decode(tiff.level(graft.raster.GeoTiff.subdirIndex(subdir),
+        math.abs(if (geo) tf.rx / 111320.0 else tf.rx)))
+    }
     // identity value mapping over the source dtype; warp only reprojects
     val fmt = DataFormat(img.bitmap.dtype, noData,
       NumRange(img.bitmap.dtype.minValue, img.bitmap.dtype.maxValue))

@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * by standard tooling (S8/S9).
   *
   * Import is a distributed `binaryFile` read → per-file parse on
-  * executors → tile-row append. Bulk export assembles + writes each
+  * executors → tile-row append; [[withTiff]] reads a file in place
+  * through positioned reads. Bulk export assembles + writes each
   * container's file on the executor holding its tiles
   * ([[exportContainers]]); the single-container [[exportContainer]]
   * (request-sized download path) collects one container — bounded by
@@ -20,18 +21,20 @@ object GeoTiffIO {
 
   /** Import .tif files (each possibly multi-IFD) as containers whose URI
     * is the file path. Runs the TIFF parse on executors via the
-    * binaryFile source — one task per file, linear scale-out. */
+    * binaryFile source — one task per file, linear scale-out. Only the
+    * full-resolution directories are decoded; overviews are skipped. */
   def importFiles(spark: SparkSession, cat: TableStore, pathGlob: String): Unit = {
     val files = spark.read.format("binaryFile").load(pathGlob)
       .select(col("path"), col("content"))
     val rows = files.rdd.flatMap { r =>
       val path = r.getAs[String]("path")
-      val dirs = GeoTiff.read(r.getAs[Array[Byte]]("content"))
-      dirs.filterNot(_.isOverview).zipWithIndex.map { case (d, i) =>
+      val tiff = GeoTiff.open(r.getAs[Array[Byte]]("content"))
+      (0 until tiff.records).map { i =>
+        val img = tiff.decode(tiff.level(i))
         Row(path, s"GTIFF_DIR:${i + 1}",
-          d.image.bitmap.width, d.image.bitmap.height, d.image.bitmap.bands,
-          d.image.bitmap.dtype.name, graft.geo.CRS.serialize(d.image.crs),
-          d.image.transform.toArray.toSeq, d.image.bitmap.toBytes)
+          img.bitmap.width, img.bitmap.height, img.bitmap.bands,
+          img.bitmap.dtype.name, graft.geo.CRS.serialize(img.crs),
+          img.transform.toArray.toSeq, img.bitmap.toBytes)
       }
     }
     // containers BEFORE tiles: a crash between the two appends then
@@ -45,90 +48,20 @@ object GeoTiffIO {
     cat.append(spark.createDataFrame(rows, Schemas.tiles), "tiles")
   }
 
-  /** File-backed cube source (S8): read GeoTIFF containers straight from
-    * storage on executors — no catalog tile rows — selecting per file the
-    * overview level adequate for `targetRes` (`-ovr AUTO`,
-    * image.go:401): a coarse request decodes 1/4ᴷ of the pixels. Rows come
-    * back in the catalog `tiles` schema, so the GetCube tile join and
-    * merge kernel consume them unchanged.
-    *
-    * Scale note: binaryFile hands each executor the whole file; the tiled
-    * COG layout (IFDs at the head) is what makes a range-reading object-
-    * store client able to fetch only the chosen IFD's blocks — the JVM
-    * codec here decodes from the full byte array but touches only the
-    * selected directory's blocks. One task per file, linear scale-out. */
-  def readTilesForResolution(spark: SparkSession, pathGlob: String,
-      targetRes: Double): org.apache.spark.sql.DataFrame = {
-    val files = spark.read.format("binaryFile").load(pathGlob)
-      .select(col("path"), col("content"))
-    val rows = files.rdd.flatMap { r =>
-      val path = r.getAs[String]("path")
-      val data = r.getAs[Array[Byte]]("content")
-      // one head parse + one decode of each chain's CHOSEN level (the
-      // ranged reader over a memory-backed readAt): the per-subdir
-      // readForResolution form re-decoded every IFD of the container
-      // once per subdir — O(R²) inflate work for R records
-      val imgs = GeoTiff.readAllForResolutionRanged(
-        (pos, buf, off, n) => System.arraycopy(data, pos.toInt, buf, off, n),
-        data.length.toLong, targetRes)
-      imgs.zipWithIndex.map { case (img, i) =>
-        Row(path, s"GTIFF_DIR:${i + 1}",
-          img.bitmap.width, img.bitmap.height, img.bitmap.bands,
-          img.bitmap.dtype.name, graft.geo.CRS.serialize(img.crs),
-          img.transform.toArray.toSeq, img.bitmap.toBytes)
-      }
-    }
-    spark.createDataFrame(rows, Schemas.tiles)
-  }
-
-  /** [[readTilesForResolution]] with RANGE READS instead of whole-file
-    * download: one head parse per container, then only the selected
-    * level's blocks per subdir — a coarse request FETCHES 1/4ᴷ of the
-    * bytes from the object store instead of merely decoding 1/4ᴷ after
-    * pulling everything. Same `tiles` rows; one task per file. */
-  def readTilesForResolutionRanged(spark: SparkSession, pathGlob: String,
-      targetRes: Double): org.apache.spark.sql.DataFrame = {
-    val hconf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    // driver-side listing only (names, no bytes)
-    val glob = new org.apache.hadoop.fs.Path(pathGlob)
-    val lfs = glob.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = Option(lfs.globStatus(glob)).map(_.toSeq).getOrElse(Nil)
-      .filterNot(_.isDirectory).map(_.getPath.toString)
-    val rows = spark.sparkContext
-      .parallelize(files, math.max(1, math.min(files.size, 64)))
-      .flatMap { pathStr =>
-        val p = new org.apache.hadoop.fs.Path(pathStr)
-        val fs = p.getFileSystem(hconf.value)
-        val len = fs.getFileStatus(p).getLen
-        val in = fs.open(p)
-        try {
-          val imgs = GeoTiff.readAllForResolutionRanged(
-            (pos, buf, off, n) => in.readFully(pos, buf, off, n), len, targetRes)
-          imgs.zipWithIndex.map { case (img, i) =>
-            Row(pathStr, s"GTIFF_DIR:${i + 1}",
-              img.bitmap.width, img.bitmap.height, img.bitmap.bands,
-              img.bitmap.dtype.name, graft.geo.CRS.serialize(img.crs),
-              img.transform.toArray.toSeq, img.bitmap.toBytes)
-          }
-        } finally in.close()
-      }
-    spark.createDataFrame(rows, Schemas.tiles)
-  }
-
-  /** Range-read ONE subdir of a container straight off storage (the
-    * single-tile serving/download shape): Hadoop positioned reads fetch
-    * the IFD head plus only the chosen directory's blocks — container
-    * size (including BigTIFF past 2 GiB) stops mattering. Spark-free;
-    * callable from a driver request handler or inside an executor task. */
-  def readDirectoryRanged(conf: org.apache.hadoop.conf.Configuration,
-      path: String, subdir: String, targetRes: Double = 0.0): GeoTiff.Image = {
+  /** Open the TIFF at `path` on any Hadoop filesystem through positioned
+    * reads and run `f` while the stream is open — the one open/readFully/
+    * close adapter behind every file reader (the `mucog` source, the
+    * catalog-free XYZ tile). The head parse and each `decode` fetch only
+    * their own byte ranges, so container size (BigTIFF past 2 GiB
+    * included) stops mattering. Spark-free: callable from a driver
+    * request handler or inside an executor task. */
+  def withTiff[T](conf: org.apache.hadoop.conf.Configuration, path: String)(
+      f: GeoTiff.Tiff => T): T = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
     val len = fs.getFileStatus(p).getLen
     val in = fs.open(p)
-    try GeoTiff.readForResolutionRanged(
-      (pos, buf, off, n) => in.readFully(pos, buf, off, n), len, subdir, targetRes)
+    try f(GeoTiff.open((pos, buf, off, n) => in.readFully(pos, buf, off, n), len))
     finally in.close()
   }
 

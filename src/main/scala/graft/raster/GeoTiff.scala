@@ -84,7 +84,7 @@ object GeoTiff {
     case (32, 2) => DType.Int32
     case (32, 3) => DType.Float32
     case (64, 3) => DType.Float64
-    case _ => throw new IllegalArgumentException(s"unsupported sample: $bits bits fmt $fmt")
+    case _ => throw new MalformedTiff(s"unsupported sample: $bits bits fmt $fmt")
   }
 
   /** Geotransform from the georeferencing tags: a ModelTransformation
@@ -153,18 +153,6 @@ object GeoTiff {
     while (!d.finished()) out.write(buf, 0, d.deflate(buf))
     d.end()
     out.toByteArray
-  }
-
-  private def inflate(data: Array[Byte], expected: Int): Array[Byte] = {
-    val inf = new java.util.zip.Inflater()
-    inf.setInput(data)
-    val out = new Array[Byte](expected)
-    var off = 0
-    while (off < expected && !inf.finished())
-      off += inf.inflate(out, off, expected - off)
-    inf.end()
-    require(off == expected, s"inflate: got $off of $expected bytes")
-    out
   }
 
   /** Cut a band-planar pixel buffer into padded ts×ts tiles, TIFF order for
@@ -566,90 +554,167 @@ object GeoTiff {
 
   // ----------------------------------------------------------------- read
 
-  /** One parsed IFD entry. Value accessors are type-aware and resolve
-    * inline-vs-out-of-line placement for BOTH layouts: classic TIFF
-    * (4-byte value field) and BigTIFF (8-byte value field, LONG8 arrays). */
-  private final class TagEntry(bb: ByteBuffer, val typ: Int, val count: Int,
-      valuePos: Int, inlineCap: Int) {
-    private def typeSize: Int = typ match {
-      case 1 | 2 | 6 | 7 => 1 // BYTE/ASCII/SBYTE/UNDEFINED
-      case 3 | 8 => 2 // SHORT/SSHORT
-      case 4 | 9 | 11 | 13 => 4 // LONG/SLONG/FLOAT/IFD
-      case _ => 8 // RATIONAL/SRATIONAL/DOUBLE/LONG8/SLONG8/IFD8
-    }
-    /** Absolute position of element 0 (the inline bytes, or the pointed-to
-      * range when the value spills out of line). */
-    private val dataPos: Int =
-      if (count.toLong * typeSize <= inlineCap) valuePos
-      else if (inlineCap == 8) {
-        val o = bb.getLong(valuePos)
-        require(o >= 0 && o <= Int.MaxValue,
-          s"BigTIFF value at offset $o beyond the 2 GiB in-memory limit")
-        o.toInt
-      } else bb.getInt(valuePos)
+  /** A TIFF this codec cannot read: truncated, corrupt, or outside the
+    * supported subset. An IllegalArgumentException, so callers that map
+    * bad input to a client error (HttpEdge's 400) need no new case. */
+  final class MalformedTiff(msg: String) extends IllegalArgumentException(msg)
+
+  private def check(cond: Boolean, msg: => String): Unit =
+    if (!cond) throw new MalformedTiff(msg)
+
+  /** Positioned-read primitive: fill `buf[off, off + len)` from file
+    * position `pos` — Hadoop `FSDataInputStream.readFully`, an HTTP range
+    * GET, or [[bytesReadAt]] over an in-memory file. */
+  type ReadAt = (Long, Array[Byte], Int, Int) => Unit
+
+  /** [[ReadAt]] over an in-memory file, refusing any range past its end. */
+  def bytesReadAt(data: Array[Byte]): ReadAt = (pos, buf, off, len) => {
+    check(pos >= 0 && pos + len <= data.length,
+      s"read of $len bytes at $pos beyond the ${data.length}-byte file")
+    System.arraycopy(data, pos.toInt, buf, off, len)
+  }
+
+  /** Tags the reader interprets. Every other tag is skipped unread, so a
+    * foreign file's far-away private tags (XMP, ICC) never grow the head. */
+  private val KnownTags = Set(TNewSubfileType, TWidth, THeight, TBitsPerSample,
+    TCompression, TStripOffsets, TSamplesPerPixel, TRowsPerStrip,
+    TStripByteCounts, TTileWidth, TTileLength, TTileOffsets, TTileByteCounts,
+    TSampleFormat, TModelPixelScale, TModelTiepoint, TModelTransformation,
+    TGeoKeyDirectory, TGeoDoubleParams, TGeoAsciiParams, TGdalNoData)
+
+  private def typeSize(typ: Int): Int = typ match {
+    case 1 | 2 | 6 | 7 => 1 // BYTE/ASCII/SBYTE/UNDEFINED
+    case 3 | 8 => 2 // SHORT/SSHORT
+    case 4 | 9 | 11 | 13 => 4 // LONG/SLONG/FLOAT/IFD
+    case _ => 8 // RATIONAL/SRATIONAL/DOUBLE/LONG8/SLONG8/IFD8
+  }
+
+  /** One IFD entry of a known tag. The scan has already proven its
+    * `count` elements lie inside the buffered head, starting at
+    * `dataPos` (the inline value field, or the out-of-line range), for
+    * classic TIFF and BigTIFF alike. */
+  private[raster] final class TagEntry(bb: ByteBuffer, val typ: Int,
+      val count: Int, dataPos: Int) {
     def shortAt(k: Int): Int = bb.getShort(dataPos + 2 * k) & 0xffff
     def doubleAt(k: Int): Double = bb.getDouble(dataPos + 8 * k)
     def byteAt(k: Int): Byte = bb.get(dataPos + k)
     /** Element k widened to Long — SHORT, unsigned LONG, or LONG8. */
     def longAt(k: Int): Long = typ match {
       case 3 => shortAt(k).toLong
-      case 16 | 17 => bb.getLong(dataPos + 8 * k)
       // LONG values are UNSIGNED 32-bit: mask, don't sign-extend — a
       // classic TIFF may address up to 4 GiB
-      case _ => bb.getInt(dataPos + 4 * k).toLong & 0xffffffffL
+      case 4 => bb.getInt(dataPos + 4 * k).toLong & 0xffffffffL
+      case 16 | 17 => bb.getLong(dataPos + 8 * k)
+      case t => throw new MalformedTiff(s"integer tag stored as TIFF type $t")
     }
-    /** One past the last byte of the value — lets range readers check the
-      * whole value sits inside a buffered head before touching it. */
-    def endPos: Long = dataPos.toLong + count.toLong * typeSize
   }
 
+  /** The buffered head ends before byte `end` of the file. */
+  private final class ShortHead(val end: Long)
+      extends RuntimeException(null, null, false, false)
+
   /** Walk every IFD of a little-endian classic TIFF (version 42) or
-    * BigTIFF (version 43 — 8-byte offsets/counts, 20-byte entries, the
-    * format GDAL emits for >4 GiB files). Shared by the full read, the
-    * header-only read, and the block-offset diagnostic. */
-  private def scanIfds(data: Array[Byte]): Seq[Map[Int, TagEntry]] = {
-    val bb = ByteBuffer.wrap(data).order(ByteOrder.LITTLE_ENDIAN)
-    require(data(0) == 'I' && data(1) == 'I', "only little-endian TIFF supported")
+    * BigTIFF (version 43: 8-byte offsets/counts, 20-byte entries, the
+    * format GDAL emits for >4 GiB files) inside the buffered head `buf`.
+    * Each structure and each known tag's value is bounds-checked before
+    * it is read: a read past `buf` throws [[ShortHead]] naming the byte it
+    * needs, so no count is trusted before its bytes exist. A next-IFD
+    * pointer back to a visited IFD is refused. */
+  private def scanIfds(buf: Array[Byte]): IndexedSeq[Map[Int, TagEntry]] = {
+    val bb = ByteBuffer.wrap(buf).order(ByteOrder.LITTLE_ENDIAN)
+    def need(end: Long): Unit = if (end > buf.length) throw new ShortHead(end)
+    need(8)
+    check(buf(0) == 'I' && buf(1) == 'I', "only little-endian TIFF supported")
     val ver = bb.getShort(2)
-    require(ver == 42 || ver == 43, "not a TIFF")
+    check(ver == 42 || ver == 43, "not a TIFF")
     val big = ver == 43
-    if (big) require(bb.getShort(4) == 8 && bb.getShort(6) == 0,
-      "malformed BigTIFF header")
-    val inlineCap = if (big) 8 else 4
-    val entrySize = if (big) 20 else 12
-    var ifdOff: Long = if (big) bb.getLong(8) else bb.getInt(4).toLong & 0xffffffffL
-    val out = Seq.newBuilder[Map[Int, TagEntry]]
+    if (big) {
+      need(16)
+      check(bb.getShort(4) == 8 && bb.getShort(6) == 0, "malformed BigTIFF header")
+    }
+    val (countSize, entrySize, inlineCap) = if (big) (8, 20, 8) else (2, 12, 4)
+    def offsetAt(p: Long): Long = {
+      need(p + inlineCap)
+      if (big) bb.getLong(p.toInt) else bb.getInt(p.toInt).toLong & 0xffffffffL
+    }
+    val seen = scala.collection.mutable.HashSet.empty[Long]
+    val out = IndexedSeq.newBuilder[Map[Int, TagEntry]]
+    var ifdOff = offsetAt(if (big) 8 else 4)
     while (ifdOff != 0) {
-      require(ifdOff <= Int.MaxValue,
-        s"IFD at offset $ifdOff beyond the 2 GiB in-memory limit")
-      val o = ifdOff.toInt
-      val n = (if (big) bb.getLong(o) else (bb.getShort(o) & 0xffff).toLong).toInt
-      val base = o + (if (big) 8 else 2)
+      check(ifdOff > 0, s"IFD at negative offset $ifdOff")
+      check(seen.add(ifdOff), s"IFD chain loops back to offset $ifdOff")
+      need(ifdOff + countSize)
+      val n =
+        if (big) bb.getLong(ifdOff.toInt) else (bb.getShort(ifdOff.toInt) & 0xffff).toLong
+      check(n >= 0 && n <= Int.MaxValue / entrySize, s"IFD entry count $n out of range")
+      val base = ifdOff + countSize
+      need(base + n * entrySize + inlineCap) // entries + next-IFD pointer
       var tags = Map.empty[Int, TagEntry]
       var i = 0
       while (i < n) {
-        val e = base + i * entrySize
-        val typ = bb.getShort(e + 2) & 0xffff
-        val count =
-          (if (big) bb.getLong(e + 4) else bb.getInt(e + 4).toLong & 0xffffffffL).toInt
-        tags += (bb.getShort(e) & 0xffff) ->
-          new TagEntry(bb, typ, count, e + (if (big) 12 else 8), inlineCap)
+        val e = (base + i.toLong * entrySize).toInt
+        val tag = bb.getShort(e) & 0xffff
+        if (KnownTags(tag)) {
+          val typ = bb.getShort(e + 2) & 0xffff
+          val count =
+            if (big) bb.getLong(e + 4) else bb.getInt(e + 4).toLong & 0xffffffffL
+          check(count >= 0 && count <= Int.MaxValue, s"tag $tag count $count out of range")
+          val bytes = count * typeSize(typ)
+          val valuePos = e + (if (big) 12 else 8)
+          val dataPos = if (bytes <= inlineCap) valuePos.toLong else offsetAt(valuePos)
+          check(dataPos >= 0, s"tag $tag value at negative offset $dataPos")
+          need(dataPos + bytes)
+          tags += tag -> new TagEntry(bb, typ, count.toInt, dataPos.toInt)
+        }
         i += 1
       }
       out += tags
-      ifdOff =
-        if (big) bb.getLong(base + n * entrySize)
-        else bb.getInt(base + n * entrySize).toLong & 0xffffffffL
+      ifdOff = offsetAt(base + n * entrySize)
     }
     val ifds = out.result()
     // a first-IFD offset of 0 is a header with no image: refuse it here,
-    // never as a NoSuchElementException from a caller's ifds.head
-    require(ifds.nonEmpty, "TIFF has no IFDs (first IFD offset is 0)")
+    // never as a NoSuchElementException from a caller's headers.head
+    check(ifds.nonEmpty, "TIFF has no IFDs (first IFD offset is 0)")
     ifds
   }
 
-  private def tagVal(tags: Map[Int, TagEntry], tag: Int, default: Int = -1): Int =
-    tags.get(tag).map(_.longAt(0).toInt).getOrElse(default)
+  /** Buffer the head of the file and scan it: start with `initial` bytes
+    * and, whenever the scan needs a byte past the buffer, grow it (at
+    * least ×2, reading only the new bytes) until the scan completes. COG
+    * and MuCOG layouts put every IFD and its values at the head, so the
+    * parse reads the head and never a data block. */
+  private def scanHead(readAt: ReadAt, fileLen: Long,
+      initial: Int): IndexedSeq[Map[Int, TagEntry]] = {
+    var buf = new Array[Byte](math.min(math.max(initial, 16).toLong, fileLen).toInt)
+    readAt(0L, buf, 0, buf.length)
+    var ifds: IndexedSeq[Map[Int, TagEntry]] = null
+    while (ifds == null) {
+      try ifds = scanIfds(buf)
+      catch {
+        case s: ShortHead =>
+          check(s.end <= fileLen,
+            s"TIFF structure at byte ${s.end} past the end of the $fileLen-byte file")
+          val grown = math.min(fileLen, math.max(s.end, buf.length * 2L))
+          check(grown <= Int.MaxValue, "TIFF head beyond 2 GiB — not a head-first layout")
+          val next = java.util.Arrays.copyOf(buf, grown.toInt)
+          readAt(buf.length.toLong, next, buf.length, next.length - buf.length)
+          buf = next
+      }
+    }
+    ifds
+  }
+
+  private def tagScalar(tags: Map[Int, TagEntry], tag: Int): Option[Long] =
+    tags.get(tag).filter(_.count > 0).map(_.longAt(0))
+  private def tagVal(tags: Map[Int, TagEntry], tag: Int, default: Int): Int =
+    tagScalar(tags, tag).map(_.toInt).getOrElse(default)
+  /** A scalar that must be a positive Int (dimensions, tile sizes). */
+  private def tagPositive(tags: Map[Int, TagEntry], tag: Int, name: String,
+      default: Long = -1): Int = {
+    val v = tagScalar(tags, tag).getOrElse(default)
+    check(v > 0 && v <= Int.MaxValue, s"$name $v out of range")
+    v.toInt
+  }
   private def tagShorts(tags: Map[Int, TagEntry], tag: Int): Seq[Int] =
     tags.get(tag) match {
       case Some(e) if e.typ == 3 => Seq.tabulate(e.count)(e.shortAt)
@@ -660,8 +725,8 @@ object GeoTiff {
       case Some(e) if e.typ == 12 => Seq.tabulate(e.count)(e.doubleAt)
       case _ => Nil
     }
-  private def tagLongs(tags: Map[Int, TagEntry], tag: Int): Seq[Long] =
-    tags.get(tag).map(e => Seq.tabulate(e.count)(e.longAt)).getOrElse(Nil)
+  private def tagLongs(tags: Map[Int, TagEntry], tag: Int): IndexedSeq[Long] =
+    tags.get(tag).map(e => IndexedSeq.tabulate(e.count)(e.longAt)).getOrElse(IndexedSeq.empty)
   private def tagAscii(tags: Map[Int, TagEntry], tag: Int): String =
     tags.get(tag) match {
       case Some(e) if e.typ == 2 =>
@@ -669,316 +734,274 @@ object GeoTiff {
       case _ => ""
     }
 
-  /** Block offsets of the n-th IFD (test/diagnostic hook: lets callers
-    * verify the physical interlacing order without re-parsing TIFF). */
-  private[raster] def blockOffsets(data: Array[Byte], ifdIndex: Int): Seq[Long] = {
-    val tags = scanIfds(data)(ifdIndex)
-    tagLongs(tags, TStripOffsets) ++ tagLongs(tags, TTileOffsets)
-  }
+  /** One directory's metadata, read from its tags alone — no block read,
+    * no inflate, no Bitmap. `transform.rx` is what the level chooser
+    * keys on. */
+  final case class Header(width: Int, height: Int, bands: Int, dtype: DType,
+      transform: Affine, crs: CRS, isOverview: Boolean)
 
-  /** Parse all IFDs (including overview IFDs, flagged `isOverview`). */
-  final case class Directory(image: Image, isOverview: Boolean)
-
-  def read(data: Array[Byte]): Seq[Directory] = {
-    // array-backed fetch; per-block ranges are bounded by the array itself
-    def fetch(off: Long, len: Long): Array[Byte] = {
-      require(off + len <= data.length,
-        s"block at offset $off+$len beyond the ${data.length}-byte buffer")
-      java.util.Arrays.copyOfRange(data, off.toInt, (off + len).toInt)
-    }
-    scanIfds(data).map(tags => decodeDirectory(tags, fetch))
-  }
-
-  /** Whole-container [[read]] parity past the 2 GiB array cap: every
-    * directory (overviews included) decoded through POSITIONED RANGE
-    * READS. Equivalent to `read` for containers that fit one byte array
-    * and THE full read for those that don't — a BigTIFF of any size
-    * decodes as long as each individual block and the header region fit
-    * a JVM array (per-directory payloads stay bounded regardless of the
-    * container total). */
-  def readRanged(readAt: (Long, Array[Byte], Int, Int) => Unit,
-      fileLen: Long, initial: Int = 256 * 1024): Seq[Directory] = {
-    def fetch(off: Long, len: Long): Array[Byte] = {
-      require(len <= Int.MaxValue, s"block of $len bytes exceeds 2 GiB")
-      val b = new Array[Byte](len.toInt)
-      readAt(off, b, 0, len.toInt)
-      b
-    }
-    val ifds = parseHeadGrowing(readAt, fileLen, initial) { buf =>
-      val parsed = scanIfds(buf)
-      // every tag value of every IFD must sit inside the buffered head
-      val maxEnd = parsed.iterator.flatMap(_.values).map(_.endPos)
-        .maxOption.getOrElse(0L)
-      if (maxEnd > buf.length) throw new IndexOutOfBoundsException(
-        s"tag data at $maxEnd beyond the ${buf.length}-byte buffered head")
-      parsed
-    }
-    ifds.map(tags => decodeDirectory(tags, fetch))
-  }
-
-  /** Geometric head-growth parse shared by the ranged readers: `parse`
-    * runs over a buffered prefix of the file and throws IndexOutOfBounds/
-    * BufferUnderflow when the prefix is too short; the buffer then grows
-    * ×4 (reading only the NEW bytes) until the parse succeeds. Keeps
-    * block decode out of the retry loop — callers fetch payloads exactly
-    * once, after the head is fully buffered. */
-  private def parseHeadGrowing[T](readAt: (Long, Array[Byte], Int, Int) => Unit,
-      fileLen: Long, initial: Int)(parse: Array[Byte] => T): T = {
-    var sz = math.max(16, math.min(initial.toLong, fileLen)).toInt
-    var buf = new Array[Byte](sz)
-    readAt(0L, buf, 0, sz)
-    var out: Option[T] = None
-    while (out.isEmpty) {
-      try out = Some(parse(buf))
+  private def header(tags: Map[Int, TagEntry]): Header = {
+    val crs =
+      try crsFromGeoKeys(tagShorts(tags, TGeoKeyDirectory),
+        tagDoubles(tags, TGeoDoubleParams), tagAscii(tags, TGeoAsciiParams))
       catch {
-        case _: IndexOutOfBoundsException | _: java.nio.BufferUnderflowException
-            if sz < fileLen =>
-          val grown = math.min(fileLen, sz.toLong * 4)
-          require(grown <= Int.MaxValue,
-            "header region beyond 2 GiB — not a head-first layout")
-          val next = new Array[Byte](grown.toInt)
-          System.arraycopy(buf, 0, next, 0, sz)
-          readAt(sz.toLong, next, sz, grown.toInt - sz)
-          buf = next; sz = grown.toInt
+        case e: MalformedTiff => throw e
+        case scala.util.control.NonFatal(e) =>
+          throw new MalformedTiff(s"unreadable GeoKey CRS: ${e.getMessage}")
       }
-    }
-    out.get
+    Header(
+      tagPositive(tags, TWidth, "ImageWidth"), tagPositive(tags, THeight, "ImageLength"),
+      tagPositive(tags, TSamplesPerPixel, "SamplesPerPixel", default = 1),
+      dtypeOf(tagShorts(tags, TBitsPerSample).headOption.getOrElse(8),
+        tagShorts(tags, TSampleFormat).headOption.getOrElse(1)),
+      geoTransform(tagDoubles(tags, TModelPixelScale),
+        tagDoubles(tags, TModelTiepoint), tagDoubles(tags, TModelTransformation)),
+      crs, tagVal(tags, TNewSubfileType, 0) == 1)
   }
 
-  /** Decode ONE directory given its parsed tags and a block-fetch
-    * primitive — the shared core of the whole-buffer [[read]] and the
-    * range-reading [[readForResolutionRanged]] (which fetches only the
-    * chosen directory's blocks from remote storage). */
-  private def decodeDirectory(tags: Map[Int, TagEntry],
-      fetch: (Long, Long) => Array[Byte]): Directory = {
-    {
-      def tagVal(tag: Int, default: Int = -1): Int = GeoTiff.tagVal(tags, tag, default)
-      def tagShorts(tag: Int): Seq[Int] = GeoTiff.tagShorts(tags, tag)
-      def tagDoubles(tag: Int): Seq[Double] = GeoTiff.tagDoubles(tags, tag)
-      def tagLongs(tag: Int): Seq[Long] = GeoTiff.tagLongs(tags, tag)
-      val w = tagVal(TWidth); val h = tagVal(THeight)
-      val bands = tagVal(TSamplesPerPixel, 1)
-      val bits = tagShorts(TBitsPerSample).headOption.getOrElse(8)
-      val fmt = tagShorts(TSampleFormat).headOption.getOrElse(1)
-      val dt = dtypeOf(bits, fmt)
-      val compression = tagVal(TCompression, 1)
-      def decode(raw: Array[Byte], expected: Int): Array[Byte] = compression match {
-        case 1 => raw
-        case 8 => inflate(raw, expected)
-        case c => throw new IllegalArgumentException(s"unsupported TIFF compression $c")
+  /** Open a TIFF through positioned reads: ONE head parse yields every
+    * directory's [[Header]] and each record's overview chain; pixels are
+    * fetched only by [[Tiff.decode]]. A 256×256 request against a
+    * multi-GiB container reads the head plus a few blocks — container
+    * size stops mattering, BigTIFF past the 2 GiB array cap included.
+    * Anything unreadable throws [[MalformedTiff]]. */
+  def open(readAt: ReadAt, fileLen: Long, initial: Int = 256 * 1024): Tiff = {
+    val ifds = scanHead(readAt, fileLen, initial)
+    val headers = ifds.map(header)
+    new Tiff(headers, chainIndices(headers), ifds, readAt, fileLen)
+  }
+
+  /** [[open]] over an in-memory file. */
+  def open(data: Array[Byte]): Tiff = open(bytesReadAt(data), data.length.toLong)
+
+  /** An opened TIFF: `headers` lists every directory in file order
+    * (overviews included); `chains(r)` holds record r's directory indices,
+    * full resolution first, then its overviews fine→coarse. The [[ReadAt]]
+    * it was opened with must stay readable until the last [[decode]]. */
+  final class Tiff private[GeoTiff] (val headers: IndexedSeq[Header],
+      val chains: IndexedSeq[IndexedSeq[Int]], ifds: IndexedSeq[Map[Int, TagEntry]],
+      readAt: ReadAt, fileLen: Long) {
+
+    /** Number of records (full-resolution images, `GTIFF_DIR:1..n`). */
+    def records: Int = chains.size
+
+    /** The overview-level chooser (`-ovr AUTO`, image.go:401): the
+      * directory of record `record` (0-based) whose |transform.rx| is the
+      * coarsest still finer-or-equal than `targetRes` (source-CRS units per
+      * pixel) — 1/4ᴷ of the pixels for a coarse request. Full resolution
+      * when `targetRes <= 0` or no level is fine enough. It keys on the
+      * transform every [[Header]] reports, so header-only and pixel reads
+      * of the same file always agree. */
+    def level(record: Int, targetRes: Double = 0.0): Int = {
+      require(record >= 0 && record < chains.size,
+        s"subdir ${record + 1} out of range 1..${chains.size}")
+      val chain = chains(record)
+      if (targetRes > 0)
+        chain.filter(i => math.abs(headers(i).transform.rx) <= targetRes + 1e-9)
+          .lastOption.getOrElse(chain.head)
+      else chain.head
+    }
+
+    /** Fetch and decode directory `i`'s blocks. */
+    def decode(i: Int): Image = decodeDirectory(ifds(i), headers(i), readAt, fileLen)
+
+    /** Block offsets of directory `i` (test hook: the physical
+      * interlacing order without a second TIFF parser). */
+    private[raster] def blockOffsets(i: Int): Seq[Long] =
+      tagLongs(ifds(i), TStripOffsets) ++ tagLongs(ifds(i), TTileOffsets)
+  }
+
+  /** zlib cannot expand input more than ~1032×: a block declaring more
+    * decoded bytes than that is corrupt, refused before allocation. */
+  private val MaxInflateRatio = 1032L
+
+  private def inflate(data: Array[Byte], expected: Int): Array[Byte] = {
+    val inf = new java.util.zip.Inflater()
+    inf.setInput(data)
+    val out = new Array[Byte](expected)
+    var off = 0
+    try {
+      while (off < expected && !inf.finished()) {
+        val n = inf.inflate(out, off, expected - off)
+        // a truncated stream stalls asking for input it will never get
+        check(n > 0 || !(inf.needsInput() || inf.needsDictionary()),
+          s"deflate block ends after $off of $expected bytes")
+        off += n
       }
-      val sz = dt.sizeBytes
-      // GDAL_NODATA ascii tag (sparse-tile fill value; "nan" for NaN)
-      val noData: Double = tags.get(TGdalNoData) match {
-        case Some(e) if e.typ == 2 =>
-          val chars = Array.tabulate(e.count)(e.byteAt)
-          val str = new String(chars, "US-ASCII").takeWhile(_ != '\u0000').trim
-          if (str.equalsIgnoreCase("nan")) Double.NaN
-          else scala.util.Try(str.toDouble).getOrElse(Double.NaN)
-        case _ => Double.NaN
-      }
-      val bm =
-        if (tags.contains(TTileOffsets)) {
-          // tiled layout (COG): assemble padded band-planar tiles
-          val ts = tagVal(TTileWidth); val tl = tagVal(TTileLength)
-          val offs = tagLongs(TTileOffsets)
-          val counts = tagLongs(TTileByteCounts)
-          val ta = (w + ts - 1) / ts
-          val td = (h + tl - 1) / tl
-          require(offs.size == bands * ta * td,
-            s"tile count ${offs.size} != $bands*$ta*$td")
-          val px = new Array[Byte](w * h * bands * sz)
-          val sparse = scala.collection.mutable.ArrayBuffer.empty[Int]
-          var t = 0
-          while (t < offs.size) {
-            if (counts(t) == 0 || offs(t) == 0) sparse += t // SPARSE_OK elided tile
-            else {
-              val tile = decode(fetch(offs(t), counts(t)), ts * tl * sz)
-              val band = t / (ta * td)
-              val rem = t % (ta * td)
-              val ty = rem / ta; val tx = rem % ta
-              val rows = math.min(tl, h - ty * tl)
-              val cols = math.min(ts, w - tx * ts)
-              var r = 0
-              while (r < rows) {
-                val dst = ((band * h + ty * tl + r) * w + tx * ts) * sz
-                System.arraycopy(tile, r * ts * sz, px, dst, cols * sz)
-                r += 1
-              }
-            }
-            t += 1
-          }
-          val out = Bitmap.fromBytes(px, w, h, bands, dt)
-          // fill elided tiles with the declared nodata (GDAL sparse read)
-          if (!(noData == 0.0)) sparse.foreach { t =>
+    } catch {
+      case e: java.util.zip.DataFormatException =>
+        throw new MalformedTiff(s"corrupt deflate block: ${e.getMessage}")
+    } finally inf.end()
+    check(off == expected, s"inflate: got $off of $expected bytes")
+    out
+  }
+
+  /** Decode ONE directory: validate every declared block against the file
+    * and the raster size against the 2 GiB array cap, then fetch and
+    * decode exactly this directory's blocks. */
+  private def decodeDirectory(tags: Map[Int, TagEntry], hd: Header,
+      readAt: ReadAt, fileLen: Long): Image = {
+    val (w, h, bands, dt) = (hd.width, hd.height, hd.bands, hd.dtype)
+    val sz = dt.sizeBytes
+    val total = w.toLong * h * bands * sz
+    check(total <= Int.MaxValue,
+      s"$w×$h×$bands raster of $total bytes exceeds the 2 GiB in-memory limit")
+    val compression = tagVal(tags, TCompression, 1)
+    check(compression == 1 || compression == 8, s"unsupported TIFF compression $compression")
+    val tiled = tags.contains(TTileOffsets)
+    val offs = tagLongs(tags, if (tiled) TTileOffsets else TStripOffsets)
+    val counts = tagLongs(tags, if (tiled) TTileByteCounts else TStripByteCounts)
+    check(offs.nonEmpty && counts.size == offs.size,
+      s"${offs.size} block offsets vs ${counts.size} byte counts")
+    offs.indices.foreach { k =>
+      check(offs(k) >= 0 && counts(k) >= 0 && offs(k) + counts(k) <= fileLen,
+        s"block $k at ${offs(k)}+${counts(k)} past the end of the $fileLen-byte file")
+    }
+    // block k decoded to exactly `expected` bytes
+    def block(k: Int, expected: Int): Array[Byte] = {
+      check(if (compression == 1) counts(k) >= expected
+        else expected <= counts(k) * MaxInflateRatio,
+        s"block $k of ${counts(k)} bytes cannot hold $expected decoded bytes")
+      val raw = new Array[Byte](counts(k).toInt)
+      readAt(offs(k), raw, 0, raw.length)
+      if (compression == 8) inflate(raw, expected)
+      else if (raw.length == expected) raw
+      else java.util.Arrays.copyOf(raw, expected)
+    }
+    // GDAL_NODATA ascii tag (sparse-tile fill value; "nan" for NaN)
+    val noData: Double = {
+      val str = tagAscii(tags, TGdalNoData).takeWhile(_ != '\u0000').trim
+      if (str.isEmpty || str.equalsIgnoreCase("nan")) Double.NaN
+      else scala.util.Try(str.toDouble).getOrElse(Double.NaN)
+    }
+    val bm =
+      if (tiled) {
+        // tiled layout (COG): assemble padded band-planar tiles
+        val ts = tagPositive(tags, TTileWidth, "TileWidth")
+        val tl = tagPositive(tags, TTileLength, "TileLength")
+        check(ts.toLong * tl * sz <= Int.MaxValue, s"tile $ts×$tl exceeds 2 GiB")
+        val ta = ((w + ts - 1L) / ts).toInt
+        val td = ((h + tl - 1L) / tl).toInt
+        check(offs.size == bands.toLong * ta * td,
+          s"tile count ${offs.size} != $bands*$ta*$td")
+        val px = new Array[Byte](total.toInt)
+        val sparse = scala.collection.mutable.ArrayBuffer.empty[Int]
+        var t = 0
+        while (t < offs.size) {
+          if (counts(t) == 0 || offs(t) == 0) sparse += t // SPARSE_OK elided tile
+          else {
+            val tile = block(t, ts * tl * sz)
             val band = t / (ta * td)
             val rem = t % (ta * td)
             val ty = rem / ta; val tx = rem % ta
-            var y = ty * tl
-            while (y < math.min((ty + 1) * tl, h)) {
-              var x = tx * ts
-              while (x < math.min((tx + 1) * ts, w)) {
-                out.set(x, y, band, noData)
-                x += 1
-              }
-              y += 1
+            val rows = math.min(tl, h - ty * tl)
+            val cols = math.min(ts, w - tx * ts)
+            var r = 0
+            while (r < rows) {
+              val dst = ((band * h + ty * tl + r) * w + tx * ts) * sz
+              System.arraycopy(tile, r * ts * sz, px, dst, cols * sz)
+              r += 1
             }
           }
-          out
-        } else {
-          val offs = tagLongs(TStripOffsets)
-          val counts = tagLongs(TStripByteCounts)
-          val total = w * h * bands * sz
-          if (offs.size == 1)
-            Bitmap.fromBytes(decode(fetch(offs.head, counts.head), total),
-              w, h, bands, dt)
-          else {
-            // multi-strip layout (foreign writers: GDAL defaults
-            // RowsPerStrip to ~8 KiB of rows): strips partition the image
-            // rows top-down — decode each and concatenate. Multi-band
-            // multi-strip files interleave samples within a row (chunky),
-            // which this band-planar reader does not reassemble; the
-            // single-band case (the common GDAL export) is exact.
-            require(bands == 1,
-              s"multi-strip decode supports 1 band, got $bands")
-            val rps = tagVal(TRowsPerStrip, h)
-            require(rps > 0 && offs.size == (h + rps - 1) / rps,
-              s"strip count ${offs.size} != ceil($h/$rps)")
-            val px = new Array[Byte](total)
-            var i = 0
-            var off = 0
-            while (i < offs.size) {
-              val rows = math.min(rps, h - i * rps)
-              val expect = rows * w * sz
-              System.arraycopy(decode(fetch(offs(i), counts(i)), expect),
-                0, px, off, expect)
-              off += expect
-              i += 1
+          t += 1
+        }
+        val out = Bitmap.fromBytes(px, w, h, bands, dt)
+        // fill elided tiles with the declared nodata (GDAL sparse read)
+        if (!(noData == 0.0)) sparse.foreach { t =>
+          val band = t / (ta * td)
+          val rem = t % (ta * td)
+          val ty = rem / ta; val tx = rem % ta
+          var y = ty * tl
+          while (y < math.min((ty + 1) * tl, h)) {
+            var x = tx * ts
+            while (x < math.min((tx + 1) * ts, w)) {
+              out.set(x, y, band, noData)
+              x += 1
             }
-            Bitmap.fromBytes(px, w, h, bands, dt)
+            y += 1
           }
         }
-      val transform = geoTransform(tagDoubles(TModelPixelScale),
-        tagDoubles(TModelTiepoint), tagDoubles(TModelTransformation))
-      val crs = crsFromGeoKeys(tagShorts(TGeoKeyDirectory),
-        tagDoubles(TGeoDoubleParams), GeoTiff.tagAscii(tags, TGeoAsciiParams))
-      val isOv = tagVal(TNewSubfileType, 0) == 1
-      Directory(Image(bm, transform, crs), isOv)
-    }
-  }
-
-  /** Decode ONE subdir at the adequate overview level through POSITIONED
-    * RANGE READS — the remote single-tile serving path: IFDs parse from
-    * the head (growing geometrically like [[readHeadersRanged]]), then
-    * only the CHOSEN directory's blocks are fetched. A 256×256 request
-    * against a multi-GiB container reads the head plus a few tiles —
-    * container size stops mattering, including past the 2 GiB array cap
-    * for BigTIFF files. `targetRes = 0` picks full resolution. */
-  def readForResolutionRanged(readAt: (Long, Array[Byte], Int, Int) => Unit,
-      fileLen: Long, subdir: String, targetRes: Double = 0.0,
-      initial: Int = 256 * 1024): Image = {
-    val idx = subdirIndex(subdir)
-    val all = readAllForResolutionRanged(readAt, fileLen, targetRes, initial,
-      only = Some(idx))
-    all(idx)
-  }
-
-  /** [[readForResolutionRanged]] with the overview-selection resolution
-    * derived from the file's OWN CRS inside the same head parse: callers
-    * that need "is the source geographic?" before choosing a level (the
-    * XYZ tile path converts the tile grid's meters/px to degrees for
-    * geographic sources) used to pay readHeadersRanged THEN
-    * readForResolutionRanged — two full IFD walks (and two growth loops)
-    * over the head per request. `metersPerPx` is the target grid's
-    * resolution in meters; geographic sources convert via the equatorial
-    * factor, erring toward a finer level like GetCube.selectTileLevel.
-    * ONE head parse per request (guide §6 I/O). */
-  def readForResolutionRangedMeters(readAt: (Long, Array[Byte], Int, Int) => Unit,
-      fileLen: Long, subdir: String, metersPerPx: Double,
-      initial: Int = 256 * 1024): Image = {
-    val idx = subdirIndex(subdir)
-    val all = readAllForResolutionRangedBy(readAt, fileLen, initial,
-      only = Some(idx)) { ifds =>
-      // CRS probe on the FIRST directory — the one the old
-      // readHeadersRanged-then-read form keyed srcIsGeo on
-      // (headers.head). Its tag data spilling past the buffered head
-      // surfaces as IndexOutOfBounds and grows the buffer like any other
-      // truncation.
-      val crs = crsFromGeoKeys(tagShorts(ifds.head, TGeoKeyDirectory),
-        tagDoubles(ifds.head, TGeoDoubleParams),
-        tagAscii(ifds.head, TGeoAsciiParams))
-      math.abs(if (crs.isGeographic) metersPerPx / 111320.0 else metersPerPx)
-    }
-    all(idx)
-  }
-
-  /** Every subdir's image at the adequate overview level through
-    * POSITIONED RANGE READS — one head parse for the whole container
-    * (NOT one per subdir), then only the chosen level's blocks per
-    * record. With `only = Some(i)` all other entries stay null (the
-    * single-subdir form above). */
-  def readAllForResolutionRanged(readAt: (Long, Array[Byte], Int, Int) => Unit,
-      fileLen: Long, targetRes: Double = 0.0, initial: Int = 256 * 1024,
-      only: Option[Int] = None): Seq[Image] =
-    readAllForResolutionRangedBy(readAt, fileLen, initial, only)(_ => targetRes)
-
-  /** Shared core: the target resolution is a FUNCTION of the parsed IFDs,
-    * evaluated inside the head-growth loop — lets the meters-aware entry
-    * point probe the CRS from the same parse that chooses the level. */
-  private def readAllForResolutionRangedBy(
-      readAt: (Long, Array[Byte], Int, Int) => Unit,
-      fileLen: Long, initial: Int, only: Option[Int])(
-      targetResOf: Seq[Map[Int, TagEntry]] => Double): Seq[Image] = {
-    def fetch(off: Long, len: Long): Array[Byte] = {
-      require(len <= Int.MaxValue, s"block of $len bytes exceeds 2 GiB")
-      val b = new Array[Byte](len.toInt)
-      readAt(off, b, 0, len.toInt)
-      b
-    }
-    // Two phases: the growth loop only PARSES (IFD scan + level choice +
-    // tag-extent validation); block decode runs exactly once after the
-    // head is fully buffered, so growth retries never re-fetch or
-    // re-inflate tile data.
-    val (ifds, chosen) = parseHeadGrowing(readAt, fileLen, initial) { buf =>
-      val ifds = scanIfds(buf)
-      val targetRes = targetResOf(ifds)
-      val chains = chainIndices(ifds.map(t =>
-        (tagVal(t, TWidth), tagVal(t, THeight), tagVal(t, TNewSubfileType, 0) == 1)))
-      only.foreach(i => require(i >= 0 && i < chains.size,
-        s"subdir ${i + 1} out of range 1..${chains.size}"))
-      // missing ModelPixelScale reads as 1.0 — the same identity-
-      // transform default the header-only path uses, so payload and
-      // metadata projections agree on non-georeferenced TIFFs
-      def res(i: Int): Double =
-        tagDoubles(ifds(i), TModelPixelScale).headOption
-          .orElse(tagDoubles(ifds(i), TModelTransformation).headOption)
-          .getOrElse(1.0)
-      val chosen: Seq[Option[Int]] = chains.zipWithIndex.map { case (candidates, r) =>
-        if (only.exists(_ != r)) None
-        else Some(
-          if (targetRes > 0)
-            candidates.filter(i => math.abs(res(i)) <= targetRes + 1e-9)
-              .lastOption.getOrElse(candidates.head)
-          else candidates.head)
+        out
+      } else if (offs.size == 1)
+        Bitmap.fromBytes(block(0, total.toInt), w, h, bands, dt)
+      else {
+        // multi-strip layout (foreign writers: GDAL defaults RowsPerStrip
+        // to ~8 KiB of rows): strips partition the image rows top-down —
+        // decode each and concatenate. Multi-band multi-strip files
+        // interleave samples within a row (chunky), which this
+        // band-planar reader does not reassemble; the single-band case
+        // (the common GDAL export) is exact.
+        check(bands == 1, s"multi-strip decode supports 1 band, got $bands")
+        val rps = tagPositive(tags, TRowsPerStrip, "RowsPerStrip", default = h)
+        check(offs.size == (h + rps - 1L) / rps, s"strip count ${offs.size} != ceil($h/$rps)")
+        val px = new Array[Byte](total.toInt)
+        var i = 0
+        var off = 0
+        while (i < offs.size) {
+          val expect = math.min(rps, h - i * rps) * w * sz
+          System.arraycopy(block(i, expect), 0, px, off, expect)
+          off += expect
+          i += 1
+        }
+        Bitmap.fromBytes(px, w, h, bands, dt)
       }
-      // every tag value of every chosen IFD must already sit inside the
-      // buffered head; if one spills past it, grow BEFORE decoding
-      val maxEnd = chosen.flatten.iterator
-        .flatMap(i => ifds(i).values).map(_.endPos).maxOption.getOrElse(0L)
-      if (maxEnd > buf.length) throw new IndexOutOfBoundsException(
-        s"tag data at $maxEnd beyond the ${buf.length}-byte buffered head")
-      (ifds, chosen)
-    }
-    chosen.map {
-      case Some(i) => decodeDirectory(ifds(i), fetch).image
-      case None => null
+    Image(bm, hd.transform, hd.crs)
+  }
+
+  /** 0-based record index of a subdir string — the ONE parser of the
+    * reference's `GTIFF_DIR:n` addressing ("" or "1" = first; bare
+    * numbers are 1-based), so the convention cannot drift between readers. */
+  private[graft] def subdirIndex(subdir: String): Int = subdir.trim match {
+    case "" => 0
+    case s if s.startsWith("GTIFF_DIR:") => s.stripPrefix("GTIFF_DIR:").toInt - 1
+    case s => s.toInt - 1
+  }
+
+  /** Associate every overview IFD with its record: per record, the
+    * indices of its full-res directory + overview chain fine→coarse.
+    * Handles both physical orders the writer produces — record-major
+    * (each record's overviews directly after it) and MuCOG per-zoom
+    * grouping (all full-res IFDs first, then each zoom level across
+    * records; mucog.go:30-48), detected by whether any overview precedes
+    * the last full-res directory. */
+  private def chainIndices(headers: IndexedSeq[Header]): IndexedSeq[IndexedSeq[Int]] = {
+    val fullPositions = headers.indices.filterNot(headers(_).isOverview)
+    val n = fullPositions.size
+    check(n > 0, "no full-resolution directory")
+    if (fullPositions != (0 until n)) {
+      // record-major: overviews of full k sit between full k and full k+1
+      fullPositions.zipWithIndex.map { case (start, k) =>
+        val end = if (k + 1 < n) fullPositions(k + 1) else headers.size
+        start until end
+      }
+    } else {
+      // zoom-grouped (or no overviews): walk each zoom group in record
+      // order, matching every overview to the record whose next expected
+      // ×2-decimated dims it has
+      val builders = Array.fill(n)(IndexedSeq.newBuilder[Int])
+      val cur = Array.tabulate(n)(r => (headers(r).width, headers(r).height))
+      var rem = (n until headers.size).toList
+      while (rem.nonEmpty) {
+        var assigned = false
+        var r = 0
+        while (r < n && rem.nonEmpty) {
+          val exp = ((cur(r)._1 + 1) / 2, (cur(r)._2 + 1) / 2)
+          val h = headers(rem.head)
+          if ((h.width, h.height) == exp) {
+            builders(r) += rem.head; cur(r) = exp; rem = rem.tail; assigned = true
+          }
+          r += 1
+        }
+        check(assigned, "cannot associate zoom-grouped overview IFDs")
+      }
+      (0 until n).map(r => r +: builders(r).result())
     }
   }
 
   /** CRS from the GeoKeyDirectory shorts (+ GeoDoubleParams for the
     * user-defined transverse-Mercator / geographic-ellipsoid / towgs84
     * forms, + the PCSCitation ASCII for every other user-defined
-    * projection). Shared by the full and the header-only read paths. */
+    * projection). Read once per directory by [[open]]. */
   private def crsFromGeoKeys(geo: Seq[Int], dbl: Seq[Double],
       ascii: String = ""): CRS = {
     // keys start at index 4, stride 4: (id, loc, count, value)
@@ -1014,7 +1037,7 @@ object GeoTiff {
         // the serialized CRS in the PCSCitation; a file with NEITHER
         // projection keys NOR a citation is unreadable — say so, never
         // default to WGS84 (silently wrong georeferencing)
-        citation.map(CRS.parse).getOrElse(throw new IllegalArgumentException(
+        citation.map(CRS.parse).getOrElse(throw new MalformedTiff(
           "user-defined CRS without projection keys or PCSCitation"))
       else
         keys.get(2048).orElse(keys.get(3072)).map(CRS.fromSrid).getOrElse(CRS.WGS84)
@@ -1031,121 +1054,4 @@ object GeoTiff {
     }
   }
 
-  /** IFD metadata without ANY pixel work — no block reads, no inflate, no
-    * Bitmap: the payload-pruned read path (a metadata query over a
-    * container store touches a few hundred bytes per file instead of
-    * decoding every raster). */
-  final case class Header(width: Int, height: Int, bands: Int, dtype: DType,
-      transform: Affine, crs: CRS, isOverview: Boolean)
-
-  def readHeaders(data: Array[Byte]): Seq[Header] = {
-    scanIfds(data).map { tags =>
-      val bits = tagShorts(tags, TBitsPerSample).headOption.getOrElse(8)
-      val fmt = tagShorts(tags, TSampleFormat).headOption.getOrElse(1)
-      Header(
-        tagVal(tags, TWidth), tagVal(tags, THeight), tagVal(tags, TSamplesPerPixel, 1),
-        dtypeOf(bits, fmt),
-        geoTransform(tagDoubles(tags, TModelPixelScale),
-          tagDoubles(tags, TModelTiepoint),
-          tagDoubles(tags, TModelTransformation)),
-        crsFromGeoKeys(tagShorts(tags, TGeoKeyDirectory),
-          tagDoubles(tags, TGeoDoubleParams), tagAscii(tags, TGeoAsciiParams)),
-        tagVal(tags, TNewSubfileType, 0) == 1)
-    }
-  }
-
-  /** Header-only parse through POSITIONED RANGE READS — the remote-reader
-    * form of [[readHeaders]]: MuCOG/COG layouts put every IFD (and their
-    * out-of-line values) at the file head, so a metadata query fetches a
-    * few hundred KB instead of the whole container. Starts with
-    * `initial` bytes and grows geometrically whenever the IFD walk runs
-    * off the buffer (truncation always surfaces as an out-of-bounds read,
-    * never a silent partial parse — offsets point forward). `readAt(pos,
-    * buf, len)` is the positioned-read primitive (Hadoop
-    * FSDataInputStream.readFully, an HTTP range GET, …). */
-  def readHeadersRanged(readAt: (Long, Array[Byte], Int, Int) => Unit,
-      fileLen: Long, initial: Int = 256 * 1024): Seq[Header] =
-    parseHeadGrowing(readAt, fileLen, initial)(readHeaders)
-
-  /** 0-based image index of a subdir string — the ONE parser of the
-    * reference's `GTIFF_DIR:n` addressing ("" or "1" = first; bare
-    * numbers are 1-based), shared by every read path so the convention
-    * cannot drift between them. */
-  private def subdirIndex(subdir: String): Int = subdir.trim match {
-    case "" => 0
-    case s if s.startsWith("GTIFF_DIR:") => s.stripPrefix("GTIFF_DIR:").toInt - 1
-    case s => s.toInt - 1
-  }
-
-  /** Read one subdir the way the reference addresses MuCOG stacks:
-    * "GTIFF_DIR:n" = n-th full-resolution image (1-based); "" or "1" = first. */
-  def readSubdir(data: Array[Byte], subdir: String): Image = {
-    val fulls = read(data).filterNot(_.isOverview).map(_.image)
-    val idx = subdirIndex(subdir)
-    require(idx >= 0 && idx < fulls.size, s"subdir $subdir out of range 1..${fulls.size}")
-    fulls(idx)
-  }
-
-  /** Associate every overview IFD with its record: each result seq is
-    * (full-res image, overview chain fine→coarse). Handles both physical
-    * orders the writer produces — record-major (each record's overviews
-    * directly after it) and MuCOG per-zoom grouping (all full-res IFDs
-    * first, then each zoom level across records; mucog.go:30-48), detected
-    * by whether any overview precedes the last full-res directory. */
-  private[raster] def overviewChains(dirs: Seq[Directory]): Seq[Seq[Image]] =
-    chainIndices(dirs.map(d =>
-      (d.image.bitmap.width, d.image.bitmap.height, d.isOverview)))
-      .map(_.map(i => dirs(i).image))
-
-  /** The association algorithm itself, on (width, height, isOverview)
-    * triples — shared by the full read and the header-only read (payload
-    * pruning): per record, the indices of its full-res entry + overview
-    * chain fine→coarse. */
-  private[graft] def chainIndices(dims: Seq[(Int, Int, Boolean)]): Seq[Seq[Int]] = {
-    val fullPositions = dims.zipWithIndex.filterNot(_._1._3).map(_._2)
-    val n = fullPositions.size
-    require(n > 0, "no full-resolution directory")
-    if (fullPositions != (0 until n)) {
-      // record-major: overviews of full k sit between full k and full k+1
-      fullPositions.zipWithIndex.map { case (start, k) =>
-        val end = if (k + 1 < n) fullPositions(k + 1) else dims.size
-        (start until end).toSeq
-      }
-    } else {
-      // zoom-grouped (or no overviews): walk each zoom group in record
-      // order, matching every overview to the record whose next expected
-      // ×2-decimated dims it has
-      val builders = Array.fill(n)(Seq.newBuilder[Int])
-      val cur = Array.tabulate(n)(r => (dims(r)._1, dims(r)._2))
-      var rem = (n until dims.size).toList
-      while (rem.nonEmpty) {
-        var assigned = false
-        var r = 0
-        while (r < n && rem.nonEmpty) {
-          val exp = ((cur(r)._1 + 1) / 2, (cur(r)._2 + 1) / 2)
-          val h = dims(rem.head)
-          if ((h._1, h._2) == exp) {
-            builders(r) += rem.head; cur(r) = exp; rem = rem.tail; assigned = true
-          }
-          r += 1
-        }
-        require(assigned, "cannot associate zoom-grouped overview IFDs")
-      }
-      (0 until n).map(r => r +: builders(r).result())
-    }
-  }
-
-  /** Overview-aware read: pick the decimated level whose resolution is the
-    * coarsest still finer-or-equal than `targetRes` (the `-ovr AUTO`
-    * pre-aggregation pushdown, image.go:401 — a huge win at scale: read
-    * 1/4ⁿ of the pixels when the request is coarse). */
-  def readForResolution(data: Array[Byte], subdir: String, targetRes: Double): Image = {
-    val dirs = read(data)
-    val idx = subdirIndex(subdir)
-    val chains = overviewChains(dirs)
-    require(idx >= 0 && idx < chains.size, s"subdir $subdir out of range 1..${chains.size}")
-    val candidates = chains(idx)
-    candidates.filter(img => math.abs(img.transform.rx) <= targetRes + 1e-9)
-      .lastOption.getOrElse(candidates.head)
-  }
 }

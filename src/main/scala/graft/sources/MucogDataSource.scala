@@ -20,15 +20,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * }}}
   *
   * Rows come back in the catalog `tiles` schema, so GetCube's tile join
-  * and merge kernel consume them unchanged (the DSv2 face of
-  * [[graft.ingest.GeoTiffIO.readTilesForResolution]]).
+  * and merge kernel consume them unchanged.
   *
   * Scale shape: one input partition per file (the container is the
-  * reference's unit of work too), bytes read on executors through Hadoop
-  * FS, overview selection (`targetRes`) decodes 1/4ᴷ of the pixels for
-  * coarse requests. Catalyst's column pruning composes on top; a future
-  * step could push payload-pruning into the codec (header-only IFD walk)
-  * for pure-metadata queries. */
+  * reference's unit of work too), read on executors through Hadoop
+  * positioned reads: one head parse per container, then only the chosen
+  * overview level's blocks (`targetRes` decodes 1/4ᴷ of the pixels for
+  * coarse requests). Two pushdowns compose with Catalyst: `container_uri`
+  * filters prune whole files at planning time, and pruning `payload` out
+  * of the projection skips every block read — the header-only read. */
 class MucogDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "mucog"
 
@@ -147,84 +147,39 @@ final class MucogReaderFactory(
     new MucogPartitionReader(partition.asInstanceOf[MucogInputPartition], hconf)
 }
 
-/** Reads one container file on the executor. With `payload` in the
-  * projection: decode each full-res subdir at the requested resolution
-  * level. Without it (pruned): a header-only IFD walk — a metadata query
-  * touches a few hundred bytes of directory data per container instead of
-  * inflating every raster. */
+/** Reads one container file on the executor: each full-res subdir at the
+  * overview level [[graft.raster.GeoTiff.Tiff.level]] chooses for
+  * `targetRes`. With `payload` in the projection that level's blocks are
+  * decoded; without it (pruned) nothing past the IFD head is read — a
+  * metadata query touches a few hundred bytes of directory data per
+  * container. Both projections report the same chosen level's header. */
 final class MucogPartitionReader(part: MucogInputPartition,
     hconf: org.apache.spark.util.SerializableConfiguration)
     extends PartitionReader[InternalRow] {
-  import graft.raster.GeoTiff
 
-  private def row(subdir: String, width: Int, height: Int, bands: Int,
-      dtype: String, crs: String, transform: Array[Double],
-      payload: () => Array[Byte]): InternalRow =
+  private def row(subdir: String, h: graft.raster.GeoTiff.Header,
+      payload: => Array[Byte]): InternalRow =
     InternalRow.fromSeq(part.fields.map {
       case "container_uri" => UTF8String.fromString(part.file)
       case "subdir" => UTF8String.fromString(subdir)
-      case "width" => width
-      case "height" => height
-      case "bands" => bands
-      case "dtype" => UTF8String.fromString(dtype)
-      case "crs" => UTF8String.fromString(crs)
+      case "width" => h.width
+      case "height" => h.height
+      case "bands" => h.bands
+      case "dtype" => UTF8String.fromString(h.dtype.name)
+      case "crs" => UTF8String.fromString(graft.geo.CRS.serialize(h.crs))
       case "transform" =>
-        org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(transform)
-      case "payload" => payload()
+        org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(h.transform.toArray)
+      case "payload" => payload
       case other => throw new IllegalArgumentException(s"unknown column $other")
     })
 
-  private lazy val rows: Iterator[InternalRow] = {
-    val p = new org.apache.hadoop.fs.Path(part.file)
-    val fs = p.getFileSystem(hconf.value)
-    if (part.fields.contains("payload")) {
-      // POSITIONED RANGE READS, one head parse for the whole container:
-      // each subdir decodes only its CHOSEN level's blocks, so a coarse
-      // `targetRes` scan over an object store fetches ~1/4ᴷ of every
-      // container's bytes instead of the container (and containers past
-      // the 2 GiB byte-array cap read fine — BigTIFF included). This is
-      // the same core as the serving path (GeoTiffIO.readTilesFor
-      // ResolutionRanged); a whole-file download would transfer 100 TB to
-      // decode 6 TB at K=2.
-      val fileLen = fs.getFileStatus(p).getLen
-      val in = fs.open(p)
-      val images =
-        try GeoTiff.readAllForResolutionRanged(
-          (pos, buf, off, len) => in.readFully(pos, buf, off, len),
-          fileLen, part.targetRes)
-        finally in.close()
-      images.iterator.zipWithIndex.map { case (img, r) =>
-        val bm = img.bitmap
-        row(s"GTIFF_DIR:${r + 1}", bm.width, bm.height, bm.bands, bm.dtype.name,
-          graft.geo.CRS.serialize(img.crs), img.transform.toArray,
-          () => bm.toBytes)
+  private lazy val rows: Iterator[InternalRow] =
+    graft.ingest.GeoTiffIO.withTiff(hconf.value, part.file) { tiff =>
+      (0 until tiff.records).map { r =>
+        val i = tiff.level(r, part.targetRes)
+        row(s"GTIFF_DIR:${r + 1}", tiff.headers(i), tiff.decode(i).bitmap.toBytes)
       }
-    } else {
-      // payload pruned: headers only via POSITIONED RANGE READS of the
-      // head (all IFDs sit there in the COG/MuCOG layout) — a metadata
-      // query over an object store fetches ~a few hundred KB per
-      // container, not the container
-      val fileLen = fs.getFileStatus(p).getLen
-      val in = fs.open(p)
-      val headers =
-        try GeoTiff.readHeadersRanged(
-          (pos, buf, off, len) => in.readFully(pos, buf, off, len), fileLen)
-        finally in.close()
-      val chains = GeoTiff.chainIndices(
-        headers.map(h => (h.width, h.height, h.isOverview)))
-      chains.iterator.zipWithIndex.map { case (chain, r) =>
-        val candidates = chain.map(headers)
-        val h =
-          if (part.targetRes > 0)
-            candidates.filter(c => math.abs(c.transform.rx) <= part.targetRes + 1e-9)
-              .lastOption.getOrElse(candidates.head)
-          else candidates.head
-        row(s"GTIFF_DIR:${r + 1}", h.width, h.height, h.bands, h.dtype.name,
-          graft.geo.CRS.serialize(h.crs), h.transform.toArray,
-          () => throw new IllegalStateException("payload pruned"))
-      }
-    }
-  }
+    }.iterator
   private var current: InternalRow = _
   override def next(): Boolean =
     if (rows.hasNext) { current = rows.next(); true } else false

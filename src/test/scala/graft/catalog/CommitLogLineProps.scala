@@ -105,9 +105,9 @@ object CommitLogLineProps extends Properties("commitlog-lines") {
     parts <- Gen.listOfN(2, genPartDir)
     adds <- Gen.choose(1, 6).flatMap(Gen.listOfN(_, genEntry))
     removes <- Gen.choose(0, 4).flatMap(Gen.listOfN(_, genRel))
-  } yield Catalog.checkpointBytes(Seq(s"OP $op", s"KIND $kind") ++
+  } yield Catalog.logText(Seq(s"OP $op", s"KIND $kind") ++
     parts.map("PART " + _) ++ removes.map("REMOVE " + _) ++
-    adds.map("ADD " + _), v2 = false)
+    adds.map("ADD " + _))
 
   /** A checkpoint as maintenance writes it: FILE and TOMB lines, v1 text
     * or v2 deflate. */
@@ -119,7 +119,7 @@ object CommitLogLineProps extends Properties("commitlog-lines") {
       rel <- genRel; t <- Gen.choose(0L, Long.MaxValue)
     } yield s"TOMB $t $rel"))
     v2 <- Gen.oneOf(true, false)
-  } yield Catalog.checkpointBytes(files ++ tombs, v2)
+  } yield if (v2) Catalog.checkpointBytes(files ++ tombs) else Catalog.logText(files ++ tombs)
 
   /** Truncate at a random length, or flip 1–3 random bytes. */
   private def genDamaged(bytes: Array[Byte]): Gen[Array[Byte]] =

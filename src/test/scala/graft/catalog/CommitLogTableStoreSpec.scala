@@ -884,9 +884,8 @@ class CommitLogColdReadSpec extends AnyFunSuite with BeforeAndAfterAll {
   * O(live-files) growth term — is written DEFLATE-COMPRESSED (format v2:
   * magic + zlib body of the v1 text). A million-live-file tiles table
   * checkpoints in ~12 MB instead of ~120 MB and the S3 single-PUT bound
-  * moves out ~10×. Version-gated: v1 plain-text checkpoints replay
-  * forever, and [[Catalog.CheckpointV2Conf]]=false holds
-  * writers on v1 for rolling upgrades. */
+  * moves out ~10×. Writers always write v2; v1 plain-text checkpoints
+  * replay forever. */
 class CommitLogCheckpointV2Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val root =
@@ -974,26 +973,6 @@ class CommitLogCheckpointV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(v1Replayed == expected, "v1 plain-text checkpoint no longer replays")
   }
 
-  test("CheckpointV2Conf=false holds writers on v1 for rolling upgrades") {
-    val dir = s"$root/v1gate"
-    val s = Catalog(dir)
-    spark.conf.set(Catalog.CheckpointV2Conf, "false")
-    spark.conf.set(Catalog.StaleSwapReclaimMsConf, "0")
-    try for (i <- 0 until 22) s.append(oneRow(s"g$i"), "tasks")
-    finally {
-      spark.conf.unset(Catalog.CheckpointV2Conf)
-      spark.conf.unset(Catalog.StaleSwapReclaimMsConf)
-    }
-    val cpName = logFiles(dir).filter(_.endsWith(".checkpoint")).maxOption
-      .getOrElse(fail("no checkpoint built"))
-    val head = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$dir/tasks/_log/$cpName")).take(5)
-    assert(!head.sameElements(V2Magic), "conf gate ignored: checkpoint is v2")
-    assert(new String(head, "UTF-8").startsWith("FILE "),
-      "v1 checkpoint does not start with a FILE line")
-    assert(Catalog(dir).read(spark, "tasks").count() == 22)
-  }
-
   test("cold replay of a 100k-entry v2 checkpoint plans in seconds (the 100-TB cold-driver number)") {
     // VERDICT r14 next-round #3: pin the claim that cold start is
     // log-replay-bound with a measured number. 100k sized FILE lines =
@@ -1013,7 +992,7 @@ class CommitLogCheckpointV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     ld.mkdirs()
     java.nio.file.Files.write(
       new java.io.File(ld, "0" * 19 + "1.checkpoint").toPath,
-      Catalog.checkpointBytes(lines, v2 = true))
+      Catalog.checkpointBytes(lines))
     val t0 = System.nanoTime()
     val df = Catalog(dir).read(spark, "tiles")
     val files = df.inputFiles.length

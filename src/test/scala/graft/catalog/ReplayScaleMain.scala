@@ -25,7 +25,7 @@ object ReplayScaleMain {
     val ld = new java.io.File(s"$dir/tiles/_log")
     ld.mkdirs()
     val cp = new java.io.File(ld, "0" * 19 + "1.checkpoint")
-    val bytes = Catalog.checkpointBytes(lines, v2 = true)
+    val bytes = Catalog.checkpointBytes(lines)
     java.nio.file.Files.write(cp.toPath, bytes)
     val v1Bytes = (lines :+ "END").mkString("\n").getBytes("UTF-8").length
     println(f"entries=$n v2_bytes=${bytes.length}%,d v1_bytes=$v1Bytes%,d " +

@@ -181,10 +181,10 @@ class ConsolidationSpec extends AnyFunSuite with BeforeAndAfterAll {
       blockXSize = 16, blockYSize = 16, maxRecords = 4, overviewsMinSize = 4,
       interlacingPattern = "Z=0>T>R>B;Z=1:>R>T>B").validate()
     val bytes = Consolidation.exportPhysical(spark, cat, uri, mucogLayout, 255.0)
-    val dirs = graft.raster.GeoTiff.read(bytes)
-    val fulls = dirs.filterNot(_.isOverview)
-    assert(fulls.size == 2 && dirs.size > fulls.size) // records + overviews
-    assert(fulls.forall(_.image.bitmap.width == 8))
+    val tiff = graft.raster.GeoTiff.open(bytes)
+    val fulls = (0 until tiff.records).map(r => tiff.decode(tiff.level(r)))
+    assert(fulls.size == 2 && tiff.headers.size > fulls.size) // records + overviews
+    assert(fulls.forall(_.bitmap.width == 8))
     // a bad interlacing pattern fails validation up front
     assertThrows[IllegalArgumentException](
       Layout("x", Seq("regular"), Map("crs" -> "EPSG:4326", "resolution" -> "1",
@@ -215,8 +215,8 @@ class ConsolidationSpec extends AnyFunSuite with BeforeAndAfterAll {
         java.nio.file.Paths.get(new java.net.URI(
           "file:" + r.getAs[String]("path").stripPrefix("file:"))))
       assert(bytes.length == r.getAs[Long]("n_bytes"))
-      val dirs = graft.raster.GeoTiff.read(bytes)
-      assert(dirs.exists(!_.isOverview) && dirs.exists(_.isOverview))
+      val headers = graft.raster.GeoTiff.open(bytes).headers
+      assert(headers.exists(!_.isOverview) && headers.exists(_.isOverview))
     }
   }
 

@@ -45,22 +45,23 @@ class GeoTiffIOSpec extends AnyFunSuite with BeforeAndAfterAll {
     // export one container back to tif and compare pixels
     val uri = tiles.head.getAs[String]("container_uri")
     val bytes = GeoTiffIO.exportContainer(spark, cat, uri)
-    val dirs = GeoTiff.read(bytes)
-    assert(dirs.size == 2)
-    assert(dirs.head.image.bitmap.pixels.toSeq == Seq(1.0, 2, 3, 4))
-    assert(dirs(1).image.bitmap.pixels.toSeq == Seq(5.0, 6, 7, 8))
+    val tiff = GeoTiff.open(bytes)
+    assert(tiff.headers.size == 2)
+    assert(tiff.decode(0).bitmap.pixels.toSeq == Seq(1.0, 2, 3, 4))
+    assert(tiff.decode(1).bitmap.pixels.toSeq == Seq(5.0, 6, 7, 8))
 
     // range-read single-subdir serving straight off the file
     val tifPath = uri.stripPrefix("file:")
-    val one = GeoTiffIO.readDirectoryRanged(
-      spark.sparkContext.hadoopConfiguration, tifPath, "GTIFF_DIR:2")
+    val one = GeoTiffIO.withTiff(spark.sparkContext.hadoopConfiguration, tifPath) {
+      t => t.decode(t.level(1))
+    }
     assert(one.bitmap.pixels.toSeq == Seq(5.0, 6, 7, 8))
 
     // BigTIFF export: version 43 container, same pixels, and the mucog
     // DSv2 source auto-detects the format
     val big = GeoTiffIO.exportContainer(spark, cat, uri, bigTiff = true)
     assert(big(2) == 43)
-    assert(GeoTiff.read(big).head.image.bitmap.pixels.toSeq == Seq(1.0, 2, 3, 4))
+    assert(GeoTiff.open(big).decode(0).bitmap.pixels.toSeq == Seq(1.0, 2, 3, 4))
     val bigDir = java.nio.file.Files.createTempDirectory("tifs-big")
     java.nio.file.Files.write(bigDir.resolve("big.tif"), big)
     val viaSource = spark.read.format("mucog").load(s"$bigDir/*.tif").collect()
@@ -74,23 +75,20 @@ class GeoTiffIOSpec extends AnyFunSuite with BeforeAndAfterAll {
       new Bitmap(64, 64, 1, DType.UInt8,
         Array.tabulate(64 * 64)(i => (i % 199).toDouble)),
       Affine.northUp(0, 64, 1, -1), CRS.WGS84)
-    java.nio.file.Files.write(dir.resolve("c.tif"),
-      GeoTiff.write(Seq(base), overviewsMinSize = 16, compress = true, tileSize = 16))
+    val bytes = GeoTiff.write(Seq(base), overviewsMinSize = 16, compress = true, tileSize = 16)
+    java.nio.file.Files.write(dir.resolve("c.tif"), bytes)
+    def tiles(targetRes: Double) = spark.read.format("mucog")
+      .option("targetRes", targetRes.toString).load(s"$dir/*.tif").collect()
 
-    val fine = GeoTiffIO.readTilesForResolution(spark, s"$dir/*.tif", 1.0).collect()
+    val fine = tiles(1.0)
     assert(fine.length == 1 && fine.head.getAs[Int]("width") == 64)
-    val mid = GeoTiffIO.readTilesForResolution(spark, s"$dir/*.tif", 2.4).collect()
+    val mid = tiles(2.4)
     assert(mid.head.getAs[Int]("width") == 32)
     assert(mid.head.getAs[scala.collection.Seq[Double]]("transform")(1) == 2.0)
-
-    // ranged variant: identical rows, fetched via head + selected blocks
-    val ranged = GeoTiffIO.readTilesForResolutionRanged(spark, s"$dir/*.tif", 2.4)
-      .collect()
-    assert(ranged.length == mid.length)
-    assert(ranged.head.getAs[Int]("width") == 32)
-    assert(java.util.Arrays.equals(ranged.head.getAs[Array[Byte]]("payload"),
-      mid.head.getAs[Array[Byte]]("payload")))
-    val coarse = GeoTiffIO.readTilesForResolution(spark, s"$dir/*.tif", 50.0).collect()
+    // the payload is the 32×32 overview directory the writer produced
+    assert(java.util.Arrays.equals(mid.head.getAs[Array[Byte]]("payload"),
+      GeoTiff.open(bytes).decode(1).bitmap.toBytes))
+    val coarse = tiles(50.0)
     assert(coarse.head.getAs[Int]("width") == 16)
     // payload is the decoded overview, not the full image
     assert(coarse.head.getAs[Array[Byte]]("payload").length == 16 * 16)
@@ -108,7 +106,7 @@ class GeoTiffIOSpec extends AnyFunSuite with BeforeAndAfterAll {
       Affine.northUp(0, 4, 1, -1), tm)
     java.nio.file.Files.write(dir.resolve("t.tif"), GeoTiff.write(Seq(img)))
 
-    val rows = GeoTiffIO.readTilesForResolution(spark, s"$dir/*.tif", 1.0).collect()
+    val rows = spark.read.format("mucog").load(s"$dir/*.tif").collect()
     assert(rows.length == 1)
     val stored = rows.head.getAs[String]("crs")
     assert(stored.startsWith("+proj=tmerc"), stored)
@@ -163,7 +161,8 @@ class GeoTiffIOSpec extends AnyFunSuite with BeforeAndAfterAll {
         wkb(box), wkb(box), 4326, org.apache.spark.sql.Row(0.0, 0.0, 8.0, 8.0))))
     }
     // the -ovr AUTO file read at 2deg/px picks the 4x4 overview level
-    val fileTiles = GeoTiffIO.readTilesForResolution(spark, s"$dir/*.tif", 2.0)
+    val fileTiles = spark.read.format("mucog").option("targetRes", "2.0")
+      .load(s"$dir/*.tif")
     assert(fileTiles.collect().forall(_.getAs[Int]("width") == 4))
     cat2.append(fileTiles, "tiles")
 

@@ -326,7 +326,7 @@ object TiledCodecProps extends Properties("tiled-codec") {
         Affine.northUp(0, h, 1, -1), CRS.WGS84)
       val bytes = GeoTiff.write(Seq(img), noData = 255.0, compress = compress,
         tileSize = 16, sparseOk = sparse)
-      val got = GeoTiff.read(bytes).head.image
+      val got = GeoTiff.open(bytes).decode(0)
       Prop(got.bitmap.pixels.toSeq == px.toSeq) :|
         s"w=$w h=$h bands=$bands compress=$compress sparse=$sparse"
     }
@@ -341,13 +341,13 @@ object TiledCodecProps extends Properties("tiled-codec") {
       }
       val bytes = GeoTiff.write(imgs, noData = 255.0, overviewsMinSize = 16,
         tileSize = 16, interlacing = "Z=0>T>R>B;Z=1:>R>T>B")
-      val dirs = GeoTiff.read(bytes)
+      val tiff = GeoTiff.open(bytes)
       // physical grouping: all full-res IFDs first, then the overview level
-      val grouped = dirs.map(_.isOverview) ==
+      val grouped = tiff.headers.map(_.isOverview) ==
         (Seq.fill(nRec)(false) ++ Seq.fill(nRec)(true))
       // association: record r's overview is the downsample of record r
       val assoc = (0 until nRec).forall { r =>
-        val ov = GeoTiff.readForResolution(bytes, s"GTIFF_DIR:${r + 1}", 2.5)
+        val ov = tiff.decode(tiff.level(r, 2.5))
         ov.bitmap.width == 16 && ov.bitmap.pixels.toSeq ==
           GeoTiff.downsample2(imgs(r).bitmap, 255.0).pixels.toSeq
       }

@@ -402,10 +402,10 @@ object ProfileMain {
       }
     }
 
-    // ---- 10 (r16). d5 ranged-read head parse: cost of the header walk
-    // that the readForResolutionRangedMeters merge removed (one walk per
-    // tile request instead of two). Driver-side loop over the same COG
-    // fixture d5_xyz serves, no Spark in the measurement.
+    // ---- 10 (r16). d5 ranged read: the head parse alone, and the whole
+    // per-tile read getTileFromFile pays per request (one head parse +
+    // level choice + decode). Driver-side loop over the same COG fixture
+    // d5_xyz serves, no Spark in the measurement.
     locally {
       import graft.core.DType
       import graft.geo.{Affine, CRS}
@@ -418,25 +418,20 @@ object ProfileMain {
         new Bitmap(144, 144, 1, DType.UInt8, px144),
         Affine.northUp(-8 * rs, Grid.WebMercatorOrigin / 4 + 8 * rs, rs, -rs),
         CRS.WebMercator)), compress = true, tileSize = 16)
-      def readAt(pos: Long, buf: Array[Byte], off: Int, n: Int): Unit =
-        System.arraycopy(tiff, pos.toInt, buf, off, n)
+      val readAt = GeoTiff.bytesReadAt(tiff)
       def loop(n: Int)(body: => Unit): Double = {
         body // warm
         val t0 = System.nanoTime(); (1 to n).foreach(_ => body)
         (System.nanoTime() - t0) / 1e9
       }
-      val tHead = loop(100)(GeoTiff.readHeadersRanged(readAt, tiff.length))
-      val tOld = loop(100) {
-        val hs = GeoTiff.readHeadersRanged(readAt, tiff.length)
-        val geo = hs.headOption.exists(_.crs.isGeographic)
-        GeoTiff.readForResolutionRanged(readAt, tiff.length, "GTIFF_DIR:1",
-          math.abs(if (geo) rs * 2 / 111320.0 else rs * 2))
+      val tHead = loop(100)(GeoTiff.open(readAt, tiff.length))
+      val tRead = loop(100) {
+        val t = GeoTiff.open(readAt, tiff.length)
+        val geo = t.headers.head.crs.isGeographic
+        t.decode(t.level(0, math.abs(if (geo) rs * 2 / 111320.0 else rs * 2)))
       }
-      val tNew = loop(100)(GeoTiff.readForResolutionRangedMeters(
-        readAt, tiff.length, "GTIFF_DIR:1", rs * 2))
       println(f"PROFILE d5 head-parse only x100            $tHead%8.3f s")
-      println(f"PROFILE d5 two-parse read x100             $tOld%8.3f s")
-      println(f"PROFILE d5 merged-parse read x100          $tNew%8.3f s")
+      println(f"PROFILE d5 head-parse + decode x100        $tRead%8.3f s")
     }
 
     spark.stop()

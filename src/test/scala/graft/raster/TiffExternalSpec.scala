@@ -107,7 +107,7 @@ class TiffExternalSpec extends AnyFunSuite {
     assert((ow, oh) == (32, 32))
     // overview content equals OUR reader's view of the same IFD — both
     // decoders agree on the downsampled plane, not just the full one
-    val ours = GeoTiff.read(ovr)(1).image.bitmap.pixels
+    val ours = GeoTiff.open(ovr).decode(1).bitmap.pixels
     assert(opx.toSeq == ours.toSeq)
   }
 }

@@ -110,6 +110,31 @@ class MucogDataSourceSpec extends AnyFunSuite {
     assert(rows.forall(_.getAs[String]("crs") == "EPSG:4326"))
   }
 
+  test("header-only and payload scans choose the same level for every fixture") {
+    // one level chooser behind both projections: the pruned (header-only)
+    // read and the payload read report the same width/height/transform —
+    // including a file whose ModelTiepoint is gone (identity transform)
+    val dir = java.nio.file.Files.createTempDirectory("mucog-agree")
+    graft.raster.TiffFixtures.all.zipWithIndex.foreach { case ((_, bytes), i) =>
+      java.nio.file.Files.write(dir.resolve(s"f$i.tif"), bytes)
+    }
+    for (targetRes <- Seq("0", "2.0", "3.5", "100")) {
+      val df = spark.read.format("mucog").option("targetRes", targetRes).load(s"$dir/*.tif")
+      def levels(withPayload: Boolean) = {
+        val cols = Seq("container_uri", "subdir", "width", "height", "transform") ++
+          (if (withPayload) Seq("payload") else Nil)
+        df.select(cols.map(col): _*).collect().map { r =>
+          (r.getString(0), r.getString(1), r.getInt(2), r.getInt(3),
+            r.getAs[scala.collection.Seq[Double]](4).toSeq)
+        }.sortBy(t => (t._1, t._2)).toSeq
+      }
+      val headerOnly = levels(withPayload = false)
+      assert(headerOnly.size == graft.raster.TiffFixtures.all.map { case (_, b) =>
+        graft.raster.GeoTiff.open(b).records }.sum)
+      assert(headerOnly == levels(withPayload = true), s"targetRes $targetRes")
+    }
+  }
+
   test("payload scan at coarse targetRes range-reads a fraction of the container") {
     val dir = java.nio.file.Files.createTempDirectory("mucog-ranged")
     // incompressible pixels (LCG) so deflate can't shrink the base levels:
@@ -130,14 +155,10 @@ class MucogDataSourceSpec extends AnyFunSuite {
     val fileLen = java.nio.file.Files.size(f)
     assert(fileLen > 4 * 256 * 1024, s"container only $fileLen B — head fetch would cover it")
 
-    // expected rows from the WHOLE-ARRAY decode (the independent path)
-    val dirs = GeoTiff.read(java.nio.file.Files.readAllBytes(f))
-    val chains = GeoTiff.chainIndices(
-      dirs.map(d => (d.image.bitmap.width, d.image.bitmap.height, d.isOverview)))
-    val expected = chains.map { chain =>
-      chain.map(i => dirs(i).image)
-        .filter(c => math.abs(c.transform.rx) <= 16.0 + 1e-9)
-        .last
+    // expected rows: each record's 32×32 level decoded from the bytes in memory
+    val tiff = GeoTiff.open(java.nio.file.Files.readAllBytes(f))
+    val expected = tiff.chains.map { chain =>
+      tiff.decode(chain.find(tiff.headers(_).width == 32).get)
     }
 
     // scheme registered for THIS test only: cache disabled so no FS
