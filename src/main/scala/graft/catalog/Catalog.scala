@@ -158,6 +158,102 @@ final case class Catalog(root: String) extends TableStore {
       reusable = Some((s"$root/$table", snap)))
   }
 
+  /** [[TableStore.rows]] on the driver, with no Spark job. The snapshot's
+    * live files are pruned by the partition value their `col=value` path
+    * segment carries, then each file's row groups by their parquet
+    * min/max statistics against `valuesIn`. The call's cost is the
+    * compressed bytes of the requested columns in the row groups that
+    * survive, summed from the files' footers (memoized per file: data
+    * files are immutable from commit to vacuum); over `budgetBytes` the
+    * answer is None, decided before any row is read. The surviving row
+    * groups are read by Spark's own parquet row reader
+    * ([[ParquetFileFormat]]), projected to the requested columns,
+    * filtered exactly by `valuesIn`, and decoded by the encoder
+    * `collect()` uses — so timestamps, arrays, maps and structs come back
+    * typed as a Spark read returns them. A `payload`-free answer is
+    * cached on the snapshot INSTANCE, the validity token [[readFiles]]'
+    * relation cache uses, so a warm call costs the `_log` listing that
+    * snapshot validation makes anyway. */
+  override def rows(spark: SparkSession, table: String, columns: Seq[String],
+      partitionValues: Seq[String], valuesIn: Map[String, Set[String]],
+      budgetBytes: Long): Option[IndexedSeq[Row]] = {
+    val schema = TableLayout.readSchema(table)
+    val pcOpt = TableLayout.partitionColumn(table)
+    TableStore.checkRowsArgs(table, columns, partitionValues, valuesIn)
+    val f = fs(spark)
+    val snap = snapshot(f, table, inDoubtWaitMs = ReadInDoubtWaitMs)
+    val tablePath = s"$root/$table"
+    val key = RowsKey(columns, partitionValues, valuesIn)
+    val cacheable = !columns.contains("payload")
+    (if (cacheable) rowsCacheGet(tablePath, snap, key) else None).orElse {
+      val wanted = partitionValues.toSet
+      val rels = pcOpt match {
+        case Some(pc) if wanted.nonEmpty => snap.live.filter { r =>
+          val raw = ExternalCatalogUtils.unescapePathName(
+            partDirOf(r).stripPrefix(s"$pc="))
+          raw != ExternalCatalogUtils.DEFAULT_PARTITION_NAME && wanted(raw)
+        }
+        case _ => snap.live
+      }
+      val dd = f.makeQualified(dataDir(table))
+      val required = columns.distinct.filterNot(pcOpt.contains)
+      rowGroupPlan(f, fileStatuses(f, dd, rels, snap.meta), required, valuesIn,
+          budgetBytes).map { case (splits, bytes) =>
+        val out = readRowsOnDriver(spark, schema, pcOpt, columns, valuesIn, splits)
+        if (cacheable) rowsCachePut(tablePath, snap, key, out, bytes)
+        out
+      }
+    }
+  }
+
+  /** Decode `splits` through Spark's parquet row reader: the data columns
+    * of `columns` plus the partition value of each file's directory,
+    * keeping the rows `valuesIn` admits, reordered to `columns`. */
+  private def readRowsOnDriver(spark: SparkSession,
+      schema: StructType, pcOpt: Option[String], columns: Seq[String],
+      valuesIn: Map[String, Set[String]], splits: IndexedSeq[RowGroupSplit]): IndexedSeq[Row] = {
+    import org.apache.spark.unsafe.types.UTF8String
+    val out = IndexedSeq.newBuilder[Row]
+    if (splits.isEmpty) return out.result()
+    val partitionSchema = StructType(pcOpt.map(schema(_)).toSeq)
+    val required = StructType(columns.distinct.filterNot(pcOpt.contains).map(schema(_)))
+    val produced = required ++ partitionSchema
+    val ordinals = columns.map(c => produced.indexWhere(_.name == c)).toArray
+    val types = ordinals.map(produced(_).dataType)
+    val tests = valuesIn.toArray.map { case (c, vs) =>
+      (produced.indexWhere(_.name == c), vs.map(UTF8String.fromString)) }
+    val read = parquetReader(spark, schema, pcOpt, required)
+    val decode = rowEncoder(StructType(columns.map(schema(_)))).createDeserializer()
+    splits.foreach { s =>
+      val pv = pcOpt.fold(InternalRow.empty)(pc =>
+        InternalRow(partitionValue(partDirOf(s.rel), pc, schema(pc).dataType)))
+      val it = read(org.apache.spark.sql.execution.datasources.PartitionedFile(pv,
+        org.apache.spark.paths.SparkPath.fromPath(s.status.getPath), s.start, s.length,
+        Array.empty[String], 0L, s.status.getLen, Map.empty))
+      try {
+        // the reader may hand back one reused row per batch: each row is
+        // copied out through the deserializer before the next is read
+        while (it.hasNext) {
+          val r = it.next()
+          if (tests.forall { case (o, vs) => !r.isNullAt(o) && vs(r.getUTF8String(o)) }) {
+            val vals = new Array[Any](ordinals.length)
+            var i = 0
+            while (i < ordinals.length) {
+              val o = ordinals(i)
+              vals(i) = if (r.isNullAt(o)) null else r.get(o, types(i))
+              i += 1
+            }
+            out += decode(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals))
+          }
+        }
+      } finally it match {
+        case c: java.io.Closeable => c.close()
+        case _ =>
+      }
+    }
+    out.result()
+  }
+
   /** ONE file-index-backed parquet relation over the whole live set —
     * never a union (r12 planned one relation per op directory, which
     * grew the read plan without bound in the count of large appends;
@@ -1663,6 +1759,14 @@ object Catalog {
     pmod(crc32(encode(uri, "UTF-8")), lit(TilesBuckets.toLong)).cast("int")
   }
 
+  /** [[tilesBucketOf]] on the driver: the same CRC-32 of the URI's UTF-8
+    * bytes, modulo the bucket count. */
+  def tilesBucketOf(uri: String): Int = {
+    val crc = new java.util.zip.CRC32
+    crc.update(uri.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    (crc.getValue % TilesBuckets).toInt
+  }
+
   /** Per-file metadata a v14+ ADD/FILE line carries: the file SIZE (so a
     * cold read builds the scan's [[FileStatus]]es straight from the
     * snapshot — zero storage LISTs at any op-dir count; Delta's
@@ -2052,6 +2156,181 @@ object Catalog {
         .map(_._1.live.size.toLong).sum)
     }
   }
+
+  /** [[Catalog.rows]] answers without `payload`, per table path: the
+    * SNAPSHOT INSTANCE they were read from (the validity token
+    * [[relationCache]] uses) and its answers keyed by (columns, partition
+    * values, valuesIn). A table keeps ONE snapshot: the first answer cached
+    * from a newer snapshot replaces the table's entry, so a commit drops
+    * every answer of the old snapshot at once, whether or not its key is
+    * read again. Bounded by the compressed parquet bytes the cached
+    * answers were read from (decoded rows take a few times that) and by
+    * the live paths of the pinned snapshots, with the wholesale-reset
+    * discipline of the other caches. */
+  private final case class RowsKey(columns: Seq[String], partitionValues: Seq[String],
+      valuesIn: Map[String, Set[String]])
+  private final class TableRows(val snap: Snapshot) {
+    val answers = new java.util.concurrent.ConcurrentHashMap[RowsKey, IndexedSeq[Row]]()
+    var bytes = 0L // guarded by rowsCache
+  }
+  private val rowsCache = new java.util.concurrent.ConcurrentHashMap[String, TableRows]()
+  /** Twice the default rows budget, so any answer within it is cached. */
+  private val RowsCacheMaxBytes = 2 * TableStore.RowsBudgetBytes
+
+  private def rowsCacheGet(tablePath: String, snap: Snapshot,
+      key: RowsKey): Option[IndexedSeq[Row]] =
+    Option(rowsCache.get(tablePath)).filter(_.snap eq snap)
+      .flatMap(t => Option(t.answers.get(key)))
+
+  private def rowsCachePut(tablePath: String, snap: Snapshot, key: RowsKey,
+      rows: IndexedSeq[Row], bytes: Long): Unit =
+    if (bytes <= RowsCacheMaxBytes) rowsCache.synchronized {
+      def entry() = Option(rowsCache.get(tablePath)).filter(_.snap eq snap).getOrElse {
+        val fresh = new TableRows(snap)
+        rowsCache.put(tablePath, fresh)
+        fresh
+      }
+      val t = entry()
+      if (t.answers.putIfAbsent(key, rows) == null) t.bytes += bytes
+      import scala.jdk.CollectionConverters._
+      val all = rowsCache.values.asScala
+      if (all.iterator.map(_.bytes).sum > RowsCacheMaxBytes ||
+          all.iterator.map(_.snap.live.size.toLong).sum > SnapshotCacheMaxPaths) {
+        rowsCache.clear()
+        val kept = entry()
+        kept.answers.put(key, rows)
+        kept.bytes = bytes
+      }
+    }
+
+  /** The rows cache's entry for `tablePath`: the identity hash of the
+    * snapshot it holds and its answer count. For tests. */
+  private[graft] def rowsCacheState(tablePath: String): Option[(Int, Int)] =
+    Option(rowsCache.get(tablePath)).map(t =>
+      (System.identityHashCode(t.snap), t.answers.size))
+
+  /** The row groups of one data file that a driver read decodes: those
+    * whose midpoints fall in [start, start + length), as Spark's reader
+    * selects them for a split. */
+  private final case class RowGroupSplit(rel: String, status: FileStatus,
+      start: Long, length: Long)
+
+  /** What a driver read plans from one parquet row group: its byte range,
+    * the compressed bytes of each top-level column, and the min/max of
+    * each top-level string column whose footer statistics carry them. */
+  private final case class RowGroup(start: Long, length: Long,
+      columnBytes: Map[String, Long], ranges: Map[String, (Array[Byte], Array[Byte])]) {
+    /** False only when the statistics prove no row's `c` is in `values`
+      * (UTF-8 bytes, compared unsigned as parquet orders strings). */
+    def mayHold(c: String, values: Array[Array[Byte]]): Boolean = ranges.get(c) match {
+      case None => true
+      case Some((lo, hi)) => values.exists(v =>
+        java.util.Arrays.compareUnsigned(lo, v) <= 0 &&
+          java.util.Arrays.compareUnsigned(v, hi) <= 0)
+    }
+  }
+
+  /** The row groups of `statuses` that `valuesIn` may select, as splits
+    * (adjacent groups merged), and the compressed bytes of `columns` in
+    * them — or None as soon as those bytes pass `budgetBytes`. */
+  private def rowGroupPlan(f: FileSystem, statuses: Seq[(String, FileStatus)],
+      columns: Seq[String], valuesIn: Map[String, Set[String]],
+      budgetBytes: Long): Option[(IndexedSeq[RowGroupSplit], Long)] = {
+    val wanted = valuesIn.toSeq.map { case (c, vs) =>
+      c -> vs.iterator.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray }
+    val splits = IndexedSeq.newBuilder[RowGroupSplit]
+    var bytes = 0L
+    val it = statuses.iterator
+    while (it.hasNext) {
+      val (rel, st) = it.next()
+      var run: Option[RowGroupSplit] = None
+      footerGroups(f, st).foreach { g =>
+        if (wanted.forall { case (c, vs) => g.mayHold(c, vs) }) {
+          bytes += columns.iterator.map(g.columnBytes.getOrElse(_, 0L)).sum
+          run = run match {
+            case Some(r) if r.start + r.length == g.start => Some(r.copy(length = r.length + g.length))
+            case other =>
+              other.foreach(splits += _)
+              Some(RowGroupSplit(rel, st, g.start, g.length))
+          }
+        }
+      }
+      run.foreach(splits += _)
+      if (bytes > budgetBytes) return None
+    }
+    Some((splits.result(), bytes))
+  }
+
+  /** The row groups of one data file, from its footer, memoized by path. */
+  private def footerGroups(f: FileSystem, st: FileStatus): IndexedSeq[RowGroup] = {
+    val key = st.getPath.toString
+    val hit = footerCache.get(key)
+    if (hit != null) return hit
+    import scala.jdk.CollectionConverters._
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, f.getConf))
+    val groups = try reader.getFooter.getBlocks.asScala.toIndexedSeq.map { b =>
+      val cols = b.getColumns.asScala
+      val ranges = cols.iterator.filter { c =>
+        c.getPath.size == 1 && c.getPrimitiveType.getLogicalTypeAnnotation ==
+          org.apache.parquet.schema.LogicalTypeAnnotation.stringType()
+      }.flatMap { c =>
+        val s = c.getStatistics
+        if (s == null || s.isEmpty || !s.hasNonNullValue) None
+        else Some(c.getPath.toArray.head -> (s.getMinBytes, s.getMaxBytes))
+      }.toMap
+      RowGroup(b.getStartingPos, b.getCompressedSize,
+        cols.groupMapReduce(_.getPath.toArray.head)(_.getTotalSize)(_ + _), ranges)
+    } finally reader.close()
+    if (footerCache.size >= FooterCacheMaxFiles) footerCache.clear()
+    footerCache.put(key, groups)
+    groups
+  }
+
+  private val footerCache =
+    new java.util.concurrent.ConcurrentHashMap[String, IndexedSeq[RowGroup]]()
+  /** Files whose footers [[footerGroups]] keeps before a wholesale reset:
+    * a few hundred bytes to a few KB each. */
+  private val FooterCacheMaxFiles = 1 << 14
+
+  /** Spark's parquet row reader per (session, SQL conf, read shape), built
+    * once. Building one copies the session's Hadoop configuration and
+    * broadcasts it, a cost each uncached [[Catalog.rows]] call would
+    * otherwise pay (one broadcast block per XYZ tile). Settings changed
+    * later on the SparkContext's own Hadoop configuration are not seen by
+    * a reader already built. */
+  private final case class ReaderKey(session: SparkSession, confs: Map[String, String],
+      dataSchema: StructType, partitionSchema: StructType, required: StructType)
+  private val parquetReaders = new java.util.concurrent.ConcurrentHashMap[ReaderKey,
+    org.apache.spark.sql.execution.datasources.PartitionedFile => Iterator[InternalRow]]()
+  private val ParquetReadersMax = 256
+
+  private def parquetReader(spark: SparkSession, schema: StructType,
+      pcOpt: Option[String], required: StructType) = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val key = ReaderKey(spark, session.sessionState.conf.getAllConfs,
+      StructType(schema.filterNot(fl => pcOpt.contains(fl.name))),
+      StructType(pcOpt.map(schema(_)).toSeq), required)
+    val hit = parquetReaders.get(key)
+    if (hit != null) hit
+    else {
+      val read = new ParquetFileFormat().buildReaderWithPartitionValues(session,
+        key.dataSchema, key.partitionSchema, required, Nil,
+        Map(org.apache.spark.sql.execution.datasources.FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        session.sessionState.newHadoopConf())
+      if (parquetReaders.size >= ParquetReadersMax) parquetReaders.clear()
+      parquetReaders.put(key, read)
+      read
+    }
+  }
+
+  /** Bound `Row` encoders per output schema — resolving one runs the
+    * analyzer, so it is done once per schema, not per call. */
+  private val rowEncoders = new java.util.concurrent.ConcurrentHashMap[
+    StructType, org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Row]]()
+  private def rowEncoder(schema: StructType) =
+    rowEncoders.computeIfAbsent(schema,
+      s => org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(s).resolveAndBind())
 
   /** Memoized per-op-directory data-file listings (qualified op dir →
     * rel path → status), shared across reads/tables/stores in this JVM.

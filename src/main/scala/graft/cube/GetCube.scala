@@ -103,65 +103,25 @@ object GetCube {
     "spark.sql.adaptive.enabled" -> "false",
     "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "1024")
 
-  /** The cacheable part of a variable lookup: everything [[prepare]]
-    * reads off the definition row. */
+  /** Everything [[prepare]] reads off the variable definition row. */
   private final case class VariableInfo(dtype: String, noData: Double,
       minValue: Double, maxValue: Double, nBands: Int, resampling: Option[String],
       palette: Option[String])
 
-  /** Request-to-request cache of the variable lookup — the serving path's
-    * fixed-latency floor (a full Spark action per GetCube/XYZ request for
-    * two broadcast-sized dims that change ~never; the reference holds
-    * variables in process memory the same way). Keyed by the two variable
-    * tables' directory stamps (via the root's Hadoop FileSystem, so
-    * HDFS-class roots get the cache too) so any append/rewrite
-    * invalidates; an unobservable stamp bypasses the cache entirely
-    * rather than risk staleness. */
-  private val varCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Seq[String], Long, Long, Long, Long), VariableInfo]()
-
-  /** Table change stamp: (newest child mtime, hash of child
-    * names+sizes+mtimes) of the table's commit-log `_log` directory —
-    * every mutation creates a new VERSIONED file there, so the child
-    * NAMES alone carry the change, even on flat object stores whose
-    * directory mtimes are synthetic. The hash matters: mtime alone is
-    * millisecond-truncated (seconds-coarse on some filesystems).
-    * Resolved through the Hadoop [[FileSystem]] of the root's scheme
-    * (r11 verdict #3: a `java.io.File` stamp bypassed the cache on every
-    * non-local root). (-1, -1) = unobservable (no `_log`: the table was
-    * never written, or the root is not a filesystem) → callers bypass
-    * the cache rather than risk staleness. */
-  private[cube] def dirStamp(spark: SparkSession, root: String,
-      table: String): (Long, Long) =
-    try {
-      val log = new org.apache.hadoop.fs.Path(s"$root/$table/_log")
-      val f = log.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      var h = 1L
-      var maxM = 0L
-      f.listStatus(log).foreach { s => // FileNotFound when absent
-        h = h * 1000003L + s.getPath.getName.hashCode
-        h = h * 1000003L + s.getLen
-        h = h * 1000003L + s.getModificationTime
-        maxM = math.max(maxM, s.getModificationTime)
-      }
-      // newest CHILD mtime, not the directory's own — flat object stores
-      // synthesize directory mtimes (sometimes as now(), which would
-      // defeat the cache), while the children here are real files whose
-      // mtimes are their PUT times
-      (maxM, h)
-    } catch { case _: java.io.IOException => (-1L, -1L) }
-
-  private def lookupVariable(spark: SparkSession, cat: TableStore,
+  /** The variable behind `instanceIds`: instances → their one shared
+    * definition, joined on the driver over [[TableStore.rows]] answers —
+    * the two tables are broadcast-sized and change ~never, so a warm
+    * serving loop reads them from the snapshot-keyed cache and starts no
+    * Spark job. */
+  private def resolveVariable(spark: SparkSession, cat: TableStore,
       instanceIds: Seq[String]): VariableInfo = {
-    // one driver action for the whole variable lookup (instances → shared
-    // definition): this runs per request, so its fixed job latency is the
-    // serving path's floor — don't split it into two collects
-    val vd = cat.read(spark, "variable_instances")
-      .filter(col("id").isin(instanceIds: _*))
-      .select(col("definition_id")).distinct()
-      .join(cat.read(spark, "variable_definitions"),
-        col("definition_id") === col("id"))
-      .collect()
+    val wanted = instanceIds.toSet
+    val defIds = cat.rowsOrCollect(spark, "variable_instances", Seq("id", "definition_id"))
+      .collect { case r if wanted(r.getString(0)) => r.getString(1) }.toSet
+    val vd = cat.rowsOrCollect(spark, "variable_definitions",
+        Seq("id", "dtype", "no_data", "min_value", "max_value", "bands",
+          "resampling_alg", "palette"))
+      .filter(r => defIds(r.getString(0)))
     require(vd.length == 1,
       s"instances $instanceIds must exist and share one defined variable")
     val v = vd(0)
@@ -174,25 +134,8 @@ object GetCube {
       Option(v.getAs[String]("palette")).filter(_.nonEmpty))
   }
 
-  /** Cached variable resolve shared by [[prepare]] and the palette name
-    * lookup — one driver action per (instances, table-stamp) key. */
-  private def resolveVariable(spark: SparkSession, cat: TableStore,
-      instanceIds: Seq[String]): VariableInfo = {
-    val si = dirStamp(spark, cat.root, "variable_instances")
-    val sd = dirStamp(spark, cat.root, "variable_definitions")
-    if (si._1 < 0 || sd._1 < 0) lookupVariable(spark, cat, instanceIds)
-    else {
-      if (varCache.size > 1024) varCache.clear() // bound, not LRU: refill is one action
-      varCache.computeIfAbsent(
-        (cat.root, instanceIds.sorted, si._1, si._2, sd._1, sd._2),
-        _ => lookupVariable(spark, cat, instanceIds))
-    }
-  }
-
   /** Palette NAME the instances' variable declares, if any (reference
-    * catalog.go:455-467 reads variable.Palette before rendering). Rides
-    * the same stamp-keyed cache as [[prepare]] — no extra driver action
-    * on the serving path. */
+    * catalog.go:455-467 reads variable.Palette before rendering). */
   def paletteNameOf(spark: SparkSession, cat: TableStore,
       instanceIds: Seq[String]): Option[String] =
     resolveVariable(spark, cat, instanceIds).palette
@@ -219,7 +162,7 @@ object GetCube {
     * + refined native-CRS interior-intersects ring (pg_containers.go:302-311
     * — the CASE-on-SRID predicate that drops datasets merely touching the
     * request boundary). */
-  private def spatialFilters(req: CubeRequest, out: OutDescriptor):
+  private[cube] def spatialFilters(req: CubeRequest, out: OutDescriptor):
       (org.locationtech.jts.geom.Geometry, (org.locationtech.jts.geom.Geometry, Int)) = {
     val footprint = GeomOps.geographicRingFromExtent(
       req.transform, req.width, req.height, out.crs)
@@ -512,11 +455,6 @@ object GetCube {
     * the plan is the r10 DPP shape with one fewer discovery subtree. */
   private def selectTileLevel(spark: SparkSession, cat: TableStore, out: OutDescriptor,
       containers: DataFrame, bounded: Boolean): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val targetResDeg = {
-      val rx = math.abs(out.pixToCrs.rx)
-      if (out.crs.isGeographic) rx else rx / 111320.0
-    }
     // ONE store relation for both scans: the directory listing (a real
     // cost per request — 64 bucket dirs) happens once per plan
     val store = cat.read(spark, "tiles")
@@ -535,27 +473,6 @@ object GetCube {
       else col("container_uri") === col("__pu")
     val all = store.join(if (bounded) broadcast(uris) else uris,
       semiCond, "left_semi")
-    val meta = all.select(
-        col("container_uri"), coalesce(col("subdir"), lit("")).as("subdir"),
-        col("crs"), col("transform"))
-      .withColumn("base_subdir", regexp_replace(col("subdir"), "@ov\\d+$", ""))
-      // geographic tile CRS ⇒ resolution already in degrees. tiles.crs is
-      // always CRS.serialize output: "EPSG:<srid>" for a known code or a
-      // proj4 string — the geographic forms are exactly EPSG:4326 and
-      // "+proj=longlat ..." (incl. datum-shifted longlat, whose towgs84
-      // suffix keeps the prefix). A string-match on 4326 alone treated
-      // every other geographic CRS as meters, shrinking res_deg ~1e5×:
-      // all pyramid levels looked eligible and the window served the
-      // COARSEST overview for every request.
-      .withColumn("res_deg",
-        when(col("crs") === "EPSG:4326" ||
-            col("crs").startsWith("+proj=longlat"),
-          abs(element_at(col("transform"), 2)))
-          .otherwise(abs(element_at(col("transform"), 2)) / 111320.0))
-      .withColumn("eligible", col("res_deg") <= targetResDeg * 1.2)
-    val w = Window.partitionBy(col("container_uri"), col("base_subdir"))
-      .orderBy(col("eligible").desc,
-        when(col("eligible"), -col("res_deg")).otherwise(col("res_deg")))
     // Fully-lazy join-back: the level-selection window and the payload
     // retrieval live in ONE plan, so the shared subtrees overlap inside a
     // single job. (An eager localCheckpoint of `chosen` + a static bucket
@@ -564,10 +481,9 @@ object GetCube {
     // also disabling Catalyst's DPP on the meta scan, whose rule needs a
     // selective filter on the build side that a bare checkpointed
     // relation no longer carries.)
-    val chosen = meta.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(col("container_uri").as("c_uri"), col("subdir").as("c_subdir"),
-        col("base_subdir").as("t_base_subdir"))
+    val chosen = levelWindow(
+      all.select(col("container_uri"), col("subdir"), col("crs"), col("transform")),
+      targetResDeg(out))
     val payCond = {
       val base = col("container_uri") === col("c_uri") &&
         coalesce(col("subdir"), lit("")) === col("c_subdir")
@@ -584,6 +500,77 @@ object GetCube {
         col("bands").as("t_bands"), col("dtype").as("t_dtype"),
         col("crs").as("t_crs"), col("transform").as("t_transform"),
         col("t_base_subdir"), col("payload"))
+  }
+
+  /** The request resolution in degrees per pixel — the unit every tile
+    * level's resolution is compared in. */
+  private[cube] def targetResDeg(out: OutDescriptor): Double = {
+    val rx = math.abs(out.pixToCrs.rx)
+    if (out.crs.isGeographic) rx else rx / 111320.0
+  }
+
+  /** A tile level's resolution in degrees. tiles.crs is always
+    * CRS.serialize output: "EPSG:<srid>" for a known code or a proj4
+    * string — the geographic forms are exactly EPSG:4326 and
+    * "+proj=longlat ..." (incl. datum-shifted longlat, whose towgs84
+    * suffix keeps the prefix). A string-match on 4326 alone treated every
+    * other geographic CRS as meters, shrinking res_deg ~1e5×: all pyramid
+    * levels looked eligible and the window served the COARSEST overview
+    * for every request. */
+  private[cube] def levelResDeg(crs: String, rx: Double): Double =
+    if (crs == "EPSG:4326" || crs.startsWith("+proj=longlat")) math.abs(rx)
+    else math.abs(rx) / 111320.0
+
+  /** Base subdir of an overview level row ("<subdir>@ovK" → "<subdir>"). */
+  private[cube] def baseSubdir(subdir: String): String =
+    subdir.replaceFirst("@ov\\d+$", "")
+
+  /** The level rule as a Spark window over tile metadata rows
+    * (container_uri, subdir, crs, transform): per (container, base
+    * subdir) the coarsest level within ×1.2 of the target resolution,
+    * else the finest. Returns (c_uri, c_subdir, t_base_subdir). */
+  private[cube] def levelWindow(meta: DataFrame, targetResDeg: Double): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val rows = meta
+      .withColumn("subdir", coalesce(col("subdir"), lit("")))
+      .withColumn("base_subdir", regexp_replace(col("subdir"), "@ov\\d+$", ""))
+      .withColumn("res_deg",
+        when(col("crs") === "EPSG:4326" ||
+            col("crs").startsWith("+proj=longlat"),
+          abs(element_at(col("transform"), 2)))
+          .otherwise(abs(element_at(col("transform"), 2)) / 111320.0))
+      .withColumn("eligible", col("res_deg") <= targetResDeg * 1.2)
+    val w = Window.partitionBy(col("container_uri"), col("base_subdir"))
+      .orderBy(col("eligible").desc,
+        when(col("eligible"), -col("res_deg")).otherwise(col("res_deg")))
+    rows.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1)
+      .select(col("container_uri").as("c_uri"), col("subdir").as("c_subdir"),
+        col("base_subdir").as("t_base_subdir"))
+  }
+
+  /** [[levelWindow]] as a pure function over ONE (container, base
+    * subdir) group of (subdir, crs, transform x-resolution) levels: the
+    * same 1.2× slack, geographic test and order — eligible levels first,
+    * coarsest eligible, else finest. Levels of equal resolution, which
+    * the window leaves in no defined order, go to the smaller subdir. */
+  private[cube] def chooseLevel(levels: Seq[(String, String, Double)],
+      targetResDeg: Double): (String, String, Double) = {
+    val limit = targetResDeg * 1.2
+    def key(l: (String, String, Double)): (Boolean, Double) = {
+      val r = levelResDeg(l._2, l._3)
+      val eligible = r <= limit
+      (eligible, if (eligible) -r else r)
+    }
+    levels.reduce { (a, b) =>
+      val (ea, ra) = key(a)
+      val (eb, rb) = key(b)
+      val c =
+        if (ea != eb) (if (ea) -1 else 1)
+        else if (ra == rb) a._1.compareTo(b._1) // -0.0 == 0.0, as Spark sorts
+        else java.lang.Double.compare(ra, rb)
+      if (c <= 0) a else b
+    }
   }
 
   /** Merge a collected set of dataset tiles into one mosaic payload (the

@@ -45,38 +45,20 @@ object Palette {
   final case class ColorPoint(value: Float, r: Int, g: Int, b: Int, a: Int)
 
   /** Read a palette by name from the catalog's `palette` table
-    * (reference pg ReadPalette, catalog.go:454-467). The table is tiny
-    * (broadcast-sized); validation re-runs on construction. */
+    * (reference pg ReadPalette, catalog.go:454-467) through
+    * [[graft.catalog.TableStore.rows]] — on the commit-log catalog a
+    * driver read cached per table snapshot, so a warm XYZ serving loop
+    * starts no Spark job here and any palette write is seen at once.
+    * Validation re-runs on construction. */
   def read(spark: org.apache.spark.sql.SparkSession,
-      cat: graft.catalog.TableStore, name: String): Option[Palette] = {
-    import org.apache.spark.sql.functions.col
-    cat.read(spark, "palette").filter(col("name") === name)
-      .collect().headOption.map { r =>
+      cat: graft.catalog.TableStore, name: String): Option[Palette] =
+    cat.rowsOrCollect(spark, "palette", Seq("name", "points"))
+      .find(_.getString(0) == name).map { r =>
         Palette(r.getString(0),
           r.getAs[scala.collection.Seq[org.apache.spark.sql.Row]](1).map(p =>
             ColorPoint(p.getFloat(0), p.getInt(1), p.getInt(2), p.getInt(3),
               p.getInt(4))).toSeq)
       }
-  }
-
-  private val readCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Long, Long), Option[Palette]]()
-
-  /** [[read]] behind the same directory-stamp cache discipline as
-    * GetCube's variable lookup: a warm XYZ serving loop pays no driver
-    * action for palette points; any append/rewrite of the palette table
-    * invalidates via the stamp; unobservable (non-local) roots bypass
-    * the cache rather than risk staleness. */
-  def cachedRead(spark: org.apache.spark.sql.SparkSession,
-      cat: graft.catalog.TableStore, name: String): Option[Palette] = {
-    val st = GetCube.dirStamp(spark, cat.root, "palette")
-    if (st._1 < 0) read(spark, cat, name)
-    else {
-      if (readCache.size > 1024) readCache.clear() // bound, not LRU
-      readCache.computeIfAbsent((cat.root, name, st._1, st._2),
-        _ => read(spark, cat, name))
-    }
-  }
 
   /** Create (or with `replace`, upsert) a palette row — the reference's
     * CreatePalette with its replace flag (service.go CreatePalette →

@@ -120,7 +120,7 @@ final class HttpEdge(spark: SparkSession, cat: TableStore, port: Int = 0,
 
   private def cubeHandler(x: HttpExchange): Unit = {
     val q = query(x)
-    val level = q.get("compression").map(_.toInt).getOrElse(1)
+    val level = q.get("compression").map(intParam("compression", _)).getOrElse(1)
     require(level >= -3 && level <= 9, "CompressionLevel must be in [-3, 9]")
     val req = cubeRequest(q)
     if (req.headersOnly) {
@@ -196,11 +196,11 @@ final class HttpEdge(spark: SparkSession, cat: TableStore, port: Int = 0,
     require(seg.length == 4, "path must be /v1/xyz/<instance>/<z>/<x>/<y>.png")
     val q = query(x)
     val png = XYZTile.getTile(spark, cat, seg(0),
-      x = seg(2).toLong, y = seg(3).toLong, z = seg(1).toInt,
-      minOverride = q.get("min").map(_.toDouble).getOrElse(0),
-      maxOverride = q.get("max").map(_.toDouble).getOrElse(0),
+      x = longParam("x", seg(2)), y = longParam("y", seg(3)), z = intParam("z", seg(1)),
+      minOverride = q.get("min").map(doubleParam("min", _)).getOrElse(0),
+      maxOverride = q.get("max").map(doubleParam("max", _)).getOrElse(0),
       recordIds = csv(q, "records"),
-      fromTime = q.get("from").map(ts), toTime = q.get("to").map(ts))
+      fromTime = q.get("from").map(ts("from", _)), toTime = q.get("to").map(ts("to", _)))
     png match {
       case Some(bytes) =>
         x.getResponseHeaders.set("Content-Type", "image/png")
@@ -221,7 +221,7 @@ final class HttpEdge(spark: SparkSession, cat: TableStore, port: Int = 0,
     * `limit=50000000` used to `.collect()` onto the serving driver). */
   private def datasetsHandler(x: HttpExchange): Unit = {
     val q = query(x)
-    val limit = q.get("limit").map(_.toInt).getOrElse(1000)
+    val limit = q.get("limit").map(intParam("limit", _)).getOrElse(1000)
     require(limit > 0 && limit <= MaxBrowseLimit,
       s"limit must be in [1, $MaxBrowseLimit]")
     val f = DatasetFilters(
@@ -229,10 +229,12 @@ final class HttpEdge(spark: SparkSession, cat: TableStore, port: Int = 0,
       instanceIds = csv(q, "instances"),
       recordIds = csv(q, "records"),
       geog = q.get("bbox").map { b =>
-        val Array(x0, y0, x1, y1) = b.split(',').map(_.toDouble)
-        GeomOps.polygonFromBBox(BBox(x0, y0, x1, y1))
+        val c = b.split(",", -1).map(doubleParam("bbox", _))
+        require(c.length == 4,
+          s"parameter 'bbox' must be 4 csv numbers x0,y0,x1,y1, got '$b'")
+        GeomOps.polygonFromBBox(BBox(c(0), c(1), c(2), c(3)))
       },
-      fromTime = q.get("from").map(ts), toTime = q.get("to").map(ts),
+      fromTime = q.get("from").map(ts("from", _)), toTime = q.get("to").map(ts("to", _)),
       limit = limit)
     val rows = CatalogQueries.findDatasets(spark, cat, f)
       .select("id", "record_id", "instance_id", "container_uri", "subdir",
@@ -258,22 +260,25 @@ final class HttpEdge(spark: SparkSession, cat: TableStore, port: Int = 0,
   private def cubeRequest(q: Map[String, String]): CubeRequest = {
     val tf = q.getOrElse("transform",
       throw new IllegalArgumentException("transform required (6 csv doubles)"))
-      .split(',').map(_.toDouble)
+      .split(',').map(doubleParam("transform", _))
     require(tf.length == 6, "transform must be 6 csv doubles (GDAL order)")
     CubeRequest(
       instanceIds = csv(q, "instances"),
       crs = q.getOrElse("crs",
         throw new IllegalArgumentException("crs required")),
       transform = Affine(tf(0), tf(1), tf(2), tf(3), tf(4), tf(5)),
-      width = q("width").toInt, height = q("height").toInt,
+      width = intParam("width", q.getOrElse("width",
+        throw new IllegalArgumentException("width required"))),
+      height = intParam("height", q.getOrElse("height",
+        throw new IllegalArgumentException("height required"))),
       recordIds = csv(q, "records"),
       tags = csv(q, "tags").map { kv =>
         val i = kv.indexOf(':'); require(i > 0, s"tag '$kv' is not k:v")
         kv.take(i) -> kv.drop(i + 1)
       }.toMap,
-      fromTime = q.get("from").map(ts), toTime = q.get("to").map(ts),
+      fromTime = q.get("from").map(ts("from", _)), toTime = q.get("to").map(ts("to", _)),
       resampling = q.get("resampling"),
-      validPixPc = q.get("valid_pix_pc").map(_.toInt).getOrElse(-1),
+      validPixPc = q.get("valid_pix_pc").map(intParam("valid_pix_pc", _)).getOrElse(-1),
       headersOnly = q.get("headers_only").contains("true"))
   }
 
@@ -301,8 +306,21 @@ final class HttpEdge(spark: SparkSession, cat: TableStore, port: Int = 0,
     os.flush()
   }
 
-  private def ts(s: String): java.sql.Timestamp =
-    java.sql.Timestamp.from(java.time.Instant.parse(s))
+  /** Typed parameter parsers: a malformed value fails the request with
+    * an IllegalArgumentException (400) naming the parameter. */
+  private def param[A](name: String, kind: String, raw: String)(parse: String => A): A =
+    try parse(raw)
+    catch {
+      case _: NumberFormatException | _: java.time.format.DateTimeParseException =>
+        throw new IllegalArgumentException(s"parameter '$name' must be $kind, got '$raw'")
+    }
+  private def intParam(name: String, raw: String): Int = param(name, "an integer", raw)(_.toInt)
+  private def longParam(name: String, raw: String): Long = param(name, "an integer", raw)(_.toLong)
+  private def doubleParam(name: String, raw: String): Double =
+    param(name, "a number", raw)(_.toDouble)
+  private def ts(name: String, raw: String): java.sql.Timestamp =
+    param(name, "an ISO-8601 instant", raw)(r =>
+      java.sql.Timestamp.from(java.time.Instant.parse(r)))
 
   private def csv(q: Map[String, String], key: String): Seq[String] =
     q.get(key).map(_.split(',').toIndexedSeq.filter(_.nonEmpty)).getOrElse(Nil)

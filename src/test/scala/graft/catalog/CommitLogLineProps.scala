@@ -2,7 +2,7 @@ package graft.catalog
 
 import graft.catalog.Catalog.FileMeta
 import org.scalacheck.{Gen, Prop, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, forAllNoShrink}
 
 /** Property coverage for the r14 commit-log line format: the sized
   * `ADD <rel> <size>[ s<min>:<max>]` operand must round-trip through
@@ -133,50 +133,46 @@ object CommitLogLineProps extends Properties("commitlog-lines") {
         out
       })
 
-  private val decodePool = java.util.concurrent.Executors.newCachedThreadPool { r =>
-    val t = new Thread(r, "clprops-decode"); t.setDaemon(true); t
-  }
+  private val bound = new graft.props.CaseBound("clprops-decode")
 
-  /** Feed one file through the replay decoder (10 s bound): None when
-    * it replays (or is judged unterminated), else what it threw. */
-  private def replayOutcome(bytes: Array[Byte], checkpoint: Boolean): Option[Throwable] = {
-    val run = decodePool.submit(new java.util.concurrent.Callable[Unit] {
-      def call(): Unit = Catalog.terminatedContent(bytes).foreach { lines =>
+  /** Feed one file through the replay decoder within the case bound and
+    * judge what it threw (None when it replays or is judged
+    * unterminated). */
+  private def replay(bytes: Array[Byte], checkpoint: Boolean)(
+      judge: Option[Throwable] => Prop): Prop =
+    bound.check {
+      Catalog.terminatedContent(bytes).foreach { lines =>
         val live = new scala.collection.mutable.HashSet[String]
         val tombs = new scala.collection.mutable.HashMap[String, Long]
         val meta = new scala.collection.mutable.HashMap[String, FileMeta]
         if (checkpoint) Catalog.foldCheckpoint("cp", lines, live, tombs, meta)
         else Catalog.foldCommit("c", lines, 0L, live, tombs, meta)
       }
-    })
-    try { run.get(10, java.util.concurrent.TimeUnit.SECONDS); None }
-    catch {
-      case e: java.util.concurrent.ExecutionException => Some(e.getCause)
-      case e: java.util.concurrent.TimeoutException => run.cancel(true); Some(e)
-    }
-  }
+    }(judge)
 
   private def replaysOrFailsTyped(bytes: Array[Byte], checkpoint: Boolean): Prop =
-    replayOutcome(bytes, checkpoint) match {
+    replay(bytes, checkpoint) {
       case None | Some(_: java.io.IOException) => Prop.passed
       case Some(e) => Prop.falsified :| s"escaped ${e.getClass.getName}: ${e.getMessage}"
     }
 
+  // no shrinking on the bounded properties: a shrunk file is a different
+  // input, and shrinking re-ran a hung case over and over
   property("a truncated or byte-flipped commit replays or fails typed") =
-    forAll(genCommitBytes.flatMap(genDamaged)) { damaged =>
+    forAllNoShrink(genCommitBytes.flatMap(genDamaged)) { damaged =>
       replaysOrFailsTyped(damaged, checkpoint = false)
     }
 
   property("a truncated or byte-flipped checkpoint replays or fails typed") =
-    forAll(genCheckpoint.flatMap(genDamaged)) { damaged =>
+    forAllNoShrink(genCheckpoint.flatMap(genDamaged)) { damaged =>
       replaysOrFailsTyped(damaged, checkpoint = true)
     }
 
   property("an undamaged commit or checkpoint replays") =
-    forAll(genCommitBytes, genCheckpoint) { (c, cp) =>
+    forAllNoShrink(genCommitBytes, genCheckpoint) { (c, cp) =>
       Prop(Catalog.terminatedContent(c).isDefined &&
-        Catalog.terminatedContent(cp).isDefined &&
-        replayOutcome(c, checkpoint = false).isEmpty &&
-        replayOutcome(cp, checkpoint = true).isEmpty)
+        Catalog.terminatedContent(cp).isDefined) &&
+        replay(c, checkpoint = false)(o => Prop(o.isEmpty) :| s"commit: $o") &&
+        replay(cp, checkpoint = true)(o => Prop(o.isEmpty) :| s"checkpoint: $o")
     }
 }

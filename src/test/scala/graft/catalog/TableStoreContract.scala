@@ -132,4 +132,62 @@ abstract class TableStoreContract extends AnyFunSuite with BeforeAndAfterAll {
     assert(all.count(_._2 == "cj3") == 3)
     assert(all(("seed1", "cj1", "DONE", "")) && all(("seed2", "cj2", "NEW", "")))
   }
+
+  /** Each row as (value, runtime class) pairs, binary values as byte
+    * sequences — a multiset key that also pins how values are typed. */
+  private def multiset(rs: Seq[Row]): Map[Seq[(Any, String)], Int] =
+    rs.map(_.toSeq.map {
+      case b: Array[Byte] => (b.toSeq, "bytes")
+      case null => (null, "null")
+      case v => (v, v.getClass.getName)
+    }).groupBy(identity).map { case (k, v) => k -> v.size }
+
+  test("rows equals read + partition and value filters + select + collect as a multiset") {
+    val s = newStore("rows")
+    s.append(tasksDf(Seq(("t1", "j1", "NEW", "a"), ("t2", "j2", "DONE", null),
+      ("t3", "j1", "NEW", "c"))), "tasks")
+    s.append(tasksDf(Seq(("t1", "j1", "NEW", "a"))), "tasks") // a duplicate row
+    s.append(tilesDf((0 until 12).map(i => s"mem://rows$i")), "tiles")
+    s.append(spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row("r1", "n1", java.sql.Timestamp.valueOf("2024-01-01 00:00:00.123456"),
+        Map("sat" -> "S2A"), "a1"),
+      Row("r2", "n2", java.sql.Timestamp.valueOf("2024-01-02 00:00:00"), null, null)), 1),
+      Schemas.all("records")), "records")
+    val bucket = Catalog.tilesBucketOf("mem://rows3").toString
+    val none = Map.empty[String, Set[String]]
+    val cases = Seq(
+      ("tasks", Seq("id", "state", "payload"), Nil, none),
+      ("tasks", Seq("payload", "job_id"), Seq("j1"), none),
+      ("tasks", Seq("job_id"), Seq("j1", "j2", "j9"), none),
+      ("tasks", Seq("id"), Seq("nope"), none),
+      ("tasks", Seq("id", "payload"), Seq("j1", "j2"), Map("payload" -> Set("a", "zz"))),
+      ("tasks", Seq("state", "id"), Nil, Map("id" -> Set("t1", "t2"), "state" -> Set("NEW"))),
+      ("tiles", Seq("container_uri", "transform", "payload"), Seq(bucket), none),
+      ("tiles", Seq("container_uri", "subdir", "payload"), Seq(bucket),
+        Map("container_uri" -> Set("mem://rows3", "mem://elsewhere"), "subdir" -> Set(""))),
+      ("tiles", Seq("subdir", "width", "crs"), Nil, none),
+      ("tiles", Seq("container_uri"), Nil, Map("container_uri" -> Set("mem://rows7"))),
+      ("records", Seq("tags", "datetime", "id", "aoi_id"), Nil, none),
+      ("records", Seq("id", "tags"), Nil, Map("id" -> Set.empty[String])),
+      ("palette", Seq("name", "points"), Nil, none)) // never written
+    for ((table, cols, pv, in) <- cases) {
+      val got = s.rows(spark, table, cols, pv, in)
+      assert(got.isDefined, s"$table $cols $pv $in: no answer within the default budget")
+      // the value filter checked by hand: a null is in no list
+      val want = s.collectRows(spark, table, cols, pv).filter(r => in.forall {
+        case (c, vs) => Option(r.getAs[String](c)).exists(vs) })
+      assert(multiset(got.get) == multiset(want), s"$table $cols $pv $in")
+    }
+    assert(s.rows(spark, "tiles", Seq("container_uri"), Nil,
+      Map("container_uri" -> Set("mem://rows7"))).get.size == 1)
+    // the bucket read returns that bucket's rows only
+    assert(s.rows(spark, "tiles", Seq("container_uri"), Seq(bucket)).get
+      .map(_.getString(0)).forall(u => Catalog.tilesBucketOf(u).toString == bucket))
+    assertThrows[Exception](s.rows(spark, "records", Seq("id"), Seq("x")))
+    // a value filter names a requested string data column
+    assertThrows[IllegalArgumentException](
+      s.rows(spark, "records", Seq("id"), Nil, Map("aoi_id" -> Set("a1"))))
+    assertThrows[IllegalArgumentException](
+      s.rows(spark, "tiles", Seq("width"), Nil, Map("width" -> Set("2"))))
+  }
 }

@@ -415,12 +415,11 @@ class GetCubeSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("prepare's variable cache invalidates when the variable tables change") {
     // warm the cache, then change the variable's resampling default via
     // the catalog's atomic rewrite — the next prepare must see the new
-    // value (directory-stamp keyed cache, GetCube.varCache)
+    // value (Catalog.rows answers are cached per commit-log snapshot)
     val before = GetCube.prepare(spark, cat, request())
     assert(before.resampling == graft.raster.Resampling.Near)
     assert(GetCube.prepare(spark, cat, request()).resampling == before.resampling)
     val vd = cat.read(spark, "variable_definitions").collect()
-    Thread.sleep(5) // mtime tick so the rewrite's stamp must differ
     cat.rewrite(spark.createDataFrame(
       spark.sparkContext.parallelize(vd.map { r =>
         Row(r.get(0), r.get(1), r.get(2), r.get(3), r.get(4), r.get(5),
@@ -429,7 +428,6 @@ class GetCubeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(GetCube.prepare(spark, cat, request()).resampling ==
       graft.raster.Resampling.Bilinear)
     // restore for any later suite ordering
-    Thread.sleep(5)
     cat.rewrite(spark.createDataFrame(
       spark.sparkContext.parallelize(vd.toSeq), Schemas.all("variable_definitions")),
       "variable_definitions")

@@ -10,7 +10,7 @@ import org.scalacheck.Prop.forAllNoShrink
   * [[TiffFixtures]] layout must each either parse and decode or fail with
   * the typed [[GeoTiff.MalformedTiff]] — never an escaping
   * IndexOutOfBounds/NegativeArraySize/OutOfMemory, never a hang (10 s
-  * bound per case). No shrinking: a shrunk byte array is a different
+  * [[graft.props.CaseBound]] per case). No shrinking: a shrunk byte array is a different
   * file, and each hung step would cost 10 s. Both head-buffer regimes
   * run: a 64-byte start that grows through every truncation point, and
   * the default that buffers a small file whole. */
@@ -46,34 +46,23 @@ object TiffMalformedProps extends Properties("tiff-malformed") {
         TiffFixtures.valueOf(bytes, field) + delta))
   }
 
-  private val decodePool = java.util.concurrent.Executors.newCachedThreadPool { r =>
-    val t = new Thread(r, "tiffprops-decode"); t.setDaemon(true); t
-  }
+  private val bound = new graft.props.CaseBound("tiffprops-decode")
 
   /** Open `bytes`, choose a level of every record and decode every
-    * directory (10 s bound): None when all of it succeeds, else what
-    * it threw. */
-  private def readOutcome(bytes: Array[Byte], initial: Int): Option[Throwable] = {
-    val run = decodePool.submit(new java.util.concurrent.Callable[Unit] {
-      def call(): Unit = {
-        val tiff = GeoTiff.open(GeoTiff.bytesReadAt(bytes), bytes.length.toLong, initial)
-        (0 until tiff.records).foreach(r => tiff.level(r, 2.0))
-        tiff.headers.indices.foreach(tiff.decode)
-      }
-    })
-    try { run.get(10, java.util.concurrent.TimeUnit.SECONDS); None }
-    catch {
-      case e: java.util.concurrent.ExecutionException => Some(e.getCause)
-      case e: java.util.concurrent.TimeoutException => run.cancel(true); Some(e)
-    }
-  }
+    * directory, within the case bound, and judge what it threw. */
+  private def read(bytes: Array[Byte], initial: Int)(judge: Option[Throwable] => Prop): Prop =
+    bound.check {
+      val tiff = GeoTiff.open(GeoTiff.bytesReadAt(bytes), bytes.length.toLong, initial)
+      (0 until tiff.records).foreach(r => tiff.level(r, 2.0))
+      tiff.headers.indices.foreach(tiff.decode)
+    }(judge)
 
   private val genInitial: Gen[Int] = Gen.oneOf(64, 256 * 1024)
 
   property("a truncated or byte-flipped TIFF parses or fails typed") =
     forAllNoShrink(genFixture.flatMap { case (name, b) => genDamaged(b).map(name -> _) },
         genInitial) { case ((name, damaged), initial) =>
-      readOutcome(damaged, initial) match {
+      read(damaged, initial) {
         case None | Some(_: GeoTiff.MalformedTiff) => Prop.passed
         case Some(e) =>
           Prop.falsified :| s"$name (${damaged.length} B, initial $initial): " +
@@ -83,7 +72,6 @@ object TiffMalformedProps extends Properties("tiff-malformed") {
 
   property("every undamaged fixture parses and decodes") =
     forAllNoShrink(genFixture, genInitial) { case ((name, bytes), initial) =>
-      val outcome = readOutcome(bytes, initial)
-      Prop(outcome.isEmpty) :| s"$name: $outcome"
+      read(bytes, initial)(outcome => Prop(outcome.isEmpty) :| s"$name: $outcome")
     }
 }

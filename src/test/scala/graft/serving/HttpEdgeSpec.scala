@@ -347,4 +347,32 @@ class HttpEdgeSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bad.statusCode() == 400)
     assert(new String(bad.body(), "UTF-8").contains("crs"))
   }
+
+  test("a short datasets bbox is a 400 naming the parameter, not a MatchError") {
+    val short = get("/v1/datasets?instances=i1&bbox=1,2,3")
+    assert(short.statusCode() == 400)
+    val msg = new String(short.body(), "UTF-8")
+    assert(msg.startsWith("IllegalArgumentException") && msg.contains("'bbox'"), msg)
+    val word = get("/v1/datasets?instances=i1&bbox=1,2,x,4")
+    assert(word.statusCode() == 400)
+    assert(new String(word.body(), "UTF-8").contains("'bbox'"))
+  }
+
+  test("xyz path segments and tile coordinates are validated with a typed 400") {
+    def fails(path: String, needle: String): Unit = {
+      val r = get(path)
+      assert(r.statusCode() == 400, path)
+      val msg = new String(r.body(), "UTF-8")
+      assert(msg.startsWith("IllegalArgumentException") && msg.contains(needle), s"$path: $msg")
+    }
+    fails("/v1/xyz/i1/seven/64/63.png", "'z'")
+    fails("/v1/xyz/i1/7/x64/63.png", "'x'")
+    fails("/v1/xyz/i1/7/64/6.3.png", "'y'")
+    fails("/v1/xyz/i1/7/64/63.png?min=low", "'min'")
+    // z=70 used to wrap 1L << z to the z6 tile; x/y must lie in [0, 2^z)
+    fails("/v1/xyz/i1/70/32/31.png", "zoom")
+    fails("/v1/xyz/i1/-1/0/0.png", "zoom")
+    fails("/v1/xyz/i1/7/128/63.png", "outside")
+    fails("/v1/xyz/i1/7/64/-1.png", "outside")
+  }
 }
