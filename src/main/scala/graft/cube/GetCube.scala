@@ -66,8 +66,18 @@ final case class Slice(
     valid_pixels: Long,
     error: String)
 
-/** GetCube — the read path (SURVEY §3.1) as one Catalyst plan feeding a
-  * typed mapGroups kernel:
+/** GetCube — the read path (SURVEY §3.1) in two arms that return the
+  * same slices in the same order.
+  *
+  * The driver arm ([[GetCube.driverTiles]], the one resolver of cubes and
+  * XYZ tiles): the request's tiles are resolved on the driver from
+  * [[TableStore.rows]] answers — the reference's one PostGIS lookup — and
+  * the merge kernel runs as one single-stage Spark job per partition of
+  * slice-ordered groups, with no shuffle and no query to plan. It serves
+  * every request whose reads fit their byte budgets.
+  *
+  * The Spark arm, for the rest: one Catalyst plan feeding a typed
+  * mapGroups kernel:
   *
   *   findDatasets (S1: filters + bbox/JTS spatial + broadcast records join)
   *   → join tiles on (container_uri, subdir)      [co-located by container]
@@ -181,20 +191,6 @@ object GetCube {
   private[cube] def datasetTiles(spark: SparkSession, cat: TableStore, req: CubeRequest,
       out: OutDescriptor): Dataset[DatasetTile] = {
     import spark.implicits._
-    val (footprint, refined) = spatialFilters(req, out)
-
-    val found = CatalogQueries.findDatasets(spark, cat, DatasetFilters(
-      status = Seq("ACTIVE"),
-      instanceIds = req.instanceIds,
-      recordIds = if (req.recordGroups.nonEmpty) req.recordGroups.flatten else req.recordIds,
-      recordTags = req.tags,
-      fromTime = req.fromTime, toTime = req.toTime,
-      geog = Some(footprint), refined = Some(refined),
-      // no global sort: the result is joined/grouped immediately and the
-      // kernel (or the headers agg) establishes its own order — see
-      // DatasetFilters.joinRecords
-      order = false, joinRecords = true))
-
     // group key: the record itself (A1) or the client-supplied group (A2).
     // Deliberately LAZY even though the frame feeds both the
     // level-selection pass and the final tile join: the duplicate
@@ -203,12 +199,7 @@ object GetCube {
     // request into a chain of small jobs and measured ~30% SLOWER
     // end-to-end (r11 profiling: plan-construction-only latency ~1.0 s
     // of a 1.6 s request).
-    val withGroup = if (req.recordGroups.nonEmpty) {
-      val groups = req.recordGroups.zipWithIndex
-        .flatMap { case (g, i) => g.map(r => (r, f"g$i%06d")) }
-        .toDF("__grid", "group_key")
-      found.join(broadcast(groups), col("record_id") === col("__grid")).drop("__grid")
-    } else found.withColumn("group_key", col("record_id"))
+    val withGroup = datasetTilesMetaOnly(spark, cat, req, out)
 
     // the broadcast hints below are applied only to BOUNDED requests
     // (record/group/tag/time-filtered): an instance-wide unfiltered cube
@@ -239,8 +230,193 @@ object GetCube {
       .as[DatasetTile]
   }
 
-  /** Full cube: plan + kernel + ordered emission. */
-  def cube(spark: SparkSession, cat: TableStore, req: CubeRequest): Dataset[Slice] = {
+  /** Compressed parquet bytes the payload read of one request may decode
+    * on the driver. Unlike the catalog reads it is not cached, and only
+    * the chosen levels' rows are kept as it streams, so it is bounded by
+    * latency alone: on 4 cores the driver arm was faster than the Spark
+    * plan at every size measured up to 256 MiB (770 vs 1333 ms p50 for
+    * one XYZ tile), and this stays at half that for boxes whose Spark plan
+    * runs on more cores. */
+  val PayloadBudgetBytes: Long = 128L << 20
+
+  private val DatasetCols = Seq("id", "record_id", "container_uri", "subdir",
+    "bands", "status", "dtype", "no_data", "min_value", "max_value",
+    "real_min_value", "real_max_value", "exponent", "geog_wkb", "shape_wkb",
+    "shape_srid", "bbox")
+  private val TileCols = Seq("container_uri", "subdir", "width", "height",
+    "bands", "dtype", "crs", "transform")
+
+  /** The `records` rows of one [[TableStore.rows]] answer by id, built
+    * once per answer: the answer instance is cached per commit-log
+    * snapshot, so it is the index's validity token, and a warm request
+    * looks up its datasets' records instead of scanning the table. */
+  @volatile private var recordIndex: (AnyRef, scala.collection.Map[String, List[org.apache.spark.sql.Row]]) =
+    (null, Map.empty)
+  private def recordsById(records: IndexedSeq[org.apache.spark.sql.Row]) = {
+    val cur = recordIndex
+    if (cur._1 eq records) cur._2
+    else {
+      // built back to front so each id's rows keep the answer's order
+      val idx = new scala.collection.mutable.HashMap[String, List[org.apache.spark.sql.Row]](
+        records.size * 2, scala.collection.mutable.HashMap.defaultLoadFactor)
+      records.reverseIterator.foreach { r =>
+        val id = r.getString(0)
+        idx.update(id, r :: idx.getOrElse(id, Nil))
+      }
+      recordIndex = (records, idx)
+      idx
+    }
+  }
+
+  /** The request's [[DatasetTile]]s resolved on the driver — as a
+    * multiset, the rows `datasetTiles(...).collect()` returns, group keys
+    * included — or None when a read is over budget. The one resolver of
+    * the XYZ tile and the cube:
+    *
+    *  1. the instances' ACTIVE datasets (their `datasets` partitions) that
+    *     pass findDatasets' filters: record ids (the groups' records when
+    *     `recordGroups` is set); the records inner join with its tag (Eq /
+    *     Like / ILike, through Spark's own LIKE regex) and time-window
+    *     filters; the bbox check, then `intersects` on the geographic
+    *     footprint and, for same-SRID shapes, `interiorIntersects` on the
+    *     native ring; each match once per group key of its record — the
+    *     record itself, or every `g<i>` group that lists it;
+    *  2. the tile metadata of their containers' buckets, and per (container,
+    *     base subdir) the level [[chooseLevel]] picks;
+    *  3. the chosen levels' rows with `payload`, from the row groups of
+    *     their buckets whose statistics admit the chosen containers. */
+  private[cube] def driverTiles(spark: SparkSession, cat: TableStore, req: CubeRequest,
+      out: OutDescriptor, budgetBytes: Long,
+      payloadBudgetBytes: Long): Option[Array[DatasetTile]] = {
+    import graft.catalog.Patterns
+    import graft.functions.SpatialRuntime
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.util.{DateTimeUtils, StringUtils}
+    def micros(t: java.sql.Timestamp): Long = DateTimeUtils.fromJavaTimestamp(t)
+
+    val records = cat.rows(spark, "records", Seq("id", "datetime", "tags"),
+      budgetBytes = budgetBytes).getOrElse(return None)
+    val datasets = cat.rows(spark, "datasets", DatasetCols, req.instanceIds.distinct,
+      budgetBytes = budgetBytes).getOrElse(return None)
+
+    // records side: the time window and tag filters, applied to the
+    // records of each candidate dataset
+    val from = req.fromTime.map(micros)
+    val to = req.toTime.map(micros)
+    // a key mapped to null passes the key-presence test only, as
+    // map_contains_key and element_at do
+    val tagTests: Seq[scala.collection.Map[String, String] => Boolean] = req.tags.toSeq.map {
+      case (k, v) if v.isEmpty => (t: scala.collection.Map[String, String]) => t.contains(k)
+      case (k, v) =>
+        val (value, op) = Patterns.parseLike(v)
+        val test: String => Boolean = op match {
+          case Patterns.Eq => _ == value
+          case Patterns.Like =>
+            val re = java.util.regex.Pattern.compile(StringUtils.escapeLikeRegex(value, '\\'))
+            re.matcher(_).matches()
+          case Patterns.ILike =>
+            val re = java.util.regex.Pattern.compile(
+              StringUtils.escapeLikeRegex(value.toLowerCase, '\\'))
+            s => re.matcher(s.toLowerCase(java.util.Locale.ROOT)).matches()
+        }
+        (t: scala.collection.Map[String, String]) => t.get(k).exists(s => s != null && test(s))
+    }
+    val byId = recordsById(records)
+    def recordTimes(id: String): Seq[java.sql.Timestamp] = byId.getOrElse(id, Nil).filter { r =>
+      val dt = micros(r.getTimestamp(1))
+      from.forall(dt >= _) && to.forall(dt <= _) && (tagTests.isEmpty || {
+        val tags = r.getMap[String, String](2)
+        tags != null && tagTests.forall(_(tags))
+      })
+    }.map(_.getTimestamp(1))
+
+    // group keys: the record itself, or each client group listing it
+    // (once per listing, as the Spark plan's join with the group rows)
+    val (ids, groupKeys): (Set[String], String => Seq[String]) =
+      if (req.recordGroups.isEmpty) (req.recordIds.toSet, Seq(_))
+      else {
+        val keys = groupListings(req).groupMap(_._1)(_._2)
+        (req.recordGroups.flatten.toSet, keys.getOrElse(_, Nil))
+      }
+
+    // datasets side: status, ids, spatial pair, then the records join
+    val (footprint, (nativeRing, srid)) = spatialFilters(req, out)
+    val fb = GeomOps.bbox(footprint)
+    val footprintWkb = GeomOps.writeWkb(footprint)
+    val nativeWkb = GeomOps.writeWkb(nativeRing)
+    def spatial(d: Row): Boolean = {
+      val b = d.getStruct(16)
+      b != null && !b.isNullAt(0) && !b.isNullAt(1) && !b.isNullAt(2) && !b.isNullAt(3) &&
+        b.getDouble(0) <= fb.xmax && b.getDouble(2) >= fb.xmin &&
+        b.getDouble(1) <= fb.ymax && b.getDouble(3) >= fb.ymin &&
+        !d.isNullAt(13) && SpatialRuntime.intersects(d.getAs[Array[Byte]](13), footprintWkb) &&
+        (d.isNullAt(15) || d.getInt(15) != srid ||
+          (!d.isNullAt(14) && SpatialRuntime.interiorIntersects(d.getAs[Array[Byte]](14), nativeWkb)))
+    }
+    val found = datasets.filter { d =>
+      "ACTIVE" == d.getString(5) && (ids.isEmpty || ids(d.getString(1))) && spatial(d)
+    }.flatMap(d => recordTimes(d.getString(1)).map(d -> _))
+    if (found.isEmpty) return Some(Array.empty)
+
+    // tile levels: each container's bucket metadata (cached per bucket),
+    // one chosen level per (container, base subdir)
+    val uris = found.map(_._1.getString(2)).toSet
+    val buckets = uris.map(u => Catalog.tilesBucketOf(u).toString).toSeq.sorted
+    val metaParts = buckets.iterator
+      .map(b => cat.rows(spark, "tiles", TileCols, Seq(b), budgetBytes = budgetBytes))
+      .takeWhile(_.isDefined).flatten.toSeq
+    if (metaParts.size < buckets.size) return None
+    val meta = metaParts.flatten.filter(t => uris(t.getString(0)))
+    def subdirOf(r: Row, i: Int): String = Option(r.getString(i)).getOrElse("")
+    val target = targetResDeg(out)
+    val chosen: Set[(String, String)] = meta
+      .groupBy(t => (t.getString(0), baseSubdir(subdirOf(t, 1))))
+      .iterator.map { case ((uri, _), levels) =>
+        uri -> chooseLevel(levels.map(t =>
+          (subdirOf(t, 1), t.getString(6), t.getSeq[Double](7)(1))), target)._1
+      }.toSet
+    val payloadBuckets = chosen.map(k => Catalog.tilesBucketOf(k._1).toString).toSeq.sorted
+    // the chosen containers and levels prune row groups by their
+    // statistics; a null subdir (read as "") matches no IN list, so the
+    // subdir list is only passed when no level has one
+    val levelIn = Map("container_uri" -> chosen.map(_._1)) ++
+      (if (meta.exists(_.isNullAt(1))) Nil else Seq("subdir" -> chosen.map(_._2)))
+    val levelRows = cat.rows(spark, "tiles", TileCols :+ "payload", payloadBuckets,
+      levelIn, payloadBudgetBytes).getOrElse(return None)
+      .filter(t => chosen((t.getString(0), subdirOf(t, 1))))
+      .groupBy(t => (t.getString(0), baseSubdir(subdirOf(t, 1))))
+
+    Some(found.flatMap { case (d, datetime) =>
+      for {
+        key <- groupKeys(d.getString(1))
+        t <- levelRows.getOrElse((d.getString(2), subdirOf(d, 3)), Nil)
+      } yield DatasetTile(
+        group_key = key, record_id = d.getString(1),
+        datetime = datetime, dataset_id = d.getString(0),
+        bands = Option(d.getSeq[Int](4)).map(_.toSeq).orNull,
+        dtype = d.getString(6), no_data = d.getDouble(7),
+        min_value = d.getDouble(8), max_value = d.getDouble(9),
+        real_min_value = d.getDouble(10), real_max_value = d.getDouble(11),
+        exponent = d.getDouble(12),
+        t_width = t.getInt(2), t_height = t.getInt(3), t_bands = t.getInt(4),
+        t_dtype = t.getString(5), t_crs = t.getString(6),
+        t_transform = t.getSeq[Double](7).toSeq,
+        payload = t.getAs[Array[Byte]](8))
+    }.toArray)
+  }
+
+  /** Full cube: tiles + kernel + ordered emission. Within the driver
+    * arm's budgets the tiles are resolved on the driver ([[driverTiles]])
+    * and the kernel runs as shuffle-free jobs ([[kernelJobs]]); a request
+    * any of whose reads is over budget runs the Spark plan instead. */
+  def cube(spark: SparkSession, cat: TableStore, req: CubeRequest): Dataset[Slice] =
+    cube(spark, cat, req, TableStore.RowsBudgetBytes, PayloadBudgetBytes)
+
+  /** [[cube]] with the driver arm's byte budgets, for the catalog reads
+    * and for the payload read: 0 sends every non-empty request to the
+    * Spark plan. */
+  private[graft] def cube(spark: SparkSession, cat: TableStore, req: CubeRequest,
+      budgetBytes: Long, payloadBudgetBytes: Long): Dataset[Slice] = {
     import spark.implicits._
     val out = prepare(spark, cat, req)
 
@@ -262,9 +438,39 @@ object GetCube {
         .as[Slice]
     }
 
-    val grouped = datasetTiles(spark, cat, req, out).groupByKey(_.group_key)
-    grouped.mapGroups { (key, it) => buildSlice(key, it, out) }
-      .orderBy(col("min_datetime"), col("group_key"))
+    driverTiles(spark, cat, req, out, budgetBytes, payloadBudgetBytes) match {
+      case Some(tiles) => kernelJobs(spark, tiles, out)
+      case None =>
+        datasetTiles(spark, cat, req, out).groupByKey(_.group_key)
+          .mapGroups { (key, it) => buildSlice(key, it, out) }
+          .orderBy(col("min_datetime"), col("group_key"))
+    }
+  }
+
+  /** The kernel over driver-resolved tiles, with no shuffle and no join
+    * to plan: the groups sorted as the Spark plan sorts slices
+    * (min_datetime, then group key — full-microsecond timestamps, unsigned
+    * UTF-8 keys), cut into at most one contiguous run per core, one
+    * [[buildSlice]] per group. Read partition by partition in
+    * order (toLocalIterator, the HTTP edge's pipelined partitions), the
+    * slices come out in the Spark plan's order, one single-stage job per
+    * partition. */
+  private def kernelJobs(spark: SparkSession, tiles: Array[DatasetTile],
+      out: OutDescriptor): Dataset[Slice] = {
+    import graft.consolidation.Consolidation.utf8Compare
+    import spark.implicits._
+    val groups = tiles.groupBy(_.group_key).toArray.map { case (k, ts) =>
+      (k, ts, ts.iterator.map(_.datetime).reduce((x, y) => if (x.compareTo(y) <= 0) x else y))
+    }.sortWith { (a, b) =>
+      val c = a._3.compareTo(b._3)
+      if (c != 0) c < 0 else utf8Compare(a._1, b._1) < 0
+    }.map { case (k, ts, _) => (k, ts) }
+    val sc = spark.sparkContext
+    val slices =
+      if (groups.isEmpty) sc.emptyRDD[Slice]
+      else sc.parallelize(groups.toSeq, math.min(groups.length, sc.defaultParallelism))
+        .mapPartitions(_.map { case (k, ts) => buildSlice(k, ts.iterator, out) })
+    spark.createDataset(slices)
   }
 
   /** DownloadCube (reference downloader.go:47-158): replay the merge
@@ -347,6 +553,13 @@ object GetCube {
   private[cube] def boundedForBroadcast(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.stats.sizeInBytes < BigInt(1L << 28)
 
+  /** (record id, group key) per listing of a record in the request's
+    * client groups; the i-th group's key is `g<i>`, zero-padded. */
+  private def groupListings(req: CubeRequest): Seq[(String, String)] =
+    req.recordGroups.zipWithIndex.flatMap { case (g, i) => g.map(r => (r, f"g$i%06d")) }
+
+  /** The request's datasets (findDatasets with the records join), one
+    * row per group key — the record, or each client group listing it. */
   private def datasetTilesMetaOnly(spark: SparkSession, cat: TableStore,
       req: CubeRequest, out: OutDescriptor): DataFrame = {
     val (footprint, refined) = spatialFilters(req, out)
@@ -361,9 +574,7 @@ object GetCube {
       order = false, joinRecords = true))
     if (req.recordGroups.nonEmpty) {
       import spark.implicits._
-      val groups = req.recordGroups.zipWithIndex
-        .flatMap { case (g, i) => g.map(r => (r, f"g$i%06d")) }
-        .toDF("__grid", "group_key")
+      val groups = groupListings(req).toDF("__grid", "group_key")
       found.join(broadcast(groups), col("record_id") === col("__grid")).drop("__grid")
     } else found.withColumn("group_key", col("record_id"))
   }

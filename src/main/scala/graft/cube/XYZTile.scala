@@ -1,22 +1,22 @@
 package graft.cube
 
 import graft.catalog.TableStore
-import graft.core.{DataFormat, DataMapping, DType, NumRange}
+import graft.core.{DataFormat, DataMapping, NumRange}
 import graft.layout.Grid
 import graft.raster.{Bitmap, OutDescriptor}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** The interactive XYZ tile read path (§3.3, reference
   * internal/svc/catalog.go:415-506 + getMosaic :629-668): z/x/y →
   * WebMercator 256×256 descriptor → the matching records' tiles (all
   * merged into ONE mosaic) → optional min/max rescale → palette → PNG.
   *
-  * The tiles are resolved on the DRIVER through [[TableStore.rows]] — the
-  * reference's one PostGIS lookup plus in-process reads — so a warm tile
-  * starts no Spark job and plans no query; when any of those reads would
-  * decode more than the rows budget of compressed parquet, the tile runs
-  * the GetCube Spark plan instead, unchanged. */
+  * The tiles are resolved on the DRIVER by the cube's resolver,
+  * [[GetCube.driverTiles]] — the reference's one PostGIS lookup plus
+  * in-process reads — and merged there, so a warm tile starts no Spark
+  * job and plans no query; when any of those reads would decode more than
+  * its budget of compressed parquet, the tile runs the GetCube Spark plan
+  * instead, unchanged. */
 object XYZTile {
 
   /** Largest zoom level served: at z30 a tile is ~1.5 cm across, and
@@ -49,16 +49,7 @@ object XYZTile {
       fromTime: Option[java.sql.Timestamp] = None,
       toTime: Option[java.sql.Timestamp] = None): Option[Array[Byte]] =
     tile(spark, cat, instanceId, x, y, z, minOverride, maxOverride, palette,
-      recordIds, tags, fromTime, toTime, TableStore.RowsBudgetBytes, PayloadBudgetBytes)
-
-  /** Compressed parquet bytes the payload read of one tile may decode on
-    * the driver. Unlike the catalog reads it is not cached, and only the
-    * chosen levels' rows are kept as it streams, so it is bounded by
-    * latency alone: on 4 cores the driver arm was faster than the Spark
-    * plan at every size measured up to 256 MiB (770 vs 1333 ms p50), and
-    * this stays at half that for boxes whose Spark plan runs on more
-    * cores. */
-  val PayloadBudgetBytes: Long = 128L << 20
+      recordIds, tags, fromTime, toTime, TableStore.RowsBudgetBytes, GetCube.PayloadBudgetBytes)
 
   /** [[getTile]] with the driver arm's byte budgets, for the catalog
     * reads and for the payload read: 0 sends every non-empty read to the
@@ -85,7 +76,7 @@ object XYZTile {
     val out = GetCube.prepare(spark, cat, req)
     // the driver arm answers from TableStore.rows; any read over budget
     // runs the Spark plan instead
-    val tiles = driverTiles(spark, cat, req, out, budgetBytes, payloadBudgetBytes)
+    val tiles = GetCube.driverTiles(spark, cat, req, out, budgetBytes, payloadBudgetBytes)
       .getOrElse(GetCube.datasetTiles(spark, cat, req, out).collect())
     if (tiles.isEmpty) return None
 
@@ -112,162 +103,6 @@ object XYZTile {
           out.mapping.rangeExt, out.mapping.exponent)
       else out.mapping
     Some(Palette.toPng(bm, mapping, pal))
-  }
-
-  private val DatasetCols = Seq("id", "record_id", "container_uri", "subdir",
-    "bands", "status", "dtype", "no_data", "min_value", "max_value",
-    "real_min_value", "real_max_value", "exponent", "geog_wkb", "shape_wkb",
-    "shape_srid", "bbox")
-  private val TileCols = Seq("container_uri", "subdir", "width", "height",
-    "bands", "dtype", "crs", "transform")
-
-  /** The `records` rows of one [[TableStore.rows]] answer by id, built
-    * once per answer: the answer instance is cached per commit-log
-    * snapshot, so it is the index's validity token, and a warm tile looks
-    * up its datasets' records instead of scanning the table. */
-  @volatile private var recordIndex: (AnyRef, scala.collection.Map[String, List[org.apache.spark.sql.Row]]) =
-    (null, Map.empty)
-  private def recordsById(records: IndexedSeq[org.apache.spark.sql.Row]) = {
-    val cur = recordIndex
-    if (cur._1 eq records) cur._2
-    else {
-      // built back to front so each id's rows keep the answer's order
-      val idx = new scala.collection.mutable.HashMap[String, List[org.apache.spark.sql.Row]](
-        records.size * 2, scala.collection.mutable.HashMap.defaultLoadFactor)
-      records.reverseIterator.foreach { r =>
-        val id = r.getString(0)
-        idx.update(id, r :: idx.getOrElse(id, Nil))
-      }
-      recordIndex = (records, idx)
-      idx
-    }
-  }
-
-  /** The tile's [[DatasetTile]]s resolved on the driver — the same rows
-    * `GetCube.datasetTiles(...).collect()` returns, in the order the
-    * mosaic does not depend on — or None when a read is over budget:
-    *
-    *  1. the instance's ACTIVE datasets (its `datasets` partition) that
-    *     pass findDatasets' filters: record ids; the records inner join
-    *     with its tag (Eq / Like / ILike, through Spark's own LIKE regex)
-    *     and time-window filters; the bbox check, then `intersects` on the
-    *     geographic footprint and, for same-SRID shapes, `interiorIntersects`
-    *     on the native ring;
-    *  2. the tile metadata of their containers' buckets, and per (container,
-    *     base subdir) the level [[GetCube.chooseLevel]] picks;
-    *  3. the chosen levels' rows with `payload`, from the row groups of
-    *     their buckets whose statistics admit the chosen containers. */
-  private def driverTiles(spark: SparkSession, cat: TableStore, req: CubeRequest,
-      out: OutDescriptor, budgetBytes: Long,
-      payloadBudgetBytes: Long): Option[Array[DatasetTile]] = {
-    import graft.catalog.{Catalog, Patterns}
-    import graft.functions.SpatialRuntime
-    import graft.geo.GeomOps
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.catalyst.util.{DateTimeUtils, StringUtils}
-    def micros(t: java.sql.Timestamp): Long = DateTimeUtils.fromJavaTimestamp(t)
-
-    val instanceId = req.instanceIds.head
-    val records = cat.rows(spark, "records", Seq("id", "datetime", "tags"),
-      budgetBytes = budgetBytes).getOrElse(return None)
-    val datasets = cat.rows(spark, "datasets", DatasetCols, Seq(instanceId),
-      budgetBytes = budgetBytes).getOrElse(return None)
-
-    // records side: the time window and tag filters, applied to the
-    // records of each candidate dataset
-    val from = req.fromTime.map(micros)
-    val to = req.toTime.map(micros)
-    // a key mapped to null passes the key-presence test only, as
-    // map_contains_key and element_at do
-    val tagTests: Seq[scala.collection.Map[String, String] => Boolean] = req.tags.toSeq.map {
-      case (k, v) if v.isEmpty => (t: scala.collection.Map[String, String]) => t.contains(k)
-      case (k, v) =>
-        val (value, op) = Patterns.parseLike(v)
-        val test: String => Boolean = op match {
-          case Patterns.Eq => _ == value
-          case Patterns.Like =>
-            val re = java.util.regex.Pattern.compile(StringUtils.escapeLikeRegex(value, '\\'))
-            re.matcher(_).matches()
-          case Patterns.ILike =>
-            val re = java.util.regex.Pattern.compile(
-              StringUtils.escapeLikeRegex(value.toLowerCase, '\\'))
-            s => re.matcher(s.toLowerCase(java.util.Locale.ROOT)).matches()
-        }
-        (t: scala.collection.Map[String, String]) => t.get(k).exists(s => s != null && test(s))
-    }
-    val byId = recordsById(records)
-    def recordTimes(id: String): Seq[java.sql.Timestamp] = byId.getOrElse(id, Nil).filter { r =>
-      val dt = micros(r.getTimestamp(1))
-      from.forall(dt >= _) && to.forall(dt <= _) && (tagTests.isEmpty || {
-        val tags = r.getMap[String, String](2)
-        tags != null && tagTests.forall(_(tags))
-      })
-    }.map(_.getTimestamp(1))
-
-    // datasets side: status, ids, spatial pair, then the records join
-    val (footprint, (nativeRing, srid)) = GetCube.spatialFilters(req, out)
-    val fb = GeomOps.bbox(footprint)
-    val footprintWkb = GeomOps.writeWkb(footprint)
-    val nativeWkb = GeomOps.writeWkb(nativeRing)
-    val ids = req.recordIds.toSet
-    def spatial(d: Row): Boolean = {
-      val b = d.getStruct(16)
-      b != null && !b.isNullAt(0) && !b.isNullAt(1) && !b.isNullAt(2) && !b.isNullAt(3) &&
-        b.getDouble(0) <= fb.xmax && b.getDouble(2) >= fb.xmin &&
-        b.getDouble(1) <= fb.ymax && b.getDouble(3) >= fb.ymin &&
-        !d.isNullAt(13) && SpatialRuntime.intersects(d.getAs[Array[Byte]](13), footprintWkb) &&
-        (d.isNullAt(15) || d.getInt(15) != srid ||
-          (!d.isNullAt(14) && SpatialRuntime.interiorIntersects(d.getAs[Array[Byte]](14), nativeWkb)))
-    }
-    val found = datasets.filter { d =>
-      "ACTIVE" == d.getString(5) && (ids.isEmpty || ids(d.getString(1))) && spatial(d)
-    }.flatMap(d => recordTimes(d.getString(1)).map(d -> _))
-    if (found.isEmpty) return Some(Array.empty)
-
-    // tile levels: each container's bucket metadata (cached per bucket),
-    // one chosen level per (container, base subdir)
-    val uris = found.map(_._1.getString(2)).toSet
-    val buckets = uris.map(u => Catalog.tilesBucketOf(u).toString).toSeq.sorted
-    val metaParts = buckets.iterator
-      .map(b => cat.rows(spark, "tiles", TileCols, Seq(b), budgetBytes = budgetBytes))
-      .takeWhile(_.isDefined).flatten.toSeq
-    if (metaParts.size < buckets.size) return None
-    val meta = metaParts.flatten.filter(t => uris(t.getString(0)))
-    def subdirOf(r: Row, i: Int): String = Option(r.getString(i)).getOrElse("")
-    val target = GetCube.targetResDeg(out)
-    val chosen: Set[(String, String)] = meta
-      .groupBy(t => (t.getString(0), GetCube.baseSubdir(subdirOf(t, 1))))
-      .iterator.map { case ((uri, _), levels) =>
-        uri -> GetCube.chooseLevel(levels.map(t =>
-          (subdirOf(t, 1), t.getString(6), t.getSeq[Double](7)(1))), target)._1
-      }.toSet
-    val payloadBuckets = chosen.map(k => Catalog.tilesBucketOf(k._1).toString).toSeq.sorted
-    // the chosen containers and levels prune row groups by their
-    // statistics; a null subdir (read as "") matches no IN list, so the
-    // subdir list is only passed when no level has one
-    val levelIn = Map("container_uri" -> chosen.map(_._1)) ++
-      (if (meta.exists(_.isNullAt(1))) Nil else Seq("subdir" -> chosen.map(_._2)))
-    val levelRows = cat.rows(spark, "tiles", TileCols :+ "payload", payloadBuckets,
-      levelIn, payloadBudgetBytes).getOrElse(return None)
-      .filter(t => chosen((t.getString(0), subdirOf(t, 1))))
-      .groupBy(t => (t.getString(0), GetCube.baseSubdir(subdirOf(t, 1))))
-
-    Some(found.flatMap { case (d, datetime) =>
-      levelRows.getOrElse((d.getString(2), subdirOf(d, 3)), Nil).map { t =>
-        DatasetTile(
-          group_key = d.getString(1), record_id = d.getString(1),
-          datetime = datetime, dataset_id = d.getString(0),
-          bands = Option(d.getSeq[Int](4)).map(_.toSeq).orNull,
-          dtype = d.getString(6), no_data = d.getDouble(7),
-          min_value = d.getDouble(8), max_value = d.getDouble(9),
-          real_min_value = d.getDouble(10), real_max_value = d.getDouble(11),
-          exponent = d.getDouble(12),
-          t_width = t.getInt(2), t_height = t.getInt(3), t_bands = t.getInt(4),
-          t_dtype = t.getString(5), t_crs = t.getString(6),
-          t_transform = t.getSeq[Double](7).toSeq,
-          payload = t.getAs[Array[Byte]](8))
-      }
-    }.toArray)
   }
 
   /** Catalog-FREE tile serving straight off one container file: range-read

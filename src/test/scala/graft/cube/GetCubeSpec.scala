@@ -87,13 +87,14 @@ class GetCubeSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("ServingSessionConfs (AQE off) serve byte-identical slices") {
     // the recommended latency-serving session settings are a supported
     // execution mode, not just a bench trick: the same request must
-    // produce byte-identical slices under them
-    val base = GetCube.cube(spark, cat, request()).collect()
+    // produce byte-identical slices under them. Zero budgets keep the
+    // request on the Spark plan, the arm the settings act on
+    val base = GetCube.cube(spark, cat, request(), 0L, 0L).collect()
     val saved = GetCube.ServingSessionConfs.keys
       .map(k => k -> spark.conf.getOption(k)).toMap
     GetCube.ServingSessionConfs.foreach { case (k, v) => spark.conf.set(k, v) }
     val served =
-      try GetCube.cube(spark, cat, request()).collect()
+      try GetCube.cube(spark, cat, request(), 0L, 0L).collect()
       finally saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)
@@ -193,8 +194,10 @@ class GetCubeSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("plan shape: one data shuffle + ordered emission, filters reach parquet") {
     // the scale contract (README "Scale design"): tile payloads move through
     // exactly ONE hash shuffle (the group key the mosaic needs) plus the
-    // final range partition for ordered slices — broadcasts don't count
-    val plan = GetCube.cube(spark, cat, request()).queryExecution.executedPlan.toString
+    // final range partition for ordered slices — broadcasts don't count.
+    // Zero budgets select the Spark plan: the driver arm plans no join
+    val plan = GetCube.cube(spark, cat, request(), 0L, 0L)
+      .queryExecution.executedPlan.toString
     val hashExchanges = "Exchange hashpartitioning\\(([a-z_]+)".r
       .findAllMatchIn(plan).map(_.group(1)).toSeq.sorted
     val rangeEx = "Exchange rangepartitioning".r.findAllIn(plan).size

@@ -175,7 +175,7 @@ class PlanShapeSpec extends AnyFunSuite {
       recordIds = Seq("r1", "r2", "r3"))
     spark.conf.set(graft.cube.GetCube.BucketPruneMinBytesConf, "0")
     val cube =
-      try graft.cube.GetCube.cube(spark, cat, req)
+      try graft.cube.GetCube.cube(spark, cat, req, 0L, 0L) // the Spark plan
       finally spark.conf.unset(graft.cube.GetCube.BucketPruneMinBytesConf)
     // descend through AQE wrappers and subqueries — the cube plan is
     // adaptive, so its file scans are not leaves of the outer plan
@@ -240,7 +240,7 @@ class PlanShapeSpec extends AnyFunSuite {
       recordIds = Seq("r1", "r2", "r3"))
     spark.conf.set(graft.cube.GetCube.BucketPruneMinBytesConf, "0")
     val cube =
-      try graft.cube.GetCube.cube(spark, cat, req)
+      try graft.cube.GetCube.cube(spark, cat, req, 0L, 0L) // the Spark plan
       finally spark.conf.unset(graft.cube.GetCube.BucketPruneMinBytesConf)
     def scansOf(p: org.apache.spark.sql.execution.SparkPlan):
         Seq[org.apache.spark.sql.execution.FileSourceScanExec] = p match {

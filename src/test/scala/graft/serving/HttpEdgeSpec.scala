@@ -375,4 +375,120 @@ class HttpEdgeSpec extends AnyFunSuite with BeforeAndAfterAll {
     fails("/v1/xyz/i1/7/128/63.png", "outside")
     fails("/v1/xyz/i1/7/64/-1.png", "outside")
   }
+
+  test("a server fault is a 500, not a bad request") {
+    // a store that fails every read: the request is valid, the server is not
+    val broken = new TableStore {
+      def root: String = cat.root
+      def read(spark: SparkSession, table: String) =
+        throw new IllegalStateException(s"store offline reading $table")
+      def append(df: org.apache.spark.sql.DataFrame, table: String): Unit = ???
+      def rewrite(df: org.apache.spark.sql.DataFrame, table: String): Unit = ???
+      def deleteWhere(spark: SparkSession, table: String,
+          uris: org.apache.spark.sql.DataFrame, uriCol: String): Unit = ???
+      def updatePartitions(spark: SparkSession, table: String, partValues: Seq[String],
+          transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = ???
+    }
+    val faulty = new HttpEdge(spark, broken)
+    val faultyPort = faulty.start()
+    def send(path: String) = client.send(
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$faultyPort$path")).build(),
+      HttpResponse.BodyHandlers.ofByteArray())
+    try {
+      for (path <- Seq(s"/v1/cube?$cubeQuery&records=r1", "/v1/xyz/i1/7/64/63.png")) {
+        val r = send(path)
+        assert(r.statusCode() == 500, path)
+        val msg = new String(r.body(), "UTF-8")
+        assert(msg.startsWith("IllegalStateException") && msg.contains("store offline"), msg)
+      }
+      // a request that fails validation on the same broken store stays a 400
+      assert(send(s"/v1/cube?$cubeQuery&compression=11").statusCode() == 400)
+    } finally faulty.stop()
+  }
+
+  test("edge sockets run with TCP_NODELAY") {
+    // read once by the JDK server when its configuration class loads; the
+    // edge sets it before it creates its first server
+    assert(System.getProperty("sun.net.httpserver.nodelay") == "true")
+  }
+
+  private val allRecords = CubeRequest(instanceIds = Seq("i1"), crs = "EPSG:4326",
+    transform = Affine.northUp(0, 2.56, 0.01, -0.01), width = 64, height = 64,
+    recordIds = (1 to 5).map(i => s"r$i"))
+
+  test("a warm in-budget cube streams as single-stage, shuffle-free kernel jobs") {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    def drain(): Vector[graft.cube.Slice] = {
+      val pipe = new HttpEdge.PipelinedPartitions(GetCube.cube(spark, cat, allRecords),
+        HttpEdge.StreamPipelineDepth, HttpEdge.RequestComputeTimeoutMs)
+      try pipe.iterator.toVector finally pipe.cancel()
+    }
+    val warm = drain()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("cube-kernel") => jobs.add(e); e.stageIds.foreach(stages.add)
+          case Some("cube-marker") => marker.countDown()
+          case _ =>
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          shuffleBytes.addAndGet(e.taskMetrics.shuffleReadMetrics.totalBytesRead +
+            e.taskMetrics.shuffleWriteMetrics.bytesWritten): Unit
+    }
+    sc.addSparkListener(listener)
+    val served =
+      try {
+        sc.setJobGroup("cube-kernel", "in-budget cube")
+        val served = try drain() finally sc.clearJobGroup()
+        // the listener bus is FIFO: once the marker job's start arrives,
+        // every event of the cube's jobs has been delivered
+        sc.setJobGroup("cube-marker", "flush")
+        try spark.range(1).count() finally sc.clearJobGroup()
+        assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
+        served
+      } finally sc.removeSparkListener(listener)
+    assert(served.map(_.group_key) == (1 to 5).map(i => s"r$i"))
+    assert(served.map(_.payload.toSeq) == warm.map(_.payload.toSeq))
+    val js = jobs.toArray(Array.empty[SparkListenerJobStart]).toSeq
+    assert(js.nonEmpty && js.size <= sc.defaultParallelism,
+      s"${js.size} jobs at parallelism ${sc.defaultParallelism}")
+    js.foreach { j =>
+      assert(j.stageInfos.size == 1 && j.stageInfos.head.numTasks == 1,
+        s"job ${j.jobId}: ${j.stageInfos.map(_.numTasks)}")
+    }
+    assert(shuffleBytes.get == 0L)
+  }
+
+  test("the compute deadline cancels an in-budget cube's kernel jobs") {
+    // a kernel of 1 Mpix bilinear slices against a 1 ms deadline (each
+    // slice under 1 MiB, so a killed task leaves no result block behind)
+    val big = allRecords.copy(transform = Affine.northUp(0, 2.56, 2.56 / 1000, -2.56 / 1000),
+      width = 1000, height = 1000, resampling = Some("bilinear"))
+    val sc = spark.sparkContext
+    sc.setJobGroup("cube-deadline", "in-budget cube against a 1 ms deadline")
+    try {
+      val pipe = new HttpEdge.PipelinedPartitions(GetCube.cube(spark, cat, big),
+        HttpEdge.StreamPipelineDepth, computeTimeoutMs = 1L)
+      intercept[HttpEdge.ComputeDeadlineException](pipe.iterator.hasNext)
+    } finally sc.clearJobGroup()
+    val ids = sc.statusTracker.getJobIdsForGroup("cube-deadline")
+    assert(ids.nonEmpty, "the cube submitted no kernel job")
+    // the driver arm's kernel jobs, each a single stage
+    assert(ids.forall(id => sc.statusTracker.getJobInfo(id).forall(_.stageIds.length == 1)))
+    val deadline = System.nanoTime() + 15e9.toLong
+    def allDone: Boolean = ids.forall { id =>
+      sc.statusTracker.getJobInfo(id).forall(
+        _.status() != org.apache.spark.JobExecutionStatus.RUNNING)
+    }
+    while (!allDone && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(allDone, "the cube's kernel jobs were not cancelled at the deadline")
+    assert(ids.exists(id => sc.statusTracker.getJobInfo(id)
+      .exists(_.status() == org.apache.spark.JobExecutionStatus.FAILED)))
+  }
 }
