@@ -84,18 +84,7 @@ object CatalogQueries {
         .select(col("id").as("__rid"), col("datetime"), col("tags"))
       f.fromTime.foreach(t => r = r.filter(col("datetime") >= t))
       f.toTime.foreach(t => r = r.filter(col("datetime") <= t))
-      for ((k, v) <- f.recordTags) {
-        if (v.isEmpty) r = r.filter(map_contains_key(col("tags"), lit(k)))
-        else {
-          val (value, op) = Patterns.parseLike(v)
-          val tagVal = element_at(col("tags"), k)
-          r = op match {
-            case Patterns.Eq => r.filter(tagVal === value)
-            case Patterns.Like => r.filter(tagVal.like(value))
-            case Patterns.ILike => r.filter(lower(tagVal).like(value.toLowerCase))
-          }
-        }
-      }
+      r = filterTags(r, f.recordTags)
       d.join(broadcast(r), d("record_id") === r("__rid"), "inner").drop("tags")
     } else d
 
@@ -128,18 +117,7 @@ object CatalogQueries {
       offset: Int = 0, limit: Int = 0): DataFrame = {
     var r = cat.read(spark, "records")
     Patterns.predicate(col("name"), namePatterns).foreach(p => r = r.filter(p))
-    for ((k, v) <- tags) {
-      if (v.isEmpty) r = r.filter(map_contains_key(col("tags"), lit(k)))
-      else {
-        val (value, op) = Patterns.parseLike(v)
-        val tagVal = element_at(col("tags"), k)
-        r = op match {
-          case Patterns.Eq => r.filter(tagVal === value)
-          case Patterns.Like => r.filter(tagVal.like(value))
-          case Patterns.ILike => r.filter(lower(tagVal).like(value.toLowerCase))
-        }
-      }
-    }
+    r = filterTags(r, tags)
     fromTime.foreach(t => r = r.filter(col("datetime") >= t))
     toTime.foreach(t => r = r.filter(col("datetime") <= t))
     if (aoi.isDefined || withAoi) {
@@ -158,6 +136,24 @@ object CatalogQueries {
     if (limit > 0) r = r.limit(limit)
     r
   }
+
+  /** Records whose `tags` map matches every entry of `tags` (the
+    * reference's tag clauses, pg_records.go:80-154): an empty value
+    * tests key presence, any other is an Eq/Like/ILike pattern split by
+    * [[Patterns.parseLike]]. */
+  private def filterTags(records: DataFrame, tags: Map[String, String]): DataFrame =
+    tags.foldLeft(records) { case (r, (k, v)) =>
+      if (v.isEmpty) r.filter(map_contains_key(col("tags"), lit(k)))
+      else {
+        val (value, op) = Patterns.parseLike(v)
+        val tagVal = element_at(col("tags"), k)
+        r.filter(op match {
+          case Patterns.Eq => tagVal === value
+          case Patterns.Like => tagVal.like(value)
+          case Patterns.ILike => lower(tagVal).like(value.toLowerCase)
+        })
+      }
+    }
 
   /** ReadRecords/ReadContainers — point lookup by id list preserving input
     * order with dedup (pg.go:228-247, S3/J7): broadcast literal rank join. */

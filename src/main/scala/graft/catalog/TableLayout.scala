@@ -1,6 +1,5 @@
 package graft.catalog
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
@@ -8,9 +7,7 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 /** Physical-layout knowledge for tables stored as partitioned parquet
   * files — which catalog tables are partitioned and by what, which carry
   * a DERIVED bucket column, and how a batch is repartitioned before a
-  * bucketed write. The rename-swap layout [[Catalog.importTable]] reads
-  * has the same shape under each table directory, so importing a table
-  * from it is a file copy plus one log commit, not a rewrite. */
+  * bucketed write. */
 private[catalog] object TableLayout {
 
   /** Tables written with a STATIC partition column (the value is a data
@@ -92,27 +89,6 @@ private[catalog] object TableLayout {
         stamped.repartition(Catalog.TilesBuckets * salts, col(d.name),
           pmod(xxhash64(col(d.srcCol)), lit(salts.toLong)))
     }
-
-  /** Data files under a staging root, as `/`-joined paths relative to it
-    * (`job_id=X/part-….parquet`). Skips `_SUCCESS`/hidden entries and
-    * Spark's `_temporary` commit scratch. */
-  def listDataFiles(f: FileSystem, root: Path): Seq[String] = {
-    val rootStr = f.makeQualified(root).toString
-    def walk(dir: Path): Seq[String] =
-      f.listStatus(dir).toIndexedSeq.flatMap { s =>
-        val n = s.getPath.getName
-        if (s.isDirectory)
-          // recurse into partition dirs — including `_`-prefixed DERIVED
-          // ones (`__bucket=…`); skip Spark's commit scratch
-          if (n.startsWith(".") || n == "_temporary") Nil else walk(s.getPath)
-        else if (n.startsWith("_") || n.startsWith(".")) Nil // _SUCCESS, crcs
-        else Seq(f.makeQualified(s.getPath).toString.stripPrefix(rootStr + "/"))
-      }
-    val files = walk(root)
-    require(files.forall(r => !new Path(r).isAbsolute),
-      s"staging produced paths outside $rootStr")
-    files
-  }
 
   /** The partition-directory name (`col=value`, Spark-escaped) of a
     * staged file path relative to its op root — or `""` for a file of an

@@ -420,6 +420,7 @@ object Consolidation {
       real_min_value: Double, real_max_value: Double, exponent: Double,
       t_width: Int, t_height: Int, t_bands: Int, t_dtype: String,
       t_crs: String, t_transform: Seq[Double], payload: Array[Byte])
+      extends graft.cube.SourceTile
 
   /** Merge each record's datasets onto the container's cell grid — one
     * output tile per record, subdir "GTIFF_DIR:i" in record-time order
@@ -446,32 +447,15 @@ object Consolidation {
     // precision and strings as unsigned UTF-8 bytes; `getTime` (millis)
     // and JVM UTF-16 compareTo both silently disagree with that
     // (sub-millisecond datetimes; non-BMP code points vs [U+E000,U+FFFF]).
-    def minTs(rs: Seq[ConsolidationRow]): java.sql.Timestamp =
-      rs.map(_.datetime).reduce((x, y) => if (x.compareTo(y) <= 0) x else y)
+    def minTs(rs: Seq[ConsolidationRow]) =
+      graft.cube.GetCube.minDatetime(rs.iterator.map(_.datetime))
     val byRecord = rows.groupBy(_.record_id).toSeq
       .sortWith { case ((ridA, rsA), (ridB, rsB)) =>
         val c = minTs(rsA).compareTo(minTs(rsB))
         if (c != 0) c < 0 else utf8Compare(ridA, ridB) < 0
       }
     byRecord.zipWithIndex.iterator.flatMap { case ((recordId, rs), i) =>
-      val sources = rs.sortWith { (a, b) =>
-        val c = a.datetime.compareTo(b.datetime)
-        if (c != 0) c < 0 else utf8Compare(a.dataset_id, b.dataset_id) < 0
-      }.map { r =>
-        val full = Bitmap.fromBytes(r.payload, r.t_width, r.t_height, r.t_bands,
-          DType.fromName(r.t_dtype))
-        // the dataset's band subset applies to the consolidation merge
-        // exactly like the read path (image.go:221-231: CastFile extracts
-        // dataset.Bands) — without it a bands=[2] dataset would
-        // consolidate band 1's pixels under its identity
-        val subset = graft.cube.GetCube.extractBands(full, r.bands)
-        val mapping = DataMapping(
-          DataFormat(DType.fromName(r.dtype), r.no_data,
-            NumRange(r.min_value, r.max_value)),
-          NumRange(r.real_min_value, r.real_max_value), r.exponent)
-        SourceRaster(subset, Affine.fromArray(r.t_transform.toArray),
-          CRS.parse(r.t_crs), mapping)
-      }
+      val sources = graft.cube.GetCube.sourceRasters(rs)
       val merged = Warp.mergeDatasets(sources, out.copy(bands = sources.head.bitmap.bands))
         .getOrElse(Bitmap.filled(out.width, out.height, 1,
           outMapping.format.dtype, outMapping.format.noData))

@@ -25,6 +25,30 @@ final case class CubeRequest(
     validPixPc: Int = -1,
     headersOnly: Boolean = false)
 
+/** The fields of one source dataset tile that both merge kernels — the
+  * cube slice ([[GetCube.buildSlice]]) and the consolidated container —
+  * decode through [[GetCube.sourceRasters]]: merge-order keys, the
+  * dataset's band subset and value mapping, and the tile's raster. */
+trait SourceTile {
+  def datetime: java.sql.Timestamp
+  def dataset_id: String
+  def bands: Seq[Int]
+  def dtype: String
+  def no_data: Double
+  def min_value: Double
+  def max_value: Double
+  def real_min_value: Double
+  def real_max_value: Double
+  def exponent: Double
+  def t_width: Int
+  def t_height: Int
+  def t_bands: Int
+  def t_dtype: String
+  def t_crs: String
+  def t_transform: Seq[Double]
+  def payload: Array[Byte]
+}
+
 /** One dataset row joined with its tile payload — the typed input of the
   * merge kernel. */
 final case class DatasetTile(
@@ -37,7 +61,7 @@ final case class DatasetTile(
     real_min_value: Double, real_max_value: Double, exponent: Double,
     t_width: Int, t_height: Int, t_bands: Int, t_dtype: String,
     t_crs: String, t_transform: Seq[Double],
-    payload: Array[Byte])
+    payload: Array[Byte]) extends SourceTile
 
 /** One dataset's slice metadata — the reference's pb.InternalMeta inside
   * a DatasetMeta (svc/catalog.go:53-70): raster addressing (container,
@@ -465,7 +489,7 @@ object GetCube {
     import graft.consolidation.Consolidation.utf8Compare
     import spark.implicits._
     val groups = tiles.groupBy(_.group_key).toArray.map { case (k, ts) =>
-      (k, ts, ts.iterator.map(_.datetime).reduce((x, y) => if (x.compareTo(y) <= 0) x else y))
+      (k, ts, minDatetime(ts.iterator.map(_.datetime)))
     }.sortWith { (a, b) =>
       val c = a._3.compareTo(b._3)
       if (c != 0) c < 0 else utf8Compare(a._1, b._1) < 0
@@ -585,36 +609,17 @@ object GetCube {
   }
 
   /** The per-group kernel (mergeDatasetsWorker, catalog.go:531-625): sort
-    * by (datetime, dataset id) so the latest paints last; decode tiles;
-    * extract the dataset's band subset; merge; envelope errors as values. */
+    * and decode the tiles ([[sourceRasters]]); merge; envelope errors as
+    * values. */
   private[cube] def buildSlice(key: String, rows: Iterator[DatasetTile], out: OutDescriptor): Slice = {
     import graft.consolidation.Consolidation.utf8Compare
-    // merge order sorts EXACTLY like Spark would (full-microsecond
-    // Timestamp compare, unsigned UTF-8 tie-break) — `getTime` truncates
-    // to millis and JVM String order is UTF-16, the two divergences the
-    // consolidation kernel's ordering-parity fix documents; a tie decided
-    // differently here would let an OLDER record paint last
-    val list = rows.toArray.sortWith { (a, b) =>
-      val c = a.datetime.compareTo(b.datetime)
-      if (c != 0) c < 0 else utf8Compare(a.dataset_id, b.dataset_id) < 0
-    }
+    val list = rows.toVector
     // UTF-8 order, matching the headers-only path's sort_array (UTF8String
     // binary order) so the two paths return identical header keys
-    val recordIds = list.map(_.record_id).distinct
-      .sortWith(utf8Compare(_, _) < 0).toSeq
-    val minDt = list.map(_.datetime)
-      .reduce((x, y) => if (x.compareTo(y) <= 0) x else y)
+    val recordIds = list.map(_.record_id).distinct.sortWith(utf8Compare(_, _) < 0)
+    val minDt = minDatetime(list.iterator.map(_.datetime))
     try {
-      val sources = list.map { r =>
-        val full = Bitmap.fromBytes(r.payload, r.t_width, r.t_height, r.t_bands,
-          DType.fromName(r.t_dtype))
-        val bm = extractBands(full, r.bands)
-        val mapping = DataMapping(
-          DataFormat(DType.fromName(r.dtype), r.no_data,
-            NumRange(r.min_value, r.max_value)),
-          NumRange(r.real_min_value, r.real_max_value), r.exponent)
-        SourceRaster(bm, Affine.fromArray(r.t_transform.toArray), CRS.parse(r.t_crs), mapping)
-      }.toSeq
+      val sources = sourceRasters(list)
       Warp.mergeDatasets(sources, out) match {
         case Some(merged) =>
           Slice(key, recordIds, minDt, out.width, out.height, merged.bands,
@@ -798,9 +803,45 @@ object GetCube {
     if (s.error.nonEmpty || s.payload.isEmpty) None else Some(s.payload)
   }
 
+  /** The earliest of `ts` at full microsecond precision — Spark's
+    * TimestampType order (`Timestamp.compareTo`; `getTime` truncates to
+    * millis). */
+  private[graft] def minDatetime(ts: Iterator[java.sql.Timestamp]): java.sql.Timestamp =
+    ts.reduce((x, y) => if (x.compareTo(y) <= 0) x else y)
+
+  /** One merge kernel input: `tiles` sorted by (datetime, dataset id) so
+    * the latest paints last, each decoded, cut to its dataset's band
+    * subset and paired with its value mapping. Both kernels — the cube
+    * slice and the consolidated container — merge through this. */
+  private[graft] def sourceRasters(tiles: Seq[SourceTile]): Seq[SourceRaster] = {
+    import graft.consolidation.Consolidation.utf8Compare
+    // merge order sorts EXACTLY like Spark would (full-microsecond
+    // Timestamp compare, unsigned UTF-8 tie-break) — `getTime` truncates
+    // to millis and JVM String order is UTF-16, the two divergences the
+    // consolidation kernel's ordering-parity fix documents; a tie decided
+    // differently here would let an OLDER record paint last
+    tiles.sortWith { (a, b) =>
+      val c = a.datetime.compareTo(b.datetime)
+      if (c != 0) c < 0 else utf8Compare(a.dataset_id, b.dataset_id) < 0
+    }.map { r =>
+      val full = Bitmap.fromBytes(r.payload, r.t_width, r.t_height, r.t_bands,
+        DType.fromName(r.t_dtype))
+      // the dataset's band subset applies to every merge exactly like the
+      // read path (image.go:221-231: CastFile extracts dataset.Bands) —
+      // without it a bands=[2] dataset would merge band 1's pixels under
+      // its identity
+      val bm = extractBands(full, r.bands)
+      val mapping = DataMapping(
+        DataFormat(DType.fromName(r.dtype), r.no_data,
+          NumRange(r.min_value, r.max_value)),
+        NumRange(r.real_min_value, r.real_max_value), r.exponent)
+      SourceRaster(bm, Affine.fromArray(r.t_transform.toArray), CRS.parse(r.t_crs), mapping)
+    }
+  }
+
   /** GDAL `-b`-style band subset (1-based; empty = all bands) —
     * image.go:221-231. */
-  private[graft] def extractBands(bm: Bitmap, bands: Seq[Int]): Bitmap = {
+  private def extractBands(bm: Bitmap, bands: Seq[Int]): Bitmap = {
     if (bands.isEmpty || bands == (1 to bm.bands)) return bm
     val plane = bm.width * bm.height
     val px = new Array[Double](plane * bands.size)

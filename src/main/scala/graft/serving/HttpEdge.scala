@@ -366,16 +366,7 @@ final class HttpEdge(spark: SparkSession, cat: TableStore, port: Int = 0,
     case other => other.toString
   }
 
-  private def jstr(s: String): String = {
-    val b = new StringBuilder("\"")
-    s.foreach {
-      case '"' => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.append('"').toString
-  }
+  private def jstr(s: String): String = "\"" + graft.core.JsonUtil.escape(s) + "\""
 }
 
 object HttpEdge {

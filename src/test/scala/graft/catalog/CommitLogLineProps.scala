@@ -9,7 +9,8 @@ import org.scalacheck.Prop.{forAll, forAllNoShrink}
   * `parseEntry` for EVERY rel path the stores can produce — including
   * partition values containing spaces, digits, `s1:2`-shaped tokens and
   * Spark's `%`-escapes (none of which are space-escaped on disk) — and a
-  * bare legacy operand must parse to (rel, no meta) unchanged. The one
+  * bare operand (a REMOVE line's form) must parse to (rel, no meta)
+  * unchanged; the ADD/FILE folds reject it. The one
   * structural invariant the right-to-left parse leans on is that a rel
   * path always ENDS in a Spark-generated data-file name, which is never
   * an all-digit or `s<digits>:<digits>` token.
@@ -18,8 +19,9 @@ import org.scalacheck.Prop.{forAll, forAllNoShrink}
   * its replay decoder ([[Catalog.terminatedContent]] → `foldCommit` /
   * `foldCheckpoint`, the exact path a snapshot replay takes) sees every
   * byte a store holds. Truncations and byte flips of generated commit
-  * files and v1/v2 checkpoints must each either replay or fail with a
-  * typed [[java.io.IOException]] — never an escaping
+  * files and v1/v2 checkpoints — and commits whose ADD operands are bare —
+  * must each either replay or fail with a typed [[java.io.IOException]]
+  * ([[Catalog.MalformedLogFile]] for a bare ADD) — never an escaping
   * NoSuchElementException/NumberFormatException, never a hang. */
 object CommitLogLineProps extends Properties("commitlog-lines") {
 
@@ -91,19 +93,22 @@ object CommitLogLineProps extends Properties("commitlog-lines") {
 
   // ---- malformed log files ------------------------------------------
 
-  private val genEntry: Gen[String] = for {
+  private val genSizedEntry: Gen[String] = for {
     rel <- genRel
-    sized <- Gen.oneOf(true, false)
     m <- genMeta
-  } yield if (sized) Catalog.entryLine("ADD", rel, m).drop(4) else rel
+  } yield Catalog.entryLine("ADD", rel, m).drop(4)
 
-  /** A commit file as `tryCommit` writes it: header, PART targets, ordered
-    * ADD/REMOVE operands, terminator. */
-  private val genCommitBytes: Gen[Array[Byte]] = for {
+  /** An ADD operand, sized or bare: a bare one must fail the replay typed. */
+  private val genEntry: Gen[String] = Gen.oneOf(genSizedEntry, genRel)
+
+  /** A commit file as `tryCommit` writes it — header, PART targets,
+    * ordered REMOVE/ADD operands, terminator — with `entry` operands on
+    * its ADD lines. */
+  private def genCommitBytes(entry: Gen[String]): Gen[Array[Byte]] = for {
     op <- genOpId
     kind <- Gen.oneOf("append", "update", "rewrite", "import")
     parts <- Gen.listOfN(2, genPartDir)
-    adds <- Gen.choose(1, 6).flatMap(Gen.listOfN(_, genEntry))
+    adds <- Gen.choose(1, 6).flatMap(Gen.listOfN(_, entry))
     removes <- Gen.choose(0, 4).flatMap(Gen.listOfN(_, genRel))
   } yield Catalog.logText(Seq(s"OP $op", s"KIND $kind") ++
     parts.map("PART " + _) ++ removes.map("REMOVE " + _) ++
@@ -159,7 +164,7 @@ object CommitLogLineProps extends Properties("commitlog-lines") {
   // no shrinking on the bounded properties: a shrunk file is a different
   // input, and shrinking re-ran a hung case over and over
   property("a truncated or byte-flipped commit replays or fails typed") =
-    forAllNoShrink(genCommitBytes.flatMap(genDamaged)) { damaged =>
+    forAllNoShrink(genCommitBytes(genEntry).flatMap(genDamaged)) { damaged =>
       replaysOrFailsTyped(damaged, checkpoint = false)
     }
 
@@ -169,7 +174,7 @@ object CommitLogLineProps extends Properties("commitlog-lines") {
     }
 
   property("an undamaged commit or checkpoint replays") =
-    forAllNoShrink(genCommitBytes, genCheckpoint) { (c, cp) =>
+    forAllNoShrink(genCommitBytes(genSizedEntry), genCheckpoint) { (c, cp) =>
       Prop(Catalog.terminatedContent(c).isDefined &&
         Catalog.terminatedContent(cp).isDefined) &&
         replay(c, checkpoint = false)(o => Prop(o.isEmpty) :| s"commit: $o") &&

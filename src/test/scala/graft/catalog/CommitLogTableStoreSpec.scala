@@ -769,8 +769,8 @@ object CountingListFileSystem {
   * sizes (Delta's `add.size`), so a COLD read — fresh JVM caches, fresh
   * store handle — builds every [[org.apache.hadoop.fs.FileStatus]] the
   * scan needs straight from the snapshot: ZERO storage LISTs under
-  * `data/` at any op-dir count. Legacy logs (bare `ADD <path>` lines)
-  * still replay through the one-LIST-per-op-dir fallback. */
+  * `data/` at any op-dir count. An unsized ADD or FILE line is not a
+  * format the store writes, so its replay fails typed. */
 class CommitLogColdReadSpec extends AnyFunSuite with SparkSuite {
 
   private lazy val root = tempDir("graft-clcold").toString
@@ -802,7 +802,7 @@ class CommitLogColdReadSpec extends AnyFunSuite with SparkSuite {
       spark.sparkContext.parallelize(rows.map(t => Row(t._1, t._2, t._3, t._4)), 2),
       Schemas.all("tasks"))
 
-  test("cold read of a sized log costs ZERO data-dir LISTs; legacy bare lines fall back to listing") {
+  test("cold read of a sized log costs ZERO data-dir LISTs") {
     val dir = s"countls://$root/cold"
     val s = Catalog(dir)
     for (i <- 0 until 6)
@@ -814,41 +814,36 @@ class CommitLogColdReadSpec extends AnyFunSuite with SparkSuite {
     assert(CountingListFileSystem.dataLists.get() == 0L,
       s"sized cold read still paid ${CountingListFileSystem.dataLists.get()} " +
         "data-dir LISTs — FileStatuses not built from the snapshot")
-    // strip the size tokens from every commit on disk — a pre-v14 log.
-    // (task rel paths carry no spaces, so token-drop is exact here)
-    val logDir = new java.io.File(s"$root/cold/tasks/_log")
-    logDir.listFiles.filter(_.getName.endsWith(".commit")).foreach { c =>
-      val stripped = scala.io.Source.fromFile(c).getLines().map { l =>
-        if (l.startsWith("ADD ")) {
-          val toks = l.split(' ')
-          s"ADD ${toks(1)}"
-        } else l
-      }.mkString("\n")
-      java.nio.file.Files.write(c.toPath, stripped.getBytes("UTF-8"))
+  }
+
+  test("a bare ADD in a commit or a bare FILE in a checkpoint fails the replay typed") {
+    // one append: its commit file and the rel its sized ADD line names
+    def seeded(name: String): (String, java.io.File, String) = {
+      val dir = s"$root/$name"
+      Catalog(dir).append(tasksDf(Seq(("t0", "j0", "NEW", ""))), "tasks")
+      val commit = new java.io.File(s"$dir/tasks/_log").listFiles
+        .filter(_.getName.endsWith(".commit")).head
+      val rel = scala.io.Source.fromFile(commit).getLines()
+        .collectFirst { case l if l.startsWith("ADD ") => l.split(' ')(1) }.get
+      (dir, commit, rel)
     }
-    CountingListFileSystem.dataLists.set(0L)
-    val legacy = Catalog(dir).read(spark, "tasks").collect()
-    assert(legacy.length == 6, "legacy bare ADD lines no longer replay")
-    assert(CountingListFileSystem.dataLists.get() > 0L,
-      "legacy log read listed nothing — the fallback path is dead code")
-    // SELF-UPGRADE: the first checkpoint enriches legacy FILE lines with
-    // sizes from the (memoized) listings, so once one exists the table
-    // cold-reads with zero data-dir LISTs like a native v14 log
-    spark.conf.set(Catalog.StaleSwapReclaimMsConf, "0") // disable the
-    // once-a-minute maintenance floor so the checkpoint builds in-test
-    try
-      for (i <- 6 until 22) // cross the checkpoint cadence (20 commits)
-        s.append(tasksDf(Seq((s"t$i", s"j${i % 3}", "NEW", ""))), "tasks")
-    finally spark.conf.unset(Catalog.StaleSwapReclaimMsConf)
-    assert(new java.io.File(s"$root/cold/tasks/_log").listFiles
-      .exists(_.getName.endsWith(".checkpoint")), "no checkpoint built")
-    CountingListFileSystem.dataLists.set(0L)
-    val upgraded = Catalog(dir).read(spark, "tasks").collect()
-    assert(upgraded.length == 22)
-    assert(CountingListFileSystem.dataLists.get() == 0L,
-      s"post-checkpoint cold read of a legacy log still paid " +
-        s"${CountingListFileSystem.dataLists.get()} data-dir LISTs — " +
-        "checkpointing did not self-upgrade the entries")
+    def assertNames(dir: String, file: String, line: String): Unit = {
+      val e = intercept[Catalog.MalformedLogFile](Catalog(dir).read(spark, "tasks"))
+      assert(e.getMessage.contains(file) && e.getMessage.contains(s"'$line'"),
+        e.getMessage)
+    }
+    // a commit whose ADD line lost its size token
+    val (c, commit, cRel) = seeded("bare-add")
+    val text = scala.io.Source.fromFile(commit).getLines().map(l =>
+      if (l.startsWith("ADD ")) s"ADD $cRel" else l).mkString("\n")
+    java.nio.file.Files.write(commit.toPath, text.getBytes("UTF-8"))
+    assertNames(c, commit.getName, s"ADD $cRel")
+    // a v1 checkpoint at the commit's version holding one bare FILE line
+    val (k, kCommit, kRel) = seeded("bare-file")
+    val cp = new java.io.File(kCommit.getParentFile,
+      kCommit.getName.stripSuffix(".commit") + ".checkpoint")
+    java.nio.file.Files.write(cp.toPath, Catalog.logText(Seq(s"FILE $kRel")))
+    assertNames(k, cp.getName, s"FILE $kRel")
   }
 }
 
