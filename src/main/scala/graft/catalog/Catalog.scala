@@ -164,10 +164,20 @@ final case class Catalog(root: String) extends TableStore {
     * answer is None, decided before any row is read. The surviving row
     * groups are read by Spark's own parquet row reader
     * ([[ParquetFileFormat]]), projected to the requested columns,
-    * filtered exactly by `valuesIn`, and decoded by the encoder
-    * `collect()` uses — so timestamps, arrays, maps and structs come back
-    * typed as a Spark read returns them. A `payload`-free answer is
-    * cached on the snapshot INSTANCE, the validity token [[readFiles]]'
+    * decoded by the encoder `collect()` uses — so timestamps, arrays,
+    * maps and structs come back typed as a Spark read returns them — and
+    * filtered exactly by `valuesIn`.
+    *
+    * Two caches serve warm calls. A split's decoded rows, before the
+    * `valuesIn` filter, are kept in [[Catalog.decodedSplits]], keyed by
+    * the data file (path, length, modification time), the split's byte
+    * range and the requested columns, and bounded by the decoded bytes
+    * held. Data files are immutable from commit to vacuum and their paths
+    * are never reused, so a commit does not invalidate an entry: the
+    * snapshot's live-file list alone decides which files are asked for.
+    * The cached rows, payload bytes included, are shared by every caller,
+    * which must only read them. A `payload`-free answer is also cached
+    * whole on the snapshot INSTANCE, the validity token [[readFiles]]'
     * relation cache uses, so a warm call costs the `_log` listing that
     * snapshot validation makes anyway. */
   override def rows(spark: SparkSession, table: String, columns: Seq[String],
@@ -202,52 +212,75 @@ final case class Catalog(root: String) extends TableStore {
     }
   }
 
-  /** Decode `splits` through Spark's parquet row reader: the data columns
-    * of `columns` plus the partition value of each file's directory,
-    * keeping the rows `valuesIn` admits, reordered to `columns`. */
+  /** The rows of `splits` that `valuesIn` admits, reordered to `columns`:
+    * the data columns of `columns` plus the partition value of each
+    * file's directory, decoded per split through [[decodedSplit]] (so a
+    * split read before is not read again) and filtered here. */
   private def readRowsOnDriver(spark: SparkSession,
       schema: StructType, pcOpt: Option[String], columns: Seq[String],
       valuesIn: Map[String, Set[String]], splits: IndexedSeq[RowGroupSplit]): IndexedSeq[Row] = {
-    import org.apache.spark.unsafe.types.UTF8String
-    val out = IndexedSeq.newBuilder[Row]
-    if (splits.isEmpty) return out.result()
-    val partitionSchema = StructType(pcOpt.map(schema(_)).toSeq)
     val required = StructType(columns.distinct.filterNot(pcOpt.contains).map(schema(_)))
-    val produced = required ++ partitionSchema
-    val ordinals = columns.map(c => produced.indexWhere(_.name == c)).toArray
-    val types = ordinals.map(produced(_).dataType)
-    val tests = valuesIn.toArray.map { case (c, vs) =>
-      (produced.indexWhere(_.name == c), vs.map(UTF8String.fromString)) }
-    val read = parquetReader(spark, schema, pcOpt, required)
-    val decode = rowEncoder(StructType(columns.map(schema(_)))).createDeserializer()
+    val produced = StructType(required ++ pcOpt.map(schema(_)))
+    val ordinals = columns.map(produced.fieldIndex).toArray
+    val asProduced = ordinals.sameElements(produced.indices)
+    val outSchema = StructType(columns.map(schema(_)))
+    val tests = valuesIn.toArray.map { case (c, vs) => (produced.fieldIndex(c), vs) }
+    val out = IndexedSeq.newBuilder[Row]
     splits.foreach { s =>
+      decodedSplit(spark, schema, pcOpt, required, produced, s).foreach { r =>
+        if (tests.forall { case (o, vs) => !r.isNullAt(o) && vs(r.getString(o)) })
+          out += (if (asProduced) r
+            else new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+              ordinals.map(r.get), outSchema))
+      }
+    }
+    out.result()
+  }
+
+  /** Every row of split `s`, `required` plus the partition column
+    * (`produced`), decoded by Spark's parquet row reader
+    * ([[ParquetFileFormat]]) and the encoder `collect()` uses — so
+    * timestamps, arrays, maps and structs come back typed as a Spark read
+    * returns them. Served from [[decodedSplits]] when this split of this
+    * file was decoded before with the same columns. */
+  private def decodedSplit(spark: SparkSession, schema: StructType, pcOpt: Option[String],
+      required: StructType, produced: StructType, s: RowGroupSplit): Array[Row] = {
+    val key = SplitKey(s.status.getPath.toString, s.status.getLen,
+      s.status.getModificationTime, s.start, s.length, required.fieldNames.toSeq)
+    decodedSplits.get(key).getOrElse {
+      val read = parquetReader(spark, schema, pcOpt, required)
+      val decode = rowEncoder(produced).createDeserializer()
+      val types = produced.map(_.dataType).toArray
       val pv = pcOpt.fold(InternalRow.empty)(pc =>
         InternalRow(partitionValue(partDirOf(s.rel), pc, schema(pc).dataType)))
       val it = read(org.apache.spark.sql.execution.datasources.PartitionedFile(pv,
         org.apache.spark.paths.SparkPath.fromPath(s.status.getPath), s.start, s.length,
         Array.empty[String], 0L, s.status.getLen, Map.empty))
+      val rows = Array.newBuilder[Row]
+      var bytes = 0L
       try {
         // the reader may hand back one reused row per batch: each row is
         // copied out through the deserializer before the next is read
         while (it.hasNext) {
           val r = it.next()
-          if (tests.forall { case (o, vs) => !r.isNullAt(o) && vs(r.getUTF8String(o)) }) {
-            val vals = new Array[Any](ordinals.length)
-            var i = 0
-            while (i < ordinals.length) {
-              val o = ordinals(i)
-              vals(i) = if (r.isNullAt(o)) null else r.get(o, types(i))
-              i += 1
-            }
-            out += decode(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals))
+          val vals = new Array[Any](types.length)
+          var i = 0
+          while (i < types.length) {
+            vals(i) = if (r.isNullAt(i)) null else r.get(i, types(i))
+            i += 1
           }
+          val row = decode(new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals))
+          bytes += heapBytes(row)
+          rows += row
         }
       } finally it match {
         case c: java.io.Closeable => c.close()
         case _ =>
       }
+      val out = rows.result()
+      decodedSplits.put(key, out, bytes)
+      out
     }
-    out.result()
   }
 
   /** ONE file-index-backed parquet relation over the whole live set —
@@ -1991,6 +2024,59 @@ object Catalog {
   private[graft] def rowsCacheState(tablePath: String): Option[(Int, Int)] =
     Option(rowsCache.get(tablePath)).map(t =>
       (System.identityHashCode(t.snap), t.answers.size))
+
+  /** The decoded rows of one split of one data file: the key of
+    * [[decodedSplits]]. The data columns are part of it because the split
+    * is decoded projected to them. */
+  private final case class SplitKey(path: String, length: Long, modificationTime: Long,
+      start: Long, splitLength: Long, columns: Seq[String])
+
+  /** A map whose values' estimated heap bytes stay within `maxBytes`:
+    * a put that would pass it first empties the map (the wholesale-reset
+    * discipline of the other caches here), and a value larger than the
+    * bound is not kept. */
+  private[graft] final class ByteBoundedCache[K, V](val maxBytes: Long) {
+    private val entries = new java.util.concurrent.ConcurrentHashMap[K, V]()
+    private var held = 0L // guarded by entries
+
+    def get(k: K): Option[V] = Option(entries.get(k))
+
+    def put(k: K, v: V, bytes: Long): Unit =
+      if (bytes <= maxBytes) entries.synchronized {
+        if (!entries.containsKey(k)) {
+          if (held + bytes > maxBytes) { entries.clear(); held = 0L }
+          entries.put(k, v)
+          held += bytes
+        }
+      }
+
+    /** (entries, bytes held). */
+    def state: (Int, Long) = entries.synchronized((entries.size, held))
+  }
+
+  /** Decoded rows per data-file split, for [[Catalog.rows]]. The bound,
+    * twice the payload budget of a cube or tile read
+    * (`GetCube.PayloadBudgetBytes`, 128 MiB), holds at least one
+    * in-budget payload read in full. */
+  private[graft] val DecodedSplitsMaxBytes: Long = 256L << 20
+  private val decodedSplits =
+    new ByteBoundedCache[SplitKey, Array[Row]](DecodedSplitsMaxBytes)
+
+  /** [[decodedSplits]]' (entries, estimated bytes held). For tests. */
+  private[graft] def decodedSplitsState: (Int, Long) = decodedSplits.state
+
+  /** Heap bytes a decoded value holds, estimated: byte and char lengths
+    * plus a fixed header per object. */
+  private def heapBytes(v: Any): Long = v match {
+    case null => 8L
+    case b: Array[Byte] => 16L + b.length
+    case s: String => 40L + 2L * s.length
+    case r: Row => 16L + r.toSeq.iterator.map(heapBytes).sum
+    case m: scala.collection.Map[_, _] =>
+      32L + m.iterator.map { case (k, x) => heapBytes(k) + heapBytes(x) }.sum
+    case c: Iterable[_] => 32L + c.iterator.map(heapBytes).sum
+    case _ => 16L
+  }
 
   /** The row groups of one data file that a driver read decodes: those
     * whose midpoints fall in [start, start + length), as Spark's reader

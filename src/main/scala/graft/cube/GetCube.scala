@@ -620,11 +620,10 @@ object GetCube {
     val minDt = minDatetime(list.iterator.map(_.datetime))
     try {
       val sources = sourceRasters(list)
-      Warp.mergeDatasets(sources, out) match {
-        case Some(merged) =>
+      Warp.mergeCounted(sources, out) match {
+        case Some((merged, valid)) =>
           Slice(key, recordIds, minDt, out.width, out.height, merged.bands,
-            out.mapping.format.dtype.name, merged.toBytes,
-            merged.validPixels(out.mapping.format.noData).toLong, "")
+            out.mapping.format.dtype.name, merged.toBytes, valid.toLong, "")
         case None =>
           Slice(key, recordIds, minDt, out.width, out.height, 0,
             out.mapping.format.dtype.name, Array.empty[Byte], 0L,

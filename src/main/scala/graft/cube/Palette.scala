@@ -85,36 +85,45 @@ object Palette {
   /** PNG rendering of a slice (reference image.go:522-584
     * DatasetToPngAsBytes, interpolateColor=true): rescale the bitmap into
     * uint8 [0,254] with nodata 255, then either palette-map to RGBA or
-    * emit grayscale. Pure JVM (javax.imageio). */
+    * emit grayscale. Pure JVM (javax.imageio). An 8-bit bitmap's colours
+    * are computed once per value into a 256-entry table; other dtypes, and
+    * values that are not one of the dtype's integers, go through the same
+    * value→ARGB function per pixel. */
   def toPng(bm: Bitmap, mapping: DataMapping, palette: Option[Palette]): Array[Byte] = {
     val to = DataMapping(
       DataFormat(DType.UInt8, 255.0, NumRange(0, 254)), mapping.rangeExt, 1.0)
-    val img = new java.awt.image.BufferedImage(
-      bm.width, bm.height, java.awt.image.BufferedImage.TYPE_INT_ARGB)
     // palette LUT: 255 interpolated colors + transparent nodata slot
     val lut = palette.map(_.paletteN(255))
     val noData = mapping.format.noData
-    var y = 0
-    while (y < bm.height) {
-      var x = 0
-      while (x < bm.width) {
-        val v = bm.get(x, y, 0)
-        val isNoData = if (noData.isNaN) v.isNaN else v == noData
-        val argb =
-          if (isNoData) 0 // transparent
-          else {
-            val u = Cast.storeValue(Cast.castValueBF(v, mapping, to), DType.UInt8).toInt
-            lut match {
-              case Some(l) =>
-                val rgba = l(math.min(u, 254))
-                ((rgba & 0xff) << 24) | (rgba >>> 8)
-              case None => (0xff << 24) | (u << 16) | (u << 8) | u
-            }
-          }
-        img.setRGB(x, y, argb)
-        x += 1
+    def argb(v: Double): Int =
+      if (if (noData.isNaN) v.isNaN else v == noData) 0 // transparent
+      else {
+        val u = Cast.storeValue(Cast.castValueBF(v, mapping, to), DType.UInt8).toInt
+        lut match {
+          case Some(l) =>
+            val rgba = l(math.min(u, 254))
+            ((rgba & 0xff) << 24) | (rgba >>> 8)
+          case None => (0xff << 24) | (u << 16) | (u << 8) | u
+        }
       }
-      y += 1
+    val lo = bm.dtype.minValue
+    val byValue = bm.dtype match {
+      case DType.UInt8 | DType.Int8 => Array.tabulate(256)(i => argb(lo + i))
+      case _ => null
+    }
+    val img = new java.awt.image.BufferedImage(
+      bm.width, bm.height, java.awt.image.BufferedImage.TYPE_INT_ARGB)
+    // TYPE_INT_ARGB keeps one non-premultiplied ARGB int per pixel, row
+    // by row: what setRGB would store; band 0 of the bitmap is the same
+    // row-major plane
+    val px = img.getRaster.getDataBuffer.asInstanceOf[java.awt.image.DataBufferInt].getData
+    val n = bm.width * bm.height
+    var i = 0
+    while (i < n) {
+      val v = bm.pixels(i)
+      val k = (v - lo).toInt
+      px(i) = if (byValue != null && k >= 0 && k < 256 && k + lo == v) byValue(k) else argb(v)
+      i += 1
     }
     val out = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, "png", out)

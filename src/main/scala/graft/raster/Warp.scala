@@ -123,7 +123,13 @@ object Warp {
     * mapping, paint them in input order (caller orders oldest→newest so the
     * most recent lands on top), over a nodata-initialized accumulator;
     * enforce the valid-pixel threshold. Returns None when dropped. */
-  def mergeDatasets(sources: Seq[SourceRaster], out: OutDescriptor): Option[Bitmap] = {
+  def mergeDatasets(sources: Seq[SourceRaster], out: OutDescriptor): Option[Bitmap] =
+    mergeCounted(sources, out).map(_._1)
+
+  /** [[mergeDatasets]] with the merged bitmap's valid-pixel count
+    * ([[Bitmap.validPixels]]), counted once for the threshold and the
+    * caller. */
+  def mergeCounted(sources: Seq[SourceRaster], out: OutDescriptor): Option[(Bitmap, Int)] = {
     require(sources.nonEmpty, "mergeDatasets: no dataset to merge")
     val target = Bitmap.filled(out.width, out.height, out.bands,
       out.mapping.format.dtype, out.mapping.format.noData)
@@ -131,13 +137,13 @@ object Warp {
       val (casted, castedNoData) = castSource(src, out.mapping)
       paint(target, out, casted, src.pixToCrs, src.crs, castedNoData)
     }
+    val valid = target.validPixels(out.mapping.format.noData)
     if (out.validPixPc >= 0) {
       // long arithmetic: width*height*pc overflows Int past ~21 Mpx,
       // which silently disabled the threshold on large outputs
       val minValid = out.width.toLong * out.height * out.validPixPc / 100
-      val valid = target.validPixels(out.mapping.format.noData)
       if (valid < math.max(minValid, 1L)) return None
     }
-    Some(target)
+    Some((target, valid))
   }
 }

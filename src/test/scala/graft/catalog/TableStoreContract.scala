@@ -184,4 +184,52 @@ abstract class TableStoreContract extends AnyFunSuite with SparkSuite {
     assertThrows[IllegalArgumentException](
       s.rows(spark, "tiles", Seq("width"), Nil, Map("width" -> Set("2"))))
   }
+
+  test("a warm rows equals the cold one, and after a commit it reads the new snapshot") {
+    import spark.implicits._
+    val s = newStore("rowswarm")
+    s.append(tasksDf(Seq(("t1", "j1", "NEW", "a"), ("t2", "j2", "DONE", null),
+      ("t3", "j1", "NEW", "c"))), "tasks")
+    // four containers of one bucket; the third is appended alone, so it
+    // has a data file of its own
+    val b0 = Catalog.tilesBucketOf("mem://w0")
+    val uris = Iterator.from(0).map(i => s"mem://w$i")
+      .filter(Catalog.tilesBucketOf(_) == b0).take(4).toSeq
+    s.append(tilesDf(uris.take(2)), "tiles")
+    s.append(tilesDf(Seq(uris(2))), "tiles")
+    val bucket = b0.toString
+    val none = Map.empty[String, Set[String]]
+    val cases = Seq(
+      ("tasks", Seq("id", "state", "payload"), Nil, none),
+      ("tasks", Seq("payload", "job_id"), Seq("j1"), none),
+      ("tasks", Seq("id", "payload"), Seq("j1", "j2"), Map("payload" -> Set("a", "zz"))),
+      ("tiles", Seq("container_uri", "transform", "payload"), Seq(bucket), none),
+      ("tiles", Seq("container_uri", "subdir", "payload"), Seq(bucket),
+        Map("container_uri" -> Set(uris(0), uris(2), uris(3)), "subdir" -> Set(""))))
+    def check(when: String): Unit =
+      for ((table, cols, pv, in) <- cases) {
+        val cold = s.rows(spark, table, cols, pv, in)
+        val warm = s.rows(spark, table, cols, pv, in)
+        assert(cold.isDefined && warm.isDefined, s"$when: $table $cols $pv $in")
+        val want = s.collectRows(spark, table, cols, pv).filter(r => in.forall {
+          case (c, vs) => Option(r.getAs[String](c)).exists(vs) })
+        assert(multiset(cold.get) == multiset(want), s"$when, cold: $table $cols $pv $in")
+        assert(multiset(warm.get) == multiset(want), s"$when, warm: $table $cols $pv $in")
+      }
+    def bucketUris(): Set[String] =
+      s.rows(spark, "tiles", Seq("container_uri", "payload"), Seq(bucket)).get
+        .map(_.getString(0)).toSet
+    check("first read")
+    assert(bucketUris() == uris.take(3).toSet)
+    s.append(tilesDf(Seq(uris(3))), "tiles")
+    s.append(tasksDf(Seq(("t4", "j1", "NEW", "zz"))), "tasks")
+    check("after an append")
+    assert(bucketUris() == uris.toSet)
+    s.deleteWhere(spark, "tiles", Seq(uris(2)).toDF("container_uri"))
+    s.rewrite(s.read(spark, "tasks").filter(col("id") =!= "t3"), "tasks")
+    check("after a rewrite")
+    assert(bucketUris() == uris.toSet - uris(2))
+    assert(s.rows(spark, "tasks", Seq("id", "payload"), Seq("j1")).get.map(_.getString(0))
+      .sorted == Seq("t1", "t4"))
+  }
 }

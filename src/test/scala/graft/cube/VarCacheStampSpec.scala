@@ -13,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * cache must be OBSERVABLE (a warm read hands back the cached answer),
   * stable while the table is unchanged, and invalidated by an append or
   * a rewrite; a table directory without `_log` holds nothing the store
-  * reads. */
+  * reads. A data file split's decoded rows are cached apart from any
+  * snapshot, within a byte bound. */
 class VarCacheStampSpec extends AnyFunSuite with SparkSuite {
 
   private val dir = tempDir("graft-stamp")
@@ -131,6 +132,55 @@ class VarCacheStampSpec extends AnyFunSuite with SparkSuite {
     // the bucket's payload-free metadata costs its own columns only
     assert(cat.rows(spark, "tiles", Seq("container_uri", "width"), bucket,
       budgetBytes = 1L << 16).get.size == 2)
+  }
+
+  test("decoded splits outlive commits, are decoded once and stay within their byte bound") {
+    val d = tempDir("graft-decoded")
+    val cat = Catalog(d.toString)
+    val b0 = Catalog.tilesBucketOf("mem://d0")
+    val uris = Iterator.from(0).map(i => s"mem://d$i")
+      .filter(Catalog.tilesBucketOf(_) == b0).take(2).toSeq
+    val rnd = new scala.util.Random(11)
+    def append(u: String): Unit =
+      cat.append(spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+        Row(u, "", 512, 512, 1, "uint32", "EPSG:4326", Seq(0.0, 1.0, 0.0, 0.0, 0.0, -1.0),
+          Array.fill[Byte](1 << 20)(rnd.nextInt().toByte))), 1), Schemas.all("tiles")), "tiles")
+    val cols = Seq("container_uri", "payload")
+    def read(in: Map[String, Set[String]] = Map.empty) =
+      cat.rows(spark, "tiles", cols, Seq(b0.toString), in).get.map(_.getString(0)).toSet
+    def state = {
+      val s = Catalog.decodedSplitsState
+      assert(s._2 <= Catalog.DecodedSplitsMaxBytes, s"$s over the bound")
+      s
+    }
+    append(uris(0))
+    assert(read() == Set(uris(0)))
+    val first = state
+    assert(first._2 >= (1L << 20), s"$first: the 1 MiB payload is not held")
+    // warm, and for one container of the bucket: the same entry serves
+    assert(read(Map("container_uri" -> Set(uris(0)))) == Set(uris(0)))
+    assert(read() == Set(uris(0)))
+    assert(state == first)
+    // a commit keeps the first file's entry: only the new file is decoded
+    append(uris(1))
+    assert(read() == uris.toSet)
+    val second = state
+    assert(second._1 == first._1 + 1 || second._1 == 1, s"$first then $second")
+    assert(read(Map("container_uri" -> Set(uris(1)))) == Set(uris(1)))
+    assert(state == second)
+
+    // the bound itself: a put that would pass it first empties the cache,
+    // and a value larger than the bound is not kept
+    val c = new Catalog.ByteBoundedCache[String, Int](100)
+    c.put("a", 1, 60)
+    c.put("a", 1, 60)
+    assert(c.state == ((1, 60L)))
+    c.put("b", 2, 50)
+    assert(c.state == ((1, 50L)) && c.get("a").isEmpty && c.get("b").contains(2))
+    c.put("c", 3, 101)
+    assert(c.state == ((1, 50L)) && c.get("c").isEmpty)
+    c.put("d", 4, 50)
+    assert(c.state == ((2, 100L)) && c.get("b").contains(2) && c.get("d").contains(4))
   }
 
   test("metadata broadcast gate: exact-stat local frames hint, stat-less frames don't") {

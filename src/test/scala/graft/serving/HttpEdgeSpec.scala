@@ -464,6 +464,16 @@ class HttpEdgeSpec extends AnyFunSuite with SparkSuite {
         HttpEdge.StreamPipelineDepth, computeTimeoutMs = 1L)
       intercept[HttpEdge.ComputeDeadlineException](pipe.iterator.hasNext)
     } finally sc.clearJobGroup()
+    // the status tracker is filled from its own listener-bus queue, which
+    // is FIFO: once a marker job submitted after the cube's jobs shows in
+    // it, so has every start of the cube's jobs
+    sc.setJobGroup("cube-deadline-marker", "flush")
+    try spark.range(1).count() finally sc.clearJobGroup()
+    val flushBy = System.nanoTime() + 30e9.toLong
+    while (sc.statusTracker.getJobIdsForGroup("cube-deadline-marker").isEmpty &&
+        System.nanoTime() < flushBy) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup("cube-deadline-marker").nonEmpty,
+      "the marker job's start never reached the status tracker")
     val ids = sc.statusTracker.getJobIdsForGroup("cube-deadline")
     assert(ids.nonEmpty, "the cube submitted no kernel job")
     // the driver arm's kernel jobs, each a single stage
