@@ -231,8 +231,9 @@ object Bench {
   }
 
   /** Seed a 100-record catalog of 256×256 uint8 tiles on one grid and time
-    * the full GetCube plan (catalog join → tile join → groupByKey(record)
-    * → merge kernel), min of two runs after a warmup. Returns seconds. */
+    * the full GetCube request (the driver resolver's catalog and tile
+    * reads → merge kernel per record), min of two runs after a warmup.
+    * Returns seconds. */
   private def getCubeBench(spark: SparkSession): Double =
     getCubeBenchOn(spark, root => graft.catalog.Catalog(root), tileAppends = 1)
 

@@ -16,11 +16,10 @@ object ExplainDump {
     "mix_weighted", "f6_stere", "dedup_spans", "a4_warp", "f4_kernels",
     "f6_lcc", "d5_xyz", "f6_datum", "mm_featurize", "mm_resize",
     "text_redact", "text_pack", "text_boilerplate",
-    // the serving path against the bucket-partitioned tiles store: the
-    // payload scan must carry a `dynamicpruningexpression(__bucket IN …)`
-    // PartitionFilter (GetCube.selectTileLevel — the 100-TB table is only
-    // LISTED/READ in the request's buckets; the conjunct is cost-gated on
-    // store size, forced on below so the dump shows the at-scale shape)
+    // the serving path: an in-budget cube is resolved on the driver, so
+    // its plan is the kernel's scan over the slice-ordered groups, with no
+    // tiles scan, join or exchange (the over-budget payload job's static
+    // bucket PartitionFilter is pinned by PlanShapeSpec)
     "d1_cube")
 
   def main(args: Array[String]): Unit = {
@@ -32,12 +31,6 @@ object ExplainDump {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      // document the AT-SCALE serving plan: the bucket-pruning conjunct
-      // is cost-gated on store size (GetCube.BucketPruneMinBytesConf),
-      // and the sf0.01 fixture store is below the production threshold —
-      // force the big-store path so d1_cube/d5_xyz show the DPP shape a
-      // 100-TB store gets
-      .config(graft.cube.GetCube.BucketPruneMinBytesConf, "0")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder

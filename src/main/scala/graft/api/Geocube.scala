@@ -449,8 +449,8 @@ final case class Geocube(spark: SparkSession, cat: TableStore) {
       onConsolidation: (JournaledJob, ConsolidationJob.Spec) => String): String =
     JournaledJob.byId(spark, cat, jobId) { job =>
       if (job.jobType == DeletionJob.JobType)
-        DeletionJob.specOf(spark, job).fold("NOTFOUND")(onDeletion(job, _))
-      else ConsolidationJob.specOf(spark, job).fold("NOTFOUND")(onConsolidation(job, _))
+        DeletionJob.specOf(job).fold("NOTFOUND")(onDeletion(job, _))
+      else ConsolidationJob.specOf(job).fold("NOTFOUND")(onConsolidation(job, _))
     }
 
   /** CancelJob (service.go:74): cancel by id, routed on the journaled job
@@ -725,7 +725,7 @@ final case class Geocube(spark: SparkSession, cat: TableStore) {
       dformat: DataFormat, resamplingAlg: String = "near",
       bands: Int = 0): Dataset[Slice] = {
     // the band-count probe is a full action over the metadata pipeline;
-    // cache it so cubeFromMetadata's tile join replays blocks, not the
+    // cache it so cubeFromMetadata's collect replays blocks, not the
     // whole upstream catalog-scan lineage (registered for release with
     // the operator caches, the repo's consume-then-unpersist convention)
     val src = if (bands > 0) meta

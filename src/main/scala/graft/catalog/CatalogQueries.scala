@@ -25,14 +25,7 @@ final case class DatasetFilters(
     refined: Option[(Geometry, Int)] = None,
     offset: Int = 0,
     limit: Int = 0,
-    order: Boolean = true,
-    /** join the records dimension (datetime/tags columns) WITHOUT the
-      * global (datetime, record, id) sort — for consumers that need the
-      * record datetime but immediately join/group the result (the cube
-      * serving path): a pre-join orderBy there is pure waste — Spark
-      * does not preserve it through the join, and its range exchange
-      * costs a sampling pass that re-evaluates the discovery subtree. */
-    joinRecords: Boolean = false)
+    order: Boolean = true)
 
 /** The catalog query builders (SURVEY §2.1/§2.3): DataFrame plans with the
   * same conditional structure as the reference's SQL builders. Joins are
@@ -44,8 +37,7 @@ object CatalogQueries {
 
   /** FindDatasets — pg_containers.go:244-348. Returns dataset rows
     * (+record datetime when joined); ordered by (datetime, record id, id)
-    * when `order` is set — `joinRecords`-without-`order` callers (the
-    * cube kernel path) get the records columns with no sort. */
+    * when `order` is set. */
   def findDatasets(spark: SparkSession, cat: TableStore, f: DatasetFilters): DataFrame = {
     var d = cat.read(spark, "datasets")
 
@@ -77,7 +69,7 @@ object CatalogQueries {
     }
 
     // records join only when time/tags/order need it (pg:256-258)
-    val needRecords = f.order || f.joinRecords || f.fromTime.isDefined ||
+    val needRecords = f.order || f.fromTime.isDefined ||
       f.toTime.isDefined || f.recordTags.nonEmpty
     var out = if (needRecords) {
       var r = cat.read(spark, "records")

@@ -71,22 +71,33 @@ trait TableStore {
       budgetBytes: Long = TableStore.RowsBudgetBytes): Option[IndexedSeq[Row]] =
     Some(collectRows(spark, table, columns, partitionValues, valuesIn))
 
-  /** [[rows]] through Spark: `read` + partition filter + `valuesIn`
-    * filter + select + `collect`. */
+  /** [[rows]] through Spark: [[readWhere]] + select + `collect`. */
   final def collectRows(spark: SparkSession, table: String, columns: Seq[String],
       partitionValues: Seq[String] = Nil,
       valuesIn: Map[String, Set[String]] = Map.empty): IndexedSeq[Row] = {
     TableStore.checkRowsArgs(table, columns, partitionValues, valuesIn)
+    readWhere(spark, table, partitionValues, valuesIn)
+      .select(columns.map(col): _*).collect().toIndexedSeq
+  }
+
+  /** `read` restricted as [[rows]] restricts it: to the partitions in
+    * `partitionValues` (all when empty), as a static filter on the
+    * partition column, and to the rows whose column `c` holds a value in
+    * `valuesIn(c)`. */
+  final def readWhere(spark: SparkSession, table: String, partitionValues: Seq[String],
+      valuesIn: Map[String, Set[String]]): DataFrame = {
     var df = read(spark, table)
     if (partitionValues.nonEmpty) {
-      // the derived bucket is recomputed from its source column, so a
-      // store whose read does not expose it filters the same way
-      val key = TableLayout.derivedPartition(table).map(d => d.derive(col(d.srcCol)))
-        .orElse(TableLayout.partitionColumn(table).map(col)).get
+      // a store whose read does not expose the derived bucket filters on
+      // the bucket recomputed from its source column
+      val pc = TableLayout.partitionColumn(table).get
+      val key =
+        if (df.columns.contains(pc)) col(pc)
+        else TableLayout.derivedPartition(table).fold(col(pc))(d => d.derive(col(d.srcCol)))
       df = df.filter(key.cast("string").isin(partitionValues: _*))
     }
     valuesIn.foreach { case (c, vs) => df = df.filter(col(c).isin(vs.toSeq: _*)) }
-    df.select(columns.map(col): _*).collect().toIndexedSeq
+    df
   }
 
   /** [[rows]], falling back to [[collectRows]] when over budget. */

@@ -190,10 +190,9 @@ object Consolidation {
 
     // scope the pixel-store scan to the job's SOURCE container set before
     // the payload column is touched: the bucket conjunct against the
-    // store's derived partition column turns into dynamic partition
-    // pruning (same shape as the serving path's GetCube.selectTileLevel) — a
-    // job consolidating 100 containers never reads the other buckets of a
-    // 100-TB tiles table
+    // store's derived partition column (Catalog.tilesBucketOf) turns into
+    // dynamic partition pruning — a job consolidating 100 containers never
+    // reads the other buckets of a 100-TB tiles table
     val srcUris = exploded.join(ds, col("dataset_id") === ds("id"))
       .select(col("container_uri").as("__pu")).distinct()
     val tiles = cat.read(spark, "tiles")

@@ -82,7 +82,7 @@ object ConsolidationJob {
       // instance scope rehydrated from the journaled spec when present —
       // a pre-spec-journal legacy job purges unscoped (all partitions)
       Consolidation.purgeInactiveOutputs(spark, cat, prefix,
-        specOf(spark, job).map(_.instanceId).toSeq)
+        specOf(job).map(_.instanceId).toSeq)
       Consolidation.purgeJobContainers(spark, cat, prefix)
       Consolidation.dropJobTasks(spark, cat, job.jobId)
       job.log("ABORTED")
@@ -522,66 +522,43 @@ object ConsolidationJob {
     * spec journaling. */
   def specFromJournal(spark: SparkSession, cat: TableStore,
       jobId: String): Option[Spec] =
-    specOf(spark, JournaledJob(spark, cat, JobType, jobId, name = ""))
+    specOf(JournaledJob(spark, cat, JobType, jobId, name = ""))
 
-  private[graft] def specOf(spark: SparkSession, job: JournaledJob): Option[Spec] =
-    job.spec.map(parseSpec(spark, job.jobId, _))
+  private[graft] def specOf(job: JournaledJob): Option[Spec] =
+    job.spec.map(parseSpec(job.jobId, _))
 
-  private def parseSpec(spark: SparkSession, jobId: String, js: String): Spec = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("name", StringType),
-      StructField("instance_id", StringType),
-      StructField("record_ids", ArrayType(StringType)),
-      StructField("collapse", StringType),
-      StructField("layout", StructType(Seq(
-        StructField("name", StringType),
-        StructField("grid_flags", ArrayType(StringType)),
-        StructField("grid_parameters", MapType(StringType, StringType)),
-        StructField("block_x", IntegerType),
-        StructField("block_y", IntegerType),
-        StructField("max_records", IntegerType),
-        StructField("overviews_min_size", IntegerType),
-        StructField("interlacing", StringType)))),
-      StructField("params", StructType(Seq(
-        StructField("dtype", StringType),
-        StructField("no_data", StringType),
-        StructField("min", StringType),
-        StructField("max", StringType),
-        StructField("real_min", StringType),
-        StructField("real_max", StringType),
-        StructField("exponent", StringType),
-        StructField("resampling", StringType),
-        StructField("storage_class", StringType))))))
-    import spark.implicits._
-    val r = spark.read.schema(schema).json(Seq(js).toDS()).collect().head
-    val lr = r.getAs[Row]("layout")
-    val pr = r.getAs[Row]("params")
+  /** [[specJson]]'s inverse, parsed on the driver: a missing array is
+    * Nil, a missing string null, a missing integer 0, and every number
+    * goes through [[parseNum]]. */
+  private[consolidation] def parseSpec(jobId: String, js: String): Spec = {
+    import graft.core.JsonUtil.{parse, text, texts}
     import graft.core.{DataFormat, DataMapping, DType, NumRange}
+    import scala.jdk.CollectionConverters._
+    val r = parse(js)
+    val lr = r.path("layout")
+    val pr = r.path("params")
+    def num(f: String) = parseNum(text(pr, f))
     Spec(
       jobId = jobId,
-      name = r.getAs[String]("name"),
-      instanceId = r.getAs[String]("instance_id"),
-      recordIds = r.getAs[scala.collection.Seq[String]]("record_ids").toSeq,
+      name = text(r, "name"),
+      instanceId = text(r, "instance_id"),
+      recordIds = texts(r, "record_ids"),
       layout = graft.layout.Layout(
-        lr.getAs[String]("name"),
-        lr.getAs[scala.collection.Seq[String]]("grid_flags").toSeq,
-        Option(lr.getAs[scala.collection.Map[String, String]]("grid_parameters"))
-          .map(_.toMap).getOrElse(Map.empty),
-        lr.getAs[Int]("block_x"), lr.getAs[Int]("block_y"),
-        lr.getAs[Int]("max_records"), lr.getAs[Int]("overviews_min_size"),
-        lr.getAs[String]("interlacing")),
+        text(lr, "name"),
+        texts(lr, "grid_flags"),
+        lr.path("grid_parameters").properties.asScala
+          .map(e => e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText)).toMap,
+        lr.path("block_x").asInt, lr.path("block_y").asInt,
+        lr.path("max_records").asInt, lr.path("overviews_min_size").asInt,
+        text(lr, "interlacing")),
       params = ConsolidationParams(
         DataMapping(
-          DataFormat(DType.fromName(pr.getAs[String]("dtype")),
-            parseNum(pr.getAs[String]("no_data")),
-            NumRange(parseNum(pr.getAs[String]("min")),
-              parseNum(pr.getAs[String]("max")))),
-          NumRange(parseNum(pr.getAs[String]("real_min")),
-            parseNum(pr.getAs[String]("real_max"))),
-          parseNum(pr.getAs[String]("exponent"))),
-        graft.raster.Resampling.fromName(pr.getAs[String]("resampling")),
-        pr.getAs[String]("storage_class")),
-      collapseOnRecordId = Option(r.getAs[String]("collapse")))
+          DataFormat(DType.fromName(text(pr, "dtype")), num("no_data"),
+            NumRange(num("min"), num("max"))),
+          NumRange(num("real_min"), num("real_max")),
+          num("exponent")),
+        graft.raster.Resampling.fromName(text(pr, "resampling")),
+        text(pr, "storage_class")),
+      collapseOnRecordId = Option(text(r, "collapse")))
   }
 }

@@ -51,24 +51,18 @@ object DeletionJob {
   /** Rehydrate the Spec from the NEW journal row. */
   def specFromJournal(spark: SparkSession, cat: TableStore,
       jobId: String): Option[Spec] =
-    specOf(spark, JournaledJob(spark, cat, JobType, jobId, name = ""))
+    specOf(JournaledJob(spark, cat, JobType, jobId, name = ""))
 
-  private[graft] def specOf(spark: SparkSession, job: JournaledJob): Option[Spec] =
-    job.spec.map(parseSpec(spark, job.jobId, _))
+  private[graft] def specOf(job: JournaledJob): Option[Spec] =
+    job.spec.map(parseSpec(job.jobId, _))
 
-  private def parseSpec(spark: SparkSession, jobId: String, js: String): Spec = {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("name", StringType),
-      StructField("instance_ids", ArrayType(StringType)),
-      StructField("record_ids", ArrayType(StringType)),
-      StructField("patterns", ArrayType(StringType))))
-    import spark.implicits._
-    val r = spark.read.schema(schema).json(Seq(js).toDS()).collect().head
-    def seq(c: String): Seq[String] =
-      Option(r.getAs[scala.collection.Seq[String]](c)).map(_.toSeq).getOrElse(Nil)
-    Spec(jobId, r.getAs[String]("name"), seq("instance_ids"),
-      seq("record_ids"), seq("patterns"))
+  /** [[specJson]]'s inverse, parsed on the driver: a missing array is
+    * Nil. */
+  private[consolidation] def parseSpec(jobId: String, js: String): Spec = {
+    import graft.core.JsonUtil.{parse, text, texts}
+    val r = parse(js)
+    Spec(jobId, text(r, "name"), texts(r, "instance_ids"), texts(r, "record_ids"),
+      texts(r, "patterns"))
   }
 
   /** Physical removal of one container object — the opSubFncDeleteContainer
@@ -132,7 +126,7 @@ object DeletionJob {
       if (nLocked > 0) {
         // instance scope rehydrated from the journaled spec when present
         // (a legacy job un-flips unscoped — all partitions)
-        val instScope = specOf(spark, job).map(_.instanceIds).getOrElse(Nil)
+        val instScope = specOf(job).map(_.instanceIds).getOrElse(Nil)
         cat.updatePartitions(spark, "datasets", instScope, df =>
           Consolidation.withMembership(df, "id", lockedDf, "id", "__lk")
             .withColumn("status",

@@ -20,4 +20,25 @@ object JsonUtil {
     }
     b.toString
   }
+
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The JSON document `js`, parsed on the calling thread. */
+  def parse(js: String): com.fasterxml.jackson.databind.JsonNode = mapper.readTree(js)
+
+  /** Field `f` of `n` as text — a number as its literal — or null when
+    * the field is missing or JSON null. */
+  def text(n: com.fasterxml.jackson.databind.JsonNode, f: String): String = {
+    val v = n.path(f)
+    if (v.isMissingNode || v.isNull) null else v.asText
+  }
+
+  /** The elements of array field `f` of `n` as text; Nil when the field
+    * is missing or not an array. */
+  def texts(n: com.fasterxml.jackson.databind.JsonNode, f: String): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    val v = n.path(f)
+    if (!v.isArray) Nil
+    else v.elements.asScala.map(e => if (e.isNull) null else e.asText).toSeq
+  }
 }

@@ -14,9 +14,9 @@ import org.apache.spark.sql.SparkSession
   * The tiles are resolved on the DRIVER by the cube's resolver,
   * [[GetCube.driverTiles]] — the reference's one PostGIS lookup plus
   * in-process reads — and merged there, so a warm tile starts no Spark
-  * job and plans no query; when any of those reads would decode more than
-  * its budget of compressed parquet, the tile runs the GetCube Spark plan
-  * instead, unchanged. */
+  * job and plans no query; a read that would decode more than its budget
+  * of compressed parquet degrades alone, to a filtered Spark read of the
+  * request's rows (the payload's collected here). */
 object XYZTile {
 
   /** Largest zoom level served: at z30 a tile is ~1.5 cm across, and
@@ -51,9 +51,8 @@ object XYZTile {
     tile(spark, cat, instanceId, x, y, z, minOverride, maxOverride, palette,
       recordIds, tags, fromTime, toTime, TableStore.RowsBudgetBytes, GetCube.PayloadBudgetBytes)
 
-  /** [[getTile]] with the driver arm's byte budgets, for the catalog
-    * reads and for the payload read: 0 sends every non-empty read to the
-    * Spark plan. */
+  /** [[getTile]] with the resolver's byte budgets, for the catalog reads
+    * and for the payload read: 0 sends every non-empty read to Spark. */
   private[cube] def tile(spark: SparkSession, cat: TableStore, instanceId: String,
       x: Long, y: Long, z: Int, minOverride: Double, maxOverride: Double,
       palette: Option[Palette], recordIds: Seq[String], tags: Map[String, String],
@@ -74,10 +73,10 @@ object XYZTile {
       validPixPc = 0)
 
     val out = GetCube.prepare(spark, cat, req)
-    // the driver arm answers from TableStore.rows; any read over budget
-    // runs the Spark plan instead
+    // resolved from TableStore.rows answers; an over-budget payload comes
+    // back as one Spark job's rows
     val tiles = GetCube.driverTiles(spark, cat, req, out, budgetBytes, payloadBudgetBytes)
-      .getOrElse(GetCube.datasetTiles(spark, cat, req, out).collect())
+      .fold(_.collect(), identity)
     if (tiles.isEmpty) return None
 
     val slice = GetCube.buildSliceForMosaic(tiles, out)
@@ -122,7 +121,7 @@ object XYZTile {
     // ONE head parse per request. Overview selection keys on SOURCE-CRS
     // units: the tile's meters/px converts to degrees for a geographic
     // source (equatorial factor — errs toward a finer level, like
-    // GetCube.selectTileLevel)
+    // GetCube.chooseLevel)
     val img = graft.ingest.GeoTiffIO.withTiff(conf, path) { tiff =>
       val geo = tiff.headers.head.crs.isGeographic
       tiff.decode(tiff.level(graft.raster.GeoTiff.subdirIndex(subdir),

@@ -167,7 +167,7 @@ object GeoTiffIO {
       // down long before that, while a broadcast ships one small uri
       // relation. The bucket conjunct turns into dynamic partition
       // pruning on the store's derived partition column
-      // (GetCube.selectTileLevel shape). The broadcast HINT is bounded:
+      // (Catalog.tilesBucketOf). The broadcast HINT is bounded:
       // past ~1M uris the driver-side relation stops being "small", so
       // the hint is dropped and AQE/size stats pick the strategy — the
       // DPP conjunct works either way.

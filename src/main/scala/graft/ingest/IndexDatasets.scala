@@ -51,7 +51,7 @@ object IndexDatasets {
     val rawHeaders = cat.read(spark, "tiles")
       // request-scoped: the homogeneity check below must not scan the
       // whole tile store for a bounded request; the bucket conjunct
-      // partition-prunes the listing itself (GetCube.selectTileLevel shape)
+      // turns into dynamic partition pruning of the listing itself
       .join(broadcast(reqs.select(col("uri").as("__pu"),
           col("sub").as("__ps")).distinct()),
         col("container_uri") === col("__pu") &&

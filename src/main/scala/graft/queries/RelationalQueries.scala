@@ -1262,9 +1262,9 @@ object RelationalQueries {
     * svc/catalog.go:146-274 + catalog.go:531-625) end-to-end against a
     * closed-form oracle: seeds a real parquet catalog (48 records, every
     * third with TWO datasets), runs the REAL
-    * [[graft.cube.GetCube.cube]] — findDatasets spatial+instance scan,
-    * tile join, groupByKey(record), time-ordered cast→warp→mosaic kernel,
-    * (min_datetime, group) emission — and reduces each slice to integer
+    * [[graft.cube.GetCube.cube]] — the resolver's dataset filters and
+    * level choice, grouping by record, time-ordered cast→warp→mosaic
+    * kernel, (min_datetime, group) emission — and reduces each slice to integer
     * checksums. Tiles carry analytic uint8 lattices ((p·7+i·13)%200; the
     * overlay dataset is nodata-255 on its second half, so newest-paints-
     * last wins exactly the first half), which DuckDB replays from
@@ -1320,8 +1320,8 @@ object RelationalQueries {
 
   /** d2_headers — the headers-only branch of the serving path (D2,
     * getCubeStream catalog.go:325-339): the SAME seeded catalog as
-    * [[d1Cube]], served with `headersOnly = true` — no tile join, no
-    * kernel, one aggregation over the dataset scan — and the slice
+    * [[d1Cube]], served with `headersOnly = true` — no tile read, no
+    * kernel, one grouping of the matched datasets — and the slice
     * metadata (group, records, min datetime, declared dims/dtype)
     * checked against the closed form. */
   def d2Headers(s: SparkSession, dir: String): DataFrame = {
@@ -1424,7 +1424,7 @@ object RelationalQueries {
     * ReadPalette → DatasetToPngAsBytes): seeds a tmp catalog holding the
     * d5 3857-native source lattice as a `tiles` row, a palette row, and
     * a variable that NAMES the palette; serves one z/x/y tile per nation
-    * key through the real [[graft.cube.XYZTile.getTile]] (GetCube plan →
+    * key through the real [[graft.cube.XYZTile.getTile]] (GetCube resolver →
     * same-CRS Near warp → palette LUT → ARGB PNG) with NO palette object
     * passed — resolution is from the catalog — then decodes the PNG and
     * checksums each channel. Exactness: the grid replay is d5_xyz's

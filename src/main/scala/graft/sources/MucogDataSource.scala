@@ -19,8 +19,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *     .load(containersGlob)             // or CREATE TABLE … USING mucog
   * }}}
   *
-  * Rows come back in the catalog `tiles` schema, so GetCube's tile join
-  * and merge kernel consume them unchanged.
+  * Rows come back in the catalog `tiles` schema, so GetCube's merge
+  * kernel consumes them unchanged.
   *
   * Scale shape: one input partition per file (the container is the
   * reference's unit of work too), read on executors through Hadoop

@@ -5,12 +5,14 @@ import graft.geo.{Affine, BBox, CRS}
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The cube's driver arm (tiles resolved from [[TableStore.rows]], the
-  * kernel as shuffle-free jobs) against its Spark arm (the GetCube plan,
-  * forced by zero budgets): the same slices, field by field and in the
-  * same order, for every filter `cube` accepts — record ids, tags, a time
-  * window, client record groups with a record in two groups — on 4326 and
-  * 3857 sources with overview levels and nodata, near and bilinear, a
+/** The cube's resolver in budget (tiles resolved from [[TableStore.rows]],
+  * the kernel as shuffle-free jobs) against its over-budget reads (zero
+  * budgets: the payload read degrades to one Spark job feeding the
+  * groupByKey kernel; a store answering no `rows`: every catalog read
+  * degrades too): the same slices, field by field and in the same order,
+  * for every filter `cube` accepts — record ids, tags, a time window,
+  * client record groups with a record in two groups — on 4326 and 3857
+  * sources with overview levels and nodata, near and bilinear, a
   * valid-pixel skip and an empty cube. Three records share one datetime,
   * under ids whose UTF-8 and UTF-16 orders differ. */
 class CubeDriverSpec extends AnyFunSuite with DriverArmFixture {
@@ -41,11 +43,11 @@ class CubeDriverSpec extends AnyFunSuite with DriverArmFixture {
     s.width, s.height, s.bands, s.dtype, s.payload.toSeq, s.valid_pixels, s.error)
 
   /** Both arms' slices, after checking that the in-budget request did
-    * resolve on the driver. */
+    * hold its tiles on the driver. */
   private def both(req: CubeRequest): (Seq[Slice], Seq[Slice]) = {
     val budget = TableStore.RowsBudgetBytes
     assert(GetCube.driverTiles(spark, cat, req, GetCube.prepare(spark, cat, req),
-      budget, GetCube.PayloadBudgetBytes).isDefined, s"$req fell back to the Spark plan")
+      budget, GetCube.PayloadBudgetBytes).isRight, s"$req fell back to the payload job")
     (GetCube.cube(spark, cat, req, budget, GetCube.PayloadBudgetBytes).collect().toSeq,
       GetCube.cube(spark, cat, req, 0L, 0L).collect().toSeq)
   }
@@ -99,5 +101,27 @@ class CubeDriverSpec extends AnyFunSuite with DriverArmFixture {
     assert(same(fine4326.copy(recordIds = Seq("none"))).isEmpty)
     val far = fine4326.copy(transform = Affine.northUp(100, 50, 0.05, -0.05))
     assert(same(far).isEmpty)
+  }
+
+  test("reads that all degrade to Spark serve the same slices, headers and metadata") {
+    val reqs = Seq(fine4326, fine4326.copy(tags = Map("sat" -> "S2*")),
+      fine4326.copy(fromTime = Some(ts("2024-01-02 00:00:00"))),
+      coarse4326.copy(recordIds = Seq("r1", "r3", emoji)),
+      merc3857.copy(recordGroups = Seq(Seq("r1", "r2"), Seq("r2", "r3"))),
+      fine4326.copy(recordIds = Seq("none")))
+    def heads(ss: Seq[Slice]) = ss.map(s => (s.group_key, s.record_ids.toList, s.min_datetime))
+    def metas(m: Seq[DatasetMeta]) = m.sortBy(d => (d.group_key, d.dataset_id, d.datetime.getTime))
+    for (req <- reqs) {
+      val driver = GetCube.cube(spark, cat, req).collect().toSeq
+      val degraded = GetCube.cube(spark, overBudget, req, 0L, 0L).collect().toSeq
+      assert(degraded.map(fields) == driver.map(fields), req)
+      val headers = GetCube.cube(spark, overBudget, req.copy(headersOnly = true), 0L, 0L)
+        .collect().toSeq
+      assert(headers.map(fields) ==
+        GetCube.cube(spark, cat, req.copy(headersOnly = true)).collect().toSeq.map(fields), req)
+      assert(heads(headers) == heads(driver) && headers.forall(_.payload.isEmpty), req)
+      assert(metas(GetCube.cubeMetadata(spark, overBudget, req).collect().toSeq) ==
+        metas(GetCube.cubeMetadata(spark, cat, req).collect().toSeq), req)
+    }
   }
 }

@@ -23,6 +23,9 @@ trait DriverArmFixture extends SparkSuite { this: org.scalatest.Suite =>
   protected def wkb(g: org.locationtech.jts.geom.Geometry): Array[Byte] = GeomOps.writeWkb(g)
   protected def bboxRow(b: BBox): Row = Row(b.xmin, b.ymin, b.xmax, b.ymax)
 
+  /** [[cat]] with no read answered on the driver. */
+  protected lazy val overBudget: graft.catalog.TableStore = DriverArmFixture.noRows(cat)
+
   /** Rows a suite adds to the fixture's `records` and `datasets`. */
   protected def extraRecords: Seq[Row] = Nil
   protected def extraDatasets: Seq[Row] = Nil
@@ -101,4 +104,27 @@ trait DriverArmFixture extends SparkSuite { this: org.scalatest.Suite =>
       ds("d8", "r1", "i1", "mem://multi", BBox(4, 0, 6, 2), subdir = "s1"),
       ds("d9", "r2", "i1", "mem://multi", BBox(4, 0, 6, 2), subdir = "s2")) ++ extraDatasets)
   }
+}
+
+object DriverArmFixture {
+
+  /** `cat` with no read answered on the driver: every
+    * [[graft.catalog.TableStore.rows]] call is over budget, so each
+    * catalog and payload read of a request degrades to its Spark read. */
+  def noRows(cat: graft.catalog.TableStore): graft.catalog.TableStore =
+    new graft.catalog.TableStore {
+      import org.apache.spark.sql.{DataFrame, SparkSession}
+      def root: String = cat.root
+      def read(spark: SparkSession, table: String): DataFrame = cat.read(spark, table)
+      def append(df: DataFrame, table: String): Unit = cat.append(df, table)
+      def rewrite(df: DataFrame, table: String): Unit = cat.rewrite(df, table)
+      def deleteWhere(spark: SparkSession, table: String, uris: DataFrame, uriCol: String): Unit =
+        cat.deleteWhere(spark, table, uris, uriCol)
+      def updatePartitions(spark: SparkSession, table: String, partValues: Seq[String],
+          transform: DataFrame => DataFrame): Unit =
+        cat.updatePartitions(spark, table, partValues, transform)
+      override def rows(spark: SparkSession, table: String, columns: Seq[String],
+          partitionValues: Seq[String], valuesIn: Map[String, Set[String]],
+          budgetBytes: Long): Option[IndexedSeq[Row]] = None
+    }
 }

@@ -72,8 +72,8 @@ class GetCubeSpec extends AnyFunSuite with SparkSuite {
   test("ServingSessionConfs (AQE off) serve byte-identical slices") {
     // the recommended latency-serving session settings are a supported
     // execution mode, not just a bench trick: the same request must
-    // produce byte-identical slices under them. Zero budgets keep the
-    // request on the Spark plan, the arm the settings act on
+    // produce byte-identical slices under them. Zero budgets send the
+    // payload read to its Spark job, the part the settings act on
     val base = GetCube.cube(spark, cat, request(), 0L, 0L).collect()
     val serving = isolatedSession()
     GetCube.ServingSessionConfs.foreach { case (k, v) => serving.conf.set(k, v) }
@@ -169,17 +169,16 @@ class GetCubeSpec extends AnyFunSuite with SparkSuite {
   test("plan shape: one data shuffle + ordered emission, filters reach parquet") {
     // the scale contract (README "Scale design"): tile payloads move through
     // exactly ONE hash shuffle (the group key the mosaic needs) plus the
-    // final range partition for ordered slices — broadcasts don't count.
-    // Zero budgets select the Spark plan: the driver arm plans no join
+    // final range partition for ordered slices. Zero budgets send the
+    // payload read to its Spark job; in budget the kernel plans no shuffle
     val plan = GetCube.cube(spark, cat, request(), 0L, 0L)
       .queryExecution.executedPlan.toString
     val hashExchanges = "Exchange hashpartitioning\\(([a-z_]+)".r
       .findAllMatchIn(plan).map(_.group(1)).toSeq.sorted
     val rangeEx = "Exchange rangepartitioning".r.findAllIn(plan).size
-    // exactly two hash shuffles: the group key carrying tile payloads
-    // ("value" = groupByKey key) and the payload-FREE overview-selection
-    // window keyed by (container_uri, base_subdir) metadata
-    assert(hashExchanges == Seq("container_uri", "value"), s"$hashExchanges:\n$plan")
+    // the one hash shuffle is the group key carrying tile payloads
+    // ("value" = groupByKey key); levels are chosen on the driver
+    assert(hashExchanges == Seq("value"), s"$hashExchanges:\n$plan")
     assert(rangeEx == 1, s"expected 1 range exchange, got $rangeEx")
     // the dataset scan gets its filters pushed into the parquet source
     val found = CatalogQueries.findDatasets(spark, cat, DatasetFilters(

@@ -182,22 +182,4 @@ class VarCacheStampSpec extends AnyFunSuite with SparkSuite {
     c.put("d", 4, 50)
     assert(c.state == ((2, 100L)) && c.get("b").contains(2) && c.get("d").contains(4))
   }
-
-  test("metadata broadcast gate: exact-stat local frames hint, stat-less frames don't") {
-    import spark.implicits._
-    // a client request's materialized metadata: LocalRelation, exact size
-    assert(GetCube.boundedForBroadcast(
-      (0 until 100).map(i => (s"u$i", i)).toDF("container_uri", "n")))
-    // an RDD-backed frame reports the default (≈unbounded) size — the
-    // r11 advice case: bulk-export-scale metadata must NOT force a
-    // driver broadcast
-    val rddBacked = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row("u", 1)), 1),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("container_uri",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n",
-          org.apache.spark.sql.types.IntegerType))))
-    assert(!GetCube.boundedForBroadcast(rddBacked))
-  }
 }

@@ -3,15 +3,14 @@ package graft.cube
 import graft.catalog.Catalog
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalacheck.{Gen, Prop, Properties}
 import org.scalacheck.Prop.forAllNoShrink
 
-/** The XYZ driver arm's two pure stand-ins for Spark expressions: the
-  * level rule [[GetCube.chooseLevel]] against the window
-  * [[GetCube.levelWindow]] the Spark plan runs, and the driver bucket
-  * [[Catalog.tilesBucketOf(String)]] against the column expression
-  * tiles are written and pruned with. */
+/** The resolver's two pure stand-ins: the level rule
+  * [[GetCube.chooseLevel]] against a sort of the levels by the same rule,
+  * and the driver bucket [[Catalog.tilesBucketOf(String)]] against the
+  * column expression tiles are written and pruned with. */
 object XYZDriverProps extends Properties("xyz-driver") {
 
   override def overrideParameters(p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
@@ -38,36 +37,29 @@ object XYZDriverProps extends Properties("xyz-driver") {
     (if (i == 0) base else s"$base@ov$i", crs, rx)
   }
 
-  private val levelSchema = StructType(Seq(
-    StructField("container_uri", StringType), StructField("subdir", StringType),
-    StructField("crs", StringType), StructField("transform", ArrayType(DoubleType))))
+  /** The level rule by sorting, in the order the Spark level window
+    * sorted a group: levels within 1.2× of the target first, the coarsest
+    * of them, else the finest; exact ties to the smaller subdir. Degrees
+    * for the geographic CRS forms, else meters at the equatorial
+    * 111320 m/°. */
+  private def bySort(levels: Seq[(String, String, Double)], target: Double): String =
+    levels.sortBy { case (sub, crs, rx) =>
+      val res =
+        if (crs == "EPSG:4326" || crs.startsWith("+proj=longlat")) math.abs(rx)
+        else math.abs(rx) / 111320.0
+      val eligible = res <= target * 1.2
+      (!eligible, if (eligible) -res else res, sub)
+    }(Ordering.Tuple3(Ordering.Boolean, Ordering.Double.TotalOrdering, Ordering.String))
+      .head._1
 
-  property("the driver level rule picks what the Spark level window picks") =
+  property("the driver level rule picks what a sort by the rule picks") =
     forAllNoShrink(Gen.choose(1, 6).flatMap(Gen.listOfN(_, genGroup)),
         Gen.oneOf(0.0005, 0.001, 0.0024, 0.005, 0.01, 0.03, 0.2)) { (groups, target) =>
-      val rows = groups.zipWithIndex.flatMap { case (g, c) =>
-        g.map { case (sub, crs, rx) =>
-          Row(s"mem://c$c", if (sub.isEmpty && c % 2 == 1) null else sub, crs,
-            Seq(0.0, rx, 0.0, 0.0, 0.0, -math.abs(rx)))
-        }
-      }
-      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), levelSchema)
-      val window = GetCube.levelWindow(df, target).collect()
-        .map(r => (r.getString(0), r.getString(2)) -> r.getString(1)).toMap
-      val results = groups.zipWithIndex.map { case (g, c) =>
-        val uri = s"mem://c$c"
-        val base = GetCube.baseSubdir(g.head._1)
-        val (sub, crs, rx) = GetCube.chooseLevel(g, target)
-        val res = GetCube.levelResDeg(crs, rx)
-        val sparkSub = window.getOrElse((uri, base), "<none>")
-        val sparkRes = g.find(_._1 == sparkSub).map(l => GetCube.levelResDeg(l._2, l._3))
-        // levels of equal resolution are interchangeable: compare the
-        // chosen resolution, and the subdir whenever that is unique
-        val unique = g.count(l => GetCube.levelResDeg(l._2, l._3) == res) == 1
-        Prop(sparkRes.contains(res) && (!unique || sparkSub == sub)) :|
-          s"group $uri $g at $target: driver $sub ($res), window $sparkSub ($sparkRes)"
-      }
-      Prop.all(results: _*) && Prop(window.size == groups.size) :| s"window $window"
+      Prop.all(groups.map { g =>
+        val (sub, _, _) = GetCube.chooseLevel(g, target)
+        val want = bySort(g, target)
+        Prop(sub == want) :| s"group $g at $target: chooseLevel $sub, sort $want"
+      }: _*)
     }
 
   /** Valid UTF-16 text: ASCII, BMP outside the surrogates, astral planes. */

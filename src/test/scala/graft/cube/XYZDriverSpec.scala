@@ -3,12 +3,13 @@ package graft.cube
 import graft.layout.Grid
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The XYZ tile's driver arm ([[TableStore.rows]] reads, no Spark job)
-  * against its Spark arm (the GetCube plan, forced by a zero rows
-  * budget): byte-identical PNGs over a tile grid for every filter
-  * `getTile` accepts, on 4326 and 3857 sources with overview levels and
-  * nodata; the same empty tiles and the same dangling-palette error; and
-  * a warm in-budget tile that starts no Spark job at all. */
+/** The XYZ tile in budget ([[TableStore.rows]] reads, no Spark job)
+  * against its over-budget reads (zero budgets: the payload read
+  * degrades to one Spark job; a store answering no `rows`: every catalog
+  * read degrades too): byte-identical PNGs over a tile grid for every
+  * filter `getTile` accepts, on 4326 and 3857 sources with overview
+  * levels and nodata; the same empty tiles and the same dangling-palette
+  * error; and a warm in-budget tile that starts no Spark job at all. */
 class XYZDriverSpec extends AnyFunSuite with DriverArmFixture {
 
   /** The XYZ tiles at zoom z whose extent meets lon/lat [-1, 7]. */
@@ -77,11 +78,10 @@ class XYZDriverSpec extends AnyFunSuite with DriverArmFixture {
 
   test("both arms pick the same overview level and fail a dangling palette alike") {
     // the z3 tile over the fixture chooses @ov1 (0.125°/px within 1.2× of
-    // its ~0.176°) on the 4326 source, checked through the Spark arm's join
+    // its ~0.176°) on the 4326 source, checked through the resolver's tiles
     val req = CubeRequest(Seq("i1"), "EPSG:3857", Grid.xyzTransform(4, 3, 3), 256, 256,
       validPixPc = 0)
-    val picked = GetCube.datasetTiles(spark, cat, req, GetCube.prepare(spark, cat, req))
-      .collect()
+    val picked = GetCube.datasetTiles(spark, cat, req).collect()
     assert(picked.exists(t => t.dataset_id == "d1" && t.t_width == 32),
       picked.map(t => t.dataset_id -> t.t_width).toSeq)
     // the two-subdir container keeps both datasets, each on its own level
@@ -90,6 +90,24 @@ class XYZDriverSpec extends AnyFunSuite with DriverArmFixture {
     val (d, s) = both("i2", 4, 3, 3, Filters())
     assert(d == s)
     assert(d.left.exists(_.contains("unknown palette 'nopal'")), d)
+  }
+
+  test("reads that all degrade to Spark serve byte-identical tiles") {
+    val filters = Seq(Filters(), Filters(recordIds = Seq("r1", "r3")),
+      Filters(tags = Map("sat" -> "S2*")),
+      Filters(to = Some(ts("2024-02-01 00:00:00.000122")), min = 10, max = 200))
+    val cases = grid.filter(_._3 == 3).flatMap(t => filters.map(t -> _)) ++
+      grid.filter(_._3 == 6).take(4).map(_ -> Filters()) ++ Seq(((4L, 3L, 3), Filters()))
+    var served = 0
+    for (((x, y, z), f) <- cases) {
+      val inBudget = XYZTile.getTile(spark, cat, "i1", x, y, z, f.min, f.max, None,
+        f.recordIds, f.tags, f.from, f.to).map(_.toSeq)
+      val degraded = XYZTile.tile(spark, overBudget, "i1", x, y, z, f.min, f.max, None,
+        f.recordIds, f.tags, f.from, f.to, 0L, 0L).map(_.toSeq)
+      assert(degraded == inBudget, s"tile $z/$x/$y with $f")
+      if (inBudget.isDefined) served += 1
+    }
+    assert(served > 4, s"served $served")
   }
 
   test("a warm in-budget tile starts no Spark job") {

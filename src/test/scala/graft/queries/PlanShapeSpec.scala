@@ -125,14 +125,15 @@ class PlanShapeSpec extends AnyFunSuite with SparkSuite {
     assert(probe.count() == 1)
   }
 
-  test("serving-path tiles scan dynamic-partition-prunes on the container bucket") {
+  /** A cube catalog of 20 single-tile records whose tiles land in THREE
+    * appends (three live op dirs), and a request for three of them. */
+  private lazy val overBudgetFixture: (graft.catalog.Catalog, graft.cube.CubeRequest) = {
     import graft.catalog.{Catalog, Schemas}
     import graft.core.DType
     import graft.geo.{Affine, BBox, GeomOps}
     import graft.raster.Bitmap
     import org.apache.spark.sql.Row
-    val root = tempDir("graft-planshape-tiles").toString
-    val cat = Catalog(root)
+    val cat = Catalog(tempDir("graft-planshape-tiles").toString)
     def write(table: String, rows: Seq[Row]): Unit =
       cat.append(spark.createDataFrame(
         spark.sparkContext.parallelize(rows), Schemas.all(table)), table)
@@ -150,98 +151,87 @@ class PlanShapeSpec extends AnyFunSuite with SparkSuite {
       Row(s"d$i", s"r$i", "i1", s"mem://c$i", "", Seq(1), "ACTIVE", null,
         "uint8", 255.0, 0.0, 254.0, 0.0, 254.0, 1.0, false, wkb, wkb, 4326, bbox)))
     val tf = Seq(0.0, 0.01, 0.0, 2.56, 0.0, -0.01)
-    write("tiles", (1 to 20).map { i =>
-      val px = Array.tabulate(64 * 64)(p => ((p + i) % 200).toDouble)
-      Row(s"mem://c$i", "", 64, 64, 1, "uint8", "EPSG:4326", tf,
-        new Bitmap(64, 64, 1, DType.UInt8, px).toBytes)
-    })
-    // the store must be laid out in bucket directories (the 100-TB table's
-    // partition scheme) …
-    val dirs = new java.io.File(s"$root/tiles/data").listFiles
-      .filter(_.isDirectory).flatMap(_.listFiles).filter(_.isDirectory)
-      .map(_.getName)
-    assert(dirs.nonEmpty && dirs.forall(_.startsWith(s"${Catalog.TilesBucketCol}=")),
-      s"tiles not bucket-partitioned: ${dirs.mkString(",")}")
-    // … and a record-scoped cube request must reach the payload scan with
-    // a dynamicpruning PartitionFilter on that bucket column — the store
-    // is only LISTED/READ in the request's buckets, the pixel bytes of
-    // every other bucket are never touched. The conjunct is cost-gated
-    // on store size (toy stores skip the DPP subquery overhead), so
-    // force the big-store path for the plan assertion
-    val req = graft.cube.CubeRequest(instanceIds = Seq("i1"), crs = "EPSG:4326",
-      transform = Affine.northUp(0, 2.56, 0.01, -0.01), width = 64, height = 64,
-      recordIds = Seq("r1", "r2", "r3"))
-    spark.conf.set(graft.cube.GetCube.BucketPruneMinBytesConf, "0")
-    val cube =
-      try graft.cube.GetCube.cube(spark, cat, req, 0L, 0L) // the Spark plan
-      finally spark.conf.unset(graft.cube.GetCube.BucketPruneMinBytesConf)
-    // the cube plan is adaptive: its file scans are not leaves of the
-    // outer plan
-    val scans = scansOf(cube.queryExecution.executedPlan)
-      .filter(_.metadata.getOrElse("Location", "").contains("/tiles"))
-    assert(scans.nonEmpty, "no tiles parquet scan in the cube plan")
-    val part = scans.map(_.partitionFilters.mkString(";")).mkString(";")
-    assert(part.contains("dynamicpruning"),
-      s"tiles scan has no dynamic partition pruning: $part")
-    assert(cube.count() == 3, "pruned cube lost slices")
-  }
-
-  test("commit-log tiles read: ONE scan across op dirs, bucket DPP intact") {
-    import graft.catalog.{Catalog, Schemas}
-    import graft.core.DType
-    import graft.geo.{Affine, BBox, GeomOps}
-    import graft.raster.Bitmap
-    import org.apache.spark.sql.Row
-    val root = tempDir("graft-planshape-cl").toString
-    val cat = Catalog(root)
-    def write(table: String, rows: Seq[Row]): Unit =
-      cat.append(spark.createDataFrame(
-        spark.sparkContext.parallelize(rows), Schemas.all(table)), table)
-    val wkb = GeomOps.writeWkb(GeomOps.polygonFromBBox(BBox(0, 0, 2.56, 2.56)))
-    val bbox = Row(0.0, 0.0, 2.56, 2.56)
-    write("variable_definitions", Seq(
-      Row("v1", "b", "1", "d", Seq("b1"), "uint8", 255.0, 0.0, 254.0, "", "near")))
-    write("variable_instances", Seq(Row("i1", "m", Map.empty[String, String], "v1")))
-    val t0 = 1704067200000L
-    write("aoi", Seq(Row("a1", "h", wkb, bbox)))
-    write("records", (1 to 20).map(i =>
-      Row(s"r$i", s"rec$i", new java.sql.Timestamp(t0 + i * 3600000L),
-        Map.empty[String, String], "a1")))
-    write("datasets", (1 to 20).map(i =>
-      Row(s"d$i", s"r$i", "i1", s"mem://c$i", "", Seq(1), "ACTIVE", null,
-        "uint8", 255.0, 0.0, 254.0, 0.0, 254.0, 1.0, false, wkb, wkb, 4326, bbox)))
-    val tf = Seq(0.0, 0.01, 0.0, 2.56, 0.0, -0.01)
-    // THREE separate appends → three live op dirs → the read must still
-    // plan ONE file-index-backed relation (r13: plan width is independent
-    // of append history), and the serving path's bucket prune must reach
-    // that single scan
     for (g <- 0 until 3)
       write("tiles", (1 to 20).filter(_ % 3 == g).map { i =>
         val px = Array.tabulate(64 * 64)(p => ((p + i) % 200).toDouble)
         Row(s"mem://c$i", "", 64, 64, 1, "uint8", "EPSG:4326", tf,
           new Bitmap(64, 64, 1, DType.UInt8, px).toBytes)
       })
-    val req = graft.cube.CubeRequest(instanceIds = Seq("i1"), crs = "EPSG:4326",
+    (cat, graft.cube.CubeRequest(instanceIds = Seq("i1"), crs = "EPSG:4326",
       transform = Affine.northUp(0, 2.56, 0.01, -0.01), width = 64, height = 64,
-      recordIds = Seq("r1", "r2", "r3"))
-    spark.conf.set(graft.cube.GetCube.BucketPruneMinBytesConf, "0")
-    val cube =
-      try graft.cube.GetCube.cube(spark, cat, req, 0L, 0L) // the Spark plan
-      finally spark.conf.unset(graft.cube.GetCube.BucketPruneMinBytesConf)
+      recordIds = Seq("r1", "r2", "r3")))
+  }
+
+  test("over-budget payload: ONE tiles scan, static chosen-bucket filter") {
+    import graft.catalog.Catalog
+    val (cat, req) = overBudgetFixture
+    // the store is laid out in bucket directories (the 100-TB table's
+    // partition scheme) …
+    val dirs = new java.io.File(s"${cat.root}/tiles/data").listFiles
+      .filter(_.isDirectory).flatMap(_.listFiles).filter(_.isDirectory)
+      .map(_.getName)
+    assert(dirs.nonEmpty && dirs.forall(_.startsWith(s"${Catalog.TilesBucketCol}=")),
+      s"tiles not bucket-partitioned: ${dirs.mkString(",")}")
+    // … and an over-budget request's payload job reads it through ONE
+    // scan across the three op dirs, listing and reading only the buckets
+    // of the chosen containers: a static partition filter, known before
+    // the job runs
+    val cube = graft.cube.GetCube.cube(spark, cat, req, 0L, 0L)
     val scans = scansOf(cube.queryExecution.executedPlan)
       .filter(_.metadata.getOrElse("Location", "").contains("/tiles"))
-    assert(scans.nonEmpty, "no tiles parquet scan in the cube plan")
-    // the cube plan reads tiles TWICE by design (overview-selection probe
-    // + payload scan); each read must stay ONE scan — with the r12
-    // union shape these 3 op dirs planned 2×3 scans
-    assert(scans.size <= 2,
-      s"commit-log tiles reads planned ${scans.size} scans — the op-dir " +
-        "history leaked back into plan width")
-    val unpruned = scans.filterNot(_.partitionFilters.mkString.contains("dynamicpruning"))
-    assert(unpruned.isEmpty,
-      s"${unpruned.size}/${scans.size} tiles scans lost bucket DPP: " +
-        unpruned.map(_.metadata.getOrElse("Location", "")).mkString(","))
+    assert(scans.size == 1, s"${scans.size} tiles scans in the payload job")
+    val part = scans.head.partitionFilters
+    assert(part.nonEmpty && part.forall(f =>
+      f.references.map(_.name).toSet == Set(Catalog.TilesBucketCol) &&
+        !f.toString.contains("dynamicpruning")), s"tiles partition filters: $part")
+    val listed = "IN \\(([^)]*)\\)".r.findFirstMatchIn(part.mkString(";"))
+      .map(_.group(1).split(",").map(_.trim).toSet)
+    val chosen = Seq("mem://c1", "mem://c2", "mem://c3")
+      .map(u => Catalog.tilesBucketOf(u).toString).toSet
+    assert(listed.contains(chosen), s"bucket filter $part lists $listed, want $chosen")
     assert(cube.count() == 3, "pruned cube lost slices")
+  }
+
+  test("over-budget request: no Window, no join over records") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val (cat, req) = overBudgetFixture
+    // AQE off, so each executed plan is the tree that ran
+    val s = isolatedSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit =
+        if (qe.analyzed.toString.contains("plan-marker")) marker.countDown()
+        else plans.add(qe.executedPlan): Unit
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    s.listenerManager.register(listener)
+    try {
+      // every catalog and payload read over budget: cold rows answers
+      // would be cached and answered whatever the budget, so the store
+      // answers none on the driver
+      val store = graft.cube.DriverArmFixture.noRows(cat)
+      assert(graft.cube.GetCube.cube(s, store, req, 0L, 0L).collect().length == 3)
+      assert(graft.cube.GetCube.cube(s, store, req.copy(headersOnly = true), 0L, 0L)
+        .collect().length == 3)
+      s.sql("select 'plan-marker' as m").collect()
+      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally s.listenerManager.unregister(listener)
+    def location(f: FileSourceScanExec) = f.metadata.getOrElse("Location", "")
+    val all = plans.toArray(Array.empty[SparkPlan]).toSeq
+    assert(all.flatMap(_.collectWithSubqueries { case f: FileSourceScanExec => location(f) })
+      .exists(_.contains("/records")), "the forced request read no records through Spark")
+    for (p <- all) {
+      assert(p.collectWithSubqueries { case w: WindowExec => w }.isEmpty, s"a Window:\n$p")
+      val joins = p.collectWithSubqueries { case j: BaseJoinExec => j }
+      assert(!joins.exists(_.collectWithSubqueries { case f: FileSourceScanExec => location(f) }
+        .exists(_.contains("/records"))), s"a join over records:\n$p")
+    }
   }
 
   test("spatial expressions keep whole-stage codegen in the join stage (no CodegenFallback)") {
